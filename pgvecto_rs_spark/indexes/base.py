@@ -8,6 +8,7 @@ import os
 from typing import Sequence
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,6 +60,23 @@ def np_kernel_distance(kernel: str, mat: np.ndarray, q: np.ndarray) -> np.ndarra
     if kernel == "dot":
         return -(mat @ q)
     raise ValueError(kernel)
+
+
+def f16_distance(kernel: str, q: Sequence[float], col: str = "vec16"):
+    """Exact kernel distance Column over packed IEEE binary16 words
+    (vecf16 storage): a decode-and-score pandas UDF.  Grid values decode
+    exactly, so these ARE the vecf16 type's distances (the reference
+    also computes f16 via wider floats)."""
+    qv = np.asarray(q, dtype=np.float64)
+
+    @F.pandas_udf("double")
+    def f16_score(vb: pd.Series) -> pd.Series:
+        mat = np.asarray(
+            [np.frombuffer(b, dtype=np.float16) for b in vb], dtype=np.float64
+        )
+        return pd.Series(np_kernel_distance(kernel, mat, qv))
+
+    return f16_score(F.col(col))
 
 
 def normalize_rows(mat: np.ndarray) -> np.ndarray:

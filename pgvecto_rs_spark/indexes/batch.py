@@ -1,23 +1,26 @@
-"""Distributed (over-cap) batch search orchestration.
+"""Batch search: one block-runner path for every query count.
 
-``search_batch`` on every index collects the query set to the driver —
-the right call for lookup-sized batches (it enables the single-scan /
-single-graph-pass shapes), but a driver bottleneck for query sets in
-the millions.  This module provides the fall-through: query BLOCKS are
-assembled executor-side (``rdd.mapPartitions`` — the query DataFrame
-never materializes on the driver) and cartesian-paired with the index's
-storage units:
+``search_batch`` on flat, IVF and HNSW turns the query set into
+``(qids, qmat)`` BLOCKS, cartesian-pairs them with the index's storage
+units, and runs one index-specific block runner per pair
+(``segment_worker``):
 
 - flat: (block x parquet file) gemm tasks over the rows dir
 - hnsw: (block x graph segment) resident-graph passes
-- ivf:  per-block in-task centroid probing + pyarrow scan of ONLY the
-  probed list partitions (the static partition pruning of the
-  DataFrame path, done in-task)
+- ivf:  (block x list-id chunk) tasks: in-task centroid probing, then a
+  pyarrow scan of ONLY the probed lists that fall in the chunk (the
+  static partition pruning of the DataFrame path, done in-task); the
+  chunks round-robin the list ids, one per core, so even a single
+  block scans its probed lists in parallel
 
-Each task emits per-query local top-k; a query-keyed window finishes
-the merge.  O(Q x N) work is inherent to exact batch search — this
-shape spreads it across tasks with bounded memory per task (block_rows
-x dims floats + one storage unit).
+Only where the blocks are built depends on the query count.  A query
+set under ``BATCH_COLLECT_CAP`` is collected once and the driver slices
+it into blocks; a larger one is assembled into blocks executor-side
+(``rdd.mapPartitions`` — the query DataFrame never materializes on the
+driver).  Each task emits per-query local top-k; ``_finish`` merges
+them with one query-keyed window.  O(Q x N) work is inherent to exact
+batch search — this shape spreads it across tasks with bounded memory
+per task (block_rows x dims floats + one storage unit).
 
 The reference has no corpus-scale batch entry point (its CLI loops
 queries, crates/cli/src/main.rs:131-160); this is the Spark-native
@@ -26,9 +29,7 @@ extension, sharing its merge semantics with ``knn_join_ivf``.
 
 from __future__ import annotations
 
-import glob
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,42 +37,45 @@ from pyspark.sql import functions as F
 from pgvecto_rs_spark.indexes import base
 from pgvecto_rs_spark.indexes import segment_worker as SW
 
-#: query-count threshold above which search_batch switches to the
-#: distributed formulation instead of collecting queries to the driver
+#: query-count threshold above which search_batch assembles its query
+#: blocks on executors instead of collecting queries to the driver
 BATCH_COLLECT_CAP = 65536
 
-#: queries per executor-assembled block (4096 x 64 dims x 8 B = 2 MiB)
+#: queries per block (4096 x 64 dims x 8 B = 2 MiB)
 BLOCK_ROWS = 4096
 
 
-def collect_queries_or_none(
-    queries: DataFrame, query_id_col: str, query_vec_col: str,
-    cap: int = BATCH_COLLECT_CAP,
-):
-    """Driver-collect the query set if it fits under ``cap``, else None
-    (caller falls through to the distributed path).  One job either
-    way — the cap probe rides the same collect via limit(cap+1)."""
+def collect_queries_or_none(queries: DataFrame, query_id_col: str,
+                            query_vec_col: str):
+    """Driver-collect the query set if it fits under
+    ``BATCH_COLLECT_CAP`` (read at call time), else None (the caller
+    assembles blocks on executors).  One job either way — the cap probe
+    rides the same collect via limit(cap+1)."""
+    cap = BATCH_COLLECT_CAP
     rows = queries.select(query_id_col, query_vec_col).limit(cap + 1).collect()
     return None if len(rows) > cap else rows
 
 
 def _blocks_rdd(queries: DataFrame, query_id_col: str, query_vec_col: str,
-                normalize: bool, block_rows: int = BLOCK_ROWS):
+                normalize: bool):
     q = queries.select(query_id_col, query_vec_col)
-    n = q.count()
-    n_blocks = max(1, math.ceil(n / block_rows))
+    n_blocks = max(1, math.ceil(q.count() / BLOCK_ROWS))
     return (
         q.repartition(n_blocks)
         .rdd.mapPartitions(lambda it: iter([SW.assemble_block(it, normalize)]))
     )
 
 
-def _finish(spark, rdd, metric: str, k: int) -> DataFrame:
+def _finish(index, rdd, k: int) -> DataFrame:
     from pyspark.sql import Window
 
-    cand = spark.createDataFrame(
+    cand = index.spark.createDataFrame(
         rdd, schema="query_id bigint, id bigint, distance double"
-    ).withColumn("distance", base.post_map(metric, F.col("distance")))
+    ).withColumn("distance", base.post_map(index.meta["metric"], F.col("distance")))
+    if index.meta.get("replicas", 1) > 1:
+        # multi-assignment: the same id reaches a query from every probed
+        # list holding a replica, always at the same exact distance
+        cand = cand.dropDuplicates(["query_id", "id"])
     w = Window.partitionBy("query_id").orderBy(
         F.col("distance").asc(), F.col("id").asc()
     )
@@ -82,43 +86,24 @@ def _finish(spark, rdd, metric: str, k: int) -> DataFrame:
     )
 
 
-def flat_batch_distributed(index, queries: DataFrame, query_id_col: str,
-                           query_vec_col: str, k: int) -> DataFrame:
-    files = sorted(glob.glob(os.path.join(index.path, "rows", "*.parquet")))
+def search_blocks(index, queries: DataFrame, query_id_col: str,
+                  query_vec_col: str, qrows, units: list, run,
+                  k: int) -> DataFrame:
+    """Run ``run`` over every (query block, storage unit) pair and merge
+    to k rows per query.  ``qrows`` is the driver-collected query set
+    (``collect_queries_or_none``); None means blocks are assembled on
+    executors from ``queries``."""
     sc = index.spark.sparkContext
-    blocks = _blocks_rdd(queries, query_id_col, query_vec_col,
-                         index.meta["normalize"])
-    pairs = blocks.cartesian(sc.parallelize(files, max(1, len(files))))
-    vec_col = "vec16" if index.meta.get("storage") == "f16" else "vec"
-    run = SW.flat_file_block_runner(index.meta["kernel"], int(k), vec_col)
-    return _finish(index.spark, pairs.mapPartitions(run),
-                   index.meta["metric"], k)
-
-
-def hnsw_batch_distributed(index, queries: DataFrame, query_id_col: str,
-                           query_vec_col: str, k: int, ef: int) -> DataFrame:
-    sc = index.spark.sparkContext
-    blocks = _blocks_rdd(queries, query_id_col, query_vec_col,
-                         index.meta["normalize"])
-    seg_dirs = index._segment_dirs()
-    pairs = blocks.cartesian(sc.parallelize(seg_dirs, max(1, len(seg_dirs))))
-    quant, qparams = index._quant()
-    run = SW.hnsw_segment_block_runner(quant, qparams, index.meta["kernel"], ef)
-    return _finish(index.spark, pairs.mapPartitions(run),
-                   index.meta["metric"], k)
-
-
-def ivf_batch_distributed(index, queries: DataFrame, query_id_col: str,
-                          query_vec_col: str, k: int, nprobe: int) -> DataFrame:
-    blocks = _blocks_rdd(queries, query_id_col, query_vec_col,
-                         index.meta["normalize"])
-    run = SW.ivf_block_runner(
-        index.centroids.astype("float64"),
-        index.meta["kernel"],
-        int(nprobe),
-        int(k),
-        os.path.join(index.path, "lists"),
-        vec_col="vec16" if index.meta.get("storage") == "f16" else "vec",
-    )
-    return _finish(index.spark, blocks.mapPartitions(run),
-                   index.meta["metric"], k)
+    normalize = index.meta["normalize"]
+    if qrows is None:
+        blocks = _blocks_rdd(queries, query_id_col, query_vec_col, normalize)
+    else:
+        # same block size as the executor path: it bounds each task's
+        # (rows x queries) distance matrix
+        local = [
+            SW.assemble_block(qrows[i : i + BLOCK_ROWS], normalize)
+            for i in range(0, len(qrows), BLOCK_ROWS)
+        ]
+        blocks = sc.parallelize(local, max(1, len(local)))
+    pairs = blocks.cartesian(sc.parallelize(units, max(1, len(units))))
+    return _finish(index, pairs.mapPartitions(run), k)

@@ -28,7 +28,7 @@ Spark design:
 
 from __future__ import annotations
 
-import math
+import glob
 import os
 from typing import Sequence
 
@@ -326,19 +326,8 @@ class FlatIndex:
         df = base.apply_residual(self._rows(), filter, exclude)
 
         if self.meta.get("storage") == "f16":
-            kernel = self.meta["kernel"]
-            qv = np.asarray(qlist, dtype=np.float64)
-
-            @F.pandas_udf("double")
-            def f16_score(vb: pd.Series) -> pd.Series:
-                mat = np.asarray(
-                    [np.frombuffer(b, dtype=np.float16) for b in vb], dtype=np.float64
-                )
-                return pd.Series(base.np_kernel_distance(kernel, mat, qv))
-
-            out = df.withColumn(
-                "distance", base.post_map(self.meta["metric"], f16_score(F.col("vec16")))
-            )
+            f16_d = base.f16_distance(self.meta["kernel"], qlist)
+            out = df.withColumn("distance", base.post_map(self.meta["metric"], f16_d))
             return (
                 out.orderBy(F.col("distance").asc(), F.col("id").asc())
                 .limit(k)
@@ -429,19 +418,8 @@ class FlatIndex:
         df = base.apply_residual(self._rows(), filter, exclude)
 
         if self.meta.get("storage") == "f16":
-            kernel = self.meta["kernel"]
-            qv = np.asarray(qlist, dtype=np.float64)
-
-            @F.pandas_udf("double")
-            def f16_score(vb: pd.Series) -> pd.Series:
-                mat = np.asarray(
-                    [np.frombuffer(b, dtype=np.float16) for b in vb], dtype=np.float64
-                )
-                return pd.Series(base.np_kernel_distance(kernel, mat, qv))
-
-            out = df.withColumn(
-                "distance", base.post_map(metric, f16_score(F.col("vec16")))
-            )
+            f16_d = base.f16_distance(self.meta["kernel"], qlist)
+            out = df.withColumn("distance", base.post_map(metric, f16_d))
             return out.where(F.col("distance") < F.lit(float(radius))).select(
                 "id", "distance"
             )
@@ -474,86 +452,31 @@ class FlatIndex:
         query_vec_col: str,
         k: int = 10,
     ) -> DataFrame:
-        """Batched exact search (the hnsw.search_batch analogue): many
-        queries answered in ONE scan — the per-Arrow-batch distance is a
-        single (rows x queries) gemm, and per-batch per-query top-k
-        bounds the shuffle to k rows per (query, input partition).  At
-        warm local scale the per-query path is dispatch-dominated;
-        batching amortizes job setup across the whole query set.
-        Quantized variants run the two-phase shape batched (one
-        codes-only approximate scan + one pushed-id exact rerank, fixed
-        window policy); f16 storage falls back to per-query search.
-        Returns (query_id, id, distance), k rows per query."""
-        from pyspark.sql import Window
-
+        """Batched exact search (the hnsw.search_batch analogue): each
+        query block pairs with every rows file, one task per pair
+        computes a single (rows x queries) distance matrix and keeps
+        per-query local top-k, and a per-query window merges
+        (indexes/batch.py — the same block path at every query count,
+        f32 and f16 storage alike).  At warm local scale the per-query
+        path is dispatch-dominated; batching amortizes job setup across
+        the whole query set.  Quantized variants under the driver cap
+        run the two-phase shape batched (one codes-only approximate scan
+        + one pushed-id exact rerank, fixed window policy); over the cap
+        they take the block path, which reads exact vectors.  Returns
+        (query_id, id, distance), k rows per query."""
         from pgvecto_rs_spark.indexes import batch as BT
+        from pgvecto_rs_spark.indexes import segment_worker as SW
 
         qrows = BT.collect_queries_or_none(queries, query_id_col, query_vec_col)
-        if qrows is None:
-            # over-cap query set: executor-assembled blocks x rows files,
-            # never materialized on the driver (exact for every storage/
-            # quantization cell — the distributed scan reads true vectors)
-            return BT.flat_batch_distributed(
-                self, queries, query_id_col, query_vec_col, k
-            )
-
-        if self.meta.get("quantization") is not None:
+        if qrows is not None and self.meta.get("quantization") is not None:
             return self._search_batch_quantized(
                 queries, query_id_col, query_vec_col, k, qrows=qrows
             )
-        if self.meta.get("storage") == "f16":
-            # the block runner decodes vec16 natively; even under-cap
-            # batches use it (a per-query loop would build an n-way
-            # unionByName plan, unplannable past a few hundred queries)
-            return BT.flat_batch_distributed(
-                self, queries, query_id_col, query_vec_col, k
-            )
-
-        kernel, metric = self.meta["kernel"], self.meta["metric"]
-        rows = qrows
-        qids = [int(r[0]) for r in rows]
-        qmat = np.asarray(
-            [base.prep_query(r[1], self.meta["normalize"]) for r in rows], dtype=np.float64
-        )
-        qb = self.spark.sparkContext.broadcast((qids, qmat))
-        kk = int(k)
-
-        def scan(batches):
-            qids_l, qm = qb.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                mat = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
-                ids = pdf["id"].to_numpy()
-                # per-query columns use the exact same arithmetic as the
-                # single-query scan (np_kernel_distance), so batched
-                # results are bit-identical to per-query search
-                d = np.empty((len(mat), len(qm)))
-                for qi in range(len(qm)):
-                    d[:, qi] = base.np_kernel_distance(kernel, mat, qm[qi])
-                top = min(kk, len(ids))
-                part = np.argpartition(d, top - 1, axis=0)[:top]
-                out_qid, out_id, out_d = [], [], []
-                for qi in range(len(qids_l)):
-                    sel = part[:, qi]
-                    out_qid.extend([qids_l[qi]] * len(sel))
-                    out_id.extend(ids[sel].tolist())
-                    out_d.extend(d[sel, qi].tolist())
-                yield pd.DataFrame(
-                    {"query_id": out_qid, "id": out_id, "distance": out_d}
-                )
-
-        cand = (
-            self._rows()
-            .select("id", "vec")
-            .mapInPandas(scan, "query_id bigint, id bigint, distance double")
-            .withColumn("distance", base.post_map(metric, F.col("distance")))
-        )
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("id").asc())
-        return (
-            cand.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= kk)
-            .drop("_rn")
+        files = sorted(glob.glob(os.path.join(self.path, "rows", "*.parquet")))
+        vec_col = "vec16" if self.meta.get("storage") == "f16" else "vec"
+        run = SW.flat_file_block_runner(self.meta["kernel"], int(k), vec_col)
+        return BT.search_blocks(
+            self, queries, query_id_col, query_vec_col, qrows, files, run, k
         )
 
     def _search_batch_quantized(

@@ -991,45 +991,22 @@ class HNSWIndex:
         k: int = 10,
         ef_search: int | None = None,
     ) -> DataFrame:
-        """Batched search: many queries per segment pass (amortizes task
-        dispatch and keeps the graph resident).  Queries are collected and
-        broadcast — appropriate for query batches that fit on the driver
-        (e.g. a lookup microbatch), not for table-scale joins (use
-        knn_join_ivf for those).  Returns (query_id, id, distance) with k
-        rows per query."""
-        from pyspark.sql import Window
-
+        """Batched search: each query block answers every query per
+        segment pass (amortizes task dispatch and keeps the graph
+        resident), then a per-query window merges the segments' local
+        top-ef (indexes/batch.py — the same block path at every query
+        count).  Returns (query_id, id, distance) with k rows per
+        query."""
         from pgvecto_rs_spark.indexes import batch as BT
 
-        kernel, metric = self.meta["kernel"], self.meta["metric"]
-        do_norm = self.meta["normalize"]
-        ef = max(self._resolve_ef(ef_search), k)
         rows = BT.collect_queries_or_none(queries, query_id_col, query_vec_col)
-        if rows is None:
-            # over-cap query set: executor-assembled blocks x segments,
-            # never materialized on the driver
-            return BT.hnsw_batch_distributed(
-                self, queries, query_id_col, query_vec_col, k, ef=ef,
-            )
-        qids = [r[0] for r in rows]
-        qmat = [base.prep_query(r[1], do_norm) for r in rows]
-        sc = self.spark.sparkContext
-        seg_dirs = self._segment_dirs()
-
         quant, qparams = self._quant()
-        run = SW.batch_runner(quant, qparams, kernel, qids, qmat, ef)
-
-        rdd = sc.parallelize(seg_dirs, len(seg_dirs)).mapPartitions(run)
-        cand = self.spark.createDataFrame(
-            rdd, schema="query_id bigint, id bigint, distance double"
-        ).withColumn("distance", base.post_map(metric, F.col("distance")))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("distance").asc(), F.col("id").asc()
+        run = SW.hnsw_segment_block_runner(
+            quant, qparams, self.meta["kernel"], max(self._resolve_ef(ef_search), k)
         )
-        return (
-            cand.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .drop("_rn")
+        return BT.search_blocks(
+            self, queries, query_id_col, query_vec_col, rows,
+            self._segment_dirs(), run, k,
         )
 
     def stat(self) -> dict:

@@ -170,14 +170,6 @@ class IVFIndex:
     #: exact, safe for the planner's bare-sphere dispatch.
     RANGE_EXACT = True
 
-    #: Secondary stop for the filtered-search widening ladder: accept a
-    #: top-k that survived one 4x probe widening unchanged even when the
-    #: exactness certificate does not fire (r11 advice — on clustered
-    #: data the certificate's ball bound is usually 0 and every filtered
-    #: search would otherwise escalate to a full scan).  Set False on a
-    #: handle to restore certificate-or-full-scan exactness.
-    STABLE_WIDEN_STOP = True
-
     def __init__(self, spark: SparkSession, path: str, meta: dict, centroids: np.ndarray):
         self.spark = spark
         self.path = path
@@ -186,7 +178,7 @@ class IVFIndex:
         self._lists_df: DataFrame | None = None
         self._radii: np.ndarray | None = None
         #: filtered-search widening stop reasons per handle
-        #: ({"rounds", "full", "certified", "stable", "exhausted"}) —
+        #: ({"rounds", "full", "certified", "exhausted"}) —
         #: makes the certificate's fire rate measurable (r11 advice)
         self.widen_stats: dict[str, int] = {}
 
@@ -653,16 +645,7 @@ class IVFIndex:
         vecf16 type's distances)."""
         kernel = self.meta["kernel"]
         if self.meta.get("storage") == "f16":
-            qv = np.asarray(qlist, dtype=np.float64)
-
-            @F.pandas_udf("double")
-            def f16_score(vb: pd.Series) -> pd.Series:
-                mat = np.asarray(
-                    [np.frombuffer(b, dtype=np.float16) for b in vb], dtype=np.float64
-                )
-                return pd.Series(base.np_kernel_distance(kernel, mat, qv))
-
-            return f16_score(F.col("vec16"))
+            return base.f16_distance(kernel, qlist)
         from pgvecto_rs_spark.operators.search import arrow_distance
 
         return arrow_distance(qlist, kernel)(F.col("vec"))
@@ -818,17 +801,16 @@ class IVFIndex:
         rerank_size: int = 0,
         max_widen: int = 3,
         exclude: DataFrame | None = None,
-        stable_stop: bool | None = None,
     ) -> DataFrame:
         """Top-k by metric distance.  Returns DataFrame(id, distance).
 
-        Filtered/excluded searches are EXACT only when the widening
-        ladder terminates at ``full`` or ``certified``; by default the
-        ladder may also stop at ``stable`` (top-k unchanged across a 4x
-        probe widening) — heuristically stable, NOT proven exact.  Pass
-        ``stable_stop=False`` (or set ``STABLE_WIDEN_STOP = False`` on
-        the handle) to restore the documented VBASE exact-k semantics:
-        the ladder then only returns certified or full-scan results.
+        Filtered/excluded searches are EXACT whenever the widening
+        ladder terminates at ``full`` or ``certified`` — the VBASE
+        exact-k semantics.  At the default nprobe (~nlist/20) the 4x
+        ladder reaches a full probe within the default ``max_widen=3``,
+        so every filtered search is exact; only an explicit small
+        nprobe with too few rounds to reach nlist can stop at
+        ``exhausted`` with an unproven top-k.
 
         ``nprobe`` defaults to ``default_nprobe`` = ceil(nlist/20), i.e.
         ~5% of lists (r11 calibration: the pool-fraction law measured at
@@ -856,33 +838,13 @@ class IVFIndex:
             #   full      — probed every list: exact by construction;
             #   certified — _widen_certified's ball/Cauchy-Schwarz
             #               bound proves the kept top-k is the global
-            #               filtered top-k: exact;
-            #   stable    — >=k survivors and the top-k (ids AND
-            #               distances) unchanged across a 4x probe
-            #               widening: a strong empirical signal, NOT a
-            #               proof — on clustered data the certificate
-            #               rarely fires (the nearest unprobed ball
-            #               usually overlaps the query, lb=0), and
-            #               without this stop every filtered search
-            #               escalated through all max_widen rounds to
-            #               a full scan (~nlist/nprobe-fold cost).
-            # The stable stop is more conservative than the PRE-r11
-            # luck-based stop (which returned round-1 results entirely
-            # unverified) but strictly LESS exact than the r11 ladder
-            # it replaces: that ladder always terminated at certified
-            # or full — i.e. exact — while the stable stop can return
-            # an unproven top-k at round 2 (r12 advice).  Its measured
-            # parity vs escalate-to-full at the 1M gate is recorded in
-            # BENCHNOTES ("stable-stop evidence", r13).
+            #               filtered top-k: exact.
+            # Otherwise probe 4x more lists, up to max_widen rounds.
             # self.widen_stats counts stop reasons per handle so the
             # certification rate is measurable (ADVICE r11).
             q_ = base.prep_query(query, self.meta["normalize"])
             np_eff = nprobe
-            prev_key = None
             stats = self.widen_stats
-            use_stable = (
-                self.STABLE_WIDEN_STOP if stable_stop is None else stable_stop
-            )
             for _ in range(max_widen + 1):
                 out = self.search(
                     query, k=k, nprobe=np_eff, filter=filter,
@@ -897,18 +859,6 @@ class IVFIndex:
                 if enough and self._widen_certified(q_, np_eff, rows):
                     stats["certified"] = stats.get("certified", 0) + 1
                     return self.spark.createDataFrame(rows, out.schema)
-                key = tuple(
-                    (int(r["id"]), float(r["distance"])) for r in rows
-                )
-                if (
-                    use_stable
-                    and enough
-                    and prev_key is not None
-                    and key == prev_key
-                ):
-                    stats["stable"] = stats.get("stable", 0) + 1
-                    return self.spark.createDataFrame(rows, out.schema)
-                prev_key = key
                 np_eff = min(self.meta["nlist"], np_eff * 4)
             stats["exhausted"] = stats.get("exhausted", 0) + 1
             return self.spark.createDataFrame(rows, out.schema)
@@ -1191,122 +1141,63 @@ class IVFIndex:
         nprobe: int | None = None,
         rerank_size: int = 0,
     ) -> DataFrame:
-        """Batched search (the hnsw.search_batch analogue): the union of
-        all queries' probed lists is scanned in ONE partition-pruned job;
-        each Arrow batch computes distances only for the queries probing
-        that row's list, and per-(query, batch) top-k bounds the shuffle.
-        Per-query warm latency is dispatch-dominated locally — batching
-        amortizes job setup across the query set.
+        """Batched search (the hnsw.search_batch analogue): each query
+        block pairs with round-robin chunks of list ids, one chunk per
+        core; a task probes its block's nearest lists in-task and scans
+        only the probed lists in its chunk, keeping per-query local
+        top-k, and a per-query window merges (indexes/batch.py — the
+        same block path at every query count, f32 and f16 storage
+        alike).  Per-query warm latency is dispatch-dominated locally —
+        batching amortizes job setup across the query set.
 
-        Quantized variants run the same two-phase shape batched: ONE
-        codes-only approximate scan for all queries (decode-on-access to
-        an approximate vector — algebraically identical to the per-list
-        ADC: cent + decode(res) recomposes before the kernel), a global
-        per-query approx window, then ONE pushed-id fetch reranks every
-        query's candidates with exact distances.  The batch path always
-        uses the fixed rerank window (max(k, rerank_size, 4k)); the
-        per-query sq8 default (error-bound rerank) needs a per-query
-        threshold job and is not batched.
+        Quantized variants under the driver cap run the two-phase shape
+        batched: ONE codes-only approximate scan for all queries
+        (decode-on-access to an approximate vector — algebraically
+        identical to the per-list ADC: cent + decode(res) recomposes
+        before the kernel), a global per-query approx window, then ONE
+        pushed-id fetch reranks every query's candidates with exact
+        distances.  The batch path always uses the fixed rerank window
+        (max(k, rerank_size, 4k)); the per-query sq8 default
+        (error-bound rerank) needs a per-query threshold job and is not
+        batched.  Over the cap they take the block path, which reads
+        the stored exact vectors.
 
         Returns (query_id, id, distance), k rows per query; unquantized
         results are bit-identical to per-query search at the same
         nprobe (same np_kernel_distance arithmetic)."""
-        from pyspark.sql import Window
-
         from pgvecto_rs_spark.indexes import batch as BT
+        from pgvecto_rs_spark.indexes import segment_worker as SW
 
         if nprobe is None:
             nprobe = int(self.meta.get("default_nprobe")
                          or default_nprobe(self.meta["nlist"]))
-        if self.meta["nlist"] == 0:  # empty index (issue_427 build path)
+        nlist = self.meta["nlist"]
+        if nlist == 0:  # empty index (issue_427 build path)
             return self.spark.createDataFrame(
                 [], "query_id bigint, id bigint, distance double"
             )
 
         qrows = BT.collect_queries_or_none(queries, query_id_col, query_vec_col)
-        if qrows is None:
-            # over-cap query set: per-block in-task probing + pyarrow
-            # scan of only the probed list partitions; exact distances
-            # (the stored true vectors), so quantized cells get the
-            # same-or-better ranking as the ADC+rerank path
-            return BT.ivf_batch_distributed(
-                self, queries, query_id_col, query_vec_col, k, nprobe
-            )
-
-        if self.meta.get("quantization") is not None or self.meta.get(
-            "residual_quantization"
+        if qrows is not None and (
+            self.meta.get("quantization") is not None
+            or self.meta.get("residual_quantization")
         ):
             return self._search_batch_quantized(
                 queries, query_id_col, query_vec_col, k, nprobe, rerank_size,
                 qrows=qrows,
             )
-
-        kernel, metric = self.meta["kernel"], self.meta["metric"]
-        rows = qrows
-        qids = [int(r[0]) for r in rows]
-        qmat = np.asarray(
-            [base.prep_query(r[1], self.meta["normalize"]) for r in rows], dtype=np.float64
+        n_chunks = min(nlist, self.spark.sparkContext.defaultParallelism)
+        chunks = [list(range(c, nlist, n_chunks)) for c in range(n_chunks)]
+        run = SW.ivf_block_runner(
+            self.centroids.astype(np.float64),
+            self.meta["kernel"],
+            int(nprobe),
+            int(k),
+            os.path.join(self.path, "lists"),
+            vec_col="vec16" if self.meta.get("storage") == "f16" else "vec",
         )
-        probes: dict[int, list[int]] = {}
-        for qi in range(len(qids)):
-            for lid in self.probe_lists(qmat[qi], nprobe):
-                probes.setdefault(int(lid), []).append(qi)
-        all_lists = sorted(probes)
-        qb = self.spark.sparkContext.broadcast((qids, qmat, probes))
-        kk = int(k)
-
-        storage = self.meta.get("storage", "f32")
-
-        def scan(batches):
-            qids_l, qm, pr = qb.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                out_qid: list[int] = []
-                out_id: list[int] = []
-                out_d: list[float] = []
-                for lid, grp in pdf.groupby("list_id"):
-                    qis = pr.get(int(lid))
-                    if not qis:
-                        continue
-                    if storage == "f16":
-                        mat = np.asarray(
-                            [np.frombuffer(b, dtype=np.float16) for b in grp["vec16"]],
-                            dtype=np.float64,
-                        )
-                    else:
-                        mat = np.asarray(grp["vec"].tolist(), dtype=np.float64)
-                    ids = grp["id"].to_numpy()
-                    top = min(kk, len(ids))
-                    for qi in qis:
-                        d = base.np_kernel_distance(kernel, mat, qm[qi])
-                        sel = np.argpartition(d, top - 1)[:top]
-                        out_qid.extend([qids_l[qi]] * len(sel))
-                        out_id.extend(ids[sel].tolist())
-                        out_d.extend(d[sel].tolist())
-                if out_qid:
-                    yield pd.DataFrame(
-                        {"query_id": out_qid, "id": out_id, "distance": out_d}
-                    )
-
-        vcol = "vec16" if self.meta.get("storage") == "f16" else "vec"
-        src = (
-            self._lists()
-            .where(F.col("list_id").isin(all_lists))
-            .select("id", vcol, "list_id")
-        )
-        cand = src.mapInPandas(
-            scan, "query_id bigint, id bigint, distance double"
-        ).withColumn("distance", base.post_map(metric, F.col("distance")))
-        if self.meta.get("replicas", 1) > 1:
-            # multi-assignment: the same id can reach a query from two
-            # probed lists with identical exact distances
-            cand = cand.dropDuplicates(["query_id", "id"])
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("id").asc())
-        return (
-            cand.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= kk)
-            .drop("_rn")
+        return BT.search_blocks(
+            self, queries, query_id_col, query_vec_col, qrows, chunks, run, k
         )
 
     def _search_batch_quantized(

@@ -488,74 +488,35 @@ def range_runner(quant, qparams, kernel: str, q: np.ndarray, kradius: float,
     return run
 
 
-def batch_runner(quant, qparams, kernel: str, qids: list, qmat: list, ef: int):
-    """mapPartitions runner for batched search: many queries per segment
-    pass (amortizes task dispatch and keeps the graph resident)."""
-    qmat = [np.asarray(qv, dtype=np.float64) for qv in qmat]
-
-    def run(it):
-        for seg_dir in it:
-            ids, vecs, neighbors, levels, entry = _load_segment(seg_dir, quant, qparams)
-            if len(ids) == 0:
-                continue
-            per_q = []
-            union: set[int] = set()
-            for qid, q in zip(qids, qmat):
-                ds, idxs = _search_graph(
-                    vecs, neighbors, levels, entry, q, kernel, ef
-                )
-                per_q.append((qid, q, idxs, ds))
-                if quant in _RERANK_QUANTS:
-                    union.update(int(i) for i in idxs)
-            if quant in _RERANK_QUANTS and union:
-                # ONE exact-vec fetch per segment for the whole query
-                # batch (r10): the per-query fetch re-read the vec
-                # column per (query, segment) — at 100 queries x 20
-                # segments that was 2000 parquet reads; the union is
-                # <= n_queries*ef rows and amortizes to one read
-                uni = np.asarray(sorted(union), dtype=np.int64)
-                mat = _read_exact_vecs(seg_dir, uni)
-                pos = {int(v): p for p, v in enumerate(uni)}
-                for qid, q, idxs, _coded in per_q:
-                    if not len(idxs):
-                        continue
-                    sel = np.asarray([pos[int(i)] for i in idxs])
-                    ds = np_kernel_distance(kernel, mat[sel], q)
-                    for i, d in zip(np.asarray(idxs)[:ef], ds[:ef]):
-                        yield (qid, int(ids[int(i)]), float(d))
-            else:
-                for qid, _q, idxs, ds in per_q:
-                    for i, d in zip(idxs[:ef], ds[:ef]):
-                        yield (qid, int(ids[int(i)]), float(d))
-
-    return run
-
-
 # ---------------------------------------------------------------------------
-# Distributed batch search (the over-cap path): query BLOCKS are
-# assembled executor-side — the query DataFrame never materializes on
-# the driver — and cartesian-paired with storage units (parquet files /
-# graph segments / probed lists).  Each task runs one (block x unit)
-# gemm / graph pass and emits per-query local top-k; a window merge
-# finishes globally.  O(Q x N) work is inherent to exact batch search;
-# this shape spreads it over tasks with bounded memory per task.
+# Batch search (indexes/batch.py): query BLOCKS — sliced on the driver
+# from a collected query set, or assembled executor-side for query sets
+# over the collect cap — are cartesian-paired with storage units
+# (parquet files / graph segments / list-id chunks).  Each task runs one
+# (block x unit) gemm / graph pass and emits per-query local top-k; a
+# window merge finishes globally.  O(Q x N) work is inherent to exact
+# batch search; this shape spreads it over tasks with bounded memory per
+# task.
 
 
-def assemble_block(rows_iter, normalize: bool):
-    """One (qids, qmat) block from an iterator of (qid, vec) rows —
-    runs INSIDE an executor task (rdd.mapPartitions)."""
+def assemble_block(rows, normalize: bool):
+    """One (qids, qmat) block from (qid, vec) rows, None when empty.
+    Runs on the driver for a collected query set and inside an executor
+    task (rdd.mapPartitions) otherwise.  Rows normalize one at a time,
+    exactly as ``base.prep_query`` does, so a block query scores
+    bit-identically to the per-query path."""
     qids, vecs = [], []
-    for r in rows_iter:
+    for r in rows:
         qids.append(int(r[0]))
-        vecs.append(np.asarray(r[1], dtype=np.float64))
+        v = np.asarray(r[1], dtype=np.float64)
+        if normalize:
+            n = np.linalg.norm(v)
+            if n > 0:
+                v = v / n
+        vecs.append(v)
     if not qids:
         return None
-    qmat = np.vstack(vecs)
-    if normalize:
-        n = np.linalg.norm(qmat, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        qmat = qmat / n
-    return (qids, qmat)
+    return (qids, np.vstack(vecs))
 
 
 def _block_topk_emit(qids, d, ids, k):
@@ -657,7 +618,10 @@ def hnsw_segment_block_runner(quant, qparams, kernel: str, ef: int):
                 if quant in _RERANK_QUANTS:
                     union.update(int(i) for i in idxs)
             if quant in _RERANK_QUANTS and union:
-                # one exact fetch per (block, segment) — see batch_runner
+                # ONE exact-vec fetch per (block, segment) serves every
+                # query in the block: the union is <= n_queries*ef rows,
+                # where per-query fetches would re-read the vec column
+                # once per (query, segment)
                 uni = np.asarray(sorted(union), dtype=np.int64)
                 mat = _read_exact_vecs(seg_dir, uni)
                 pos = {int(v): p for p, v in enumerate(uni)}
@@ -705,17 +669,19 @@ def _load_list(ldir: str, vec_col: str):
 
 def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
                      lists_dir: str, vec_col: str = "vec"):
-    """Runner over blocks: each task probes its block's nearest lists
-    and scans ONLY the union of probed list partitions with pyarrow
-    (the static partition-pruning of the DataFrame path, done in-task).
-    Centroids ride in the closure (nlist x dims, bounded by build)."""
+    """Runner over (block, list-id chunk) pairs: each task probes its
+    block's nearest lists and scans, with pyarrow, ONLY the probed lists
+    inside its chunk (the static partition-pruning of the DataFrame
+    path, done in-task).  Centroids ride in the closure (nlist x dims,
+    bounded by build)."""
     import os as _os
 
-    def run(blocks):
-        for blk in blocks:
+    def run(pairs):
+        for blk, chunk in pairs:
             if blk is None:
                 continue
             qids, qmat = blk
+            mine = set(chunk)
             nl = len(centroids)
             np_eff = min(nprobe, nl)
             # (queries x lists) centroid distances -> per-query probes
@@ -723,13 +689,14 @@ def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
             for qi in range(len(qmat)):
                 cd[qi] = np_kernel_distance(kernel, centroids, qmat[qi])
             # stable argsort mirrors IVFIndex.probe_lists exactly
-            # (deterministic tie-break), so the distributed path probes
-            # the same lists as the per-query path
+            # (deterministic tie-break), so a block probes the same
+            # lists as the per-query path
             probes = np.argsort(cd, axis=1, kind="stable")[:, :np_eff]
             by_list: dict = {}
             for qi, row in enumerate(probes):
                 for lid in row.tolist():
-                    by_list.setdefault(int(lid), []).append(qi)
+                    if lid in mine:
+                        by_list.setdefault(lid, []).append(qi)
             for lid, qis in sorted(by_list.items()):
                 ldir = _os.path.join(lists_dir, f"list_id={lid}")
                 if not _os.path.isdir(ldir):
@@ -737,10 +704,9 @@ def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
                 ids, mat = _load_list(ldir, vec_col)
                 if not len(ids):
                     continue
-                sub = np.asarray(qis, dtype=np.int64)
-                d = np.empty((len(mat), len(sub)))
-                for j, qi in enumerate(sub.tolist()):
+                d = np.empty((len(mat), len(qis)))
+                for j, qi in enumerate(qis):
                     d[:, j] = np_kernel_distance(kernel, mat, qmat[qi])
-                yield from _block_topk_emit([qids[qi] for qi in sub.tolist()], d, ids, k)
+                yield from _block_topk_emit([qids[qi] for qi in qis], d, ids, k)
 
     return run

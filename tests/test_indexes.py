@@ -769,53 +769,26 @@ class TestIVFWidening:
             ).collect()
             assert [r["id"] for r in out] == [r["vec_id"] for r in truth]
 
-    def test_stable_topk_stops_escalation(self, spark, emb, monkeypatch):
-        """r11 advice: on clustered data the exactness certificate
-        rarely fires (nearest unprobed ball overlaps the query), and
-        the old loop then escalated every filtered search to a full
-        scan.  With the certificate forced off, an unchanged top-k
-        across one 4x widening must stop the ladder after exactly two
-        rounds — and the answer must still match the exact filtered
-        oracle on this data."""
+    def test_uncertified_ladder_ends_at_full_scan(self, spark, emb, monkeypatch):
+        """With the exactness certificate forced off, the filtered
+        widening ladder must escalate to a full probe (4 -> 16 -> 32 of
+        32 lists) and return the exact filtered oracle; it has no other
+        early stop."""
         from pgvecto_rs_spark.indexes.ivf import IVFIndex as _IVF
 
         with tempfile.TemporaryDirectory() as d:
-            # ladder must have room BELOW full probe: 4 -> 16 -> 32(full),
-            # so a stable stop can only fire at round 2 (16 of 32 lists);
-            # nprobe=4 already holds the filtered top-5 on this fixture
-            # (verified against nprobe=16), so round 2 sees it unchanged
             idx = IVFIndex.create(spark, emb, d, metric="l2", nlist=32)
             monkeypatch.setattr(_IVF, "_widen_certified", lambda *a, **k: False)
             out = idx.search(
                 Q64, k=5, nprobe=4, filter=F.col("id") % 2 == 0
             ).collect()
-            assert idx.widen_stats.get("stable") == 1
-            assert idx.widen_stats.get("rounds") == 2  # not max_widen+1
+            assert idx.widen_stats == {"rounds": 3, "full": 1}
             monkeypatch.undo()
             truth = top_k(
                 emb, "embedding", Q64, 5, metric="l2",
                 filter=F.col("vec_id") % 2 == 0, tiebreaker="vec_id",
             ).collect()
             assert [r["id"] for r in out] == [r["vec_id"] for r in truth]
-
-    def test_stable_stop_kwarg_opts_out(self, spark, emb, monkeypatch):
-        """r12 advice: search(stable_stop=False) restores the documented
-        VBASE exact-k semantics per call — with the certificate forced
-        off the ladder must escalate to a full probe instead of
-        stopping on a stable top-k, without touching the handle's
-        STABLE_WIDEN_STOP default."""
-        from pgvecto_rs_spark.indexes.ivf import IVFIndex as _IVF
-
-        with tempfile.TemporaryDirectory() as d:
-            idx = IVFIndex.create(spark, emb, d, metric="l2", nlist=32)
-            monkeypatch.setattr(_IVF, "_widen_certified", lambda *a, **k: False)
-            idx.search(
-                Q64, k=5, nprobe=4, filter=F.col("id") % 2 == 0,
-                stable_stop=False,
-            ).collect()
-            assert idx.widen_stats.get("stable") is None
-            assert idx.widen_stats.get("full") == 1
-            assert idx.STABLE_WIDEN_STOP is True  # handle default intact
 
     def test_certificate_margin_fails_closed(self, spark, emb):
         """_widen_certified compares Spark-kernel t against a driver
@@ -1296,9 +1269,10 @@ class TestIVFF16:
 
 
 class TestDistributedBatch:
-    """Over-cap search_batch: the distributed (blocks x storage-units)
-    formulation must match the collected path bit-for-bit and never
-    materialize the query DataFrame on the driver."""
+    """Over-cap search_batch: executor-assembled query blocks must match
+    the driver-built blocks bit-for-bit and never materialize the query
+    DataFrame on the driver.  Each test spies on ``_blocks_rdd`` to show
+    which path ran."""
 
     def _qdf(self, spark, sf_dir, n=200):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1312,32 +1286,58 @@ class TestDistributedBatch:
             for r in df.collect()
         )
 
-    def test_flat_over_cap_matches_collected(self, spark, sf_dir, tmp_path, monkeypatch):
+    def _spy_blocks(self, monkeypatch):
+        """Count executor-side block assemblies."""
         from pgvecto_rs_spark.indexes import batch as BT
 
+        calls = []
+        real = BT._blocks_rdd
+
+        def spy(*a, **kw):
+            calls.append(1)
+            return real(*a, **kw)
+
+        monkeypatch.setattr(BT, "_blocks_rdd", spy)
+        return calls
+
+    def _over_cap(self, monkeypatch, cap, block_rows):
+        from pgvecto_rs_spark.indexes import batch as BT
+
+        monkeypatch.setattr(BT, "BATCH_COLLECT_CAP", cap)
+        monkeypatch.setattr(BT, "BLOCK_ROWS", block_rows)
+
+    def test_flat_over_cap_matches_collected(self, spark, sf_dir, tmp_path, monkeypatch):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         idx = FlatIndex.create(spark, emb, str(tmp_path / "fb"), metric="l2")
         q = self._qdf(spark, sf_dir, 120)
+        calls = self._spy_blocks(monkeypatch)
         collected = self._rows(idx.search_batch(q, "qid", "qv", k=5))
-        monkeypatch.setattr(BT, "BATCH_COLLECT_CAP", 16)
-        monkeypatch.setattr(BT, "BLOCK_ROWS", 32)
+        assert not calls
+        self._over_cap(monkeypatch, 16, 32)
         distributed = self._rows(idx.search_batch(q, "qid", "qv", k=5))
+        assert calls
         assert distributed == collected
 
     def test_ivf_over_cap_matches_collected(self, spark, sf_dir, tmp_path, monkeypatch):
-        from pgvecto_rs_spark.indexes import batch as BT
-
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        idx = IVFIndex.create(spark, emb, str(tmp_path / "ivb"), metric="l2", nlist=8)
         q = self._qdf(spark, sf_dir, 120)
-        collected = self._rows(idx.search_batch(q, "qid", "qv", k=5, nprobe=3))
-        monkeypatch.setattr(BT, "BATCH_COLLECT_CAP", 16)
-        monkeypatch.setattr(BT, "BLOCK_ROWS", 32)
-        distributed = self._rows(idx.search_batch(q, "qid", "qv", k=5, nprobe=3))
-        assert distributed == collected
+        for replicas in (1, 2):
+            idx = IVFIndex.create(
+                spark, emb, str(tmp_path / f"ivb{replicas}"), metric="l2",
+                nlist=8, replicas=replicas,
+            )
+            calls = self._spy_blocks(monkeypatch)
+            collected = self._rows(idx.search_batch(q, "qid", "qv", k=5, nprobe=3))
+            assert not calls
+            self._over_cap(monkeypatch, 16, 32)
+            distributed = self._rows(idx.search_batch(q, "qid", "qv", k=5, nprobe=3))
+            monkeypatch.undo()
+            assert calls, replicas
+            # k distinct ids per query: replicas must not repeat an id
+            assert len({r[:2] for r in collected}) == 120 * 5, replicas
+            assert distributed == collected, replicas
 
     def test_hnsw_over_cap_matches_collected(self, spark, sf_dir, tmp_path, monkeypatch):
-        from pgvecto_rs_spark.indexes import batch as BT
         from pgvecto_rs_spark.indexes.hnsw import HNSWIndex
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1345,10 +1345,12 @@ class TestDistributedBatch:
             spark, emb, str(tmp_path / "hb"), metric="l2", segment_rows=128
         )
         q = self._qdf(spark, sf_dir, 60)
+        calls = self._spy_blocks(monkeypatch)
         collected = self._rows(idx.search_batch(q, "qid", "qv", k=5, ef_search=50))
-        monkeypatch.setattr(BT, "BATCH_COLLECT_CAP", 8)
-        monkeypatch.setattr(BT, "BLOCK_ROWS", 16)
+        assert not calls
+        self._over_cap(monkeypatch, 8, 16)
         distributed = self._rows(idx.search_batch(q, "qid", "qv", k=5, ef_search=50))
+        assert calls
         assert distributed == collected
 
     def test_query_set_larger_than_cap_never_hits_driver(
@@ -1357,12 +1359,11 @@ class TestDistributedBatch:
         """A query DataFrame far larger than the collect cap runs end to
         end through the distributed path: the only driver materialization
         is the k-rows-per-query result we ask for."""
-        from pgvecto_rs_spark.indexes import batch as BT
-
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         corpus = emb.orderBy("vec_id").limit(64)
         idx = FlatIndex.create(spark, corpus, str(tmp_path / "big"), metric="l2")
-        monkeypatch.setattr(BT, "BATCH_COLLECT_CAP", 1000)
+        calls = self._spy_blocks(monkeypatch)
+        self._over_cap(monkeypatch, 1000, 4096)
         n_q = 20_000  # >> cap; generated lazily, never collected
         q = spark.range(n_q).select(
             F.col("id").alias("qid"),
@@ -1372,6 +1373,7 @@ class TestDistributedBatch:
             ).alias("qv"),
         )
         out = idx.search_batch(q, "qid", "qv", k=3)
+        assert calls
         assert out.groupBy().count().first()[0] == n_q * 3
 
 
