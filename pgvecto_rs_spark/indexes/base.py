@@ -12,7 +12,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the import-light executor copy, shared by driver-side code (centroid
+# selection, probes)
+from pgvecto_rs_spark.indexes.segment_worker import np_kernel_distance
+
 META_FILE = "_vindex_meta.json"
+_ISIN_LITERAL_CAP = 512  # max ids to inline as IN-list literals (planning cost)
 
 # DistanceKind (crates/base/src/distance.rs:5-10).  `cos` is not a
 # kernel kind: the opclass normalizes + runs Dot, post-maps d+1
@@ -49,17 +54,6 @@ def post_map(metric: str, dist_col):
     if metric.lower() == "cos":
         return dist_col + F.lit(1.0)
     return dist_col
-
-
-def np_kernel_distance(kernel: str, mat: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """Batch kernel distance, numpy (used for centroid selection and
-    executor-local reranks).  l2 = squared L2; dot = negative dot."""
-    if kernel == "l2":
-        d = mat - q[None, :]
-        return np.einsum("ij,ij->i", d, d)
-    if kernel == "dot":
-        return -(mat @ q)
-    raise ValueError(kernel)
 
 
 def f16_distance(kernel: str, q: Sequence[float], col: str = "vec16"):

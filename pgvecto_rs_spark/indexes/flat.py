@@ -42,7 +42,6 @@ from pgvecto_rs_spark.operators.search import distance as dist_expr
 
 SQ_BITS = 8  # default (crates/base/src/index.rs:447-462)
 _SQ_KINDS = {"sq1": 1, "sq2": 2, "sq4": 4, "sq8": 8}
-_ISIN_LITERAL_CAP = 512  # max ids to inline as IN-list literals (planning cost)
 
 
 class FlatIndex:
@@ -291,7 +290,7 @@ class FlatIndex:
         ids = [
             r["id"] for r in cand.select("id").limit(self.RERANK_FETCH_CAP + 1).collect()
         ]
-        if len(ids) <= _ISIN_LITERAL_CAP:
+        if len(ids) <= base._ISIN_LITERAL_CAP:
             fetched = rows.where(F.col("id").isin(ids))
         elif len(ids) <= self.RERANK_FETCH_CAP:
             # giant IN-lists cost more to plan/codegen than the row-group
@@ -452,186 +451,43 @@ class FlatIndex:
         query_vec_col: str,
         k: int = 10,
     ) -> DataFrame:
-        """Batched exact search (the hnsw.search_batch analogue): each
-        query block pairs with every rows file, one task per pair
-        computes a single (rows x queries) distance matrix and keeps
-        per-query local top-k, and a per-query window merges
-        (indexes/batch.py — the same block path at every query count,
-        f32 and f16 storage alike).  At warm local scale the per-query
-        path is dispatch-dominated; batching amortizes job setup across
-        the whole query set.  Quantized variants under the driver cap
-        run the two-phase shape batched (one codes-only approximate scan
-        + one pushed-id exact rerank, fixed window policy); over the cap
-        they take the block path, which reads exact vectors.  Returns
-        (query_id, id, distance), k rows per query."""
+        """Batched search (the hnsw.search_batch analogue): each query
+        block pairs with every rows file, one task per pair computes a
+        single (rows x queries) distance matrix and keeps per-query
+        local top-k, and a per-query window merges (indexes/batch.py —
+        the same block path at every query count, for f32 and f16
+        storage and every quantizer).  At warm local scale the
+        per-query path is dispatch-dominated; batching amortizes job
+        setup across the whole query set.  Quantized indexes run the
+        two-phase shape per (block, file): the codes score the block,
+        each query keeps its fixed rerank window (``scaled_rerank_window``
+        over n_rows; the per-query sq error-bound rerank needs a
+        threshold job per query and is not batched), and one pushed-id
+        read of the file reranks the windows exactly; the merge cuts the
+        global window, then k.  Returns (query_id, id, distance), k
+        rows per query."""
         from pgvecto_rs_spark.indexes import batch as BT
         from pgvecto_rs_spark.indexes import segment_worker as SW
 
         qrows = BT.collect_queries_or_none(queries, query_id_col, query_vec_col)
-        if qrows is not None and self.meta.get("quantization") is not None:
-            return self._search_batch_quantized(
-                queries, query_id_col, query_vec_col, k, qrows=qrows
-            )
-        files = sorted(glob.glob(os.path.join(self.path, "rows", "*.parquet")))
-        vec_col = "vec16" if self.meta.get("storage") == "f16" else "vec"
-        run = SW.flat_file_block_runner(self.meta["kernel"], int(k), vec_col)
-        return BT.search_blocks(
-            self, queries, query_id_col, query_vec_col, qrows, files, run, k
-        )
-
-    def _search_batch_quantized(
-        self,
-        queries: DataFrame,
-        query_id_col: str,
-        query_vec_col: str,
-        k: int,
-        rerank_size: int = 0,
-        qrows: list | None = None,
-    ) -> DataFrame:
-        """Batched two-phase for quantized flat: ONE codes-only scan
-        approximates all queries (decode-on-access), a global per-query
-        approx window, then ONE pushed-id fetch reranks every query's
-        candidates exactly (the IVF batched shape without the list
-        partitioning)."""
-        from pyspark.sql import Window
-
         meta = self.meta
-        quant = meta["quantization"]
-        if not rerank_size:
-            rerank_size = int(meta.get("default_rerank_size", 0))
-        from pgvecto_rs_spark.indexes.quantization import scaled_rerank_window
+        quant = meta.get("quantization")
+        params = win = None
+        if quant is not None:
+            from pgvecto_rs_spark.indexes.quantization import scaled_rerank_window
 
-        win = scaled_rerank_window(
-            quant, k, meta["n_rows"], rerank_size,
-            pq_ratio=int(meta.get("pq_ratio", 4)),
-        )
-        kk = int(k)
-        kernel, metric = meta["kernel"], meta["metric"]
-        # search_batch already collected the query set (cap check);
-        # reuse it — the old re-collect here was one redundant Spark
-        # job per batched quantized search (r11 verdict #5)
-        rows = (
-            qrows
-            if qrows is not None
-            else queries.select(query_id_col, query_vec_col).collect()
-        )
-        qids = [int(r[0]) for r in rows]
-        qmat = np.asarray(
-            [base.prep_query(r[1], meta["normalize"]) for r in rows], dtype=np.float64
-        )
-        sc = self.spark.sparkContext
-        if quant in _SQ_KINDS:
-            payload = (
-                "sq",
-                np.asarray(meta["sq_lo"], dtype=np.float64),
-                np.asarray(meta["sq_width"], dtype=np.float64),
-                float((1 << meta.get("sq_bits", 8)) - 1),
+            win = scaled_rerank_window(
+                quant, k, meta["n_rows"], int(meta.get("default_rerank_size", 0)),
+                pq_ratio=int(meta.get("pq_ratio", 4)),
             )
-        elif quant == "pq":
-            payload = ("pq", np.load(os.path.join(self.path, "pq_codebooks.npy")))
-        elif quant == "rabitq":
-            payload = ("rabitq", np.load(os.path.join(self.path, "rabitq_proj.npy")))
-        else:
-            raise ValueError(quant)
-        bc = sc.broadcast((qmat, payload))
-
-        def scan(batches):
-            qm, pl = bc.value
-            kind = pl[0]
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids = pdf["id"].to_numpy()
-                if kind == "sq":
-                    _, lo_, w_, lv = pl
-                    codes = np.asarray(pdf["codes"].tolist(), dtype=np.float64)
-                    approx = lo_[None, :] + codes / lv * w_[None, :]
-                elif kind == "pq":
-                    books = pl[1]
-                    codes = np.asarray(pdf["codes"].tolist(), dtype=np.int64)
-                    n_sub, _, sub = books.shape
-                    approx = np.empty((len(codes), n_sub * sub))
-                    for s in range(n_sub):
-                        approx[:, s * sub : (s + 1) * sub] = books[s][codes[:, s]]
-                else:
-                    proj = pl[1]
-                    d_ = proj.shape[0]
-                    nm = pdf["rq_norm"].to_numpy(dtype=np.float64)
-                    w = np.asarray(pdf["rq_words"].tolist(), dtype=np.int64).astype(
-                        np.uint32
-                    )
-                    nw = w.shape[1]
-                    bits = (
-                        (w[:, :, None] >> np.arange(32, dtype=np.uint32)[None, None, :]) & 1
-                    )
-                    bits = bits.reshape(len(w), nw * 32)[:, :d_].astype(np.float64)
-                    approx = (nm[:, None] / np.sqrt(d_)) * ((2.0 * bits - 1.0) @ proj)
-                top = min(win, len(ids))
-                oq: list[int] = []
-                oi: list[int] = []
-                od: list[float] = []
-                for qi in range(len(qm)):
-                    dd = base.np_kernel_distance(kernel, approx, qm[qi])
-                    sel = np.argpartition(dd, top - 1)[:top]
-                    oq.extend([qi] * len(sel))
-                    oi.extend(ids[sel].tolist())
-                    od.extend(dd[sel].tolist())
-                yield pd.DataFrame({"qi": oq, "id": oi, "adist": od})
-
-        if quant == "rabitq":
-            cols = [
-                F.col("id"),
-                F.col("rq.norm").alias("rq_norm"),
-                F.col("rq.words").alias("rq_words"),
-            ]
-        else:
-            cols = [F.col("id"), F.col("codes")]
-        approx_cand = self._rows().select(*cols).mapInPandas(
-            scan, "qi int, id bigint, adist double"
+            params = BT.quant_params(self, quant)
+        files = sorted(glob.glob(os.path.join(self.path, "rows", "*.parquet")))
+        vec_col = "vec16" if meta.get("storage") == "f16" else "vec"
+        run = SW.flat_file_block_runner(
+            meta["kernel"], int(k), vec_col, quant, params, win
         )
-        w1 = Window.partitionBy("qi").orderBy(F.col("adist").asc(), F.col("id").asc())
-        cand_rows = (
-            approx_cand.withColumn("_rn", F.row_number().over(w1))
-            .where(F.col("_rn") <= win)
-            .select("qi", "id")
-            .collect()
-        )
-        pairs_py = [(int(r["qi"]), int(r["id"])) for r in cand_rows]
-        uniq_ids = sorted({i for _, i in pairs_py})
-        rowsrc = self._rows().select("id", "vec")
-        # literal-inline only small id sets (planning cost — see the
-        # IVF batch fetch; same _ISIN_LITERAL_CAP rule)
-        if len(uniq_ids) <= _ISIN_LITERAL_CAP:
-            fetched = rowsrc.where(F.col("id").isin(uniq_ids))
-        else:
-            ids_df = self.spark.createDataFrame([(i,) for i in uniq_ids], "id bigint")
-            fetched = rowsrc.join(F.broadcast(ids_df), "id")
-        pairs = self.spark.createDataFrame(pairs_py, "qi int, id bigint")
-        joined = fetched.join(F.broadcast(pairs), "id")
-        bq = sc.broadcast(qmat)
-
-        @F.pandas_udf("double")
-        def exact_d(v: pd.Series, qi: pd.Series) -> pd.Series:
-            qm = bq.value
-            mat = np.asarray(v.tolist(), dtype=np.float64)
-            qa = qi.to_numpy()
-            out = np.empty(len(mat))
-            for qq in np.unique(qa):
-                m = qa == qq
-                out[m] = base.np_kernel_distance(kernel, mat[m], qm[int(qq)])
-            return pd.Series(out)
-
-        qid_arr = F.array(*[F.lit(q) for q in qids])
-        scored = joined.withColumn(
-            "distance", base.post_map(metric, exact_d(F.col("vec"), F.col("qi")))
-        ).withColumn("query_id", F.element_at(qid_arr, F.col("qi") + 1).cast("long"))
-        w2 = Window.partitionBy("query_id").orderBy(
-            F.col("distance").asc(), F.col("id").asc()
-        )
-        return (
-            scored.withColumn("_rn", F.row_number().over(w2))
-            .where(F.col("_rn") <= kk)
-            .select("query_id", "id", "distance")
+        return BT.search_blocks(
+            self, queries, query_id_col, query_vec_col, qrows, files, run, k, win
         )
 
     def stat(self) -> dict:

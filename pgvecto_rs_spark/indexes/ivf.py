@@ -60,7 +60,6 @@ def default_nprobe(nlist: int) -> int:
 
 KMEANS_ITERS = 10  # crates/k_means/src/lib.rs:40-46
 SAMPLE_CAP = 65536  # common/src/sample.rs
-_ISIN_LITERAL_CAP = 512  # max ids to inline as IN-list literals (planning cost)
 
 
 def _kmeanspp_init(x: np.ndarray, k: int, rng: np.random.Generator) -> np.ndarray:
@@ -992,13 +991,6 @@ class IVFIndex:
             quant, k, pool, rerank_size, pq_ratio=int(meta.get("pq_ratio", 4))
         )
 
-    #: max n_queries x nprobe x win approx-distance triples the batched
-    #: quantized path may collect to the driver (~16 B/triple plus Row
-    #: overhead -> low-GB worst case); above this the per-query cut
-    #: stays a distributed Window (r10 verdict: the uncapped collect
-    #: reached ~1e8 triples at documented caps)
-    BATCH_TRIPLES_DRIVER_CAP = 4_000_000
-
     def _fetch_rerank(self, rows: DataFrame, cand: DataFrame, scorer) -> DataFrame:
         """Second phase of the quantized scan: fetch candidates' exact
         vectors by id within the probed (pruned) lists and rescore.  Ids
@@ -1009,7 +1001,7 @@ class IVFIndex:
         ids = [
             r["id"] for r in cand.select("id").limit(self.RERANK_FETCH_CAP + 1).collect()
         ]
-        if len(ids) <= _ISIN_LITERAL_CAP:
+        if len(ids) <= base._ISIN_LITERAL_CAP:
             fetched = rows.where(F.col("id").isin(ids))
         elif len(ids) <= self.RERANK_FETCH_CAP:
             # a giant IN-list costs more to plan/codegen than it saves in
@@ -1146,338 +1138,64 @@ class IVFIndex:
         core; a task probes its block's nearest lists in-task and scans
         only the probed lists in its chunk, keeping per-query local
         top-k, and a per-query window merges (indexes/batch.py — the
-        same block path at every query count, f32 and f16 storage
-        alike).  Per-query warm latency is dispatch-dominated locally —
-        batching amortizes job setup across the query set.
+        same block path at every query count, for f32 and f16 storage
+        and every quantizer).  Per-query warm latency is
+        dispatch-dominated locally — batching amortizes job setup
+        across the query set.
 
-        Quantized variants under the driver cap run the two-phase shape
-        batched: ONE codes-only approximate scan for all queries
-        (decode-on-access to an approximate vector — algebraically
-        identical to the per-list ADC: cent + decode(res) recomposes
-        before the kernel), a global per-query approx window, then ONE
-        pushed-id fetch reranks every query's candidates with exact
-        distances.  The batch path always uses the fixed rerank window
-        (max(k, rerank_size, 4k)); the per-query sq8 default
-        (error-bound rerank) needs a per-query threshold job and is not
-        batched.  Over the cap they take the block path, which reads
-        the stored exact vectors.
+        Quantized indexes run the two-phase shape per (block, chunk):
+        the probed lists' residual codes score the block (decode-on-
+        access recomposes cent + decode(res), algebraically the
+        per-list ADC; PQ scores with a batched LUT), each query keeps
+        its top window by approximate distance, and one pushed-id read
+        over the chunk's probed lists reranks the windows exactly; the
+        merge cuts the global window, then k.  The batch path always
+        uses the fixed rerank window (``_fixed_rerank_window``); the
+        per-query sq8 default (error-bound rerank) needs a per-query
+        threshold job and is not batched.
 
         Returns (query_id, id, distance), k rows per query; unquantized
         results are bit-identical to per-query search at the same
         nprobe (same np_kernel_distance arithmetic)."""
         from pgvecto_rs_spark.indexes import batch as BT
         from pgvecto_rs_spark.indexes import segment_worker as SW
+        from pgvecto_rs_spark.indexes.flat import _SQ_KINDS
 
+        meta = self.meta
         if nprobe is None:
-            nprobe = int(self.meta.get("default_nprobe")
-                         or default_nprobe(self.meta["nlist"]))
-        nlist = self.meta["nlist"]
+            nprobe = int(meta.get("default_nprobe") or default_nprobe(meta["nlist"]))
+        nlist = meta["nlist"]
         if nlist == 0:  # empty index (issue_427 build path)
             return self.spark.createDataFrame(
                 [], "query_id bigint, id bigint, distance double"
             )
 
         qrows = BT.collect_queries_or_none(queries, query_id_col, query_vec_col)
-        if qrows is not None and (
-            self.meta.get("quantization") is not None
-            or self.meta.get("residual_quantization")
-        ):
-            return self._search_batch_quantized(
-                queries, query_id_col, query_vec_col, k, nprobe, rerank_size,
-                qrows=qrows,
-            )
+        quant = meta.get("quantization") or (
+            "sq8" if meta.get("residual_quantization") else None
+        )
+        params = win = None
+        if quant is not None:
+            # scale-aware default window keyed by the EFFECTIVE code
+            # kind (residual SQ keeps its trained bit width in meta)
+            qkey = f"sq{meta.get('sq_bits', 8)}" if quant in _SQ_KINDS else quant
+            win = self._fixed_rerank_window(qkey, k, nprobe, rerank_size)
+            params = BT.quant_params(self, quant)
         n_chunks = min(nlist, self.spark.sparkContext.defaultParallelism)
         chunks = [list(range(c, nlist, n_chunks)) for c in range(n_chunks)]
         run = SW.ivf_block_runner(
             self.centroids.astype(np.float64),
-            self.meta["kernel"],
+            meta["kernel"],
             int(nprobe),
             int(k),
             os.path.join(self.path, "lists"),
-            vec_col="vec16" if self.meta.get("storage") == "f16" else "vec",
+            vec_col="vec16" if meta.get("storage") == "f16" else "vec",
+            quant=quant,
+            params=params,
+            win=win,
         )
         return BT.search_blocks(
-            self, queries, query_id_col, query_vec_col, qrows, chunks, run, k
-        )
-
-    def _search_batch_quantized(
-        self,
-        queries: DataFrame,
-        query_id_col: str,
-        query_vec_col: str,
-        k: int,
-        nprobe: int | None,
-        rerank_size: int,
-        qrows: list | None = None,
-    ) -> DataFrame:
-        """Batched two-phase search for quantized IVF: ONE codes-only
-        scan of the union of probed lists approximates all queries
-        (decode-on-access recomposes cent + decode(res), algebraically
-        the per-list ADC), a global per-query approx window, then ONE
-        pushed-id fetch reranks every query's candidates exactly."""
-        from pyspark.sql import Window
-
-        from pgvecto_rs_spark.indexes.flat import _SQ_KINDS
-
-        meta = self.meta
-        quant = meta.get("quantization") or (
-            "sq8" if meta.get("residual_quantization") else None
-        )
-        if nprobe is None:
-            nprobe = int(meta.get("default_nprobe")
-                         or default_nprobe(meta["nlist"]))
-        # scale-aware default window keyed by the EFFECTIVE code kind
-        # (residual SQ keeps its trained bit width in meta, the quant
-        # string alone says "sq8")
-        qkey = quant
-        if quant in _SQ_KINDS or meta.get("residual_quantization"):
-            qkey = f"sq{meta.get('sq_bits', 8)}"
-        win = self._fixed_rerank_window(qkey, k, nprobe, rerank_size)
-        kk = int(k)
-        kernel, metric = meta["kernel"], meta["metric"]
-        # reuse the caller's collected query set when given — the old
-        # re-collect was one redundant Spark job per batched quantized
-        # search (r11 verdict #5)
-        rows = (
-            qrows
-            if qrows is not None
-            else queries.select(query_id_col, query_vec_col).collect()
-        )
-        qids = [int(r[0]) for r in rows]
-        qmat = np.asarray(
-            [base.prep_query(r[1], meta["normalize"]) for r in rows], dtype=np.float64
-        )
-        probes: dict[int, list[int]] = {}
-        for i in range(len(qids)):
-            for lid in self.probe_lists(qmat[i], nprobe):
-                probes.setdefault(int(lid), []).append(i)
-        all_lists = sorted(probes)
-        sc = self.spark.sparkContext
-
-        cent = self.centroids.astype(np.float64)
-        if quant in _SQ_KINDS:
-            payload = (
-                "sq",
-                np.asarray(meta["sq_lo"], dtype=np.float64),
-                np.asarray(meta["sq_width"], dtype=np.float64),
-                float((1 << meta.get("sq_bits", 8)) - 1),
-            )
-        elif quant == "pq":
-            payload = ("pq", np.load(os.path.join(self.path, "pq_codebooks.npy")))
-        elif quant == "rabitq":
-            payload = ("rabitq", np.load(os.path.join(self.path, "rabitq_proj.npy")))
-        else:
-            raise ValueError(quant)
-        bc = sc.broadcast((cent, qmat, probes, payload))
-
-        def scan(batches):
-            cent_, qm, pr, pl = bc.value
-            kind = pl[0]
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                oq: list[int] = []
-                oi: list[int] = []
-                od: list[float] = []
-                for lid, grp in pdf.groupby("list_id"):
-                    qis = pr.get(int(lid))
-                    if not qis:
-                        continue
-                    ids = grp["id"].to_numpy()
-                    c = cent_[int(lid)]
-                    if kind == "sq":
-                        _, lo_, w_, lv = pl
-                        codes = np.asarray(grp["codes"].tolist(), dtype=np.float64)
-                        approx = c[None, :] + lo_[None, :] + codes / lv * w_[None, :]
-                    elif kind == "pq":
-                        # batched ADC (r9 advice item 4): ONE shared LUT
-                        # tensor per (list, query-set) — (n_sub, 2^bits,
-                        # nq) — then score every query with n_sub gather-
-                        # adds over the code matrix.  n_sub ≪ dims, so
-                        # this beats the old decode-to-dense + per-query
-                        # dense-distance path by ~dims/n_sub and amortizes
-                        # BETTER with more queries (the LUT build is per
-                        # list, not per query·row).
-                        books = pl[1]
-                        codes = np.asarray(grp["codes"].tolist(), dtype=np.int64)
-                        n_sub, ksz, sub = books.shape
-                        qs = qm[qis]
-                        qres = qs - c[None, :] if kernel == "l2" else qs
-                        # one-shot LUT tensor for ALL subspaces x queries
-                        # (r11: the per-subspace einsum loop was the
-                        # batched-ADC hot spot — 12.3 -> 7.4 ms per
-                        # 1000-row list at 100 queries in isolation);
-                        # the gather-add stays a per-subspace loop: the
-                        # flat (rows x n_sub x nq) gather materializes
-                        # too much at large lists (4x slower at 20k rows)
-                        qb = qres.reshape(len(qis), n_sub, sub)
-                        cross = np.einsum("qsj,skj->qsk", qb, books)
-                        if kernel == "l2":
-                            b2 = np.einsum("skj,skj->sk", books, books)
-                            q2 = np.einsum("qsj,qsj->qs", qb, qb)
-                            lut = (b2[None, :, :] - 2.0 * cross
-                                   + q2[:, :, None]).transpose(1, 2, 0)
-                        else:
-                            lut = (-cross).transpose(1, 2, 0)
-                        acc = np.zeros((len(codes), len(qis)))
-                        for s in range(n_sub):
-                            acc += lut[s][codes[:, s]]
-                        if kernel != "l2":
-                            acc += -(qs @ c)[None, :]
-                        top = min(win, len(ids))
-                        for j, qi in enumerate(qis):
-                            dd = acc[:, j]
-                            sel = np.argpartition(dd, top - 1)[:top]
-                            oq.extend([qi] * len(sel))
-                            oi.extend(ids[sel].tolist())
-                            od.extend(dd[sel].tolist())
-                        continue
-                    else:
-                        proj = pl[1]
-                        d_ = proj.shape[0]
-                        nm = grp["rq_norm"].to_numpy(dtype=np.float64)
-                        w = np.asarray(grp["rq_words"].tolist(), dtype=np.int64).astype(
-                            np.uint32
-                        )
-                        nw = w.shape[1]
-                        bits = (
-                            (w[:, :, None] >> np.arange(32, dtype=np.uint32)[None, None, :])
-                            & 1
-                        )
-                        bits = bits.reshape(len(w), nw * 32)[:, :d_].astype(np.float64)
-                        sgn = 2.0 * bits - 1.0
-                        approx = c[None, :] + (nm[:, None] / np.sqrt(d_)) * (sgn @ proj)
-                    top = min(win, len(ids))
-                    for qi in qis:
-                        dd = base.np_kernel_distance(kernel, approx, qm[qi])
-                        sel = np.argpartition(dd, top - 1)[:top]
-                        oq.extend([qi] * len(sel))
-                        oi.extend(ids[sel].tolist())
-                        od.extend(dd[sel].tolist())
-                if oq:
-                    yield pd.DataFrame({"qi": oq, "id": oi, "adist": od})
-
-        if quant == "rabitq":
-            select_cols = [
-                F.col("id"),
-                F.col("list_id"),
-                F.col("rq.norm").alias("rq_norm"),
-                F.col("rq.words").alias("rq_words"),
-            ]
-        else:
-            select_cols = [F.col("id"), F.col("list_id"), F.col("codes")]
-        src = self._lists().where(F.col("list_id").isin(all_lists)).select(*select_cols)
-        approx_cand = src.mapInPandas(scan, "qi int, id bigint, adist double")
-        rowsrc = (
-            self._lists()
-            .where(F.col("list_id").isin(all_lists))
-            .select("id", "vec")
-        )
-        if meta.get("replicas", 1) > 1:
-            # multi-assignment stores each id in several lists; dedupe
-            # before the rerank join.  NOT done for replicas=1 — ids
-            # are unique there and the dropDuplicates was shuffling
-            # every probed row's vector payload for nothing (r10).
-            rowsrc = rowsrc.dropDuplicates(["id"])
-        # Global per-query top-win: driver cut vs distributed cut, gated
-        # on the a-priori bound of what the scan can emit.  Each probed
-        # (list, query) pair contributes <= win triples, so the collect
-        # is bounded by n_queries x nprobe x win (int, long, double)
-        # rows.  Under BATCH_TRIPLES_DRIVER_CAP that is a few-hundred-MB
-        # worst case and the driver cut removes one whole shuffle stage
-        # from the batched two-phase path (r10: pq batched wall
-        # 2.4 s -> ~1.6 s at 32 queries).  ABOVE the cap (big batch x
-        # big nprobe — ~1e8 triples at BATCH_COLLECT_CAP queries with
-        # default nprobe, a driver OOM) the cut stays distributed: a
-        # query-keyed Window on executors, rerank joins without driver
-        # materialization (r10 verdict item 1).
-        est_triples = len(qids) * min(int(nprobe), meta["nlist"]) * win
-        if est_triples <= self.BATCH_TRIPLES_DRIVER_CAP:
-            cand_rows = approx_cand.collect()
-            by_q: dict[int, dict[int, float]] = {}
-            for r in cand_rows:
-                qd = by_q.setdefault(int(r["qi"]), {})
-                i = int(r["id"])
-                a = float(r["adist"])
-                # replicas > 1 can emit the same id from two probed
-                # lists; keep the best adist (rows otherwise identical)
-                if i not in qd or a < qd[i]:
-                    qd[i] = a
-            pairs_py = [
-                (qi, i)
-                for qi, qd in by_q.items()
-                for i in sorted(qd, key=lambda j: (qd[j], j))[:win]
-            ]
-            uniq_ids = sorted({i for _, i in pairs_py})
-            # literal-inline ONLY small id sets: at batch sizes the
-            # candidate union easily reaches thousands, and a 4k-literal
-            # IN expression costs ~2.5 s of planning alone (measured
-            # r11: isin fetch 4.66 s vs broadcast-join fetch 2.12 s at
-            # 40 queries x 50k rows) — the same _ISIN_LITERAL_CAP rule
-            # the single-query rerank fetch already applies
-            if len(uniq_ids) <= _ISIN_LITERAL_CAP:
-                fetched = rowsrc.where(F.col("id").isin(uniq_ids))
-            else:
-                ids_df = self.spark.createDataFrame(
-                    [(i,) for i in uniq_ids], "id bigint"
-                )
-                fetched = rowsrc.join(F.broadcast(ids_df), "id")
-            pairs = self.spark.createDataFrame(pairs_py, "qi int, id bigint")
-            joined = fetched.join(F.broadcast(pairs), "id")
-        else:
-            acand = approx_cand
-            if meta.get("replicas", 1) > 1:
-                acand = acand.groupBy("qi", "id").agg(F.min("adist").alias("adist"))
-            w1 = Window.partitionBy("qi").orderBy(
-                F.col("adist").asc(), F.col("id").asc()
-            )
-            pairs = (
-                acand.withColumn("_rn", F.row_number().over(w1))
-                .where(F.col("_rn") <= win)
-                .select("qi", "id")
-            )
-            # no driver round-trip: candidate ids stay a DataFrame; the
-            # rerank fetch is a distinct-id join (AQE broadcasts it when
-            # the candidate set turns out small) and pairs re-join by id
-            joined = rowsrc.join(pairs.select("id").distinct(), "id").join(
-                pairs, "id"
-            )
-        bq = sc.broadcast(qmat)
-
-        @F.pandas_udf("double")
-        def exact_d(v: pd.Series, qi: pd.Series) -> pd.Series:
-            qm = bq.value
-            mat = np.asarray(v.tolist(), dtype=np.float64)
-            qa = qi.to_numpy()
-            out = np.empty(len(mat))
-            for qq in np.unique(qa):
-                m = qa == qq
-                out[m] = base.np_kernel_distance(kernel, mat[m], qm[int(qq)])
-            return pd.Series(out)
-
-        scored = joined.withColumn(
-            "distance", base.post_map(metric, exact_d(F.col("vec"), F.col("qi")))
-        )
-        if len(qids) <= 1024:
-            qid_arr = F.array(*[F.lit(q) for q in qids])
-            scored = scored.withColumn(
-                "query_id", F.element_at(qid_arr, F.col("qi") + 1).cast("long")
-            )
-        else:
-            # a 65k-literal array expression is a planner hazard at the
-            # documented BATCH_COLLECT_CAP; map qi -> query_id with a
-            # broadcast join instead
-            qmap = self.spark.createDataFrame(
-                [(i, int(q)) for i, q in enumerate(qids)], "qi int, query_id bigint"
-            )
-            scored = scored.join(F.broadcast(qmap), "qi")
-        w2 = Window.partitionBy("query_id").orderBy(
-            F.col("distance").asc(), F.col("id").asc()
-        )
-        return (
-            scored.withColumn("_rn", F.row_number().over(w2))
-            .where(F.col("_rn") <= kk)
-            .select("query_id", "id", "distance")
+            self, queries, query_id_col, query_vec_col, qrows, chunks, run, k, win
         )
 
     def stat(self) -> dict:

@@ -152,33 +152,28 @@ class _RaBitQVecs:
         return dec[0] if single else dec
 
 
-def _read_exact_vecs(seg_dir: str, idxs: np.ndarray) -> np.ndarray:
-    """Transiently fetch exact vectors for the given node indexes from
-    the segment Parquet (vec column only) — the graph reranker's
-    storage access (reranker/graph_2.rs): exact values are read per
-    query, never held resident.  Small requests push an ``idx IN``
-    predicate into the parquet read (row-group stats pruning — the
-    same touched-chunks-only property as the IVF rerank's pushed-id
-    fetch); a full-segment request keeps the plain column read."""
+def _read_exact_vecs(source, keys: np.ndarray, key: str = "idx") -> np.ndarray:
+    """Transiently fetch exact vectors, in ``keys`` order, from Parquet
+    storage (``key`` + vec columns only) — the reranker's storage
+    access (reranker/graph_2.rs): exact values are read per request,
+    never held resident.  ``source`` is a segment directory or a list
+    of files; ``key`` is the HNSW node index ``idx`` or the row ``id``
+    (a replicated IVF row may repeat across lists — any copy serves,
+    the vectors are identical).  Small requests push a ``key IN``
+    predicate into the parquet read (row-group stats pruning); a large
+    one keeps the plain column read."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    idxs = np.asarray(idxs, dtype=np.int64)
-    if 0 < len(idxs) <= 2048:
-        want = sorted({int(i) for i in idxs})
-        tbl = pq.read_table(
-            seg_dir, columns=["idx", "vec"], filters=[("idx", "in", want)]
-        )
-        got = tbl.column("idx").to_numpy()
-        pos = {int(v): p for p, v in enumerate(got)}
-        import pyarrow as pa
-
-        picked = tbl.column("vec").take(pa.array([pos[int(i)] for i in idxs]))
-        return np.asarray(picked.to_pylist(), dtype=np.float64)
-    tbl = pq.read_table(seg_dir, columns=["idx", "vec"])
-    # map node index -> row position, then Arrow-take ONLY those rows
-    pos_of = np.argsort(tbl.column("idx").to_numpy())
-    picked = tbl.column("vec").take(pos_of[idxs])
-    return np.asarray(picked.to_pylist(), dtype=np.float64)
+    keys = np.asarray(keys, dtype=np.int64)
+    filters = None
+    if 0 < len(keys) <= 2048:
+        filters = [(key, "in", sorted({int(i) for i in keys}))]
+    tbl = pq.read_table(source, columns=[key, "vec"], filters=filters)
+    got = tbl.column(key).to_numpy()
+    order = np.argsort(got, kind="stable")
+    pos = order[np.searchsorted(got, keys, sorter=order)]
+    return _read_vec_matrix_from(tbl.column("vec").take(pa.array(pos)), np.float64)
 
 
 def _load_segment(seg_dir: str, quant: str | None = None, qparams: tuple = ()):
@@ -496,7 +491,10 @@ def range_runner(quant, qparams, kernel: str, q: np.ndarray, kradius: float,
 # (block x unit) gemm / graph pass and emits per-query local top-k; a
 # window merge finishes globally.  O(Q x N) work is inherent to exact
 # batch search; this shape spreads it over tasks with bounded memory per
-# task.
+# task.  Quantized flat and IVF units run the two-phase scan in the
+# same task: codes score the block, each query keeps its approximate
+# window, and one exact fetch per (block, unit) rescores the windows
+# (the per-unit rerank of crates/quantization/src/reranker/*).
 
 
 def assemble_block(rows, normalize: bool):
@@ -532,27 +530,27 @@ def _block_topk_emit(qids, d, ids, k):
             yield (qids[qi], int(i), float(dv))
 
 
-def _read_vec_matrix_from(col) -> np.ndarray:
-    """list<float> column -> float32 matrix via the Arrow values-buffer
+def _read_vec_matrix_from(col, dtype=np.float32) -> np.ndarray:
+    """list<number> column -> matrix via the Arrow values-buffer
     reshape (equal-length null-free lists guaranteed by index layout).
 
-    RESIDENT matrices stay f32 (r12 verdict item #2 / r11 #8): the
-    stored values ARE f32, every distance call mixes them with an f64
-    query (numpy promotes, so results are bit-identical to an f64
+    RESIDENT vector matrices stay f32 (r12 verdict item #2 / r11 #8):
+    the stored values ARE f32, every distance call mixes them with an
+    f64 query (numpy promotes, so results are bit-identical to an f64
     resident copy), and f32 halves both the resident footprint and the
     first-touch decode traffic — measured 2.11 -> 1.63 ms/segment
     traversal at 256 dims (scripts/hnsw_qps_floor_experiment.py) and
     half the 1024-dim cold-load bytes.  Exact rerank fetches
-    (_read_exact_vecs) stay f64."""
+    (_read_exact_vecs) widen to f64; code columns read as int64."""
     import pyarrow as pa
 
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     n = len(col)
     if not n:
-        return np.empty((0, 0), dtype=np.float32)
+        return np.empty((0, 0), dtype=dtype)
     flat = col.flatten().to_numpy(zero_copy_only=False)
-    return np.ascontiguousarray(flat, dtype=np.float32).reshape(n, len(flat) // n)
+    return np.ascontiguousarray(flat, dtype=dtype).reshape(n, len(flat) // n)
 
 
 def _read_vec_matrix(tbl, vec_col: str) -> np.ndarray:
@@ -570,30 +568,153 @@ def _read_vec_matrix(tbl, vec_col: str) -> np.ndarray:
             [np.frombuffer(bb, dtype=np.float16) for bb in col.to_pylist()],
             dtype=np.float32,
         )
-    flat = col.combine_chunks().flatten().to_numpy(zero_copy_only=False)
-    n = len(col)
-    return (np.ascontiguousarray(flat, dtype=np.float32).reshape(n, len(flat) // n)
-            if n else np.empty((0, 0), dtype=np.float32))
+    return _read_vec_matrix_from(col)
 
 
-def flat_file_block_runner(kernel: str, k: int, vec_col: str = "vec"):
-    """Runner over (block, parquet_file) pairs: one gemm per pair."""
+def _unit_col(quant, vec_col: str) -> str:
+    """The column a batch scan reads from a storage unit: the vectors,
+    or the quantizer's codes (RaBitQ keeps its (norm, words) struct in
+    ``rq``)."""
+    if quant is None:
+        return vec_col
+    return "rq" if quant == "rabitq" else "codes"
+
+
+def _read_unit(tbl, col: str):
+    """One unit's payload: a vector matrix, an int64 code matrix (SQ,
+    PQ), or (norms, sign words) for RaBitQ."""
+    if col == "rq":
+        norm, words = tbl.column("rq").combine_chunks().flatten()
+        return (norm.to_numpy(zero_copy_only=False).astype(np.float64),
+                _read_vec_matrix_from(words, np.int64).astype(np.uint32))
+    if col == "codes":
+        return _read_vec_matrix_from(tbl.column(col), np.int64)
+    return _read_vec_matrix(tbl, col)
+
+
+def _decode_codes(quant: str, params, codes, cent=None) -> np.ndarray:
+    """Approximate vectors from one unit's codes (decode-on-access):
+    flat codes decode to the stored vectors, IVF codes to residuals
+    recomposed with the list centroid ``cent``."""
+    if quant == "rabitq":
+        approx = _RaBitQVecs(codes[0], codes[1], params)[:]
+    elif quant == "pq":
+        approx = _PQCodedVecs(codes, params)[:]
+    else:
+        lo, width, levels = params
+        off = lo if cent is None else cent + lo
+        return off[None, :] + codes / levels * width[None, :]
+    return approx if cent is None else cent[None, :] + approx
+
+
+def _ivf_pq_adist(books: np.ndarray, kernel: str, codes: np.ndarray,
+                  c: np.ndarray, qs: np.ndarray) -> np.ndarray:
+    """(rows x queries) ADC over one list's residual PQ codes.
+
+    Batched ADC (r9 advice item 4): ONE shared LUT tensor per (list,
+    query-set) — (n_sub, 2^bits, nq) — then every query scores with
+    n_sub gather-adds over the code matrix.  n_sub << dims, so this
+    beats decode-to-dense + per-query dense distance by ~dims/n_sub and
+    amortizes better with more queries.  The LUT is one einsum over all
+    subspaces x queries (r11: the per-subspace loop was the hot spot —
+    12.3 -> 7.4 ms per 1000-row list at 100 queries); the gather-add
+    stays a per-subspace loop (a flat (rows x n_sub x nq) gather is 4x
+    slower at 20k rows).  Every term is per-query arithmetic, so a
+    query scores the same whichever block it rides in."""
+    n_sub, _, sub = books.shape
+    qres = qs - c[None, :] if kernel == "l2" else qs
+    qb = qres.reshape(len(qs), n_sub, sub)
+    cross = np.einsum("qsj,skj->qsk", qb, books)
+    if kernel == "l2":
+        b2 = np.einsum("skj,skj->sk", books, books)
+        q2 = np.einsum("qsj,qsj->qs", qb, qb)
+        lut = (b2[None, :, :] - 2.0 * cross + q2[:, :, None]).transpose(1, 2, 0)
+    else:
+        lut = (-cross).transpose(1, 2, 0)
+    acc = np.zeros((len(codes), len(qs)))
+    for s in range(n_sub):
+        acc += lut[s][codes[:, s]]
+    if kernel != "l2":
+        # dot: -q.(c + res); a per-row einsum, not a gemv, whose result
+        # would depend on how many queries share the list
+        acc += -np.einsum("qj,j->q", qs, c)[None, :]
+    return acc
+
+
+def _approx_dists(quant: str, params, kernel: str, codes, qs: np.ndarray,
+                  cent=None) -> np.ndarray:
+    """(rows x queries) approximate distances over one unit's codes:
+    IVF-PQ scores with the batched LUT, every other cell decodes and
+    scores like the exact gemm."""
+    if quant == "pq" and cent is not None:
+        return _ivf_pq_adist(params, kernel, codes, cent, qs)
+    approx = _decode_codes(quant, params, codes, cent)
+    ad = np.empty((len(approx), len(qs)))
+    for j, q in enumerate(qs):
+        ad[:, j] = np_kernel_distance(kernel, approx, q)
+    return ad
+
+
+def _window(d: np.ndarray, ids: np.ndarray, top: int) -> np.ndarray:
+    """Row indexes of the ``top`` smallest ``d`` ordered by (d, id) —
+    the merge's order, so a unit-local window keeps every row the
+    global cut would."""
+    if top >= len(d):
+        return np.arange(len(d))
+    t = d[np.argpartition(d, top - 1)[top - 1]]
+    below = np.flatnonzero(d < t)
+    tied = np.flatnonzero(d == t)
+    tied = tied[np.argsort(ids[tied], kind="stable")][: top - len(below)]
+    return np.concatenate([below, tied])
+
+
+def _rerank_emit(kernel: str, source, windows: list):
+    """Exact rerank of a (block, unit) pair's approximate windows
+    ``(qid, q, ids, adists)``: ONE pushed ``id IN`` read of ``source``
+    fetches the union, every query rescores its own window.  Emits
+    (query_id, id, adist, distance)."""
+    if not windows:
+        return
+    uni = np.unique(np.concatenate([w[2] for w in windows]))
+    mat = _read_exact_vecs(source, uni, key="id")
+    for qid, q, wid, wad in windows:
+        ds = np_kernel_distance(kernel, mat[np.searchsorted(uni, wid)], q)
+        for i, a, d in zip(wid.tolist(), wad.tolist(), ds.tolist()):
+            yield (qid, i, a, d)
+
+
+def flat_file_block_runner(kernel: str, k: int, vec_col: str = "vec",
+                           quant=None, params=None, win: int = 0):
+    """Runner over (block, parquet_file) pairs: one gemm per pair.  A
+    quantized index reads the file's codes instead, keeps each query's
+    top ``win`` by approximate distance and reranks them exactly."""
     import pyarrow.parquet as pq
+
+    col = _unit_col(quant, vec_col)
 
     def run(pairs):
         for blk, path in pairs:
             if blk is None:
                 continue
             qids, qmat = blk
-            tbl = pq.read_table(path, columns=["id", vec_col])
+            tbl = pq.read_table(path, columns=["id", col])
             ids = tbl.column("id").to_numpy()
             if not len(ids):
                 continue
-            mat = _read_vec_matrix(tbl, vec_col)
-            d = np.empty((len(mat), len(qmat)))
-            for qi in range(len(qmat)):
-                d[:, qi] = np_kernel_distance(kernel, mat, qmat[qi])
-            yield from _block_topk_emit(qids, d, ids, k)
+            unit = _read_unit(tbl, col)
+            if quant is None:
+                d = np.empty((len(unit), len(qmat)))
+                for qi in range(len(qmat)):
+                    d[:, qi] = np_kernel_distance(kernel, unit, qmat[qi])
+                yield from _block_topk_emit(qids, d, ids, k)
+                continue
+            ad = _approx_dists(quant, params, kernel, unit, qmat)
+            top = min(win, len(ids))
+            wins = []
+            for j, (qid, q) in enumerate(zip(qids, qmat)):
+                sel = _window(ad[:, j], ids, top)
+                wins.append((qid, q, ids[sel], ad[sel, j]))
+            yield from _rerank_emit(kernel, path, wins)
 
     return run
 
@@ -644,22 +765,22 @@ _LIST_CACHE: "OrderedDict[str, tuple]" = OrderedDict()
 _LIST_CACHE_MAX = 64
 
 
-def _load_list(ldir: str, vec_col: str):
-    """(ids, matrix) for one IVF list partition, via a worker-resident
-    LRU keyed on the file fingerprint — consecutive query blocks probe
-    overlapping lists, and re-decoding a list per block would dominate
-    the distributed batch scan."""
+def _load_list(ldir: str, col: str):
+    """(ids, payload) for one IVF list partition (``_read_unit``), via a
+    worker-resident LRU keyed on the file fingerprint — consecutive
+    query blocks probe overlapping lists, and re-decoding a list per
+    block would dominate the distributed batch scan."""
     fp = _segment_fingerprint(ldir)
-    key = (fp, vec_col)
+    key = (fp, col)
     hit = _LIST_CACHE.get(ldir)
     if hit is not None and hit[0] == key:
         _LIST_CACHE.move_to_end(ldir)
         return hit[1]
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(ldir, columns=["id", vec_col])
+    tbl = pq.read_table(ldir, columns=["id", col])
     ids = tbl.column("id").to_numpy()
-    data = (ids, _read_vec_matrix(tbl, vec_col) if len(ids) else None)
+    data = (ids, _read_unit(tbl, col) if len(ids) else None)
     _LIST_CACHE[ldir] = (key, data)
     _LIST_CACHE.move_to_end(ldir)
     while len(_LIST_CACHE) > _LIST_CACHE_MAX:
@@ -668,13 +789,19 @@ def _load_list(ldir: str, vec_col: str):
 
 
 def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
-                     lists_dir: str, vec_col: str = "vec"):
+                     lists_dir: str, vec_col: str = "vec", quant=None,
+                     params=None, win: int = 0):
     """Runner over (block, list-id chunk) pairs: each task probes its
     block's nearest lists and scans, with pyarrow, ONLY the probed lists
     inside its chunk (the static partition-pruning of the DataFrame
     path, done in-task).  Centroids ride in the closure (nlist x dims,
-    bounded by build)."""
+    bounded by build).  A quantized index scores the lists' residual
+    codes, keeps each query's top ``win`` over the chunk (best adist per
+    id: a replicated row sits in several lists) and reranks them with
+    one exact fetch over the chunk's probed lists."""
     import os as _os
+
+    col = _unit_col(quant, vec_col)
 
     def run(pairs):
         for blk, chunk in pairs:
@@ -697,16 +824,39 @@ def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
                 for lid in row.tolist():
                     if lid in mine:
                         by_list.setdefault(lid, []).append(qi)
+            per_q: dict = {}
+            files: list = []
             for lid, qis in sorted(by_list.items()):
                 ldir = _os.path.join(lists_dir, f"list_id={lid}")
                 if not _os.path.isdir(ldir):
                     continue
-                ids, mat = _load_list(ldir, vec_col)
+                ids, unit = _load_list(ldir, col)
                 if not len(ids):
                     continue
-                d = np.empty((len(mat), len(qis)))
+                if quant is None:
+                    d = np.empty((len(unit), len(qis)))
+                    for j, qi in enumerate(qis):
+                        d[:, j] = np_kernel_distance(kernel, unit, qmat[qi])
+                    yield from _block_topk_emit([qids[qi] for qi in qis], d, ids, k)
+                    continue
+                ad = _approx_dists(quant, params, kernel, unit, qmat[qis],
+                                   centroids[lid])
+                top = min(win, len(ids))
                 for j, qi in enumerate(qis):
-                    d[:, j] = np_kernel_distance(kernel, mat, qmat[qi])
-                yield from _block_topk_emit([qids[qi] for qi in qis], d, ids, k)
+                    sel = _window(ad[:, j], ids, top)
+                    per_q.setdefault(qi, []).append((ids[sel], ad[sel, j]))
+                files += sorted(glob.glob(_os.path.join(ldir, "*.parquet")))
+            wins = []
+            for qi, parts in per_q.items():
+                cid = np.concatenate([p[0] for p in parts])
+                cad = np.concatenate([p[1] for p in parts])
+                # best adist per id, then the chunk's (adist, id) window
+                o = np.lexsort((cad, cid))
+                cid, cad = cid[o], cad[o]
+                first = np.r_[True, cid[1:] != cid[:-1]]
+                cid, cad = cid[first], cad[first]
+                sel = _window(cad, cid, min(win, len(cid)))
+                wins.append((qids[qi], qmat[qi], cid[sel], cad[sel]))
+            yield from _rerank_emit(kernel, files, wins)
 
     return run

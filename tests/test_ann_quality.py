@@ -291,9 +291,10 @@ class TestQuantizedBatchWallGate:
         """r10 verdict item 7 close-out: ivf_pq's batch-speedup RATIO
         can't reach ivf's because its per-query numerator is itself
         LUT-fast — the honest invariant is the batched WALL: the
-        two-phase quantized batch (codes scan + pushed-id rerank, two
-        jobs) must stay within a small constant of the one-job
-        unquantized batch on the same corpus and query set.  Relative
+        quantized batch (per-task codes scan + pushed-id rerank on the
+        same block path, so the same jobs) must stay within a small
+        constant of the unquantized batch on the same corpus and query
+        set.  Relative
         in-process measurement (same load for both sides), min-of-3,
         plus a dispatch-floor grace term, so the gate is
         machine-speed-insensitive but catches a pathological

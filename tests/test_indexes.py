@@ -391,78 +391,42 @@ class TestSearchBatch:
                         sorted(by_q[qr["qid"]], key=lambda t: (t[1], t[0])) == expect
                     ), (quant, qr["qid"])
 
-    def test_quantized_batch_reuses_collected_queries(self, spark, emb):
-        """r11 verdict #5: search_batch collects the query set once (the
-        driver-cap check) and threads it through; the quantized branch
-        must NOT re-collect.  Passing queries=None with explicit qrows
-        proves the branch never touches the DataFrame — and the result
-        must equal the public search_batch output."""
-        qdf = emb.orderBy("vec_id").limit(4).select(
+    def test_quantized_batch_jobs_within_unquantized(self, spark, emb):
+        """Quantized flat and IVF batches run the same block path as the
+        unquantized ones, so they launch no more Spark jobs on the same
+        query set."""
+        sc = spark.sparkContext
+        qdf = emb.orderBy("vec_id").limit(16).select(
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-        )
-        qrows = qdf.collect()
-        with tempfile.TemporaryDirectory() as d:
-            fidx = FlatIndex.create(
-                spark, emb, f"{d}/f", metric="l2", quantization="sq8"
-            )
-            want = sorted(
-                (r["query_id"], r["id"], round(r["distance"], 9))
-                for r in fidx.search_batch(qdf, "qid", "qv", k=10).collect()
-            )
-            got = sorted(
-                (r["query_id"], r["id"], round(r["distance"], 9))
-                for r in fidx._search_batch_quantized(
-                    None, "qid", "qv", 10, qrows=qrows
-                ).collect()
-            )
-            assert got == want
-            iidx = IVFIndex.create(
-                spark, emb, f"{d}/i", metric="l2", nlist=8, quantization="sq8"
-            )
-            want = sorted(
-                (r["query_id"], r["id"], round(r["distance"], 9))
-                for r in iidx.search_batch(
-                    qdf, "qid", "qv", k=10, nprobe=8, rerank_size=40
-                ).collect()
-            )
-            got = sorted(
-                (r["query_id"], r["id"], round(r["distance"], 9))
-                for r in iidx._search_batch_quantized(
-                    None, "qid", "qv", 10, 8, 40, qrows=qrows
-                ).collect()
-            )
-            assert got == want
+        ).cache()
+        qdf.count()
 
-    def test_ivf_batch_quantized_driver_cap_falls_back_distributed(
-        self, spark, emb, monkeypatch
-    ):
-        """Above BATCH_TRIPLES_DRIVER_CAP the per-query approx cut must
-        stay a distributed Window (r10 verdict: the uncapped collect
-        reached ~1e8 triples at documented caps).  Forcing the cap to 0
-        routes every batch down the distributed branch; results must be
-        identical to the driver-cut branch at the same window."""
+        def jobs(idx, tag, **kw):
+            group = f"batch-jobs-{tag}"
+            sc.setJobGroup(group, group)
+            try:
+                idx.search_batch(qdf, "qid", "qv", k=5, **kw).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
         with tempfile.TemporaryDirectory() as d:
-            for quant, replicas in (("pq", 1), ("sq8", 2)):
-                idx = IVFIndex.create(
-                    spark, emb, f"{d}/{quant}{replicas}", metric="l2", nlist=8,
-                    quantization=quant, replicas=replicas,
-                    **({"pq_ratio": 4} if quant == "pq" else {}),
-                )
-                qdf = emb.orderBy("vec_id").limit(6).select(
-                    F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-                )
-                kw = dict(k=10, nprobe=8, rerank_size=40)
-                want = sorted(
-                    (r["query_id"], r["id"], round(r["distance"], 9))
-                    for r in idx.search_batch(qdf, "qid", "qv", **kw).collect()
-                )
-                monkeypatch.setattr(IVFIndex, "BATCH_TRIPLES_DRIVER_CAP", 0)
-                got = sorted(
-                    (r["query_id"], r["id"], round(r["distance"], 9))
-                    for r in idx.search_batch(qdf, "qid", "qv", **kw).collect()
-                )
-                monkeypatch.undo()
-                assert got == want, (quant, replicas)
+            for name, cls, kw in (
+                ("flat", FlatIndex, {}),
+                ("ivf", IVFIndex, {"nlist": 8}),
+            ):
+                skw = {"nprobe": 3} if cls is IVFIndex else {}
+                plain = cls.create(spark, emb, f"{d}/{name}", metric="l2", **kw)
+                base_jobs = jobs(plain, name, **skw)
+                for quant in ("sq8", "pq", "rabitq"):
+                    idx = cls.create(
+                        spark, emb, f"{d}/{name}_{quant}", metric="l2",
+                        quantization=quant, **kw,
+                        **({"pq_ratio": 4} if quant == "pq" else {}),
+                    )
+                    got = jobs(idx, f"{name}-{quant}", **skw)
+                    assert got <= base_jobs, (name, quant, got, base_jobs)
+        qdf.unpersist()
 
     def test_ivf_batch_replicas_dedups(self, spark, emb):
         with tempfile.TemporaryDirectory() as d:
@@ -1308,23 +1272,30 @@ class TestDistributedBatch:
 
     def test_flat_over_cap_matches_collected(self, spark, sf_dir, tmp_path, monkeypatch):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        idx = FlatIndex.create(spark, emb, str(tmp_path / "fb"), metric="l2")
         q = self._qdf(spark, sf_dir, 120)
-        calls = self._spy_blocks(monkeypatch)
-        collected = self._rows(idx.search_batch(q, "qid", "qv", k=5))
-        assert not calls
-        self._over_cap(monkeypatch, 16, 32)
-        distributed = self._rows(idx.search_batch(q, "qid", "qv", k=5))
-        assert calls
-        assert distributed == collected
+        for quant in (None, "pq"):
+            idx = FlatIndex.create(
+                spark, emb, str(tmp_path / f"fb{quant}"), metric="l2",
+                quantization=quant, **({"pq_ratio": 4} if quant == "pq" else {}),
+            )
+            calls = self._spy_blocks(monkeypatch)
+            collected = self._rows(idx.search_batch(q, "qid", "qv", k=5))
+            assert not calls
+            self._over_cap(monkeypatch, 16, 32)
+            distributed = self._rows(idx.search_batch(q, "qid", "qv", k=5))
+            monkeypatch.undo()
+            assert calls, quant
+            assert distributed == collected, quant
 
     def test_ivf_over_cap_matches_collected(self, spark, sf_dir, tmp_path, monkeypatch):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         q = self._qdf(spark, sf_dir, 120)
-        for replicas in (1, 2):
+        cells = ((None, 1), (None, 2), ("pq", 1), ("rabitq", 1), ("sq8", 2))
+        for quant, replicas in cells:
             idx = IVFIndex.create(
-                spark, emb, str(tmp_path / f"ivb{replicas}"), metric="l2",
-                nlist=8, replicas=replicas,
+                spark, emb, str(tmp_path / f"ivb{quant}{replicas}"), metric="l2",
+                nlist=8, replicas=replicas, quantization=quant,
+                **({"pq_ratio": 4} if quant == "pq" else {}),
             )
             calls = self._spy_blocks(monkeypatch)
             collected = self._rows(idx.search_batch(q, "qid", "qv", k=5, nprobe=3))
@@ -1332,10 +1303,11 @@ class TestDistributedBatch:
             self._over_cap(monkeypatch, 16, 32)
             distributed = self._rows(idx.search_batch(q, "qid", "qv", k=5, nprobe=3))
             monkeypatch.undo()
-            assert calls, replicas
+            cell = (quant, replicas)
+            assert calls, cell
             # k distinct ids per query: replicas must not repeat an id
-            assert len({r[:2] for r in collected}) == 120 * 5, replicas
-            assert distributed == collected, replicas
+            assert len({r[:2] for r in collected}) == 120 * 5, cell
+            assert distributed == collected, cell
 
     def test_hnsw_over_cap_matches_collected(self, spark, sf_dir, tmp_path, monkeypatch):
         from pgvecto_rs_spark.indexes.hnsw import HNSWIndex
