@@ -33,7 +33,6 @@ import os
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,17 +87,8 @@ class FlatIndex:
             # f16 via f32.
             if quantization is not None:
                 raise ValueError("f16 storage does not compose with quantization")
-
-            @F.pandas_udf("binary")
-            def to_f16_bytes(v: pd.Series) -> pd.Series:
-                return v.map(
-                    lambda x: None
-                    if x is None
-                    else np.asarray(x, dtype=np.float32).astype(np.float16).tobytes()
-                )
-
             dims = len(prepared.select("vec").first()["vec"])
-            prepared = prepared.select("id", to_f16_bytes("vec").alias("vec16"))
+            prepared = prepared.select("id", base.f16_words("vec").alias("vec16"))
             prepared.write.mode("overwrite").parquet(os.path.join(path, "rows"))
             n = spark.read.parquet(os.path.join(path, "rows")).count()
             meta = {
@@ -130,18 +120,14 @@ class FlatIndex:
 
             dims = len(prepared.select("vec").first()["vec"])
             meta["dims"] = dims
-            # uniform sample, not limit(): limit takes the first
-            # partitions only, which trains codebooks on a biased slice
-            # when the input is sorted or partition-skewed
+            # uniform sample trimmed in hashed-id order: limit() takes the
+            # first partitions only, which trains codebooks on a biased,
+            # layout-dependent slice
             n_total = prepared.count()
             fraction = min(1.0, Qz.TRAIN_CAP / max(n_total, 1))
-            sample = (
-                prepared.select("vec")
-                .sample(fraction=fraction, seed=seed)
-                .limit(Qz.TRAIN_CAP)
-                .collect()
+            x = base.training_sample(
+                prepared, "vec", fraction, seed, Qz.TRAIN_CAP, by_id=True
             )
-            x = np.asarray([r["vec"] for r in sample], dtype=np.float64)
             if quantization == "pq":
                 n_sub = dims // pq_ratio
                 books = Qz.pq_train(x, n_sub, bits=pq_bits, seed=seed)
@@ -295,7 +281,7 @@ class FlatIndex:
         elif len(ids) <= self.RERANK_FETCH_CAP:
             # giant IN-lists cost more to plan/codegen than the row-group
             # skipping saves; ship the ids as a broadcast join instead
-            iddf = self.spark.createDataFrame([(int(i),) for i in ids], "id bigint")
+            iddf = base.local_frame(self.spark, [(int(i),) for i in ids], "id bigint")
             fetched = rows.join(F.broadcast(iddf), "id")
         else:
             fetched = rows.join(cand.select("id"), "id")

@@ -930,7 +930,7 @@ class HNSWIndex:
             )
             rows = out.limit(k).collect()
             if len(rows) >= min(k, self.meta["n_rows"]) or ef >= self.meta["n_rows"]:
-                return self.spark.createDataFrame(rows, out.schema)
+                return base.local_frame(self.spark, rows, out.schema)
             ef *= 4
         # exact-scan fallback: rank everything, apply residuals, take k
         out = self._candidates(q, ef=k, exact=True, keep_all=True)

@@ -118,36 +118,57 @@ def _compute_list_radii(
 ) -> dict[int, float]:
     """max residual L2 norm per list over ``lists`` rows (f64 over the
     stored values — the same values the exact scan reads; f16 storage
-    decodes the stored binary16 words)."""
+    decodes the stored binary16 words).  Each Arrow batch reduces to
+    one row per list and the driver takes the max over batches: one
+    job, no shuffle."""
     bc = spark.sparkContext.broadcast(centroids.astype(np.float64))
+    f16 = storage == "f16"
+    vcol = "vec16" if f16 else "vec"
 
-    if storage == "f16":
+    def batch_radii(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            if f16:
+                mat = np.asarray(
+                    [np.frombuffer(b, dtype=np.float16) for b in pdf[vcol]], dtype=np.float64
+                )
+            else:
+                mat = np.asarray(pdf[vcol].tolist(), dtype=np.float64)
+            lid = pdf["list_id"].to_numpy()
+            res = mat - bc.value[lid]
+            r = np.sqrt(np.einsum("ij,ij->i", res, res))
+            yield pd.DataFrame({"list_id": lid, "r": r}).groupby("list_id", as_index=False).max()
 
-        @F.pandas_udf("double")
-        def rnorm(v: pd.Series, lid: pd.Series) -> pd.Series:
-            mat = np.asarray(
-                [np.frombuffer(b, dtype=np.float16) for b in v], dtype=np.float64
-            )
-            res = mat - bc.value[lid.to_numpy()]
-            return pd.Series(np.sqrt(np.einsum("ij,ij->i", res, res)))
-
-        vcol = "vec16"
-    else:
-
-        @F.pandas_udf("double")
-        def rnorm(v: pd.Series, lid: pd.Series) -> pd.Series:
-            res = np.asarray(v.tolist(), dtype=np.float64) - bc.value[lid.to_numpy()]
-            return pd.Series(np.sqrt(np.einsum("ij,ij->i", res, res)))
-
-        vcol = "vec"
-
+    radii: dict[int, float] = {}
     rows = (
-        lists.select(rnorm(vcol, F.col("list_id").cast("int")).alias("r"), "list_id")
-        .groupBy("list_id")
-        .agg(F.max("r").alias("mr"))
+        lists.select(F.col("list_id").cast("int"), vcol)
+        .mapInPandas(batch_radii, "list_id int, r double")
         .collect()
     )
-    return {int(r["list_id"]): float(r["mr"]) for r in rows}
+    for row in rows:
+        lid = int(row["list_id"])
+        radii[lid] = max(radii.get(lid, 0.0), float(row["r"]))
+    return radii
+
+
+def _read_lists(spark: SparkSession, lists_dir: str) -> DataFrame:
+    """The ``list_id``-partitioned lists table, read with the Spark
+    schema stored in one list file's footer (a driver-side read): left
+    to infer it, Spark runs a job per read."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    first = next(glob.iglob(os.path.join(lists_dir, "list_id=*", "*.parquet")), None)
+    stored = (pq.read_schema(first).metadata or {}) if first else {}
+    spark_schema = stored.get(b"org.apache.spark.sql.parquet.row.metadata")
+    if spark_schema is None:
+        return spark.read.parquet(lists_dir)
+    schema = StructType.fromJson(json.loads(spark_schema)).add("list_id", "integer")
+    return spark.read.schema(schema).parquet(lists_dir)
 
 
 def _save_list_radii(
@@ -190,7 +211,7 @@ class IVFIndex:
         nlist=1000); a cached DataFrame keeps the InMemoryFileIndex and
         leaves only the pruned scan per query."""
         if self._lists_df is None:
-            self._lists_df = self.spark.read.parquet(os.path.join(self.path, "lists"))
+            self._lists_df = _read_lists(self.spark, os.path.join(self.path, "lists"))
         return self._lists_df
 
     # ------------------------------------------------------------------
@@ -261,16 +282,7 @@ class IVFIndex:
         # cap is binomial (~±sqrt(cap) rows) — trivially collectable.
         n_total = prepared.count()
         fraction = min(1.0, (SAMPLE_CAP * 1.05 + 1024) / max(n_total, 1))
-        sample = (
-            prepared.select("id", "vec").sample(fraction=fraction, seed=seed).collect()
-        )
-        # order/trim by a Knuth-hashed id, not the raw id: the trim to
-        # the cap must not bias the training set toward low ids (ids
-        # often correlate with ingest time/content)
-        sample.sort(
-            key=lambda r: ((int(r["id"]) * 2654435761) & 0xFFFFFFFF, int(r["id"]))
-        )
-        x = np.asarray([r["vec"] for r in sample[:SAMPLE_CAP]], dtype=np.float64)
+        x = base.training_sample(prepared, "vec", fraction, seed, SAMPLE_CAP)
         if len(x) == 0:
             # issue_427.slt: an all-NULL (or empty) column must build an
             # empty index that searches to the empty set, not crash in
@@ -370,12 +382,11 @@ class IVFIndex:
 
             os.makedirs(path, exist_ok=True)
             dims = int(centroids.shape[1])
-            res_sample = (
-                indexed.select("res").sample(fraction=fraction, seed=seed)
-                .limit(SAMPLE_CAP)
-                .collect()
+            # the centroid sample's rule: replicas > 1 holds an id once
+            # per list, so the list id breaks the tie
+            rx = base.training_sample(
+                indexed, "res", fraction, seed, SAMPLE_CAP, tie="list_id", by_id=True
             )
-            rx = np.asarray([r["res"] for r in res_sample], dtype=np.float64)
             if quantization == "pq":
                 n_sub = dims // pq_ratio
                 books = Qz.pq_train(rx, n_sub, bits=pq_bits, seed=seed)
@@ -393,16 +404,7 @@ class IVFIndex:
             raise ValueError(f"unknown quantization {quantization!r}")
 
         if storage == "f16":
-
-            @F.pandas_udf("binary")
-            def _to_f16_bytes(v: pd.Series) -> pd.Series:
-                return v.map(
-                    lambda x: None
-                    if x is None
-                    else np.asarray(x, dtype=np.float32).astype(np.float16).tobytes()
-                )
-
-            indexed = indexed.withColumn("vec16", _to_f16_bytes("vec")).drop("vec")
+            indexed = indexed.withColumn("vec16", base.f16_words("vec")).drop("vec")
         (
             indexed.repartition("list_id")
             .sortWithinPartitions("id")  # row-group min/max skipping for
@@ -418,7 +420,7 @@ class IVFIndex:
         # computed from the WRITTEN lists so stored-f32 rounding is
         # exactly what the exact range scan will see
         _save_list_radii(
-            spark, spark.read.parquet(os.path.join(path, "lists")),
+            spark, _read_lists(spark, os.path.join(path, "lists")),
             centroids, int(nlist_eff), path, storage=storage,
         )
         meta = {
@@ -529,23 +531,39 @@ class IVFIndex:
         """Incremental maintenance (the reference merges only affected
         segments, crates/index/src/optimizing/mod.rs:58-105): assign new
         rows to the EXISTING centroids and rewrite ONLY the touched
-        list_id partitions.  Deletes/re-inserts touch the lists holding
-        their old rows (found by a column-pruned (id, list_id) scan +
-        broadcast semi-join); inserts touch their assigned lists.
+        list_id partitions.  Deletes and re-inserts touch the lists that
+        hold their old rows; inserts touch their assigned lists.
         Untouched list partitions keep their files byte-for-byte;
-        centroids and quantizer constants are never retrained.  Returns
-        the rewritten list ids."""
+        centroids and quantizer constants are never retrained, and the
+        ids to remove reach every scan as a broadcast join, never as a
+        driver list.  Each step runs once:
+
+        1. the inserted rows are assigned and encoded into one
+           checkpoint;
+        2. one aggregate returns the touched list ids and the distinct
+           ids leaving (deleted or re-inserted ids the index holds) and
+           arriving (inserted ids);
+        3. the touched lists' surviving rows plus the new rows are
+           checkpointed once, partitioned by ``list_id`` and sorted by
+           id, so the dynamic partition overwrite writes them without a
+           shuffle;
+        4. the touched lists' radii come from that checkpoint, which
+           holds the same f32/f16 values that are written;
+        5. ``n_rows`` becomes old − leaving + arriving, with no count
+           over the lists.
+
+        Returns the rewritten list ids."""
         import shutil
 
         lists_dir = os.path.join(self.path, "lists")
         spark = self.spark
-        lists = spark.read.parquet(lists_dir)
-
-        # ids whose OLD rows must go: deletes plus re-inserted ids
-        remove = None
-        if delete_ids is not None:
-            remove = delete_ids.select(F.col(id_col).cast("long").alias("id")).distinct()
         storage = self.meta.get("storage", "f32")
+
+        # ids whose OLD rows must go: deletes plus re-inserted ids.  They
+        # only feed semi/anti joins, so duplicates need no distinct.
+        removes = []
+        if delete_ids is not None:
+            removes.append(delete_ids.select(F.col(id_col).cast("long").alias("id")))
         add = None
         if insert_rows is not None:
             vec = base.normalized_col(vector_col, self.meta["normalize"]).cast("array<float>")
@@ -556,85 +574,79 @@ class IVFIndex:
             payloads = [
                 c for c in self.meta.get("payload_cols", []) if c in insert_rows.columns
             ]
-            add = insert_rows.select(
-                F.col(id_col).cast("long").alias("id"),
-                vec.alias("vec"),
-                *[F.col(c) for c in payloads],
-            ).withColumn("list_id", F.explode(self._assign_udf()("vec")))
-            newids = add.select("id").distinct()
-            remove = newids if remove is None else remove.unionByName(newids).distinct()
-
-        affected: set[int] = set()
-        if remove is not None:
-            affected |= {
-                r["list_id"]
-                for r in lists.select("id", "list_id")
-                .join(F.broadcast(remove), "id")
-                .select("list_id")
-                .distinct()
-                .collect()
-            }
-        if add is not None:
-            affected |= {r["list_id"] for r in add.select("list_id").distinct().collect()}
-        if not affected:
-            return []
-        segs = sorted(int(s) for s in affected)
-
-        keep = lists.where(F.col("list_id").isin(segs))
-        if remove is not None:
-            keep = keep.join(F.broadcast(remove), "id", "left_anti")
-        live = keep
-        if add is not None:
-            delta = self._encode_delta(add)
+            add = self._encode_delta(
+                insert_rows.select(
+                    F.col(id_col).cast("long").alias("id"),
+                    vec.alias("vec"),
+                    *[F.col(c) for c in payloads],
+                ).withColumn("list_id", F.explode(self._assign_udf()("vec")))
+            )
             if storage == "f16":
+                add = add.withColumn("vec16", base.f16_words("vec")).drop("vec")
+            add = add.localCheckpoint(eager=True)
+            removes.append(add.select("id"))
+        if not removes:
+            return []
+        remove = removes[0] if len(removes) == 1 else removes[0].unionByName(removes[1])
 
-                @F.pandas_udf("binary")
-                def _to_f16_bytes(v: pd.Series) -> pd.Series:
-                    return v.map(
-                        lambda x: None
-                        if x is None
-                        else np.asarray(x, dtype=np.float32).astype(np.float16).tobytes()
-                    )
+        lists = self._lists()
+        moves = lists.select("id", "list_id", F.lit(True).alias("leaving")).join(
+            F.broadcast(remove), "id", "left_semi"
+        )
+        if add is not None:
+            moves = moves.unionByName(
+                add.select("id", "list_id", F.lit(False).alias("leaving"))
+            )
+        leaving = F.col("leaving")
+        summary = moves.agg(
+            F.collect_set("list_id").alias("lists"),
+            F.count_distinct(F.when(leaving, F.col("id"))).alias("leaving"),
+            F.count_distinct(F.when(~leaving, F.col("id"))).alias("arriving"),
+        ).collect()[0]
+        segs = sorted(int(s) for s in summary["lists"])
+        if not segs:
+            return []
 
-                delta = delta.withColumn("vec16", _to_f16_bytes("vec")).drop("vec")
-            live = keep.unionByName(delta, allowMissingColumns=True)
-        # checkpoint severs lineage from the list files we overwrite
-        live = live.localCheckpoint(eager=True)
-        (
+        live = lists.where(F.col("list_id").isin(segs)).join(
+            F.broadcast(remove), "id", "left_anti"
+        )
+        if add is not None:
+            live = live.unionByName(add, allowMissingColumns=True)
+        # the checkpoint severs lineage from the list files we overwrite;
+        # the id order keeps the row-group id skipping the rerank's
+        # id IN (...) fetch relies on
+        live = (
             live.repartition("list_id")
-            .sortWithinPartitions("id")  # keep the row-group id-skipping invariant
-            .write.mode("overwrite")
+            .sortWithinPartitions("list_id", "id")
+            .localCheckpoint(eager=True)
+        )
+        (
+            live.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("list_id")
             .parquet(lists_dir)
         )
-        # a list can end up empty: dynamic overwrite never writes its
-        # directory, so drop the stale one explicitly
-        present = {r["list_id"] for r in live.select("list_id").distinct().collect()}
-        for s in segs:
-            if s not in present:
-                shutil.rmtree(os.path.join(lists_dir, f"list_id={s}"), ignore_errors=True)
-        self._lists_df = None  # invalidate the cached file index
-        n = spark.read.parquet(lists_dir).select("id").distinct().count()
-        self.meta["n_rows"] = int(n)
-        base.write_meta(self.path, self.meta)
         # inserted rows can extend a list's residual radius, which would
-        # silently break range_search completeness on a stale bound —
-        # re-derive the touched lists' radii (deletes only shrink, but
-        # tightening them is free in the same pass)
+        # silently break range_search completeness on a stale bound, so
+        # the touched lists' radii are re-derived (deletes only shrink
+        # them).  A touched list missing here ended up empty: dynamic
+        # overwrite never writes its directory, so drop the stale one.
+        patch = _compute_list_radii(spark, live, self.centroids, storage=storage)
+        for s in segs:
+            if s not in patch:
+                shutil.rmtree(os.path.join(lists_dir, f"list_id={s}"), ignore_errors=True)
         radii_path = os.path.join(self.path, "list_radii.npy")
         if os.path.exists(radii_path):
             radii = np.load(radii_path)
-            patch = _compute_list_radii(
-                spark,
-                spark.read.parquet(lists_dir).where(F.col("list_id").isin(segs)),
-                self.centroids,
-                storage=storage,
-            )
             for lid in segs:
                 radii[lid] = patch.get(lid, 0.0)
             np.save(radii_path, radii, allow_pickle=False)
             self._radii = None
+        self._lists_df = None  # invalidate the cached file index
+        self.meta["n_rows"] = (
+            int(self.meta["n_rows"]) - int(summary["leaving"]) + int(summary["arriving"])
+        )
+        base.write_meta(self.path, self.meta)
         return segs
 
     def _exact_distance_col(self, qlist: list[float]):
@@ -696,7 +708,7 @@ class IVFIndex:
         """
         kernel = self.meta["kernel"]
         if self.meta["nlist"] == 0:  # empty index (issue_427 build path)
-            return self.spark.createDataFrame([], "id long, distance double")
+            return base.local_frame(self.spark, [], "id long, distance double")
         q = base.prep_query(query, self.meta["normalize"])
         rad = self.list_radii()
         n = len(rad)
@@ -719,7 +731,7 @@ class IVFIndex:
         lists = np.nonzero(lb < kradius + margin)[0].tolist()
         schema = "id long, distance double"
         if not lists:
-            return self.spark.createDataFrame([], schema)
+            return base.local_frame(self.spark, [], schema)
         if len(lists) > 0.5 * n:
             # a radius spanning most of the space can't prune usefully;
             # skip the per-partition enumeration (a 1000-term isin only
@@ -854,16 +866,16 @@ class IVFIndex:
                 enough = len(rows) >= min(k, self.meta["n_rows"])
                 if np_eff >= self.meta["nlist"]:
                     stats["full"] = stats.get("full", 0) + 1
-                    return self.spark.createDataFrame(rows, out.schema)
+                    return base.local_frame(self.spark, rows, out.schema)
                 if enough and self._widen_certified(q_, np_eff, rows):
                     stats["certified"] = stats.get("certified", 0) + 1
-                    return self.spark.createDataFrame(rows, out.schema)
+                    return base.local_frame(self.spark, rows, out.schema)
                 np_eff = min(self.meta["nlist"], np_eff * 4)
             stats["exhausted"] = stats.get("exhausted", 0) + 1
-            return self.spark.createDataFrame(rows, out.schema)
+            return base.local_frame(self.spark, rows, out.schema)
 
         if self.meta["nlist"] == 0:  # empty index (issue_427 build path)
-            return self.spark.createDataFrame([], "id long, distance double")
+            return base.local_frame(self.spark, [], "id long, distance double")
         q = base.prep_query(query, self.meta["normalize"])
         lists = self.probe_lists(q, nprobe)
         df = self._lists().where(F.col("list_id").isin(lists))
@@ -1007,7 +1019,7 @@ class IVFIndex:
             # a giant IN-list costs more to plan/codegen than it saves in
             # row-group skipping; ship the collected ids as a broadcast
             # join instead (same pruned scan, no literal explosion)
-            iddf = self.spark.createDataFrame([(int(i),) for i in ids], "id bigint")
+            iddf = base.local_frame(self.spark, [(int(i),) for i in ids], "id bigint")
             fetched = rows.join(F.broadcast(iddf), "id")
         else:
             fetched = rows.join(F.broadcast(cand.select("id")), "id")
@@ -1166,8 +1178,8 @@ class IVFIndex:
             nprobe = int(meta.get("default_nprobe") or default_nprobe(meta["nlist"]))
         nlist = meta["nlist"]
         if nlist == 0:  # empty index (issue_427 build path)
-            return self.spark.createDataFrame(
-                [], "query_id bigint, id bigint, distance double"
+            return base.local_frame(
+                self.spark, [], "query_id bigint, id bigint, distance double"
             )
 
         qrows = BT.collect_queries_or_none(queries, query_id_col, query_vec_col)

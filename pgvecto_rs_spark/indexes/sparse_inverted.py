@@ -94,8 +94,8 @@ class SparseInvertedIndex:
         """Top-k docs by negative dot product (the reference's only
         supported sparse metric).  Returns DataFrame(id, distance)."""
         items = list(query.items()) if isinstance(query, Mapping) else list(query)
-        qdf = self.spark.createDataFrame(
-            [(int(t), float(w)) for t, w in items if w != 0.0], "term int, qw float"
+        qdf = base.local_frame(
+            self.spark, [(int(t), float(w)) for t, w in items if w != 0.0], "term int, qw float"
         )
         postings = self.spark.read.parquet(os.path.join(self.path, "postings"))
         # min/max row-group pruning: push the term membership first
@@ -131,8 +131,8 @@ class SparseInvertedIndex:
         docs; a sphere that must include non-overlapping docs is a full
         table predicate, not an index scan."""
         items = list(query.items()) if isinstance(query, Mapping) else list(query)
-        qdf = self.spark.createDataFrame(
-            [(int(t), float(w)) for t, w in items if w != 0.0], "term int, qw float"
+        qdf = base.local_frame(
+            self.spark, [(int(t), float(w)) for t, w in items if w != 0.0], "term int, qw float"
         )
         postings = self.spark.read.parquet(os.path.join(self.path, "postings"))
         terms = [int(t) for t, w in items if w != 0.0]

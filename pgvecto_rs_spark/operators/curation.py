@@ -391,10 +391,13 @@ def global_shuffle(
         running += counts.get(b, 0)
     from pyspark.sql import Window
 
-    spark = df.sparkSession
+    from pgvecto_rs_spark.indexes.base import local_frame
+
     off_df = F.broadcast(
-        spark.createDataFrame(
-            [(b, offsets[b]) for b in sorted(offsets)], "__gs_b int, __gs_off long"
+        local_frame(
+            df.sparkSession,
+            [(b, offsets[b]) for b in sorted(offsets)],
+            "__gs_b int, __gs_off long",
         )
     )
     w = Window.partitionBy("__gs_b").orderBy("__gs_key", id_col)

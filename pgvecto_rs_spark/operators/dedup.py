@@ -533,10 +533,10 @@ def neardup_components(
         for x in parent:
             r0 = find(x)
             comp_min[r0] = min(comp_min.get(r0, x), x)
+        from pgvecto_rs_spark.indexes.base import local_frame
+
         out = [(x, comp_min[find(x)]) for x in sorted(parent)]
-        if not out:
-            return pairs.sparkSession.createDataFrame([], "id long, comp long")
-        return pairs.sparkSession.createDataFrame(out, "id long, comp long")
+        return local_frame(pairs.sparkSession, out, "id long, comp long")
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     edges = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

@@ -172,6 +172,8 @@ def mmr_topk(
 
     import numpy as np
 
+    from pgvecto_rs_spark.indexes.base import local_frame
+
     from .clustering import _quantized
 
     qu = [int(math.floor(float(x) * 1000000.0 + 0.5)) for x in query]
@@ -194,7 +196,7 @@ def mmr_topk(
     spark = df.sparkSession
     out_schema = f"rnk int, {id_col} long, rel_u long, maxsim_u long"
     if not cand:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     ids = np.array([r[id_col] for r in cand], dtype=np.int64)
     X = np.array([r["__xu"] for r in cand], dtype=np.int64)
     rel_u = np.array([r["rel_u"] for r in cand], dtype=np.int64)
@@ -229,4 +231,4 @@ def mmr_topk(
         # among equal (rel, maxsim) pairs) — resolve exactly instead:
         tie = np.where(score == best)[0]
         pick = tie[np.argmin(ids[tie])]
-    return spark.createDataFrame(rows, out_schema)
+    return local_frame(spark, rows, out_schema)

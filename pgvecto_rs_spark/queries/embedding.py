@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pgvecto_rs_spark.functions import binary as VB
 from pgvecto_rs_spark.functions import dense as VD
 from pgvecto_rs_spark.functions import sparse as VS
+from pgvecto_rs_spark.indexes.base import local_frame
 from pgvecto_rs_spark.operators import asof as OA
 from pgvecto_rs_spark.operators import clustering as CL
 from pgvecto_rs_spark.operators import curation as CU
@@ -510,7 +511,7 @@ def doc_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single argmax row to the driver; merges apply as a native
     `aggregate` fold projection (curation.bpe_train)."""
     merges = _bpe_merges_cached(spark, sf_dir, rounds=3)
-    return spark.createDataFrame(merges, "round int, a string, b string, c long")
+    return local_frame(spark, merges, "round int, a string, b string, c long")
 
 
 @register("doc_bpe_tokens", _bpe_encode_oracle_sql(6))
@@ -542,7 +543,7 @@ def doc_bpe_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule-for-rule.  This is the latency fix for 32k-merge production
     vocabularies (≈rounds/batch Spark jobs instead of rounds)."""
     merges = CU.bpe_train(_docs(spark, sf_dir), rounds=6, batch=3)
-    return spark.createDataFrame(merges, "rule int, a string, b string, c long")
+    return local_frame(spark, merges, "rule int, a string, b string, c long")
 
 
 # doc_mixture_sample oracle: quotas are an INPUT to the distributed

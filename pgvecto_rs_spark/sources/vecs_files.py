@@ -4,7 +4,7 @@ format, crates/cli/src/read.rs).
 Format: each record is ``int32 dim`` followed by ``dim`` little-endian
 values (f32 for fvecs, i32 for ivecs).  Files are read with numpy on
 the driver (these are benchmark inputs, typically ≤ a few GB) and
-parallelized into a DataFrame; for larger corpora convert once to
+enter Spark as one Arrow table; for larger corpora convert once to
 Parquet and use the normal scan path.
 """
 
@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+
+from pgvecto_rs_spark.indexes.base import local_frame
 
 __all__ = ["read_bvecs", "read_fvecs", "read_ivecs"]
 
@@ -28,16 +30,18 @@ def _read_vecs(path: str, dtype) -> np.ndarray:
     return mat.view(np.float32) if dtype == np.float32 else mat
 
 
+def _frame(spark: SparkSession, mat: np.ndarray, id_offset: int, schema: str) -> DataFrame:
+    return local_frame(spark, [(id_offset + i, row) for i, row in enumerate(mat)], schema)
+
+
 def read_fvecs(spark: SparkSession, path: str, id_offset: int = 0) -> DataFrame:
     mat = _read_vecs(path, np.float32)
-    rows = [(id_offset + i, row.tolist()) for i, row in enumerate(mat)]
-    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    return _frame(spark, mat, id_offset, "vec_id bigint, embedding array<float>")
 
 
 def read_ivecs(spark: SparkSession, path: str, id_offset: int = 0) -> DataFrame:
     mat = _read_vecs(path, np.int32)
-    rows = [(id_offset + i, row.tolist()) for i, row in enumerate(mat)]
-    return spark.createDataFrame(rows, "vec_id bigint, neighbors array<int>")
+    return _frame(spark, mat, id_offset, "vec_id bigint, neighbors array<int>")
 
 
 def read_bvecs(spark: SparkSession, path: str, id_offset: int = 0) -> DataFrame:
@@ -47,11 +51,10 @@ def read_bvecs(spark: SparkSession, path: str, id_offset: int = 0) -> DataFrame:
     dense f32 logical type (uint8 values are exact in f32)."""
     raw = np.fromfile(path, dtype=np.uint8)
     if len(raw) == 0:
-        return spark.createDataFrame([], "vec_id bigint, embedding array<float>")
+        return local_frame(spark, [], "vec_id bigint, embedding array<float>")
     dim = int(np.frombuffer(raw[:4].tobytes(), dtype=np.int32)[0])
     rec = 4 + dim
     if len(raw) % rec != 0:
         raise ValueError(f"{path}: not a whole number of {dim}-dim records")
     mat = raw.reshape(-1, rec)[:, 4:].astype(np.float32)
-    rows = [(id_offset + i, row.tolist()) for i, row in enumerate(mat)]
-    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    return _frame(spark, mat, id_offset, "vec_id bigint, embedding array<float>")

@@ -63,6 +63,12 @@ _KINDS = {"flat": FlatIndex, "ivf": IVFIndex, "hnsw": HNSWIndex}
 
 _MANIFEST = "MANIFEST.json"
 
+# fixed file schemas of the growing segment and the tombstones: reads
+# pass them instead of inferring from a footer, which costs a Spark job
+# per new file set
+_TOMB_SCHEMA = "id long, version int"
+_SCHEMAS = {"delta": "id long, vec array<float>, version int", "tombstones": _TOMB_SCHEMA}
+
 
 def _gen_name(n: int) -> str:
     return f"gen-{n:06d}"
@@ -249,8 +255,8 @@ class FreshVectorIndex:
         with self._write_lock:
             self._refresh()
             v = self._bump()
-            self.spark.createDataFrame(
-                [(int(i), v) for i in ids], "id long, version int"
+            base.local_frame(
+                self.spark, [(int(i), v) for i in ids], _TOMB_SCHEMA
             ).write.mode("append").parquet(
                 os.path.join(self._gen_dir(), "tombstones", "rows")
             )
@@ -296,19 +302,24 @@ class FreshVectorIndex:
         reference's deleted-row GC trigger, crates/base/src/index.rs:
         261-264 default 0.2: past that, every search drags a dead-row
         anti-join worth a fifth of the index).  Returns True if a
-        compaction ran."""
+        compaction ran.
+
+        Both counts are cached per file fingerprint: the growing row
+        count comes from the Parquet footers (no Spark job), the dead
+        id count from the materialized ``_tomb_agg`` that the next
+        search and ``compact`` reuse.  The sealed side's ``n_rows`` is
+        the index's own bookkeeping: an incremental IVF fold sets it to
+        old − leaving + arriving and re-derives the touched lists'
+        radii from the checkpoint it writes (``IVFIndex.apply_updates``),
+        so neither needs a pass over the lists."""
         self._refresh()
-        delta = self._delta()
-        if delta is not None and delta.count() >= max_growing_rows:
+        if self._row_count("delta") >= max_growing_rows:
             self.compact()
             return True
-        tombs = self._tombstones()
-        if tombs is not None:
-            sealed_rows = max(1, int(self.sealed.meta.get("n_rows", 1)))
-            n_dead = tombs.select("id").distinct().count()
-            if n_dead / sealed_rows >= delete_threshold:
-                self.compact()
-                return True
+        sealed_rows = max(1, int(self.sealed.meta.get("n_rows", 1)))
+        if self._dead_ids() / sealed_rows >= delete_threshold:
+            self.compact()
+            return True
         return False
 
     # ------------------------------------------------------------------
@@ -316,34 +327,54 @@ class FreshVectorIndex:
         p = os.path.join(self._gen_dir(gen), sub, "rows")
         return tuple(sorted(glob.glob(os.path.join(p, "*.parquet"))))
 
+    def _fingerprint(self, sub: str, files: tuple[str, ...] | None = None) -> tuple:
+        if files is None:
+            files = self._list_files(sub)
+        return tuple((f, os.path.getmtime(f), os.path.getsize(f)) for f in files)
+
+    def _memo(self, key: str, fp: tuple, build):
+        """``build()``, cached under ``key`` until the file fingerprint
+        ``fp`` changes.  Inserts/deletes change the fingerprint; writers
+        and commits clear ``_df_cache`` outright."""
+        hit = self._df_cache.get(key)
+        if hit is not None and hit[0] == fp:
+            return hit[1]
+        val = build()
+        self._df_cache[key] = (fp, val)
+        return val
+
     def _read_cached(self, sub: str, files: tuple[str, ...] | None = None) -> DataFrame | None:
         """DataFrame handle for the growing/tombstone rows, cached per
         file fingerprint: re-creating it per search re-runs Spark's file
-        listing + schema job (~100 ms each — the dominant warm fresh-
-        query cost, same rationale as IVFIndex._lists); inserts/deletes
-        change the fingerprint and refresh the handle.  When ``files``
+        listing (~100 ms — the dominant warm fresh-query cost, same
+        rationale as IVFIndex._lists), and the fixed schema spares the
+        footer-inference job a new file set would cost.  When ``files``
         is given the read is pinned to EXACTLY that snapshot (used by
         compaction so concurrently arriving appends are carried forward
         instead of half-folded)."""
-        if files is None:
-            files = self._list_files(sub)
-        if not files:
+        fp = self._fingerprint(sub, files)
+        if not fp:
             return None
-        fp = tuple((f, os.path.getmtime(f), os.path.getsize(f)) for f in files)
-        hit = self._df_cache.get(sub)
-        if hit is not None and hit[0] == fp:
-            return hit[1]
-        df = self.spark.read.parquet(*files)
-        self._df_cache[sub] = (fp, df)
-        return df
+        return self._memo(
+            sub, fp,
+            lambda: self.spark.read.schema(_SCHEMAS[sub]).parquet(*(f for f, _, _ in fp)),
+        )
+
+    def _row_count(self, sub: str, files: tuple[str, ...] | None = None) -> int:
+        """Rows in the growing segment or the tombstone files, summed
+        from the Parquet footers on the driver."""
+        import pyarrow.parquet as pq
+
+        fp = self._fingerprint(sub, files)
+        return self._memo(
+            f"{sub}_rows", fp,
+            lambda: sum(pq.ParquetFile(f).metadata.num_rows for f, _, _ in fp),
+        )
 
     def _delta(self) -> DataFrame | None:
         return self._read_cached("delta")
 
-    def _tombstones(self) -> DataFrame | None:
-        return self._read_cached("tombstones")
-
-    def _tomb_agg(self, tomb: DataFrame | None = None) -> DataFrame | None:
+    def _tomb_agg(self, files: tuple[str, ...] | None = None) -> DataFrame | None:
         """Per-id max tombstone version, as a DataFrame — never collected
         to the driver (at scale the tombstone set is millions of ids; it
         flows into searches as a broadcast anti-/left-join only).
@@ -354,22 +385,27 @@ class FreshVectorIndex:
         builds (sealed-side anti-join + growing-side visibility join),
         so without this each search re-ran the tombstone parquet scan +
         groupBy twice — the in-memory delete map the reference keeps
-        (crates/index/src/delete.rs) is the design analogue.  Writers
-        clear ``_df_cache``, which invalidates this too."""
-        if tomb is None:
-            tomb = self._tombstones()
-        if tomb is None:
+        (crates/index/src/delete.rs) is the design analogue.  ``files``
+        pins the snapshot as in ``_read_cached``."""
+        fp = self._fingerprint("tombstones", files)
+        if not fp:
             return None
-        fp = self._df_cache.get("tombstones")
-        hit = self._df_cache.get("tomb_agg")
-        if hit is not None and fp is not None and hit[0] == fp[0]:
-            return hit[1]
-        agg = tomb.groupBy("id").agg(F.max("version").alias("tv")).localCheckpoint(
-            eager=True
+        return self._memo(
+            "tomb_agg", fp,
+            lambda: self._read_cached("tombstones", files)
+            .groupBy("id")
+            .agg(F.max("version").alias("tv"))
+            .localCheckpoint(eager=True),
         )
-        if fp is not None:
-            self._df_cache["tomb_agg"] = (fp[0], agg)
-        return agg
+
+    def _dead_ids(self) -> int:
+        """Distinct tombstoned ids, counted once per tombstone snapshot
+        from the materialized ``_tomb_agg``."""
+        files = self._list_files("tombstones")
+        fp = self._fingerprint("tombstones", files)
+        if not fp:
+            return 0
+        return self._memo("dead_ids", fp, lambda: self._tomb_agg(files).count())
 
     def search(self, query: Sequence[float], k: int = 10, **search_opts) -> DataFrame:
         """Top-k over sealed ∪ growing, minus tombstoned rows — the
@@ -486,7 +522,8 @@ class FreshVectorIndex:
             snap_delta = self._list_files("delta", old_gen)
             snap_tomb = self._list_files("tombstones", old_gen)
             delta = self._read_cached("delta", snap_delta)
-            tomb_agg = self._tomb_agg(self._read_cached("tombstones", snap_tomb))
+            tomb_agg = self._tomb_agg(snap_tomb)
+            n_delta = self._row_count("delta", snap_delta)
 
             if incremental is None:
                 incremental = self.meta["sealed_kind"] in ("hnsw", "ivf")
@@ -495,10 +532,10 @@ class FreshVectorIndex:
                     cap = self.sealed.meta["n_segments"] * self.sealed.meta.get(
                         "segment_rows", 20_000
                     )
-                    small = delta is None or delta.count() <= cap // 2
+                    small = n_delta <= cap // 2
                 else:
                     n_sealed = self.sealed.meta.get("n_rows", 0)
-                    small = delta is None or delta.count() <= max(10_000, n_sealed // 2)
+                    small = n_delta <= max(10_000, n_sealed // 2)
                 if small:
                     self._compact_incremental(old_gen, delta, tomb_agg, snap_delta, snap_tomb)
                     return
@@ -612,16 +649,14 @@ class FreshVectorIndex:
     def stat(self) -> dict:
         """vector_index_stat analogue (src/index/views.rs:17-80)."""
         self._refresh()
-        delta = self._delta()
-        tomb = self._tombstones()
-        growing = delta.count() if delta is not None else 0
+        growing = self._row_count("delta")
         return {
             "idx_status": "NORMAL",
             "idx_indexing": False,
             "idx_tuples": self.sealed.meta.get("n_rows", 0) + growing,
             "idx_sealed": [self.sealed.meta.get("n_rows", 0)],
             "idx_growing": [growing] if growing else [],
-            "idx_tombstones": tomb.count() if tomb is not None else 0,
+            "idx_tombstones": self._row_count("tombstones"),
             "idx_options": {"sealed_kind": self.meta["sealed_kind"], "metric": self.meta["metric"]},
         }
 
@@ -780,8 +815,8 @@ class IndexTransaction:
     def delete(self, ids: Sequence[int]) -> None:
         self._check_open()
         v = self._next_version()
-        w = self._idx.spark.createDataFrame(
-            [(int(i), v) for i in ids], "id long, version int"
+        w = base.local_frame(
+            self._idx.spark, [(int(i), v) for i in ids], _TOMB_SCHEMA
         ).write.mode("append")
         self._staged_write(w, os.path.join(self._dir, "tombstones", "rows"))
         self._staged += 1

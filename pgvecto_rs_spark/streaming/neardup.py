@@ -46,6 +46,7 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pgvecto_rs_spark.indexes.base import local_frame
 from pgvecto_rs_spark.operators.dedup import (
     minhash_signatures_df,
     verify_pairs_jaccard,
@@ -125,15 +126,15 @@ class StreamingNearDup:
         """(id, text) of every admitted document so far."""
         p = self._admitted_path()
         if not os.path.isdir(p):
-            return self.spark.createDataFrame(
-                [], f"{self.id_col} long, {self.text_col} string"
+            return local_frame(
+                self.spark, [], f"{self.id_col} long, {self.text_col} string"
             )
         return self.spark.read.parquet(p)
 
     def _stored_bands(self) -> DataFrame:
         p = self._bands_path()
         if not os.path.isdir(p):
-            return self.spark.createDataFrame([], _BANDS_SCHEMA)
+            return local_frame(self.spark, [], _BANDS_SCHEMA)
         return self.spark.read.parquet(p)
 
     # -- banding -------------------------------------------------------
@@ -297,8 +298,8 @@ class StreamingNearDup:
 
             # 6. persist survivors (atomic Parquet append)
             if admitted:
-                keep = self.spark.createDataFrame(
-                    [(int(i),) for i in admitted], f"{self.id_col} long"
+                keep = local_frame(
+                    self.spark, [(int(i),) for i in admitted], f"{self.id_col} long"
                 )
                 surv = batch.join(F.broadcast(keep), self.id_col, "left_semi")
                 surv.write.mode("append").parquet(self._admitted_path())

@@ -69,9 +69,7 @@ class IndexOptimizer:
     def _growing_stamp(self):
         """(version, growing-rows) — the write-segment identity stamp
         (mod.rs compares (segment id, len) the same way)."""
-        delta = self.index._delta()
-        n = delta.count() if delta is not None else 0
-        return (self.index.meta.get("version", 0), n)
+        return (self.index.meta.get("version", 0), self.index._row_count("delta"))
 
     def tick_sealing(self) -> bool:
         """One sealing check; True if a seal (compaction) ran.

@@ -4,6 +4,7 @@ the operators were engineered to have."""
 from __future__ import annotations
 
 from pgvecto_rs_spark.audit import audit_plan, audit_query
+from tests.conftest import count_jobs
 
 
 class TestAudit:
@@ -53,10 +54,9 @@ class TestAudit:
         from pgvecto_rs_spark.operators.curation import dup_ngram_fraction
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        before = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-        df = dup_ngram_fraction(docs)
-        after = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-        assert len(after) == len(before), "default must not run an eager job"
+        with count_jobs(spark) as jobs:
+            df = dup_ngram_fraction(docs)
+        assert jobs.n == 0, "default must not run an eager job"
         assert df.count() > 0  # still computes correctly when executed
 
     def test_dedup_passages_has_no_skewed_window(self, spark, sf_dir):

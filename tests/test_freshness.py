@@ -815,3 +815,25 @@ def test_tomb_agg_materialized_once_per_generation(spark, emb):
         # and the search result reflects the newest tombstone set
         ids = {r["id"] for r in idx.search(Q64, k=400).collect()}
         assert not ids & {3, 5, 7}
+
+
+def test_ivf_compaction_job_budget(spark, emb):
+    """compact() on the test_ivf_incremental_compact shape runs each step
+    of the incremental fold once — the tombstone aggregate, one encoded
+    checkpoint of the inserts, one touched-lists aggregate, one
+    checkpoint of the rewritten lists, the write and the radii — and
+    reads the growing row count from the Parquet footers: at most 16
+    Spark jobs (a fold that recounts and re-collects launches 32)."""
+    from tests.conftest import count_jobs
+
+    with tempfile.TemporaryDirectory() as d:
+        idx = FreshVectorIndex.create(
+            spark, emb.where(F.col("vec_id") < 400), d, sealed_kind="ivf", nlist=8
+        )
+        top = [r["id"] for r in idx.search(Q64, k=5).collect()]
+        idx.delete([top[0], top[1]])
+        idx.insert(emb.where((F.col("vec_id") >= 400) & (F.col("vec_id") < 403)))
+        with count_jobs(spark) as jobs:
+            idx.compact()
+        assert jobs.n <= 16, f"compact() launched {jobs.n} Spark jobs"
+        assert idx.stat()["idx_sealed"][0] == 400 - 2 + 3

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pgvecto_rs_spark.indexes import FlatIndex, IVFIndex, SparseInvertedIndex
 from pgvecto_rs_spark.operators.search import top_k
 from pgvecto_rs_spark.queries import Q64, SPARSE_THRESHOLD
+from tests.conftest import count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -395,20 +396,15 @@ class TestSearchBatch:
         """Quantized flat and IVF batches run the same block path as the
         unquantized ones, so they launch no more Spark jobs on the same
         query set."""
-        sc = spark.sparkContext
         qdf = emb.orderBy("vec_id").limit(16).select(
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
         ).cache()
         qdf.count()
 
-        def jobs(idx, tag, **kw):
-            group = f"batch-jobs-{tag}"
-            sc.setJobGroup(group, group)
-            try:
+        def jobs(idx, **kw):
+            with count_jobs(spark) as counted:
                 idx.search_batch(qdf, "qid", "qv", k=5, **kw).collect()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            return len(sc.statusTracker().getJobIdsForGroup(group))
+            return counted.n
 
         with tempfile.TemporaryDirectory() as d:
             for name, cls, kw in (
@@ -417,14 +413,14 @@ class TestSearchBatch:
             ):
                 skw = {"nprobe": 3} if cls is IVFIndex else {}
                 plain = cls.create(spark, emb, f"{d}/{name}", metric="l2", **kw)
-                base_jobs = jobs(plain, name, **skw)
+                base_jobs = jobs(plain, **skw)
                 for quant in ("sq8", "pq", "rabitq"):
                     idx = cls.create(
                         spark, emb, f"{d}/{name}_{quant}", metric="l2",
                         quantization=quant, **kw,
                         **({"pq_ratio": 4} if quant == "pq" else {}),
                     )
-                    got = jobs(idx, f"{name}-{quant}", **skw)
+                    got = jobs(idx, **skw)
                     assert got <= base_jobs, (name, quant, got, base_jobs)
         qdf.unpersist()
 
@@ -908,6 +904,110 @@ class TestIVFRangeSearch:
             assert any(radii[s] > 50.0 for s in segs), "radius must grow"
             hits = idx.range_search(far, 1.0).collect()
             assert [r["id"] for r in hits] == [10_000_000]
+
+
+class TestIncrementalRowCount:
+    """apply_updates derives n_rows arithmetically (old − distinct ids
+    leaving + distinct ids arriving); after every update it must equal
+    the distinct id count over lists/, and the persisted meta agrees."""
+
+    @staticmethod
+    def _distinct_ids(spark, d):
+        return spark.read.parquet(f"{d}/lists").select("id").distinct().count()
+
+    @staticmethod
+    def _rows(spark, emb, pairs):
+        """(id, vec) rows: id ``i`` takes the embedding of source id ``s``."""
+        from pgvecto_rs_spark.indexes.base import local_frame
+
+        srcs = [s for _, s in pairs]
+        vec = {
+            r["vec_id"]: r["embedding"]
+            for r in emb.where(F.col("vec_id").isin(srcs)).collect()
+        }
+        return local_frame(spark, [(i, vec[s]) for i, s in pairs], "id long, vec array<float>")
+
+    def test_n_rows_matches_lists(self, spark, emb):
+        from pgvecto_rs_spark.indexes.base import local_frame
+
+        with tempfile.TemporaryDirectory() as d:
+            idx = IVFIndex.create(
+                spark, emb.where(F.col("vec_id") < 200), d, metric="l2", nlist=8, replicas=2
+            )
+
+            def check(want):
+                assert idx.meta["n_rows"] == self._distinct_ids(spark, d) == want
+                assert IVFIndex.open(spark, d).meta["n_rows"] == want
+
+            check(200)
+            # re-insert a live id with another vector, plus one new id
+            assert idx.apply_updates(insert_rows=self._rows(spark, emb, [(5, 250), (300, 300)]))
+            check(201)
+            # delete a held id and an id the index never held
+            dels = local_frame(spark, [(7,), (9_999_999,)], "id long")
+            assert idx.apply_updates(delete_ids=dels)
+            check(200)
+            # only absent ids: nothing is touched or recounted
+            assert idx.apply_updates(delete_ids=local_frame(spark, [(8_888_888,)], "id long")) == []
+            check(200)
+            # both in one call: a deleted id re-inserted, a re-inserted
+            # live id, a fresh id
+            idx.apply_updates(
+                delete_ids=local_frame(spark, [(10,)], "id long"),
+                insert_rows=self._rows(spark, emb, [(10, 260), (11, 261), (301, 301)]),
+            )
+            check(201)
+
+
+def test_local_frame_round_trip(spark):
+    """local_frame ships driver rows through one Arrow table: nulls,
+    array<float>, structs and the empty list come back exactly, under
+    the declared schema."""
+    from pyspark.sql.types import DataType
+
+    from pgvecto_rs_spark.indexes.base import local_frame
+
+    ddl = "id long, v array<float>, s struct<a:int,b:string>, d double"
+    rows = [
+        (1, [1.0, 2.5], (1, "x"), None),
+        (None, None, None, 2.0),
+        (3, [], (2, None), 1.5),
+    ]
+    df = local_frame(spark, rows, ddl)
+    assert df.schema == DataType.fromDDL(ddl)
+    assert [tuple(r) for r in df.collect()] == rows
+    empty = local_frame(spark, [], ddl)
+    assert empty.schema == DataType.fromDDL(ddl)
+    assert empty.collect() == []
+
+
+class TestTrainingLayout:
+    """Quantizer training must not depend on the input's partition
+    layout: the PQ sample is trimmed in hashed-id order, like the
+    centroid sample, so the same rows give the same codebooks."""
+
+    def test_pq_codebooks_ignore_partitioning(self, spark):
+        import numpy as np
+        import pandas as pd
+
+        rng = np.random.default_rng(5)
+        pdf = pd.DataFrame(
+            {
+                "vec_id": np.arange(1000, dtype=np.int64),
+                "embedding": list(rng.standard_normal((1000, 16)).astype(np.float32)),
+            }
+        )
+        src = spark.createDataFrame(pdf, "vec_id long, embedding array<float>")
+        for cls, kw in ((IVFIndex, {"nlist": 4}), (FlatIndex, {})):
+            books = []
+            with tempfile.TemporaryDirectory() as d:
+                for parts in (1, 7):
+                    cls.create(
+                        spark, src.repartition(parts), f"{d}/{parts}", metric="l2",
+                        quantization="pq", pq_ratio=4, pq_bits=4, **kw,
+                    )
+                    books.append(np.load(f"{d}/{parts}/pq_codebooks.npy"))
+            assert np.array_equal(books[0], books[1]), cls.__name__
 
 
 class TestHNSWRangeSearch:

@@ -6,6 +6,7 @@ from __future__ import annotations
 import math
 
 from pgvecto_rs_spark.operators.retrieval import bm25_score, bm25_topk
+from tests.conftest import count_jobs
 
 
 def _ref_bm25(corpus: dict[int, str], terms: list[str], k1=1.2, b=0.75):
@@ -66,11 +67,9 @@ class TestBM25:
         """materialize=False must defer all execution (no eager
         localCheckpoint job at call time) and yield identical scores."""
         terms = ["a", "c"]
-        tracker = spark.sparkContext.statusTracker()
-        before = set(tracker.getJobIdsForGroup(None) or [])
-        lazy = bm25_score(self._df(spark), terms, materialize=False)
-        after = set(tracker.getJobIdsForGroup(None) or [])
-        assert after == before  # plan-only: no job ran at call time
+        with count_jobs(spark) as jobs:
+            lazy = bm25_score(self._df(spark), terms, materialize=False)
+        assert jobs.n == 0  # plan-only: no job ran at call time
         got = {r["doc_id"]: r["score_u"] for r in lazy.collect()}
         assert got == _ref_bm25(self.CORPUS, terms)
 
