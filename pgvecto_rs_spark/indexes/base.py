@@ -12,12 +12,18 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pgvecto_rs_spark.indexes import segment_worker as SW
+
 # the import-light executor copy, shared by driver-side code (centroid
 # selection, probes)
 from pgvecto_rs_spark.indexes.segment_worker import np_kernel_distance
 
 META_FILE = "_vindex_meta.json"
 _ISIN_LITERAL_CAP = 512  # max ids to inline as IN-list literals (planning cost)
+
+#: candidate sets larger than this rerank through a join instead of a
+#: driver-collected id list
+RERANK_FETCH_CAP = 8192
 
 # DistanceKind (crates/base/src/distance.rs:5-10).  `cos` is not a
 # kernel kind: the opclass normalizes + runs Dot, post-maps d+1
@@ -126,6 +132,18 @@ def f16_distance(kernel: str, q: Sequence[float], col: str = "vec16"):
     return f16_score(F.col(col))
 
 
+def exact_distance(meta: dict, q: Sequence[float]):
+    """Exact kernel distance Column over the stored vectors: the Arrow
+    kernel (``arrow_distance``) on f32 ``vec``, or the decode-and-score
+    UDF on f16 ``vec16`` words."""
+    qlist = [float(v) for v in q]
+    if meta.get("storage") == "f16":
+        return f16_distance(meta["kernel"], qlist)
+    from pgvecto_rs_spark.operators.search import arrow_distance
+
+    return arrow_distance(qlist, meta["kernel"])(F.col("vec"))
+
+
 def f16_words(col: str):
     """array<float> Column -> packed IEEE binary16 words (vecf16
     storage: 2 bytes per dim on disk)."""
@@ -181,3 +199,141 @@ def normalized_col(col, do_normalize: bool):
     from pgvecto_rs_spark.functions.dense import vector_normalize
 
     return vector_normalize(col)
+
+
+# ---------------------------------------------------------------------------
+# Per-query quantized two-phase search (flat and IVF)
+# ---------------------------------------------------------------------------
+
+
+def code_scores(index, df: DataFrame, quant: str, q: np.ndarray,
+                cents: dict | None = None) -> DataFrame:
+    """(id, adist): every row's approximate kernel distance to ``q``
+    from its codes alone, in one ``mapInArrow`` pass that reads only
+    (id[, list_id], codes|rq).  Each Arrow batch scores with the batch
+    runners' kernel (``segment_worker._approx_dists``), so a row's
+    adist is the one ``search_batch`` computes for the same query.
+    ``cents`` maps the probed IVF list ids to their centroids (codes
+    are residuals); flat passes None.  The quantizer constants ride in
+    the closure: nothing is broadcast per query."""
+    from pgvecto_rs_spark.indexes import batch as BT
+
+    params = BT.quant_params(index, quant)
+    kernel = index.meta["kernel"]
+    col = SW._unit_col(quant, "vec")
+    qs = np.asarray(q, dtype=np.float64)[None, :]
+
+    def score(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            if not b.num_rows:
+                continue
+            tbl = pa.Table.from_batches([b])
+            unit = SW._read_unit(tbl, col)
+            if cents is None:
+                ad = SW._approx_dists(quant, params, kernel, unit, qs)[:, 0]
+            else:
+                lids = tbl.column("list_id").to_numpy()
+                ad = np.empty(len(lids))
+                for lid in np.unique(lids).tolist():
+                    m = lids == lid
+                    part = tuple(u[m] for u in unit) if isinstance(unit, tuple) else unit[m]
+                    ad[m] = SW._approx_dists(quant, params, kernel, part, qs, cents[lid])[:, 0]
+            yield pa.RecordBatch.from_arrays(
+                [tbl.column("id").combine_chunks().cast(pa.int64()), pa.array(ad)],
+                names=["id", "adist"],
+            )
+
+    cols = ["id"] + (["list_id"] if cents is not None else []) + [col]
+    return df.select(*cols).mapInArrow(score, "id bigint, adist double")
+
+
+def sq_bounds(meta: dict, q: np.ndarray):
+    """Sound (lower, upper) bound Columns on the exact kernel distance
+    of an SQ-coded row from its decoded-code distance, the ``adist``
+    column of ``code_scores`` (reranker/error.rs): decode error per dim
+    is at most eps_j = width_j / (2·levels).  l2 (adist is squared L2):
+    |√d − √adist| ≤ ||eps||₂; dot: |Δ| ≤ Σ |q_j|·eps_j."""
+    adist = F.col("adist")
+    levels = (1 << meta.get("sq_bits", 8)) - 1
+    eps = np.asarray(meta["sq_width"], dtype=np.float64) / (2.0 * levels)
+    if meta["kernel"] == "l2":
+        e = F.lit(float(np.sqrt((eps**2).sum())))
+        rt = F.sqrt(F.greatest(adist, F.lit(0.0)))
+        lb = F.greatest(rt - e, F.lit(0.0))
+        return lb * lb, (rt + e) * (rt + e)
+    e = F.lit(float(np.abs(q) @ eps))
+    return adist - e, adist + e
+
+
+def two_phase(index, df: DataFrame, quant: str, q: np.ndarray, k: int = 10,
+              window: int = 0, radius: float | None = None,
+              cents: dict | None = None) -> DataFrame:
+    """Quantized two-phase search over ``df`` (rows with id, codes and
+    vec, already filtered): ``code_scores`` scores the codes, a cut
+    keeps the rerank candidates, their exact vectors are fetched by id
+    and rescored with ``exact_distance`` (the unquantized scorer), and
+    the result is the top ``k`` by (distance, id), or every row under
+    ``radius`` (SQL units).  The candidate cut is
+
+    - ``window`` > 0: the best ``window`` by (adist, id), per distinct
+      id (with replicas > 1 an id is scored once per probed list, and
+      duplicates would waste window slots);
+    - otherwise the SQ error bound (``sq_bounds``): for top-k, every
+      row whose lower bound beats the k-th smallest per-id upper bound
+      (one threshold job; provably holds the exact top-k); for a range,
+      every row whose lower bound is inside the radius.
+
+    Candidate ids collect to the driver and come back as a pushed
+    ``id IN`` filter (row-group skipping on the id-sorted layout), a
+    broadcast id join above ``_ISIN_LITERAL_CAP`` ids, and a plain join
+    against the candidates above ``RERANK_FETCH_CAP`` — a large-radius
+    ring can be corpus-scale, too big to force a broadcast."""
+    meta = index.meta
+    dedup = meta.get("replicas", 1) > 1
+    scored = code_scores(index, df, quant, q, cents)
+    if window:
+        if dedup:
+            scored = scored.groupBy("id").agg(F.min("adist").alias("adist"))
+        cand = scored.orderBy(F.col("adist").asc(), F.col("id").asc()).limit(int(window))
+    elif radius is not None:
+        kradius = float(radius) - 1.0 if meta["metric"] == "cos" else float(radius)
+        lower, _ = sq_bounds(meta, q)
+        # relative margin: FP error in the bound scales with its own
+        # magnitude (dot/cos bounds can dwarf |kradius|)
+        margin = F.lit(1e-9) * F.greatest(F.lit(max(1.0, abs(kradius))), F.abs(lower))
+        cand = scored.where(lower < F.lit(kradius) + margin)
+    else:
+        lower, upper = sq_bounds(meta, q)
+        tsrc = scored.select("id", upper.alias("ub"))
+        if dedup:
+            tsrc = tsrc.groupBy("id").agg(F.min("ub").alias("ub"))
+        trow = (
+            tsrc.orderBy(F.col("ub").asc(), F.col("id").asc())
+            .limit(int(k))
+            .agg(F.max("ub").alias("t"))
+            .collect()
+        )
+        t = trow[0]["t"] if trow else None
+        cand = scored.where(F.lit(False) if t is None else lower <= float(t))
+    ids = [r["id"] for r in cand.select("id").limit(RERANK_FETCH_CAP + 1).collect()]
+    if len(ids) <= _ISIN_LITERAL_CAP:
+        fetched = df.where(F.col("id").isin(ids))
+    elif len(ids) <= RERANK_FETCH_CAP:
+        # a giant IN-list costs more to plan than its row-group skipping
+        # saves
+        iddf = local_frame(index.spark, [(int(i),) for i in ids], "id bigint")
+        fetched = df.join(F.broadcast(iddf), "id")
+    else:
+        fetched = df.join(cand.select("id"), "id")
+    out = fetched.withColumn("distance", post_map(meta["metric"], exact_distance(meta, q)))
+    if dedup:
+        # a replicated id is fetched once per list holding it; the rows
+        # carry the same vector, so any one per id is exact
+        out = out.dropDuplicates(["id"])
+    if radius is not None:
+        out = out.where(F.col("distance") < F.lit(float(radius)))
+    else:
+        out = out.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(int(k))
+    return out.drop("vec", "codes", "rq")

@@ -13,9 +13,10 @@ Spark design:
 - SQ path: store ``codes array<smallint>`` next to the exact vectors
   (``sq{1,2,4,8}``; Parquet dictionary/RLE encoding compresses the
   low-cardinality codes, so 1/2/4-bit cells shrink on disk without an
-  explicit bit-packing pass).  First pass scans only the code column,
-  computes approximate distances natively (decode = min + code·Δ inside
-  zip_with), then reranks by exact distance.  Two rerank policies:
+  explicit bit-packing pass).  First pass scans only the code column
+  and scores decoded codes (min + code·Δ) with the batch runners'
+  kernel (``base.two_phase``), then reranks by exact distance.  Two
+  rerank policies:
 
   * **error-bound** (default, reranker/error.rs analogue): the per-dim
     rounding error ε_j = width_j / (2·levels) gives sound bounds on the
@@ -37,7 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pgvecto_rs_spark.indexes import base
-from pgvecto_rs_spark.operators.search import distance as dist_expr
 
 SQ_BITS = 8  # default (crates/base/src/index.rs:447-462)
 _SQ_KINDS = {"sq1": 1, "sq2": 2, "sq4": 4, "sq8": 8}
@@ -200,93 +200,6 @@ class FlatIndex:
             self._rows_df = self.spark.read.parquet(os.path.join(self.path, "rows"))
         return self._rows_df
 
-    # ------------------------------------------------------------------
-    def _decoded_codes(self) -> F.Column:
-        """Approximate vector from codes: lo + code/levels * width."""
-        levels = float((1 << self.meta.get("sq_bits", SQ_BITS)) - 1)
-        lo_c = F.array(*[F.lit(float(v)) for v in self.meta["sq_lo"]])
-        w_c = F.array(*[F.lit(float(v)) for v in self.meta["sq_width"]])
-        return F.zip_with(
-            F.col("codes"),
-            F.zip_with(lo_c, w_c, lambda a, b: F.struct(a.alias("lo"), b.alias("w"))),
-            lambda c, p: (p["lo"] + c.cast("double") / levels * p["w"]).cast("float"),
-        )
-
-    def _sq_bounds(self, df: DataFrame, qlist: list[float]) -> DataFrame:
-        """Sound per-row distance bounds from SQ codes: decode error per
-        dim is at most ε_j = width_j / (2·levels), so the true distance
-        lies in [__lb, __ub] around the decoded-code distance __adist."""
-        bits = self.meta.get("sq_bits", SQ_BITS)
-        levels = (1 << bits) - 1
-        eps = np.asarray(self.meta["sq_width"], dtype=np.float64) / (2.0 * levels)
-        kernel = self.meta["kernel"]
-        adist = dist_expr(self._decoded_codes(), qlist, kernel)
-        if kernel == "l2":
-            # |√d_exact − √d_approx| ≤ ||ε||₂  (adist is squared L2)
-            e = float(np.sqrt((eps**2).sum()))
-            rt = F.sqrt(F.greatest(adist, F.lit(0.0)))
-            upper = (rt + F.lit(e)) * (rt + F.lit(e))
-            lower_expr = F.greatest(rt - F.lit(e), F.lit(0.0))
-            lower = lower_expr * lower_expr
-        else:  # dot: |Δ| ≤ Σ |q_j|·ε_j, bounds are linear
-            e = float(np.abs(np.asarray(qlist)) @ eps)
-            upper = adist + F.lit(e)
-            lower = adist - F.lit(e)
-        return df.withColumn("__adist", adist).withColumn("__ub", upper).withColumn("__lb", lower)
-
-    def _sq_error_rerank(self, df: DataFrame, qlist: list[float], k: int) -> DataFrame:
-        """Error-bound reranker (reranker/error.rs analogue, exact by
-        construction): sound bounds from ``_sq_bounds``; rerank set =
-        candidates whose lower bound beats the k-th smallest upper
-        bound — adaptive (no window guess) and provably contains the
-        exact top-k.  Costs one tiny threshold job over the code
-        column, then reranks only the qualifying rows."""
-        scored = self._sq_bounds(df, qlist)
-        thresh_row = (
-            scored.orderBy(F.col("__ub").asc(), F.col("id").asc())
-            .limit(k)
-            .agg(F.max("__ub").alias("t"))
-            .collect()
-        )
-        if not thresh_row or thresh_row[0]["t"] is None:
-            return scored.where(F.lit(False))  # empty input, keep schema
-        t = float(thresh_row[0]["t"])
-        return scored.where(F.col("__lb") <= t)
-
-    # candidate sets larger than this rerank in-plan (join) instead of
-    # via a driver id-list fetch
-    RERANK_FETCH_CAP = 8192
-
-    def _fetch_rerank(self, rows: DataFrame, cand: DataFrame, qlist: list[float]) -> DataFrame:
-        """Second phase of the quantized scan: fetch candidates' exact
-        vectors by id and rescore — the reference's by-pointer rerank.
-
-        Candidate ids collect to the driver (the reference materializes
-        candidate pointers the same way) and come back as an `id IN
-        (...)` predicate: against the id-sorted Parquet layout that is a
-        pushed filter with row-group min/max skipping, so pass 2 reads
-        only the touched row groups' vector chunks instead of the whole
-        vector column.  Falls back to a broadcast join when the
-        candidate set exceeds RERANK_FETCH_CAP — a PLAIN shuffle join,
-        not a forced broadcast: a large-radius range scan can make the
-        candidate ring corpus-scale, and force-broadcasting that would
-        hit the broadcast size limit / driver memory (AQE still picks
-        broadcast on its own when the set turns out small)."""
-        exact = dist_expr(F.col("vec"), qlist, self.meta["kernel"])
-        ids = [
-            r["id"] for r in cand.select("id").limit(self.RERANK_FETCH_CAP + 1).collect()
-        ]
-        if len(ids) <= base._ISIN_LITERAL_CAP:
-            fetched = rows.where(F.col("id").isin(ids))
-        elif len(ids) <= self.RERANK_FETCH_CAP:
-            # giant IN-lists cost more to plan/codegen than the row-group
-            # skipping saves; ship the ids as a broadcast join instead
-            iddf = base.local_frame(self.spark, [(int(i),) for i in ids], "id bigint")
-            fetched = rows.join(F.broadcast(iddf), "id")
-        else:
-            fetched = rows.join(cand.select("id"), "id")
-        return fetched.withColumn("distance", base.post_map(self.meta["metric"], exact))
-
     def search(
         self,
         query: Sequence[float],
@@ -303,76 +216,30 @@ class FlatIndex:
         window.  ``exclude`` is an id-set DataFrame removed via broadcast
         anti-join (tombstones) before ranking."""
         q = base.prep_query(query, self.meta["normalize"])
-        qlist = [float(v) for v in q]
         if not rerank_size:
             # alter(default_rerank_size) persists the reference's
             # sq_rerank_size GUC analogue into meta (maintenance.py)
             rerank_size = int(self.meta.get("default_rerank_size", 0))
         df = base.apply_residual(self._rows(), filter, exclude)
 
-        if self.meta.get("storage") == "f16":
-            f16_d = base.f16_distance(self.meta["kernel"], qlist)
-            out = df.withColumn("distance", base.post_map(self.meta["metric"], f16_d))
-            return (
-                out.orderBy(F.col("distance").asc(), F.col("id").asc())
-                .limit(k)
-                .select("id", "distance")
-            )
-
         quant = self.meta.get("quantization")
-        if quant in _SQ_KINDS and rerank_size == 0:
-            # pass 1 reads ONLY (id, codes) — projection pruning keeps
-            # the vector column out of the approximate scan's I/O
-            cand = self._sq_error_rerank(df.select("id", "codes"), qlist, k)
-            out = self._fetch_rerank(df, cand, qlist)
-            return (
-                out.orderBy(F.col("distance").asc(), F.col("id").asc())
-                .limit(k)
-                .select("id", "distance")
-            )
-        if quant in _SQ_KINDS or quant in ("pq", "rabitq"):
+        if quant is not None:
             from pgvecto_rs_spark.indexes.quantization import scaled_rerank_window
 
+            # sq with no explicit window takes the error-bound cut;
             # flat's approximate pass scores the WHOLE corpus, so the
             # scale-aware default window pools over n_rows
-            window = scaled_rerank_window(
-                quant, k, self.meta["n_rows"], rerank_size,
-                pq_ratio=int(self.meta.get("pq_ratio", 4)),
-            )
-            if quant in _SQ_KINDS:
-                approx = dist_expr(self._decoded_codes(), qlist, self.meta["kernel"])
-                code_cols = ["id", "codes"]
-            elif quant == "pq":
-                from pgvecto_rs_spark.indexes import quantization as Qz
+            window = 0
+            if quant not in _SQ_KINDS or rerank_size:
+                window = scaled_rerank_window(
+                    quant, k, self.meta["n_rows"], rerank_size,
+                    pq_ratio=int(self.meta.get("pq_ratio", 4)),
+                )
+            return base.two_phase(self, df, quant, q, k, window=window)
 
-                books = np.load(os.path.join(self.path, "pq_codebooks.npy"))
-                lut = Qz.pq_lut(books, np.asarray(qlist), self.meta["kernel"])
-                approx = Qz.pq_approx_distance("codes", lut)
-                code_cols = ["id", "codes"]
-            else:
-                from pgvecto_rs_spark.indexes import quantization as Qz
-
-                proj = np.load(os.path.join(self.path, "rabitq_proj.npy"))
-                score = Qz.rabitq_score_udf(proj, np.asarray(qlist), self.meta["kernel"], self.spark)
-                approx = score(F.col("rq.norm"), F.col("rq.words"))
-                code_cols = ["id", "rq"]
-            cand = (
-                df.select(*code_cols)
-                .withColumn("adist", approx)
-                .orderBy(F.col("adist").asc(), F.col("id").asc())
-                .limit(window)
-            )
-            out = self._fetch_rerank(df, cand, qlist)
-            return (
-                out.orderBy(F.col("distance").asc(), F.col("id").asc())
-                .limit(k)
-                .select("id", "distance")
-            )
-
-        from pgvecto_rs_spark.operators.search import arrow_distance
-
-        d = arrow_distance(qlist, self.meta["kernel"])(F.col("vec"))
-        out = df.withColumn("distance", base.post_map(self.meta["metric"], d))
+        out = df.withColumn(
+            "distance", base.post_map(self.meta["metric"], base.exact_distance(self.meta, q))
+        )
         return out.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(k).select("id", "distance")
 
     def range_search(
@@ -387,7 +254,7 @@ class FlatIndex:
 
         Raw f32 and f16 storage: one scan + filter.  SQ codes run the
         two-phase sphere: the first pass reads ONLY the code column and
-        keeps rows whose sound LOWER bound (``_sq_bounds``) is inside
+        keeps rows whose sound LOWER bound (``base.sq_bounds``) is inside
         the radius — the true distance is ≥ that bound, so every
         in-range row survives the prefilter by construction — then
         exact vectors are fetched for just that candidate set and
@@ -397,35 +264,12 @@ class FlatIndex:
         estimators carry no sound bound, so those cells fall back to
         the exact vector scan (same answer, no I/O skip)."""
         q = base.prep_query(query, self.meta["normalize"])
-        qlist = [float(v) for v in q]
-        metric = self.meta["metric"]
-        kradius = float(radius) - 1.0 if metric == "cos" else float(radius)
         df = base.apply_residual(self._rows(), filter, exclude)
-
-        if self.meta.get("storage") == "f16":
-            f16_d = base.f16_distance(self.meta["kernel"], qlist)
-            out = df.withColumn("distance", base.post_map(metric, f16_d))
-            return out.where(F.col("distance") < F.lit(float(radius))).select(
-                "id", "distance"
-            )
-
         quant = self.meta.get("quantization")
         if quant in _SQ_KINDS:
-            # elementwise relative margin: FP error in the code bound
-            # scales with the bound's own magnitude (dot/cos bounds can
-            # dwarf |kradius|), so widen by max(1, |kradius|, |__lb|)
-            margin = F.lit(1e-9) * F.greatest(
-                F.lit(max(1.0, abs(kradius))), F.abs(F.col("__lb"))
-            )
-            cand = self._sq_bounds(df.select("id", "codes"), qlist).where(
-                F.col("__lb") < F.lit(kradius) + margin
-            )
-            out = self._fetch_rerank(df, cand, qlist)
-        else:
-            from pgvecto_rs_spark.operators.search import arrow_distance
-
-            d = arrow_distance(qlist, self.meta["kernel"])(F.col("vec"))
-            out = df.withColumn("distance", base.post_map(metric, d))
+            return base.two_phase(self, df, quant, q, radius=radius)
+        metric = self.meta["metric"]
+        out = df.withColumn("distance", base.post_map(metric, base.exact_distance(self.meta, q)))
         return out.where(F.col("distance") < F.lit(float(radius))).select(
             "id", "distance"
         )

@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pgvecto_rs_spark.indexes import base
-from pgvecto_rs_spark.operators.search import distance as dist_expr
 
 DEFAULT_NLIST = 1000  # crates/base/src/index.rs:368-370
 DEFAULT_NPROBE = 10  # crates/base/src/index.rs:558-560
@@ -649,18 +648,6 @@ class IVFIndex:
         base.write_meta(self.path, self.meta)
         return segs
 
-    def _exact_distance_col(self, qlist: list[float]):
-        """Exact distance Column over the stored vector representation:
-        arrow kernel on the f32 array, or a decode-and-score UDF on f16
-        binary16 words (grid values decode exactly, so these ARE the
-        vecf16 type's distances)."""
-        kernel = self.meta["kernel"]
-        if self.meta.get("storage") == "f16":
-            return base.f16_distance(kernel, qlist)
-        from pgvecto_rs_spark.operators.search import arrow_distance
-
-        return arrow_distance(qlist, kernel)(F.col("vec"))
-
     def probe_lists(self, q: np.ndarray, nprobe: int) -> list[int]:
         d = base.np_kernel_distance(self.meta["kernel"], self.centroids.astype(np.float64), q)
         return np.argsort(d, kind="stable")[:nprobe].tolist()
@@ -743,10 +730,7 @@ class IVFIndex:
         out = (
             df.withColumn(
                 "distance",
-                base.post_map(
-                    self.meta["metric"],
-                    self._exact_distance_col([float(v) for v in q]),
-                ),
+                base.post_map(self.meta["metric"], base.exact_distance(self.meta, q)),
             )
             .where(F.col("distance") < F.lit(float(radius)))
             .select("id", "distance")
@@ -880,115 +864,32 @@ class IVFIndex:
         lists = self.probe_lists(q, nprobe)
         df = self._lists().where(F.col("list_id").isin(lists))
         df = base.apply_residual(df, filter, exclude)
-        from pgvecto_rs_spark.operators.search import arrow_distance
-
-        qlist = [float(v) for v in q]
-        scorer = arrow_distance(qlist, self.meta["kernel"])
-
         from pgvecto_rs_spark.indexes.flat import _SQ_KINDS
 
         quant = self.meta.get("quantization") or (
             "sq8" if self.meta.get("residual_quantization") else None
         )
-        if quant in _SQ_KINDS:
-            levels = float((1 << self.meta.get("sq_bits", 8)) - 1)
-            # decode centroid[list] + lo + code/levels·width and score
-            # inside one broadcast numpy scorer (see _sq_scorer for why
-            # not a Catalyst fold), rerank by exact vec distance.
-            # pass 1 reads ONLY (id, list_id, codes): projection pruning
-            # keeps the vector column out of the approximate scan
-            approx = self._sq_scorer(q, lists)(F.col("list_id"), F.col("codes"))
-            scored = df.select("id", "list_id", "codes").withColumn("adist", approx)
-            if rerank_size == 0:
-                # error-bound reranker (reranker/error.rs, default like
-                # the flat SQ path): decode error per dim <= eps_j =
-                # width_j/(2*levels); sound bounds make the rerank set
-                # provably contain the exact top-k WITHIN the probed
-                # lists — no window guess.
-                eps = np.asarray(self.meta["sq_width"], dtype=np.float64) / (2.0 * levels)
-                adist = F.col("adist")
-                if self.meta["kernel"] == "l2":
-                    e = float(np.sqrt((eps**2).sum()))
-                    rt = F.sqrt(F.greatest(adist, F.lit(0.0)))
-                    upper = (rt + F.lit(e)) * (rt + F.lit(e))
-                    lb = F.greatest(rt - F.lit(e), F.lit(0.0))
-                    lower = lb * lb
-                else:  # dot: |Δ| <= Σ |q_j|·eps_j
-                    e = float(np.abs(q) @ eps)
-                    upper = adist + F.lit(e)
-                    lower = adist - F.lit(e)
-                scored = scored.withColumn("__ub", upper).withColumn("__lb", lower)
-                # Threshold = k-th smallest per-ID upper bound.  With
-                # replicas > 1 the same id sits in several probed lists,
-                # so the k smallest *row* bounds can contain duplicates
-                # and understate the k-th distinct id's bound — a true
-                # top-k id could then fail the __lb <= t test.  Collapse
-                # to per-id min(__ub) first (one extra k-row shuffle,
-                # only when multi-assignment is configured).
-                tsrc = scored
-                if self.meta.get("replicas", 1) > 1:
-                    tsrc = scored.groupBy("id").agg(F.min("__ub").alias("__ub"))
-                trow = (
-                    tsrc.orderBy(F.col("__ub").asc(), F.col("id").asc())
-                    .limit(k)
-                    .agg(F.max("__ub").alias("t"))
-                    .collect()
-                )
-                if trow and trow[0]["t"] is not None:
-                    cand = scored.where(F.col("__lb") <= float(trow[0]["t"]))
-                else:
-                    cand = scored.where(F.lit(False))
-                cand = cand.drop("__ub", "__lb")
-            else:
-                window = max(k, rerank_size, k * 4)
-                cand = self._window_cut(scored, window)
-            out = self._fetch_rerank(df, cand, scorer)
-        elif quant == "pq":
-            window = self._fixed_rerank_window("pq", k, nprobe, rerank_size)
-            approx = self._pq_scorer(q, lists)(F.col("list_id"), F.col("codes"))
-            cand = self._window_cut(
-                df.select("id", "list_id", "codes").withColumn("adist", approx),
-                window,
-            )
-            out = self._fetch_rerank(df, cand, scorer)
-        elif quant == "rabitq":
-            window = self._fixed_rerank_window("rabitq", k, nprobe, rerank_size)
-            approx = self._rabitq_scorer(q, lists)(
-                F.col("list_id"), F.col("rq.norm"), F.col("rq.words")
-            )
-            cand = self._window_cut(
-                df.select("id", "list_id", "rq").withColumn("adist", approx),
-                window,
-            )
-            out = self._fetch_rerank(df, cand, scorer)
+        if quant is not None:
+            # sq with no explicit window takes the error-bound cut
+            # (reranker/error.rs, the flat SQ default): exact within the
+            # probed lists.  Codes are residuals around the probed
+            # lists' centroids.
+            window = 0
+            if quant not in _SQ_KINDS or rerank_size:
+                window = self._fixed_rerank_window(quant, k, nprobe, rerank_size)
+            cents = {int(l): self.centroids[l].astype(np.float64) for l in lists}
+            out = base.two_phase(self, df, quant, q, k, window=window, cents=cents)
         else:
             out = df.withColumn(
                 "distance",
-                base.post_map(self.meta["metric"], self._exact_distance_col(qlist)),
+                base.post_map(self.meta["metric"], base.exact_distance(self.meta, q)),
             )
-        if self.meta.get("replicas", 1) > 1:
-            # multi-assignment can surface the same id from two probed
-            # lists; rows are identical so any-one-per-id is exact
-            out = out.dropDuplicates(["id"])
-        return (
-            out.orderBy(F.col("distance").asc(), F.col("id").asc())
-            .limit(k)
-            .drop("vec", "codes", "adist", "__cent", "rq")
-        )
-
-    def _window_cut(self, scored: DataFrame, window: int) -> DataFrame:
-        """Top-``window`` candidate cut for the quantized two-phase
-        search.  With replicas > 1 the same id appears once per probed
-        replica list, so a plain row LIMIT wastes window slots on
-        duplicates (fewer DISTINCT candidates -> measurably worse
-        rerank quality than the batch path, which deduped — r10);
-        collapse to per-id best adist first.  replicas == 1 keeps the
-        shuffle-free TakeOrdered row cut."""
-        if self.meta.get("replicas", 1) > 1:
-            scored = scored.groupBy("id").agg(F.min("adist").alias("adist"))
-        return scored.orderBy(F.col("adist").asc(), F.col("id").asc()).limit(window)
-
-    RERANK_FETCH_CAP = 8192
+            if self.meta.get("replicas", 1) > 1:
+                # multi-assignment can surface the same id from two probed
+                # lists; rows are identical so any-one-per-id is exact
+                out = out.dropDuplicates(["id"])
+            out = out.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(k)
+        return out.drop("vec", "codes", "rq")
 
     def _fixed_rerank_window(self, quant: str | None, k: int,
                              nprobe: int, rerank_size: int) -> int:
@@ -1002,139 +903,6 @@ class IVFIndex:
         return scaled_rerank_window(
             quant, k, pool, rerank_size, pq_ratio=int(meta.get("pq_ratio", 4))
         )
-
-    def _fetch_rerank(self, rows: DataFrame, cand: DataFrame, scorer) -> DataFrame:
-        """Second phase of the quantized scan: fetch candidates' exact
-        vectors by id within the probed (pruned) lists and rescore.  Ids
-        collect to the driver and push down as id IN (...) — against the
-        id-sorted within-list layout this skips row groups, so pass 2
-        reads only the touched vector chunks (see FlatIndex._fetch_rerank
-        for the same design)."""
-        ids = [
-            r["id"] for r in cand.select("id").limit(self.RERANK_FETCH_CAP + 1).collect()
-        ]
-        if len(ids) <= base._ISIN_LITERAL_CAP:
-            fetched = rows.where(F.col("id").isin(ids))
-        elif len(ids) <= self.RERANK_FETCH_CAP:
-            # a giant IN-list costs more to plan/codegen than it saves in
-            # row-group skipping; ship the collected ids as a broadcast
-            # join instead (same pruned scan, no literal explosion)
-            iddf = base.local_frame(self.spark, [(int(i),) for i in ids], "id bigint")
-            fetched = rows.join(F.broadcast(iddf), "id")
-        else:
-            fetched = rows.join(F.broadcast(cand.select("id")), "id")
-        return fetched.withColumn(
-            "distance", base.post_map(self.meta["metric"], scorer(F.col("vec")))
-        )
-
-    # -- quantized first-pass scorers (asymmetric, per-probed-list) -----
-    def _sq_scorer(self, q: np.ndarray, lists: list[int]):
-        """Approx scorer over residual SQ codes: decode
-        ``centroid[list] + lo + code/levels*width`` and kernel-score in
-        ONE Arrow-batched numpy pass.  This replaces a Catalyst
-        zip_with fold over per-call literal arrays (lo/width/centroid
-        as 64-element literals + a broadcast centroid join) that forced
-        a fresh Janino codegen compile on EVERY query — measured 4.3 s
-        /query vs 0.24 for the unquantized path at 1M rows (r10 ANN
-        quality harness); the numpy scorer broadcasts index constants
-        once and compiles nothing."""
-        kernel = self.meta["kernel"]
-        cents = self.centroids.astype(np.float64)
-        lo = np.asarray(self.meta["sq_lo"], dtype=np.float64)
-        width = np.asarray(self.meta["sq_width"], dtype=np.float64)
-        levels = float((1 << self.meta.get("sq_bits", 8)) - 1)
-        base_by_list = {int(l): cents[l] + lo for l in lists}
-        bc = self.spark.sparkContext.broadcast(
-            (base_by_list, width / levels, q, kernel)
-        )
-
-        @F.pandas_udf("double")
-        def adist(lid: pd.Series, codes: pd.Series) -> pd.Series:
-            bases, scale, qv, kern = bc.value
-            lids = lid.to_numpy()
-            cmat = np.asarray(codes.tolist(), dtype=np.float64) * scale[None, :]
-            out = np.empty(len(lids), dtype=np.float64)
-            for l in np.unique(lids):
-                m = lids == l
-                out[m] = base.np_kernel_distance(kern, cmat[m] + bases[int(l)], qv)
-            return pd.Series(out)
-
-        return adist
-
-    def _pq_scorer(self, q: np.ndarray, lists: list[int]):
-        """ADC over residual PQ codes: per probed list the query residual
-        (q − centroid) gets its own LUT (n_sub × 2^bits, driver-side,
-        broadcast); scoring is one LUT gather per Arrow batch.  The scan
-        reads ONLY (list_id, codes) — n_sub bytes of information per row
-        instead of 4·dims."""
-        from pgvecto_rs_spark.indexes import quantization as Qz
-
-        books = np.load(os.path.join(self.path, "pq_codebooks.npy"))
-        kernel = self.meta["kernel"]
-        cents = self.centroids.astype(np.float64)
-        luts, consts = {}, {}
-        for l in lists:
-            if kernel == "l2":
-                luts[int(l)] = Qz.pq_lut(books, q - cents[l], "l2")
-                consts[int(l)] = 0.0
-            else:  # dot: −q·(c+res) = −q·c + Σ_s −q_s·book_s[code]
-                luts[int(l)] = Qz.pq_lut(books, q, "dot")
-                consts[int(l)] = -float(q @ cents[l])
-        bc = self.spark.sparkContext.broadcast((luts, consts))
-
-        @F.pandas_udf("double")
-        def adist(lid: pd.Series, codes: pd.Series) -> pd.Series:
-            tbl, cst = bc.value
-            lids = lid.to_numpy()
-            cmat = np.asarray(codes.tolist(), dtype=np.int64)
-            sub_idx = np.arange(cmat.shape[1])[None, :]
-            out = np.empty(len(lids), dtype=np.float64)
-            for l in np.unique(lids):
-                m = lids == l
-                out[m] = tbl[int(l)][sub_idx, cmat[m]].sum(axis=1) + cst[int(l)]
-            return pd.Series(out)
-
-        return adist
-
-    def _rabitq_scorer(self, q: np.ndarray, lists: list[int]):
-        """RaBitQ estimator over residual sign codes: per probed list the
-        rotated query residual z_l = P·(q − centroid_l) is precomputed on
-        the driver; per batch one unpack + matvec."""
-        proj = np.load(os.path.join(self.path, "rabitq_proj.npy"))
-        kernel = self.meta["kernel"]
-        cents = self.centroids.astype(np.float64)
-        dims = proj.shape[0]
-        zs, consts = {}, {}
-        for l in lists:
-            if kernel == "l2":
-                d = q - cents[l]
-                zs[int(l)] = proj @ d
-                consts[int(l)] = float(d @ d)
-            else:  # dot: −q·(c+res) = −q·c − q·reŝ
-                zs[int(l)] = proj @ q
-                consts[int(l)] = -float(q @ cents[l])
-        bc = self.spark.sparkContext.broadcast((zs, consts, kernel, dims))
-
-        @F.pandas_udf("double")
-        def adist(lid: pd.Series, norm: pd.Series, words: pd.Series) -> pd.Series:
-            tbl, cst, kern, d = bc.value
-            n_words = (d + 31) // 32
-            lids = lid.to_numpy()
-            w = np.asarray(words.tolist(), dtype=np.int64).astype(np.uint32)
-            bits = ((w[:, :, None] >> np.arange(32, dtype=np.uint32)[None, None, :]) & 1).astype(np.float64)
-            sgn = 2.0 * bits.reshape(len(w), n_words * 32)[:, :d] - 1.0
-            nm = norm.to_numpy(dtype=np.float64)
-            out = np.empty(len(lids), dtype=np.float64)
-            for l in np.unique(lids):
-                m = lids == l
-                est = (nm[m] / np.sqrt(d)) * (sgn[m] @ tbl[int(l)])
-                if kern == "l2":
-                    out[m] = cst[int(l)] + nm[m] ** 2 - 2.0 * est
-                else:
-                    out[m] = cst[int(l)] - est
-            return pd.Series(out)
-
-        return adist
 
     def search_batch(
         self,

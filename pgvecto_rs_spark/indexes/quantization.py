@@ -12,23 +12,24 @@ Reference:
 
 Spark shapes:
 - PQ codes are an ``array<smallint>`` column (n_subspaces bytes of
-  information per row).  The query-time LUT is a (n_sub × 2^bits)
-  table computed on the driver and inlined as a literal
-  array-of-arrays; approximate distance is a native ``aggregate`` over
-  the code array — whole-stage codegen, scanning ONLY the code column.
-- RaBitQ codes are sign bits packed into ``array<int>`` words plus a
-  stored norm.  Scoring unpacks per Arrow batch in numpy (one matmul
-  per batch) — the Python boundary is per-batch, not per-row.
+  information per row); RaBitQ codes are sign bits packed into
+  ``array<int>`` words plus a stored norm (``rq`` struct).  Both are
+  encoded by Arrow-batched pandas UDFs at build time.
+- Scoring has one implementation per quantizer, in
+  ``segment_worker._approx_dists``: decode-on-access for flat codes,
+  a batched per-list LUT for IVF-PQ residual codes, one unpack +
+  matmul per Arrow batch for RaBitQ.  ``search_batch`` runs it inside
+  the block runners; per-query ``search`` runs it in one
+  ``mapInArrow`` over the code column (``base.code_scores``).
 
-Both feed the same two-phase plan as SQ8: approximate scan -> rerank
-window -> exact distances (reranker/flat.rs).
+Both feed the same two-phase plan as SQ: approximate scan -> rerank
+window -> exact distances (reranker/flat.rs, ``base.two_phase``).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 PQ_BITS = 8  # crates/base/src/index.rs:475-496 default
@@ -105,33 +106,6 @@ def pq_encode_udf(codebooks: np.ndarray, spark):
     return encode
 
 
-def pq_lut(codebooks: np.ndarray, q: np.ndarray, kernel: str) -> np.ndarray:
-    """Per-query LUT[s][c] = kernel distance contribution of subspace s
-    centroid c (product.rs asymmetric distance)."""
-    n_sub, k, sub = codebooks.shape
-    lut = np.empty((n_sub, k))
-    for s in range(n_sub):
-        qs = q[s * sub : (s + 1) * sub]
-        if kernel == "l2":
-            d = codebooks[s] - qs[None, :]
-            lut[s] = np.einsum("ij,ij->i", d, d)
-        else:  # dot
-            lut[s] = -(codebooks[s] @ qs)
-    return lut
-
-
-def pq_approx_distance(codes_col: Column | str, lut: np.ndarray) -> Column:
-    """Native ADC: Σ_s LUT[s][code_s] over the code array."""
-    c = F.col(codes_col) if isinstance(codes_col, str) else codes_col
-    lut_col = F.array(*[F.array(*[F.lit(float(x)) for x in row]) for row in lut])
-    pairs = F.zip_with(
-        c,
-        F.transform(lut_col, lambda row: row),  # identity keeps shapes aligned
-        lambda code, row: F.element_at(row, code.cast("int") + 1),
-    )
-    return F.aggregate(pairs, F.lit(0.0), lambda acc, x: acc + x)
-
-
 # ---------------------------------------------------------------------------
 # RaBitQ
 # ---------------------------------------------------------------------------
@@ -174,34 +148,6 @@ def rabitq_encode_udf(proj: np.ndarray, spark):
         )
 
     return encode
-
-
-def rabitq_score_udf(proj: np.ndarray, q: np.ndarray, kernel: str, spark):
-    """Approximate kernel distance from (norm, words) per Arrow batch:
-    dot(q, x) ≈ norm/√d · Σ_i (2·bit_i − 1)·(P·q̂... direct z_i) with
-    z = P·q — one unpack + matvec per batch, numpy-vectorized."""
-    dims = proj.shape[0]
-    z = proj @ q  # rotate the query once, driver-side
-    bz = spark.sparkContext.broadcast(z)
-    q_sq = float(q @ q)
-
-    @F.pandas_udf("double")
-    def score(norm: pd.Series, words: pd.Series) -> pd.Series:
-        zz = bz.value
-        d = len(zz)
-        n_words = (d + 31) // 32
-        w = np.asarray(words.tolist(), dtype=np.int64).astype(np.uint32)
-        bits = ((w[:, :, None] >> np.arange(32, dtype=np.uint32)[None, None, :]) & 1).astype(np.float64)
-        bits = bits.reshape(len(w), n_words * 32)[:, :d]
-        sgn = 2.0 * bits - 1.0
-        est_dot = (norm.to_numpy(dtype=np.float64) / np.sqrt(d)) * (sgn @ zz)
-        if kernel == "dot":
-            return pd.Series(-est_dot)
-        # l2: ||q||² + ||x||² − 2·q·x̂
-        n2 = norm.to_numpy(dtype=np.float64) ** 2
-        return pd.Series(q_sq + n2 - 2.0 * est_dot)
-
-    return score
 
 
 # ---------------------------------------------------------------------------

@@ -645,7 +645,9 @@ def _approx_dists(quant: str, params, kernel: str, codes, qs: np.ndarray,
                   cent=None) -> np.ndarray:
     """(rows x queries) approximate distances over one unit's codes:
     IVF-PQ scores with the batched LUT, every other cell decodes and
-    scores like the exact gemm."""
+    scores like the exact gemm.  The one quantized scorer: the block
+    runners call it per (block, unit), per-query search per Arrow
+    batch (``base.code_scores``)."""
     if quant == "pq" and cent is not None:
         return _ivf_pq_adist(params, kernel, codes, cent, qs)
     approx = _decode_codes(quant, params, codes, cent)

@@ -735,13 +735,19 @@ def embedding_neardup_pairs(
     if method != "ivf":
         raise ValueError(f"unknown method {method!r} (brute | ivf)")
 
+    from pgvecto_rs_spark.indexes import base
     from pgvecto_rs_spark.indexes.ivf import SAMPLE_CAP, _lloyd
 
     spark = df.sparkSession
     n = e.count()
     fraction = min(1.0, SAMPLE_CAP / max(n, 1))
-    sample = e.select("__v").sample(fraction=fraction, seed=seed).limit(SAMPLE_CAP).collect()
-    x = np.asarray([r["__v"] for r in sample], dtype=np.float64)
+    # trimmed in hashed-id order: the k-means++ seeding follows row
+    # order, so a layout-dependent sample would move the centroids (the
+    # id is hashed to a bigint first: ids here may be of any type)
+    x = base.training_sample(
+        e.select(F.xxhash64("__id").alias("id"), "__v"),
+        "__v", fraction, seed, SAMPLE_CAP,
+    )
     norms = np.linalg.norm(x, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     x = x / norms

@@ -69,8 +69,13 @@ def knn_join_ivf(
 
     n = corpus.count()
     fraction = min(1.0, SAMPLE_CAP / max(n, 1))
-    sample = corpus.select("__cv").sample(fraction=fraction, seed=seed).limit(SAMPLE_CAP).collect()
-    x = np.asarray([r["__cv"] for r in sample], dtype=np.float64)
+    # trimmed in hashed-id order: the k-means++ seeding follows row
+    # order, so a layout-dependent sample would move the centroids (the
+    # id is hashed to a bigint first: ids here may be of any type)
+    x = base.training_sample(
+        corpus.select(F.xxhash64("__cid").alias("id"), "__cv"),
+        "__cv", fraction, seed, SAMPLE_CAP,
+    )
     nlist_eff = min(nlist, max(1, len(x)))
     centroids = _lloyd(x, nlist_eff, seed=seed).astype(np.float64)
 

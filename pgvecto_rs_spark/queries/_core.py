@@ -15,6 +15,7 @@ Determinism rules (so the DuckDB comparison is boundary-safe):
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 from collections.abc import Callable
@@ -307,17 +308,34 @@ def oracle_sql() -> dict[str, str]:
 #     hnsw/sq8 are approximate -> rows-only)
 # ---------------------------------------------------------------------------
 
-_INDEX_CACHE_VERSION = 7  # bump to invalidate /tmp caches when index layout changes
-# v7: r12 PQ training-row cap (64 rows/centroid stride in pq_train) —
-# codebooks differ-but-equally-valid; rebuild so oracles prove the new
-# trainer.  (v6: r11 HNSW prune/slack rework.)
+def _source_digest(src_dir: str) -> str:
+    """md5 over the names and contents of ``src_dir``'s ``*.py`` files."""
+    import glob
+    import hashlib
+
+    h = hashlib.md5()
+    for path in sorted(glob.glob(os.path.join(src_dir, "*.py"))):
+        h.update(os.path.basename(path).encode())
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
+@functools.cache
+def _index_cache_version() -> str:
+    """Index caches under the temp dir are keyed on the index package's
+    source, so a change to how indexes are built or laid out rebuilds
+    them instead of serving a stale layout."""
+    from pgvecto_rs_spark import indexes
+
+    return _source_digest(os.path.dirname(os.path.abspath(indexes.__file__)))
 
 
 def _tmp_index_dir(name: str, sf_dir: str) -> str:
     import hashlib
     import tempfile
 
-    tag = hashlib.md5(f"{name}:{sf_dir}:v{_INDEX_CACHE_VERSION}".encode()).hexdigest()[:10]
+    tag = hashlib.md5(f"{name}:{sf_dir}:v{_index_cache_version()}".encode()).hexdigest()[:10]
     return os.path.join(tempfile.gettempdir(), f"pgvrs_{name}_{tag}")
 
 

@@ -339,9 +339,16 @@ class TestSearchBatch:
     def test_flat_batch_quantized_matches_per_query(self, spark, emb):
         """Quantized flat batch search (one codes-only approx scan + one
         pushed-id exact rerank) must match per-query window-rerank
-        search for every quantizer."""
+        search for every quantizer, bit for bit: both modes score codes
+        with the same kernel and rerank with the same arithmetic.  The
+        default-window cells (rerank_size=0) size the window alike in
+        both modes."""
         with tempfile.TemporaryDirectory() as d:
-            for quant, kw in (("sq8", {}), ("pq", {"pq_ratio": 4}), ("rabitq", {})):
+            for quant, kw, sizes in (
+                ("sq8", {}, (40,)),
+                ("pq", {"pq_ratio": 4}, (40, 0)),
+                ("rabitq", {}, (40, 0)),
+            ):
                 idx = FlatIndex.create(
                     spark, emb, f"{d}/{quant}", metric="l2", quantization=quant, **kw
                 )
@@ -351,24 +358,30 @@ class TestSearchBatch:
                 got = idx.search_batch(qdf, "qid", "qv", k=10)
                 by_q: dict = {}
                 for r in got.collect():
-                    by_q.setdefault(r["query_id"], []).append((r["id"], round(r["distance"], 9)))
+                    by_q.setdefault(r["query_id"], []).append((r["id"], r["distance"]))
                 assert len(by_q) == 8, (quant, sorted(by_q))
                 for qr in qdf.collect():
-                    expect = [
-                        (r["id"], round(r["distance"], 9))
-                        for r in idx.search(list(qr["qv"]), k=10, rerank_size=40).collect()
-                    ]
-                    assert (
-                        sorted(by_q[qr["qid"]], key=lambda t: (t[1], t[0])) == expect
-                    ), (quant, qr["qid"])
+                    for rs in sizes:
+                        expect = [
+                            (r["id"], r["distance"])
+                            for r in idx.search(list(qr["qv"]), k=10, rerank_size=rs).collect()
+                        ]
+                        assert (
+                            sorted(by_q[qr["qid"]], key=lambda t: (t[1], t[0])) == expect
+                        ), (quant, rs, qr["qid"])
 
     def test_ivf_batch_quantized_matches_per_query(self, spark, emb):
         """Quantized batch search = batched two-phase (one codes-only
         approx scan for all queries, one pushed-id exact rerank).  At
-        full probe with the same fixed window, results must match the
-        per-query two-phase search for every quantizer."""
+        full probe with the same window, results must equal the
+        per-query two-phase search bit for bit for every quantizer, at
+        window 40 and, for pq and rabitq, at the default window."""
         with tempfile.TemporaryDirectory() as d:
-            for quant, kw in (("sq8", {}), ("pq", {"pq_ratio": 4}), ("rabitq", {})):
+            for quant, kw, sizes in (
+                ("sq8", {}, (40,)),
+                ("pq", {"pq_ratio": 4}, (40, 0)),
+                ("rabitq", {}, (40, 0)),
+            ):
                 idx = IVFIndex.create(
                     spark, emb, f"{d}/{quant}", metric="l2", nlist=8,
                     quantization=quant, **kw,
@@ -376,21 +389,22 @@ class TestSearchBatch:
                 qdf = emb.orderBy("vec_id").limit(8).select(
                     F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
                 )
-                got = idx.search_batch(qdf, "qid", "qv", k=10, nprobe=8, rerank_size=40)
-                by_q: dict = {}
-                for r in got.collect():
-                    by_q.setdefault(r["query_id"], []).append((r["id"], round(r["distance"], 9)))
-                assert len(by_q) == 8, (quant, sorted(by_q))
-                for qr in qdf.collect():
-                    expect = [
-                        (r["id"], round(r["distance"], 9))
-                        for r in idx.search(
-                            list(qr["qv"]), k=10, nprobe=8, rerank_size=40
-                        ).collect()
-                    ]
-                    assert (
-                        sorted(by_q[qr["qid"]], key=lambda t: (t[1], t[0])) == expect
-                    ), (quant, qr["qid"])
+                for rs in sizes:
+                    got = idx.search_batch(qdf, "qid", "qv", k=10, nprobe=8, rerank_size=rs)
+                    by_q: dict = {}
+                    for r in got.collect():
+                        by_q.setdefault(r["query_id"], []).append((r["id"], r["distance"]))
+                    assert len(by_q) == 8, (quant, rs, sorted(by_q))
+                    for qr in qdf.collect():
+                        expect = [
+                            (r["id"], r["distance"])
+                            for r in idx.search(
+                                list(qr["qv"]), k=10, nprobe=8, rerank_size=rs
+                            ).collect()
+                        ]
+                        assert (
+                            sorted(by_q[qr["qid"]], key=lambda t: (t[1], t[0])) == expect
+                        ), (quant, rs, qr["qid"])
 
     def test_quantized_batch_jobs_within_unquantized(self, spark, emb):
         """Quantized flat and IVF batches run the same block path as the
@@ -986,7 +1000,8 @@ class TestTrainingLayout:
     layout: the PQ sample is trimmed in hashed-id order, like the
     centroid sample, so the same rows give the same codebooks."""
 
-    def test_pq_codebooks_ignore_partitioning(self, spark):
+    @staticmethod
+    def _src(spark):
         import numpy as np
         import pandas as pd
 
@@ -997,7 +1012,12 @@ class TestTrainingLayout:
                 "embedding": list(rng.standard_normal((1000, 16)).astype(np.float32)),
             }
         )
-        src = spark.createDataFrame(pdf, "vec_id long, embedding array<float>")
+        return spark.createDataFrame(pdf, "vec_id long, embedding array<float>")
+
+    def test_pq_codebooks_ignore_partitioning(self, spark):
+        import numpy as np
+
+        src = self._src(spark)
         for cls, kw in ((IVFIndex, {"nlist": 4}), (FlatIndex, {})):
             books = []
             with tempfile.TemporaryDirectory() as d:
@@ -1008,6 +1028,62 @@ class TestTrainingLayout:
                     )
                     books.append(np.load(f"{d}/{parts}/pq_codebooks.npy"))
             assert np.array_equal(books[0], books[1]), cls.__name__
+
+    def test_operator_centroids_ignore_partitioning(self, spark, monkeypatch):
+        """The IVF-bucketed operators (embedding near-dup pairs, knn-join)
+        train their centroids on the same layout-independent sample, so
+        the same rows give the same centroids at any partitioning."""
+        import numpy as np
+
+        from pgvecto_rs_spark.indexes import ivf as IV
+        from pgvecto_rs_spark.operators import dedup as DD
+        from pgvecto_rs_spark.operators import knn_ivf as KI
+
+        orig = IV._lloyd
+        seen: list = []
+
+        def spy(*a, **kw):
+            seen.append(orig(*a, **kw))
+            return seen[-1]
+
+        monkeypatch.setattr(IV, "_lloyd", spy)
+        monkeypatch.setattr(KI, "_lloyd", spy)
+        src = self._src(spark)
+        runs = {
+            "neardup": lambda df: DD.embedding_neardup_pairs(df, method="ivf", nlist=8),
+            "knn_ivf": lambda df: KI.knn_join_ivf(
+                df.limit(5), df, "vec_id", "embedding", "vec_id", "embedding", k=3, nlist=8
+            ),
+        }
+        for name, run in runs.items():
+            cents = []
+            for parts in (1, 7):
+                seen.clear()
+                run(src.repartition(parts))
+                cents.append(seen[0])
+            assert np.array_equal(cents[0], cents[1]), name
+
+
+class TestIndexCacheVersion:
+    def test_cache_tag_follows_index_sources(self, tmp_path, monkeypatch):
+        """The index cache tag derives from the index package's source:
+        the digest tracks file contents, and the tag tracks the digest."""
+        import os
+
+        from pgvecto_rs_spark import indexes
+        from pgvecto_rs_spark.queries import _core as C
+
+        assert C._index_cache_version() == C._source_digest(os.path.dirname(indexes.__file__))
+        (tmp_path / "a.py").write_text("x = 1\n")
+        before = C._source_digest(str(tmp_path))
+        (tmp_path / "a.py").write_text("x = 2\n")
+        after = C._source_digest(str(tmp_path))
+        assert before != after
+        tags = []
+        for digest in (before, after):
+            monkeypatch.setattr(C, "_index_cache_version", lambda d=digest: d)
+            tags.append(C._tmp_index_dir("ivfpq", "sf"))
+        assert tags[0] != tags[1]
 
 
 class TestHNSWRangeSearch:
@@ -1122,10 +1198,11 @@ class TestFlatRangeSearch:
             want = self._brute(emb, "l2", radius)
             assert got == want
             # the prefilter ring must be well under the corpus size
-            q = [float(x) for x in Q64]
-            cand = idx._sq_bounds(
-                idx._rows().select("id", "codes"), q
-            ).where(F.col("__lb") < radius)
+            from pgvecto_rs_spark.indexes import base
+
+            q = base.prep_query(Q64, False)
+            lower, _ = base.sq_bounds(idx.meta, q)
+            cand = base.code_scores(idx, idx._rows(), "sq8", q).where(lower < radius)
             n_cand = cand.count()
             assert len(want) <= n_cand < emb.count() * 0.6, n_cand
 
