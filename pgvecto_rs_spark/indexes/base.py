@@ -53,6 +53,22 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
+def stored_schema(path: str):
+    """The Spark schema of one Parquet file: the one Spark writes into
+    the footer, else converted from the Arrow schema.  A driver-side
+    footer read: left to infer it, a Spark read runs a job."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    arrow = pq.read_schema(path)
+    stored = (arrow.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if stored is not None:
+        return StructType.fromJson(json.loads(stored))
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(arrow)
+
+
 def training_sample(
     df: DataFrame,
     col: str,
@@ -207,64 +223,80 @@ def normalized_col(col, do_normalize: bool):
 
 
 def code_scores(index, df: DataFrame, quant: str, q: np.ndarray,
-                cents: dict | None = None) -> DataFrame:
+                cents: dict | None = None, keep=None) -> DataFrame:
     """(id, adist): every row's approximate kernel distance to ``q``
     from its codes alone, in one ``mapInArrow`` pass that reads only
     (id[, list_id], codes|rq).  Each Arrow batch scores with the batch
     runners' kernel (``segment_worker._approx_dists``), so a row's
     adist is the one ``search_batch`` computes for the same query.
     ``cents`` maps the probed IVF list ids to their centroids (codes
-    are residuals); flat passes None.  The quantizer constants ride in
-    the closure: nothing is broadcast per query."""
+    are residuals); flat passes None.  The closure carries the SQ
+    constants or the path of the saved PQ/RaBitQ constants, which
+    executors load once through a cache: nothing is broadcast per
+    query.
+
+    With ``keep`` (SQ codes only) each partition instead emits
+    (id, lb, ub) — the ``sq_error`` bounds on the exact distance — for
+    the rows ``keep(ids, lb, ub)`` selects among all of its rows."""
     from pgvecto_rs_spark.indexes import batch as BT
 
     params = BT.quant_params(index, quant)
     kernel = index.meta["kernel"]
     col = SW._unit_col(quant, "vec")
     qs = np.asarray(q, dtype=np.float64)[None, :]
+    err = sq_error(index.meta, qs[0]) if keep is not None else None
+
+    def adists(b):
+        import pyarrow as pa
+
+        tbl = pa.Table.from_batches([b])
+        unit = SW._read_unit(tbl, col)
+        if cents is None:
+            ad = SW._approx_dists(quant, params, kernel, unit, qs)[:, 0]
+        else:
+            lids = tbl.column("list_id").to_numpy()
+            ad = np.empty(len(lids))
+            for lid in np.unique(lids).tolist():
+                m = lids == lid
+                part = tuple(u[m] for u in unit) if isinstance(unit, tuple) else unit[m]
+                ad[m] = SW._approx_dists(quant, params, kernel, part, qs, cents[lid])[:, 0]
+        return tbl.column("id").to_numpy().astype(np.int64), ad
 
     def score(batches):
         import pyarrow as pa
 
-        for b in batches:
-            if not b.num_rows:
-                continue
-            tbl = pa.Table.from_batches([b])
-            unit = SW._read_unit(tbl, col)
-            if cents is None:
-                ad = SW._approx_dists(quant, params, kernel, unit, qs)[:, 0]
-            else:
-                lids = tbl.column("list_id").to_numpy()
-                ad = np.empty(len(lids))
-                for lid in np.unique(lids).tolist():
-                    m = lids == lid
-                    part = tuple(u[m] for u in unit) if isinstance(unit, tuple) else unit[m]
-                    ad[m] = SW._approx_dists(quant, params, kernel, part, qs, cents[lid])[:, 0]
-            yield pa.RecordBatch.from_arrays(
-                [tbl.column("id").combine_chunks().cast(pa.int64()), pa.array(ad)],
-                names=["id", "adist"],
-            )
+        parts = (adists(b) for b in batches if b.num_rows)
+        if keep is None:
+            for ids, ad in parts:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(ids), pa.array(ad)], names=["id", "adist"]
+                )
+            return
+        got = list(parts)
+        if not got:
+            return
+        ids = np.concatenate([g[0] for g in got])
+        lb, ub = SW.sq_bounds(kernel, err, np.concatenate([g[1] for g in got]))
+        m = keep(ids, lb, ub)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(ids[m]), pa.array(lb[m]), pa.array(ub[m])], names=["id", "lb", "ub"]
+        )
 
     cols = ["id"] + (["list_id"] if cents is not None else []) + [col]
-    return df.select(*cols).mapInArrow(score, "id bigint, adist double")
+    schema = "id bigint, adist double" if keep is None else "id bigint, lb double, ub double"
+    return df.select(*cols).mapInArrow(score, schema)
 
 
-def sq_bounds(meta: dict, q: np.ndarray):
-    """Sound (lower, upper) bound Columns on the exact kernel distance
-    of an SQ-coded row from its decoded-code distance, the ``adist``
-    column of ``code_scores`` (reranker/error.rs): decode error per dim
-    is at most eps_j = width_j / (2·levels).  l2 (adist is squared L2):
-    |√d − √adist| ≤ ||eps||₂; dot: |Δ| ≤ Σ |q_j|·eps_j."""
-    adist = F.col("adist")
+def sq_error(meta: dict, q: np.ndarray) -> float:
+    """The SQ decode-error term of ``segment_worker.sq_bounds``
+    (reranker/error.rs): decode error per dim is at most
+    eps_j = width_j / (2·levels), so ||eps||₂ for l2 and Σ |q_j|·eps_j
+    for dot."""
     levels = (1 << meta.get("sq_bits", 8)) - 1
     eps = np.asarray(meta["sq_width"], dtype=np.float64) / (2.0 * levels)
     if meta["kernel"] == "l2":
-        e = F.lit(float(np.sqrt((eps**2).sum())))
-        rt = F.sqrt(F.greatest(adist, F.lit(0.0)))
-        lb = F.greatest(rt - e, F.lit(0.0))
-        return lb * lb, (rt + e) * (rt + e)
-    e = F.lit(float(np.abs(q) @ eps))
-    return adist - e, adist + e
+        return float(np.sqrt((eps**2).sum()))
+    return float(np.abs(q) @ eps)
 
 
 def two_phase(index, df: DataFrame, quant: str, q: np.ndarray, k: int = 10,
@@ -280,44 +312,63 @@ def two_phase(index, df: DataFrame, quant: str, q: np.ndarray, k: int = 10,
     - ``window`` > 0: the best ``window`` by (adist, id), per distinct
       id (with replicas > 1 an id is scored once per probed list, and
       duplicates would waste window slots);
-    - otherwise the SQ error bound (``sq_bounds``): for top-k, every
-      row whose lower bound beats the k-th smallest per-id upper bound
-      (one threshold job; provably holds the exact top-k); for a range,
+    - otherwise the SQ error bound (``segment_worker.sq_bounds``): for
+      top-k, every row whose lower bound beats the k-th smallest per-id
+      upper bound t (provably holds the exact top-k); for a range,
       every row whose lower bound is inside the radius.
 
-    Candidate ids collect to the driver and come back as a pushed
-    ``id IN`` filter (row-group skipping on the id-sorted layout), a
-    broadcast id join above ``_ISIN_LITERAL_CAP`` ids, and a plain join
-    against the candidates above ``RERANK_FETCH_CAP`` — a large-radius
-    ring can be corpus-scale, too big to force a broadcast."""
+    The top-k bound cut scores once: each partition emits its rows with
+    lower bound ≤ its own k-th smallest per-id upper bound (all rows
+    when it holds fewer than k ids).  A partition's threshold is at
+    least t and every top-k id's best row is emitted.  The driver
+    collects the emitted rows' first ``RERANK_FETCH_CAP`` + 1 by lower
+    bound, as Arrow.  Every row with lower bound ≤ t, so every top-k
+    row, is in that head whenever t from the head is below its last
+    lower bound; otherwise the head's t (≥ the global t) cuts the
+    emitted rows as a Spark plan.
+
+    Candidate ids reach the driver and come back as a pushed ``id IN``
+    filter (row-group skipping on the id-sorted layout), a broadcast id
+    join above ``_ISIN_LITERAL_CAP`` ids, and a plain join against the
+    candidates above ``RERANK_FETCH_CAP`` — a large-radius ring can be
+    corpus-scale, too big to force a broadcast."""
     meta = index.meta
     dedup = meta.get("replicas", 1) > 1
-    scored = code_scores(index, df, quant, q, cents)
+    cand = None
     if window:
+        scored = code_scores(index, df, quant, q, cents)
         if dedup:
             scored = scored.groupBy("id").agg(F.min("adist").alias("adist"))
         cand = scored.orderBy(F.col("adist").asc(), F.col("id").asc()).limit(int(window))
     elif radius is not None:
         kradius = float(radius) - 1.0 if meta["metric"] == "cos" else float(radius)
-        lower, _ = sq_bounds(meta, q)
-        # relative margin: FP error in the bound scales with its own
-        # magnitude (dot/cos bounds can dwarf |kradius|)
-        margin = F.lit(1e-9) * F.greatest(F.lit(max(1.0, abs(kradius))), F.abs(lower))
-        cand = scored.where(lower < F.lit(kradius) + margin)
+
+        def in_ring(ids, lb, ub):
+            # relative margin: FP error in the bound scales with its own
+            # magnitude (dot/cos bounds can dwarf |kradius|)
+            return lb < kradius + 1e-9 * np.maximum(max(1.0, abs(kradius)), np.abs(lb))
+
+        cand = code_scores(index, df, quant, q, cents, keep=in_ring)
     else:
-        lower, upper = sq_bounds(meta, q)
-        tsrc = scored.select("id", upper.alias("ub"))
-        if dedup:
-            tsrc = tsrc.groupBy("id").agg(F.min("ub").alias("ub"))
-        trow = (
-            tsrc.orderBy(F.col("ub").asc(), F.col("id").asc())
-            .limit(int(k))
-            .agg(F.max("ub").alias("t"))
-            .collect()
-        )
-        t = trow[0]["t"] if trow else None
-        cand = scored.where(F.lit(False) if t is None else lower <= float(t))
-    ids = [r["id"] for r in cand.select("id").limit(RERANK_FETCH_CAP + 1).collect()]
+        kk = int(k)
+
+        def under_kth(ids, lb, ub):
+            return lb <= SW.kth_upper(ids, ub, kk)
+
+        emitted = code_scores(index, df, quant, q, cents, keep=under_kth)
+        # the driver takes the first RERANK_FETCH_CAP + 1 emitted rows
+        # by lower bound, as Arrow
+        head = emitted.orderBy("lb", "id").limit(RERANK_FETCH_CAP + 1).toArrow()
+        hid, lb, ub = (head.column(c).to_numpy() for c in ("id", "lb", "ub"))
+        t = SW.kth_upper(hid, ub, kk)
+        if len(hid) <= RERANK_FETCH_CAP or t < lb[-1]:
+            # the head holds every row with lb <= t, top-k ones included
+            ids = np.unique(hid[lb <= t]).tolist()
+        else:
+            # t from the head bounds the global one from above
+            cand = emitted.where(F.col("lb") <= float(t))
+    if cand is not None:
+        ids = [r["id"] for r in cand.select("id").limit(RERANK_FETCH_CAP + 1).collect()]
     if len(ids) <= _ISIN_LITERAL_CAP:
         fetched = df.where(F.col("id").isin(ids))
     elif len(ids) <= RERANK_FETCH_CAP:

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pgvecto_rs_spark.indexes import base
+from pgvecto_rs_spark.indexes import batch as BT
+from pgvecto_rs_spark.indexes import segment_worker as SW
 
 SQ_BITS = 8  # default (crates/base/src/index.rs:447-462)
 _SQ_KINDS = {"sq1": 1, "sq2": 2, "sq4": 4, "sq8": 8}
@@ -48,11 +50,16 @@ class FlatIndex:
     #: SQ error-bound two-phase) -- the planner may answer a bare sphere
     #: predicate with it.
     RANGE_EXACT = True
+    #: the files whose summed size ``batch.route`` weighs
+    STORAGE_DIR = "rows"
 
     def __init__(self, spark: SparkSession, path: str, meta: dict):
         self.spark = spark
         self.path = path
         self.meta = meta
+        self._storage_bytes: int | None = None
+        #: calls served in the driver vs by Spark (``batch.route``)
+        self.serve_stats: dict[str, int] = {}
 
     @classmethod
     def create(
@@ -200,6 +207,22 @@ class FlatIndex:
             self._rows_df = self.spark.read.parquet(os.path.join(self.path, "rows"))
         return self._rows_df
 
+    def _files(self) -> list[str]:
+        return sorted(glob.glob(os.path.join(self.path, "rows", "*.parquet")))
+
+    def _serve(self, query, k: int | None = None, radius: float | None = None) -> DataFrame:
+        """Exact top-k or sphere in the driver: ``flat_file_block_runner``
+        over every rows file as a batch of one (``batch.serve``)."""
+        files = self._files()
+        vec_col = "vec16" if self.meta.get("storage") == "f16" else "vec"
+        run = SW.flat_file_block_runner(
+            self.meta["kernel"], BT.EVERY_ROW if k is None else int(k), vec_col,
+            below=None if radius is None else BT.kernel_below(self, radius),
+        )
+        ids, dist = BT.serve(self, query, files, run, k, radius=radius)
+        id_type = base.stored_schema(files[0])["id"].dataType.simpleString() if files else "bigint"
+        return BT.frame(self, ids, dist, id_type)
+
     def search(
         self,
         query: Sequence[float],
@@ -214,7 +237,15 @@ class FlatIndex:
         sq_rerank_size semantics, src/gucs/executing.rs:4-14).  pq and
         rabitq estimators carry no sound error bound and always use the
         window.  ``exclude`` is an id-set DataFrame removed via broadcast
-        anti-join (tombstones) before ranking."""
+        anti-join (tombstones) before ranking.
+
+        Unquantized, unfiltered search on an index under
+        ``batch.DRIVER_SERVE_BYTES`` runs in the driver and returns an
+        eager, driver-held result; every other call returns a lazy
+        Spark plan."""
+        quant = self.meta.get("quantization")
+        if BT.route(self, filter is None and exclude is None and quant is None):
+            return self._serve(query, k=k)
         q = base.prep_query(query, self.meta["normalize"])
         if not rerank_size:
             # alter(default_rerank_size) persists the reference's
@@ -222,7 +253,6 @@ class FlatIndex:
             rerank_size = int(self.meta.get("default_rerank_size", 0))
         df = base.apply_residual(self._rows(), filter, exclude)
 
-        quant = self.meta.get("quantization")
         if quant is not None:
             from pgvecto_rs_spark.indexes.quantization import scaled_rerank_window
 
@@ -254,18 +284,24 @@ class FlatIndex:
 
         Raw f32 and f16 storage: one scan + filter.  SQ codes run the
         two-phase sphere: the first pass reads ONLY the code column and
-        keeps rows whose sound LOWER bound (``base.sq_bounds``) is inside
-        the radius — the true distance is ≥ that bound, so every
+        keeps rows whose sound LOWER bound (``segment_worker.sq_bounds``)
+        is inside the radius — the true distance is ≥ that bound, so every
         in-range row survives the prefilter by construction — then
         exact vectors are fetched for just that candidate set and
         refiltered.  At width·levels⁻¹ code error the candidate ring is
         a thin shell around the sphere: the exact-vector I/O is
         proportional to the answer, not the corpus.  PQ/RaBitQ
         estimators carry no sound bound, so those cells fall back to
-        the exact vector scan (same answer, no I/O skip)."""
+        the exact vector scan (same answer, no I/O skip).
+
+        The exact scans of an unfiltered call on an index under
+        ``batch.DRIVER_SERVE_BYTES`` run in the driver and return an
+        eager, driver-held result."""
+        quant = self.meta.get("quantization")
+        if BT.route(self, filter is None and exclude is None and quant not in _SQ_KINDS):
+            return self._serve(query, radius=radius)
         q = base.prep_query(query, self.meta["normalize"])
         df = base.apply_residual(self._rows(), filter, exclude)
-        quant = self.meta.get("quantization")
         if quant in _SQ_KINDS:
             return base.two_phase(self, df, quant, q, radius=radius)
         metric = self.meta["metric"]
@@ -295,10 +331,8 @@ class FlatIndex:
         threshold job per query and is not batched), and one pushed-id
         read of the file reranks the windows exactly; the merge cuts the
         global window, then k.  Returns (query_id, id, distance), k
-        rows per query."""
-        from pgvecto_rs_spark.indexes import batch as BT
-        from pgvecto_rs_spark.indexes import segment_worker as SW
-
+        rows per query; eager and driver-held when ``batch.route``
+        serves it in the driver."""
         qrows = BT.collect_queries_or_none(queries, query_id_col, query_vec_col)
         meta = self.meta
         quant = meta.get("quantization")
@@ -311,13 +345,12 @@ class FlatIndex:
                 pq_ratio=int(meta.get("pq_ratio", 4)),
             )
             params = BT.quant_params(self, quant)
-        files = sorted(glob.glob(os.path.join(self.path, "rows", "*.parquet")))
         vec_col = "vec16" if meta.get("storage") == "f16" else "vec"
         run = SW.flat_file_block_runner(
             meta["kernel"], int(k), vec_col, quant, params, win
         )
         return BT.search_blocks(
-            self, queries, query_id_col, query_vec_col, qrows, files, run, k, win
+            self, queries, query_id_col, query_vec_col, qrows, self._files(), run, k, win
         )
 
     def stat(self) -> dict:

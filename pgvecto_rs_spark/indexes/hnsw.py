@@ -49,9 +49,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pgvecto_rs_spark.indexes import base
+from pgvecto_rs_spark.indexes import batch as BT
 from pgvecto_rs_spark.indexes import segment_worker as SW
 
 DEFAULT_M = 12  # crates/base/src/index.rs:406-409
+
+#: index scans a sphere costs in the driver budget (``batch.route``): a
+#: wide radius widens every segment's search to the whole segment, one
+#: segment after another in the driver.  With half the rows in range
+#: (60k x 64, 3 segments, 4 vCPU) the driver took 129 vs 364 ms through
+#: Spark at 1.4 MiB, 461 vs 499 ms at 5.8 MiB and 1,577 vs 909 ms at
+#: 17.9 MiB, so spheres are served up to about 6 MiB
+_RANGE_SCANS = 10
 DEFAULT_EF_CONSTRUCTION = 300  # :410-413
 DEFAULT_EF_SEARCH = 100  # :561-563
 #: Default ef_search multiplier for coded-graph traversal (applies when
@@ -578,11 +587,16 @@ class HNSWIndex:
     #: rows (documented caveat), so the planner only dispatches a bare
     #: sphere predicate here on an explicit approx=True opt-in.
     RANGE_EXACT = False
+    #: the files whose summed size ``batch.route`` weighs
+    STORAGE_DIR = "graph"
 
     def __init__(self, spark: SparkSession, path: str, meta: dict):
         self.spark = spark
         self.path = path
         self.meta = meta
+        self._storage_bytes: int | None = None
+        #: calls served in the driver vs by Spark (``batch.route``)
+        self.serve_stats: dict[str, int] = {}
 
     @classmethod
     def create(
@@ -870,6 +884,7 @@ class HNSWIndex:
                 shutil.rmtree(os.path.join(graph_dir, f"seg={s}"), ignore_errors=True)
 
         total = self.spark.read.parquet(graph_dir).count()
+        self._storage_bytes = None
         self.meta["n_rows"] = int(total)
         base.write_meta(self.path, self.meta)
         return segs
@@ -913,10 +928,19 @@ class HNSWIndex:
         back to an exact scan of the resident segment vectors (guaranteed k
         survivors when they exist).  ``exact=True`` skips the graph and
         brute-scans the resident vectors — the full-rerank mode used for
-        oracle checks of the storage/merge path."""
+        oracle checks of the storage/merge path.
+
+        Unfiltered graph search on an index under
+        ``batch.DRIVER_SERVE_BYTES`` runs ``hnsw_segment_block_runner``
+        in the driver as a batch of one and returns an eager,
+        driver-held result; every other call returns a Spark plan."""
         q = base.prep_query(query, self.meta["normalize"])
         ef = max(self._resolve_ef(ef_search), k)
         residual = filter is not None or exclude is not None
+        if BT.route(self, not residual and not exact):
+            quant, qparams = self._quant()
+            run = SW.hnsw_segment_block_runner(quant, qparams, self.meta["kernel"], ef)
+            return BT.frame(self, *BT.serve(self, query, self._segment_dirs(), run, k))
         if exact:
             out = self._candidates(q, ef=max(ef, k), exact=True, keep_all=residual)
             out = base.apply_residual(out, filter, exclude)
@@ -967,7 +991,12 @@ class HNSWIndex:
         reachability-complete, not provably complete: a vector the
         greedy stream never surfaces is missed (recall-gated in tests;
         exact at ef = segment size, which the widening reaches for any
-        radius whose sphere contains ≥ ef candidates)."""
+        radius whose sphere contains ≥ ef candidates).
+
+        An unfiltered call on an index under a tenth of
+        ``batch.DRIVER_SERVE_BYTES`` (``_RANGE_SCANS``) runs the same
+        per-segment scan in the driver and returns an eager,
+        driver-held result."""
         kernel, metric = self.meta["kernel"], self.meta["metric"]
         kradius = float(radius) - 1.0 if metric == "cos" else float(radius)
         quant, qparams = self._quant()
@@ -977,6 +1006,9 @@ class HNSWIndex:
         run = SW.range_runner(
             quant, qparams, kernel, q, kradius, self._resolve_ef(ef_search)
         )
+        if BT.route(self, filter is None and exclude is None, scans=_RANGE_SCANS):
+            _, ids, dist = BT.merge(self, [(0, i, d) for i, d in run(iter(seg_dirs))])
+            return BT.frame(self, ids, dist)
 
         rdd = sc.parallelize(seg_dirs, len(seg_dirs)).mapPartitions(run)
         out = self.spark.createDataFrame(rdd, schema="id bigint, distance double")
@@ -996,9 +1028,8 @@ class HNSWIndex:
         resident), then a per-query window merges the segments' local
         top-ef (indexes/batch.py — the same block path at every query
         count).  Returns (query_id, id, distance) with k rows per
-        query."""
-        from pgvecto_rs_spark.indexes import batch as BT
-
+        query; eager and driver-held when ``batch.route`` serves it in
+        the driver."""
         rows = BT.collect_queries_or_none(queries, query_id_col, query_vec_col)
         quant, qparams = self._quant()
         run = SW.hnsw_segment_block_runner(

@@ -27,6 +27,7 @@ build, queries normalized at search, kernel is Dot, SQL distance is
 
 from __future__ import annotations
 
+import glob
 import os
 from typing import Sequence
 
@@ -36,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pgvecto_rs_spark.indexes import base
+from pgvecto_rs_spark.indexes import batch as BT
+from pgvecto_rs_spark.indexes import segment_worker as SW
 
 DEFAULT_NLIST = 1000  # crates/base/src/index.rs:368-370
 DEFAULT_NPROBE = 10  # crates/base/src/index.rs:558-560
@@ -151,22 +154,19 @@ def _compute_list_radii(
     return radii
 
 
-def _read_lists(spark: SparkSession, lists_dir: str) -> DataFrame:
-    """The ``list_id``-partitioned lists table, read with the Spark
-    schema stored in one list file's footer (a driver-side read): left
-    to infer it, Spark runs a job per read."""
-    import glob
-    import json
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import StructType
-
+def _lists_schema(lists_dir: str):
+    """The lists' Spark schema, ``list_id`` last, read from one list
+    file's footer (``base.stored_schema``); None without list files."""
     first = next(glob.iglob(os.path.join(lists_dir, "list_id=*", "*.parquet")), None)
-    stored = (pq.read_schema(first).metadata or {}) if first else {}
-    spark_schema = stored.get(b"org.apache.spark.sql.parquet.row.metadata")
-    if spark_schema is None:
+    return None if first is None else base.stored_schema(first).add("list_id", "integer")
+
+
+def _read_lists(spark: SparkSession, lists_dir: str) -> DataFrame:
+    """The ``list_id``-partitioned lists table, read with
+    ``_lists_schema``: left to infer it, Spark runs a job per read."""
+    schema = _lists_schema(lists_dir)
+    if schema is None:
         return spark.read.parquet(lists_dir)
-    schema = StructType.fromJson(json.loads(spark_schema)).add("list_id", "integer")
     return spark.read.schema(schema).parquet(lists_dir)
 
 
@@ -188,6 +188,8 @@ class IVFIndex:
     #: triangle-inequality list pruning is lossless -- range_search is
     #: exact, safe for the planner's bare-sphere dispatch.
     RANGE_EXACT = True
+    #: the files whose summed size ``batch.route`` weighs
+    STORAGE_DIR = "lists"
 
     def __init__(self, spark: SparkSession, path: str, meta: dict, centroids: np.ndarray):
         self.spark = spark
@@ -196,6 +198,9 @@ class IVFIndex:
         self.centroids = centroids
         self._lists_df: DataFrame | None = None
         self._radii: np.ndarray | None = None
+        self._storage_bytes: int | None = None
+        #: calls served in the driver vs by Spark (``batch.route``)
+        self.serve_stats: dict[str, int] = {}
         #: filtered-search widening stop reasons per handle
         #: ({"rounds", "full", "certified", "exhausted"}) —
         #: makes the certificate's fire rate measurable (r11 advice)
@@ -642,6 +647,7 @@ class IVFIndex:
             np.save(radii_path, radii, allow_pickle=False)
             self._radii = None
         self._lists_df = None  # invalidate the cached file index
+        self._storage_bytes = None
         self.meta["n_rows"] = (
             int(self.meta["n_rows"]) - int(summary["leaving"]) + int(summary["arriving"])
         )
@@ -692,6 +698,11 @@ class IVFIndex:
         pruned scan provably returns exactly the full-scan result.
         Scan fraction approaches nprobe-like selectivity for small
         radii and degrades gracefully to a full scan for huge ones.
+
+        An unfiltered call on an index under ``batch.DRIVER_SERVE_BYTES``
+        scans the surviving lists in the driver (``ivf_block_runner``
+        over the worker list cache) and returns an eager, driver-held
+        result.
         """
         kernel = self.meta["kernel"]
         if self.meta["nlist"] == 0:  # empty index (issue_427 build path)
@@ -717,8 +728,20 @@ class IVFIndex:
         )
         lists = np.nonzero(lb < kradius + margin)[0].tolist()
         schema = "id long, distance double"
+        driver = BT.route(self, filter is None and exclude is None)
         if not lists:
             return base.local_frame(self.spark, [], schema)
+        if driver:
+            # probing every list restricts the runner to the chunk: the
+            # surviving lists
+            run = SW.ivf_block_runner(
+                self.centroids.astype(np.float64), kernel, n, BT.EVERY_ROW,
+                os.path.join(self.path, "lists"), self._vec_col(),
+                below=BT.kernel_below(self, radius),
+            )
+            ids, dist = BT.serve(self, query, [lists], run, radius=radius)
+            id_type = _lists_schema(os.path.join(self.path, "lists"))["id"].dataType
+            return BT.frame(self, ids, dist, id_type.simpleString())
         if len(lists) > 0.5 * n:
             # a radius spanning most of the space can't prune usefully;
             # skip the per-partition enumeration (a 1000-term isin only
@@ -823,11 +846,21 @@ class IVFIndex:
         VBASE's unbounded ordered stream.  With residual quantization,
         the first pass scores decoded ``centroid + residual̂`` codes and
         a rerank window gets exact distances (two-phase).
+
+        Unquantized (f32 or f16), unfiltered search on an index under
+        ``batch.DRIVER_SERVE_BYTES`` runs in the driver and returns an
+        eager, driver-held result with the same columns; every other
+        call returns a Spark plan.
         """
         if nprobe is None:
             nprobe = int(self.meta.get("default_nprobe")
                          or default_nprobe(self.meta["nlist"]))
-        if (filter is not None or exclude is not None) and max_widen > 0:
+        if self.meta["nlist"] == 0:  # empty index (issue_427 build path)
+            return base.local_frame(self.spark, [], "id long, distance double")
+        residual = filter is not None or exclude is not None
+        if BT.route(self, not residual and self._quant() is None):
+            return self._serve(query, k, nprobe)
+        if residual and max_widen > 0:
             # Escalation ladder (cost-bounded, r11 advice): per round,
             # stop on the first of
             #   full      — probed every list: exact by construction;
@@ -841,10 +874,7 @@ class IVFIndex:
             np_eff = nprobe
             stats = self.widen_stats
             for _ in range(max_widen + 1):
-                out = self.search(
-                    query, k=k, nprobe=np_eff, filter=filter,
-                    rerank_size=rerank_size, max_widen=0, exclude=exclude,
-                )
+                out = self._scan(query, k, np_eff, filter, rerank_size, exclude)
                 rows = out.limit(k).collect()
                 stats["rounds"] = stats.get("rounds", 0) + 1
                 enough = len(rows) >= min(k, self.meta["n_rows"])
@@ -857,18 +887,69 @@ class IVFIndex:
                 np_eff = min(self.meta["nlist"], np_eff * 4)
             stats["exhausted"] = stats.get("exhausted", 0) + 1
             return base.local_frame(self.spark, rows, out.schema)
+        return self._scan(query, k, nprobe, filter, rerank_size, exclude)
 
-        if self.meta["nlist"] == 0:  # empty index (issue_427 build path)
-            return base.local_frame(self.spark, [], "id long, distance double")
+    def _quant(self) -> str | None:
+        return self.meta.get("quantization") or (
+            "sq8" if self.meta.get("residual_quantization") else None
+        )
+
+    def _vec_col(self) -> str:
+        return "vec16" if self.meta.get("storage") == "f16" else "vec"
+
+    def _chunks(self) -> list[list[int]]:
+        """Round-robin list-id chunks, one per core: the batch units."""
+        nlist = self.meta["nlist"]
+        n_chunks = min(nlist, self.spark.sparkContext.defaultParallelism)
+        return [list(range(c, nlist, n_chunks)) for c in range(n_chunks)]
+
+    def _serve(self, query, k: int, nprobe: int) -> DataFrame:
+        """Unquantized top-k in the driver: ``ivf_block_runner`` over the
+        batch chunks as a batch of one (``batch.serve``), then the
+        winners' stored columns — those the Spark plan returns — read
+        from the probed lists (a replicated row from its smallest list
+        id)."""
+        import pyarrow.dataset as pads
+        from pyspark.sql.types import StructType
+
+        lists_dir = os.path.join(self.path, "lists")
+        run = SW.ivf_block_runner(
+            self.centroids.astype(np.float64), self.meta["kernel"], int(nprobe),
+            int(k), lists_dir, self._vec_col(),
+        )
+        ids, dist = BT.serve(self, query, self._chunks(), run, k)
+        schema = StructType(
+            [f for f in _lists_schema(lists_dir).fields if f.name not in ("vec", "codes", "rq")]
+        ).add("distance", "double")
+        rec: dict[int, dict] = {}
+        if len(ids):
+            q = base.prep_query(query, self.meta["normalize"])
+            files = [
+                f for lid in self.probe_lists(q, nprobe)
+                for f in glob.glob(os.path.join(lists_dir, f"list_id={lid}", "*.parquet"))
+            ]
+            held = pads.dataset(
+                files, format="parquet", partitioning="hive", partition_base_dir=lists_dir
+            ).to_table(columns=schema.names[:-1], filter=pads.field("id").isin(ids.tolist()))
+            for r in held.sort_by("list_id").to_pylist():
+                rec.setdefault(int(r["id"]), r)
+        rows = [
+            tuple({**rec[i], "distance": d}[c] for c in schema.names)
+            for i, d in zip(ids.tolist(), dist.tolist())
+        ]
+        return base.local_frame(self.spark, rows, schema)
+
+    def _scan(self, query, k: int, nprobe: int, filter, rerank_size: int,
+              exclude: DataFrame | None) -> DataFrame:
+        """One Spark probe scan at ``nprobe``: the pruned lists,
+        residual filters, then the exact or two-phase top-k."""
         q = base.prep_query(query, self.meta["normalize"])
         lists = self.probe_lists(q, nprobe)
         df = self._lists().where(F.col("list_id").isin(lists))
         df = base.apply_residual(df, filter, exclude)
         from pgvecto_rs_spark.indexes.flat import _SQ_KINDS
 
-        quant = self.meta.get("quantization") or (
-            "sq8" if self.meta.get("residual_quantization") else None
-        )
+        quant = self._quant()
         if quant is not None:
             # sq with no explicit window takes the error-bound cut
             # (reranker/error.rs, the flat SQ default): exact within the
@@ -936,9 +1017,8 @@ class IVFIndex:
 
         Returns (query_id, id, distance), k rows per query; unquantized
         results are bit-identical to per-query search at the same
-        nprobe (same np_kernel_distance arithmetic)."""
-        from pgvecto_rs_spark.indexes import batch as BT
-        from pgvecto_rs_spark.indexes import segment_worker as SW
+        nprobe (same np_kernel_distance arithmetic); eager and
+        driver-held when ``batch.route`` serves it in the driver."""
         from pgvecto_rs_spark.indexes.flat import _SQ_KINDS
 
         meta = self.meta
@@ -951,9 +1031,7 @@ class IVFIndex:
             )
 
         qrows = BT.collect_queries_or_none(queries, query_id_col, query_vec_col)
-        quant = meta.get("quantization") or (
-            "sq8" if meta.get("residual_quantization") else None
-        )
+        quant = self._quant()
         params = win = None
         if quant is not None:
             # scale-aware default window keyed by the EFFECTIVE code
@@ -961,21 +1039,19 @@ class IVFIndex:
             qkey = f"sq{meta.get('sq_bits', 8)}" if quant in _SQ_KINDS else quant
             win = self._fixed_rerank_window(qkey, k, nprobe, rerank_size)
             params = BT.quant_params(self, quant)
-        n_chunks = min(nlist, self.spark.sparkContext.defaultParallelism)
-        chunks = [list(range(c, nlist, n_chunks)) for c in range(n_chunks)]
         run = SW.ivf_block_runner(
             self.centroids.astype(np.float64),
             meta["kernel"],
             int(nprobe),
             int(k),
             os.path.join(self.path, "lists"),
-            vec_col="vec16" if meta.get("storage") == "f16" else "vec",
+            vec_col=self._vec_col(),
             quant=quant,
             params=params,
             win=win,
         )
         return BT.search_blocks(
-            self, queries, query_id_col, query_vec_col, qrows, chunks, run, k, win
+            self, queries, query_id_col, query_vec_col, qrows, self._chunks(), run, k, win
         )
 
     def stat(self) -> dict:

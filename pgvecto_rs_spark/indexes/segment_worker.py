@@ -24,12 +24,73 @@ from __future__ import annotations
 import glob
 import heapq
 import os
+import threading
 from collections import OrderedDict
 
 import numpy as np
 
-_SEG_CACHE: "OrderedDict[str, tuple]" = OrderedDict()
-_SEG_CACHE_MAX = 64
+
+class _FileLRU:
+    """Process-wide LRU of decoded storage, keyed by path and valid
+    while the stored key (file fingerprint plus decode options) matches:
+    a rewritten unit reloads.  Bounded by entries and by decoded bytes
+    (``_nbytes``); the newest entry stays even when it alone is over
+    ``maxbytes``.  Executors and the driver (in-process serving,
+    ``indexes/batch.py``) share this code, and the driver serves from
+    several threads while ``streaming/optimizer.py`` compacts from
+    another, so one lock guards each cache.  Loads run outside the
+    lock; two threads missing the same unit both load it and the later
+    insert wins."""
+
+    def __init__(self, maxsize: int, maxbytes: int):
+        self.maxsize = maxsize
+        self.maxbytes = maxbytes
+        self.nbytes = 0
+        self._data: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get(self, path: str, key, load):
+        with self._lock:
+            hit = self._data.get(path)
+            if hit is not None and hit[0] == key:
+                self._data.move_to_end(path)
+                return hit[1]
+        val = load()
+        size = _nbytes(val)
+        with self._lock:
+            old = self._data.pop(path, None)
+            if old is not None:
+                self.nbytes -= old[2]
+            self._data[path] = (key, val, size)
+            self.nbytes += size
+            while len(self._data) > 1 and (
+                len(self._data) > self.maxsize or self.nbytes > self.maxbytes
+            ):
+                self.nbytes -= self._data.popitem(last=False)[1][2]
+        return val
+
+
+def _nbytes(v) -> int:
+    """Resident bytes of a cached value, estimated from its numpy
+    arrays (found through tuples, lists and the coded-vector and
+    neighbour-list wrappers) plus 8 per list or tuple slot."""
+    if isinstance(v, np.ndarray):
+        return v.nbytes
+    if isinstance(v, (tuple, list)):
+        return 8 * len(v) + sum(_nbytes(x) for x in v)
+    attrs = getattr(v, "__slots__", None)
+    if attrs is not None:
+        return sum(_nbytes(getattr(v, a)) for a in attrs)
+    return sum(_nbytes(x) for x in getattr(v, "__dict__", {}).values())
+
+
+#: decoded bytes each cache may hold per process: four times the
+#: driver serving budget (``batch.DRIVER_SERVE_BYTES``), so the driver
+#: keeps one served index's f64-decoded units warm and its resident
+#: total stays bounded however many indexes it serves
+_CACHE_BYTES = 256 << 20
+
+_SEG_CACHE = _FileLRU(64, _CACHE_BYTES)
 
 # quant kinds whose graph distances are approximate and need the exact
 # rerank fetch; "f16" stores on the binary16 grid but its decoded
@@ -38,12 +99,15 @@ _RERANK_QUANTS = ("sq8", "pq", "rabitq")
 
 
 def np_kernel_distance(kernel: str, mat: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """Batch kernel distance (l2 = squared L2; dot = negative dot)."""
+    """Batch kernel distance (l2 = squared L2; dot = negative dot).
+    Both are per-row einsums: a BLAS gemv's result for a row depends on
+    its position in the matrix, so a file, a list and an Arrow batch
+    holding the same row would score it differently."""
     if kernel == "l2":
         d = mat - q[None, :]
         return np.einsum("ij,ij->i", d, d)
     if kernel == "dot":
-        return -(mat @ q)
+        return -np.einsum("ij,j->i", mat, q)
     raise ValueError(kernel)
 
 
@@ -195,15 +259,14 @@ def _load_segment(seg_dir: str, quant: str | None = None, qparams: tuple = ()):
     ``qparams`` = (pq_ratio, pq_bits, seed) for pq / (dims, seed) for
     rabitq."""
     fp = _segment_fingerprint(seg_dir)
-    key = (fp, quant, qparams)
-    hit = _SEG_CACHE.get(seg_dir)
-    if hit is not None and hit[0] == key:
-        _SEG_CACHE.move_to_end(seg_dir)
-        return hit[1]
     if not fp:  # hash-assigned segment with no rows: no directory written
-        empty = (np.empty(0, np.int64), np.empty((0, 0)), [], [], 0)
-        _SEG_CACHE[seg_dir] = (key, empty)
-        return empty
+        return (np.empty(0, np.int64), np.empty((0, 0)), [], [], 0)
+    return _SEG_CACHE.get(
+        seg_dir, (fp, quant, qparams), lambda: _read_segment(seg_dir, quant, qparams)
+    )
+
+
+def _read_segment(seg_dir: str, quant, qparams: tuple):
     import pyarrow.parquet as pq
 
     cols = ["idx", "id", "level", "neighbors", "entry"]
@@ -255,12 +318,7 @@ def _load_segment(seg_dir: str, quant: str | None = None, qparams: tuple = ()):
     levels = col["level"].to_pylist()
     entry = int(col["entry"][0].as_py()) if len(levels) else 0
     ids = col["id"].to_numpy().astype(np.int64)
-    data = (ids, vecs, neighbors, levels, entry)
-    _SEG_CACHE[seg_dir] = (key, data)
-    _SEG_CACHE.move_to_end(seg_dir)
-    while len(_SEG_CACHE) > _SEG_CACHE_MAX:
-        _SEG_CACHE.popitem(last=False)
-    return data
+    return (ids, vecs, neighbors, levels, entry)
 
 
 class _NeighborLists:
@@ -517,15 +575,18 @@ def assemble_block(rows, normalize: bool):
     return (qids, np.vstack(vecs))
 
 
-def _block_topk_emit(qids, d, ids, k):
-    """Per-query local top-k rows from a (rows x queries) distance
-    matrix."""
+def _block_topk_emit(qids, d, ids, k, below=None):
+    """Per-query local top-k rows by (distance, id) from a (rows x
+    queries) distance matrix: ties at the k-th distance keep the
+    smallest ids, as the global merge does.  With ``below``, only the
+    rows whose distance is under it (a range scan)."""
     top = min(k, len(ids))
     if top == 0:
         return
-    part = np.argpartition(d, top - 1, axis=0)[:top]
     for qi in range(len(qids)):
-        sel = part[:, qi]
+        sel = _window(d[:, qi], ids, top)
+        if below is not None:
+            sel = sel[d[sel, qi] < below]
         for i, dv in zip(ids[sel].tolist(), d[sel, qi].tolist()):
             yield (qids[qi], int(i), float(dv))
 
@@ -647,7 +708,11 @@ def _approx_dists(quant: str, params, kernel: str, codes, qs: np.ndarray,
     IVF-PQ scores with the batched LUT, every other cell decodes and
     scores like the exact gemm.  The one quantized scorer: the block
     runners call it per (block, unit), per-query search per Arrow
-    batch (``base.code_scores``)."""
+    batch (``base.code_scores``).  ``params`` is the SQ (lo, width,
+    levels) tuple or the path of the saved PQ codebooks / RaBitQ
+    projection (``_load_params``)."""
+    if isinstance(params, str):
+        params = _load_params(params)
     if quant == "pq" and cent is not None:
         return _ivf_pq_adist(params, kernel, codes, cent, qs)
     approx = _decode_codes(quant, params, codes, cent)
@@ -655,6 +720,29 @@ def _approx_dists(quant: str, params, kernel: str, codes, qs: np.ndarray,
     for j, q in enumerate(qs):
         ad[:, j] = np_kernel_distance(kernel, approx, q)
     return ad
+
+
+def sq_bounds(kernel: str, err: float, adist: np.ndarray):
+    """Sound (lower, upper) bounds on the exact kernel distance of
+    SQ-coded rows from their decoded-code distances ``adist``
+    (reranker/error.rs); ``err`` is ``base.sq_error``.  l2 (adist is
+    squared L2): |√d − √adist| ≤ err; dot: |Δ| ≤ err."""
+    if kernel == "l2":
+        rt = np.sqrt(np.maximum(adist, 0.0))
+        lb = np.maximum(rt - err, 0.0)
+        return lb * lb, (rt + err) * (rt + err)
+    return adist - err, adist + err
+
+
+def kth_upper(ids: np.ndarray, ub: np.ndarray, k: int) -> float:
+    """The k-th smallest per-id minimum of ``ub`` (an id scored in
+    several IVF lists counts once), +inf when fewer than k ids."""
+    o = np.lexsort((ub, ids))
+    first = np.r_[True, ids[o][1:] != ids[o][:-1]] if len(o) else np.zeros(0, bool)
+    best = ub[o][first]
+    if len(best) < k:
+        return float("inf")
+    return float(np.partition(best, k - 1)[k - 1])
 
 
 def _window(d: np.ndarray, ids: np.ndarray, top: int) -> np.ndarray:
@@ -686,10 +774,13 @@ def _rerank_emit(kernel: str, source, windows: list):
 
 
 def flat_file_block_runner(kernel: str, k: int, vec_col: str = "vec",
-                           quant=None, params=None, win: int = 0):
+                           quant=None, params=None, win: int = 0,
+                           below: float | None = None):
     """Runner over (block, parquet_file) pairs: one gemm per pair.  A
     quantized index reads the file's codes instead, keeps each query's
-    top ``win`` by approximate distance and reranks them exactly."""
+    top ``win`` by approximate distance and reranks them exactly.
+    ``below`` (unquantized) emits only rows under that kernel
+    distance."""
     import pyarrow.parquet as pq
 
     col = _unit_col(quant, vec_col)
@@ -708,7 +799,7 @@ def flat_file_block_runner(kernel: str, k: int, vec_col: str = "vec",
                 d = np.empty((len(unit), len(qmat)))
                 for qi in range(len(qmat)):
                     d[:, qi] = np_kernel_distance(kernel, unit, qmat[qi])
-                yield from _block_topk_emit(qids, d, ids, k)
+                yield from _block_topk_emit(qids, d, ids, k, below)
                 continue
             ad = _approx_dists(quant, params, kernel, unit, qmat)
             top = min(win, len(ids))
@@ -763,8 +854,7 @@ def hnsw_segment_block_runner(quant, qparams, kernel: str, ef: int):
     return run
 
 
-_LIST_CACHE: "OrderedDict[str, tuple]" = OrderedDict()
-_LIST_CACHE_MAX = 64
+_LIST_CACHE = _FileLRU(64, _CACHE_BYTES)
 
 
 def _load_list(ldir: str, col: str):
@@ -772,27 +862,33 @@ def _load_list(ldir: str, col: str):
     worker-resident LRU keyed on the file fingerprint — consecutive
     query blocks probe overlapping lists, and re-decoding a list per
     block would dominate the distributed batch scan."""
-    fp = _segment_fingerprint(ldir)
-    key = (fp, col)
-    hit = _LIST_CACHE.get(ldir)
-    if hit is not None and hit[0] == key:
-        _LIST_CACHE.move_to_end(ldir)
-        return hit[1]
-    import pyarrow.parquet as pq
 
-    tbl = pq.read_table(ldir, columns=["id", col])
-    ids = tbl.column("id").to_numpy()
-    data = (ids, _read_unit(tbl, col) if len(ids) else None)
-    _LIST_CACHE[ldir] = (key, data)
-    _LIST_CACHE.move_to_end(ldir)
-    while len(_LIST_CACHE) > _LIST_CACHE_MAX:
-        _LIST_CACHE.popitem(last=False)
-    return data
+    def load():
+        import pyarrow.parquet as pq
+
+        tbl = pq.read_table(ldir, columns=["id", col])
+        ids = tbl.column("id").to_numpy()
+        return (ids, _read_unit(tbl, col) if len(ids) else None)
+
+    return _LIST_CACHE.get(ldir, (_segment_fingerprint(ldir), col), load)
+
+
+_PARAMS_CACHE = _FileLRU(16, _CACHE_BYTES)
+
+
+def _load_params(path: str) -> np.ndarray:
+    """A quantizer's saved constants (PQ codebooks, RaBitQ projection)
+    by file path, through a fingerprint-keyed LRU: query closures carry
+    the path, not megabytes of constants."""
+    st = os.stat(path)
+    return _PARAMS_CACHE.get(
+        path, (st.st_mtime, st.st_size), lambda: np.load(path, allow_pickle=False)
+    )
 
 
 def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
                      lists_dir: str, vec_col: str = "vec", quant=None,
-                     params=None, win: int = 0):
+                     params=None, win: int = 0, below: float | None = None):
     """Runner over (block, list-id chunk) pairs: each task probes its
     block's nearest lists and scans, with pyarrow, ONLY the probed lists
     inside its chunk (the static partition-pruning of the DataFrame
@@ -800,7 +896,8 @@ def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
     bounded by build).  A quantized index scores the lists' residual
     codes, keeps each query's top ``win`` over the chunk (best adist per
     id: a replicated row sits in several lists) and reranks them with
-    one exact fetch over the chunk's probed lists."""
+    one exact fetch over the chunk's probed lists.  ``below``
+    (unquantized) emits only rows under that kernel distance."""
     import os as _os
 
     col = _unit_col(quant, vec_col)
@@ -839,7 +936,7 @@ def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
                     d = np.empty((len(unit), len(qis)))
                     for j, qi in enumerate(qis):
                         d[:, j] = np_kernel_distance(kernel, unit, qmat[qi])
-                    yield from _block_topk_emit([qids[qi] for qi in qis], d, ids, k)
+                    yield from _block_topk_emit([qids[qi] for qi in qis], d, ids, k, below)
                     continue
                 ad = _approx_dists(quant, params, kernel, unit, qmat[qis],
                                    centroids[lid])

@@ -86,7 +86,9 @@ def arrow_distance(query: Sequence[float], metric: str = "l2") -> Column:
         if m == "l2":
             d = mat - q[None, :]
             return pd.Series(np.einsum("ij,ij->i", d, d))
-        dots = mat @ q
+        # per-row einsum, as segment_worker.np_kernel_distance: the
+        # score of a row does not depend on the batch it arrives in
+        dots = np.einsum("ij,j->i", mat, q)
         if m == "dot":
             return pd.Series(-dots)
         norms = np.sqrt(np.einsum("ij,ij->i", mat, mat) * float(q @ q))

@@ -406,10 +406,14 @@ class TestSearchBatch:
                             sorted(by_q[qr["qid"]], key=lambda t: (t[1], t[0])) == expect
                         ), (quant, rs, qr["qid"])
 
-    def test_quantized_batch_jobs_within_unquantized(self, spark, emb):
-        """Quantized flat and IVF batches run the same block path as the
-        unquantized ones, so they launch no more Spark jobs on the same
-        query set."""
+    def test_quantized_batch_jobs_within_unquantized(self, spark, emb, monkeypatch):
+        """Quantized flat and IVF batches run the same Spark block path
+        as the unquantized ones, so they launch no more Spark jobs on
+        the same query set (a zero driver budget keeps the batches on
+        Spark)."""
+        from pgvecto_rs_spark.indexes import batch as BT
+
+        monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", 0)
         qdf = emb.orderBy("vec_id").limit(16).select(
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
         ).cache()
@@ -1201,8 +1205,9 @@ class TestFlatRangeSearch:
             from pgvecto_rs_spark.indexes import base
 
             q = base.prep_query(Q64, False)
-            lower, _ = base.sq_bounds(idx.meta, q)
-            cand = base.code_scores(idx, idx._rows(), "sq8", q).where(lower < radius)
+            cand = base.code_scores(
+                idx, idx._rows(), "sq8", q, keep=lambda ids, lb, ub: lb < radius
+            )
             n_cand = cand.count()
             assert len(want) <= n_cand < emb.count() * 0.6, n_cand
 
@@ -1599,3 +1604,267 @@ class TestReindexSlt:
             for r in top_k(emb, "embedding", Q64, 10, metric="l2").collect()
         }
         assert after == exact
+
+
+class TestDriverServing:
+    """In-process serving (indexes/batch.py): under
+    ``DRIVER_SERVE_BYTES`` per-query ``search`` and ``range_search`` and
+    collected ``search_batch`` run the block runners in the driver and
+    launch no Spark job (a batch launches only its query collect); at a
+    budget of 0 the same calls run their Spark plans.  Both sides must
+    return the same ids, distances, columns and column order."""
+
+    CELLS = {
+        "flat": (FlatIndex, {}),
+        "flat_f16": (FlatIndex, {"storage": "f16"}),
+        "ivf": (IVFIndex, {"nlist": 8}),
+        "ivf_f16": (IVFIndex, {"nlist": 8, "storage": "f16"}),
+        "hnsw": ("hnsw", {"segment_rows": 200}),
+        "hnsw_sq8": ("hnsw", {"segment_rows": 200, "quantization": "sq8"}),
+        "hnsw_pq": ("hnsw", {"segment_rows": 200, "quantization": "pq"}),
+    }
+    RADIUS = {"l2": 60.0, "dot": -0.3, "cos": 0.72}
+
+    @pytest.fixture(scope="class")
+    def qdf(self, spark, emb):
+        q = emb.orderBy("vec_id").limit(12).select(
+            F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+        ).cache()
+        q.count()
+        yield q
+        q.unpersist()
+
+    @staticmethod
+    def _create(spark, emb, path, cls, metric, **kw):
+        if cls == "hnsw":
+            from pgvecto_rs_spark.indexes import HNSWIndex
+
+            cls = HNSWIndex
+        return cls.create(spark, emb, path, metric=metric, **kw)
+
+    @staticmethod
+    def _both(spark, monkeypatch, call):
+        """(driver rows, Spark rows, driver-side job count) of ``call``;
+        asserts both sides return the same columns in the same order."""
+        from pgvecto_rs_spark.indexes import batch as BT
+
+        with count_jobs(spark) as jobs:
+            got = call()
+            rows = [tuple(r) for r in got.collect()]
+        with monkeypatch.context() as m:
+            m.setattr(BT, "DRIVER_SERVE_BYTES", 0)
+            ref = call()
+            ref_rows = [tuple(r) for r in ref.collect()]
+        assert got.columns == ref.columns
+        return rows, ref_rows, jobs.n
+
+    @pytest.mark.parametrize("metric", ["l2", "dot", "cos"])
+    @pytest.mark.parametrize("cell", list(CELLS))
+    def test_matches_spark_path(self, spark, emb, qdf, monkeypatch, tmp_path, cell, metric):
+        cls, kw = self.CELLS[cell]
+        idx = self._create(spark, emb, str(tmp_path / cell), cls, metric, **kw)
+        rows, ref, jobs = self._both(spark, monkeypatch, lambda: idx.search(Q64, k=10))
+        assert rows == ref and len(rows) == 10 and jobs == 0
+        rows, ref, jobs = self._both(
+            spark, monkeypatch, lambda: idx.range_search(Q64, self.RADIUS[metric])
+        )
+        assert sorted(rows) == sorted(ref) and rows and jobs == 0
+        rows, ref, jobs = self._both(
+            spark, monkeypatch, lambda: idx.search_batch(qdf, "qid", "qv", k=5)
+        )
+        assert sorted(rows) == sorted(ref) and len(rows) == 60 and jobs <= 1
+        assert idx.serve_stats == {"driver": 3, "spark": 3}
+
+    def test_ivf_replicas_payload_empty_and_k_over_rows(self, spark, emb, qdf, monkeypatch, tmp_path):
+        idx = IVFIndex.create(
+            spark, emb.withColumn("tag", F.col("vec_id") % 7), str(tmp_path / "rep"),
+            metric="l2", nlist=8, replicas=2, payload_cols=["tag"],
+        )
+        rows, ref, jobs = self._both(spark, monkeypatch, lambda: idx.search(Q64, k=10))
+        # a replicated row comes back from any list holding it: compare
+        # everything but list_id
+        drop = lambda rs: [r[:2] + r[3:] for r in rs]  # noqa: E731
+        assert drop(rows) == drop(ref) and jobs == 0
+        rows, ref, _ = self._both(spark, monkeypatch, lambda: idx.range_search(Q64, 60.0))
+        assert sorted(rows) == sorted(ref)
+        rows, ref, _ = self._both(
+            spark, monkeypatch, lambda: idx.search_batch(qdf, "qid", "qv", k=5)
+        )
+        assert sorted(rows) == sorted(ref)
+
+        n = emb.count()
+        flat = FlatIndex.create(spark, emb, str(tmp_path / "flat"), metric="l2")
+        rows, ref, _ = self._both(spark, monkeypatch, lambda: flat.search(Q64, k=n + 5))
+        assert rows == ref and len(rows) == n
+        rows, ref, _ = self._both(
+            spark, monkeypatch, lambda: idx.search(Q64, k=n + 5, nprobe=8)
+        )
+        assert drop(rows) == drop(ref) and len(rows) == n
+
+        empty = IVFIndex.create(
+            spark, emb.withColumn("embedding", F.lit(None).cast("array<float>")),
+            str(tmp_path / "empty"), metric="l2",
+        )
+        assert empty.meta["nlist"] == 0
+        for call in (
+            lambda: empty.search(Q64, k=10),
+            lambda: empty.range_search(Q64, 60.0),
+            lambda: empty.search_batch(qdf, "qid", "qv", k=5),
+        ):
+            rows, ref, _ = self._both(spark, monkeypatch, call)
+            assert rows == ref == []
+
+    def test_ties_keep_smallest_ids(self, spark, monkeypatch, tmp_path):
+        """Rows tied at the k-th distance: every unit keeps its smallest
+        ids, so the driver, the Spark block path and the per-query plan
+        all return the global (distance, id) order."""
+        rows = spark.range(400).select(
+            F.col("id").alias("vec_id"),
+            F.array((F.col("id") % 4).cast("float"), F.lit(0.0).cast("float")).alias("embedding"),
+        )
+        qdf = spark.createDataFrame([(0, [0.0, 0.0])], "qid long, qv array<float>")
+        want = [(i, 0.0) for i in range(0, 40, 4)]
+        for cls, kw in ((FlatIndex, {}), (IVFIndex, {"nlist": 2})):
+            idx = cls.create(spark, rows, str(tmp_path / cls.__name__), metric="l2", **kw)
+            for call in (
+                lambda: idx.search([0.0, 0.0], k=10),
+                lambda: idx.search_batch(qdf, "qid", "qv", k=10).select("id", "distance"),
+            ):
+                got, ref, _ = self._both(spark, monkeypatch, call)
+                assert sorted((r[0], r[-1]) for r in got) == want
+                assert sorted((r[0], r[-1]) for r in ref) == want
+
+    def test_serve_stats_count_each_side(self, spark, emb, monkeypatch, tmp_path):
+        from pgvecto_rs_spark.indexes import batch as BT
+
+        idx = IVFIndex.create(
+            spark, emb.withColumn("tag", F.col("vec_id") % 3), str(tmp_path / "i"),
+            metric="l2", nlist=8, payload_cols=["tag"],
+        )
+        idx.search(Q64, k=5).collect()
+        assert idx.serve_stats == {"driver": 1}
+        # a filter stays on Spark: one decision for the whole ladder
+        idx.search(Q64, k=5, filter=F.col("tag") == 1).collect()
+        assert idx.serve_stats == {"driver": 1, "spark": 1}
+        monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", 0)
+        with count_jobs(spark) as jobs:
+            idx.search(Q64, k=5).collect()
+        assert idx.serve_stats == {"driver": 1, "spark": 2} and jobs.n >= 1
+        monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", BT.storage_bytes(idx))
+        idx.range_search(Q64, 60.0).collect()
+        assert idx.serve_stats == {"driver": 2, "spark": 2}
+
+    def test_large_collected_batch_stays_on_spark(self, spark, emb, qdf, monkeypatch, tmp_path):
+        """The budget weighs a batch's queries, not only the index bytes:
+        a 4,096-query collected batch against an index far under
+        ``DRIVER_SERVE_BYTES`` runs on Spark, and a budget between the
+        one-query and the 12-query cost serves the single query in the
+        driver and the batch on Spark."""
+        from pgvecto_rs_spark.indexes import batch as BT
+
+        idx = FlatIndex.create(spark, emb, str(tmp_path / "f"), metric="l2")
+        assert 100 * BT.storage_bytes(idx) < BT.DRIVER_SERVE_BYTES
+        assert BT.serve_cost(idx, 1) == BT.storage_bytes(idx) < BT.serve_cost(idx, 12)
+        # a block's distance matrix counts even where the files are small
+        assert BT.serve_cost(idx, 4096) >= idx.meta["n_rows"] * 4096 * 8
+        m = -(-4096 // idx.meta["n_rows"])
+        big = (
+            emb.crossJoin(spark.range(m))
+            .select((F.col("vec_id") * m + F.col("id")).alias("qid"), F.col("embedding").alias("qv"))
+            .limit(4096)
+        )
+        got = idx.search_batch(big, "qid", "qv", k=3)
+        assert idx.serve_stats == {"spark": 1}
+        assert got.count() == 4096 * 3
+        monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", BT.serve_cost(idx, 12) - 1)
+        idx.search(Q64, k=5).collect()
+        idx.search_batch(qdf, "qid", "qv", k=5).collect()
+        assert idx.serve_stats == {"spark": 2, "driver": 1}
+
+    def test_caches_bounded_by_decoded_bytes(self):
+        """The worker caches evict by decoded bytes as well as entries;
+        the newest entry stays even when it alone is over the bound."""
+        import numpy as np
+
+        from pgvecto_rs_spark.indexes import segment_worker as SW
+
+        lru = SW._FileLRU(64, 3 * 8000)
+        for i in range(5):
+            lru.get(f"p{i}", i, lambda: np.zeros(1000))
+        assert list(lru._data) == ["p2", "p3", "p4"] and lru.nbytes == 24000
+        lru.get("p3", 33, lambda: np.zeros(500))  # a stale key reloads
+        assert list(lru._data) == ["p2", "p4", "p3"] and lru.nbytes == 20000
+        lru.get("big", 0, lambda: np.zeros(10_000))
+        assert list(lru._data) == ["big"] and lru.nbytes == 80_000
+        nl = SW._NeighborLists(np.zeros(4, np.int32), np.zeros(3, np.int64), np.zeros(2, np.int64))
+        assert SW._nbytes((np.zeros(2), nl, [1, 2])) == 24 + 16 + 56 + 16
+
+    def test_storage_bytes_follow_apply_updates(self, spark, emb, tmp_path):
+        from pgvecto_rs_spark.indexes import batch as BT
+
+        idx = IVFIndex.create(
+            spark, emb.where(F.col("vec_id") < 300), str(tmp_path / "i"), metric="l2", nlist=4
+        )
+        before = BT.storage_bytes(idx)
+        assert before > 0
+        idx.apply_updates(insert_rows=emb.where(F.col("vec_id") >= 300).select(
+            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+        ))
+        assert BT.storage_bytes(idx) > before
+        got = {r["id"] for r in idx.search(Q64, k=10, nprobe=4).collect()}
+        assert got == set(exact_ids(emb, "l2"))
+
+    def test_sq_error_bound_search_scores_once(self, spark, emb, tmp_path):
+        """The SQ error-bound top-k emits each partition's bound rows in
+        one scoring job and cuts on the driver: 2 jobs with the fetch,
+        and still the exact top-k."""
+        truth = exact_ids(emb, "l2")
+        flat = FlatIndex.create(spark, emb, str(tmp_path / "f"), metric="l2", quantization="sq8")
+        ivf = IVFIndex.create(
+            spark, emb, str(tmp_path / "i"), metric="l2", nlist=8, residual_quantization=True
+        )
+        for idx, kw in ((flat, {}), (ivf, {"nprobe": 8})):
+            idx.search(Q64, k=10, **kw).collect()  # warm the file listing
+            with count_jobs(spark) as jobs:
+                got = [r["id"] for r in idx.search(Q64, k=10, **kw).collect()]
+            assert got == truth
+            assert jobs.n <= 2, jobs.n
+
+    def test_threads_share_driver_caches_during_compaction(self, spark, emb, monkeypatch, tmp_path):
+        """Four threads serve FreshVectorIndex searches in the driver
+        while the main thread compacts, and on after the new generation
+        is published: every answer equals the single-threaded one, with
+        a list cache small enough to evict under the load."""
+        import threading
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pgvecto_rs_spark.indexes import segment_worker as SW
+        from pgvecto_rs_spark.streaming.freshness import FreshVectorIndex
+
+        monkeypatch.setattr(SW._LIST_CACHE, "maxsize", 3)
+        idx = FreshVectorIndex.create(spark, emb, str(tmp_path / "fresh"), sealed_kind="ivf", nlist=8)
+        qs = [list(r["embedding"]) for r in emb.orderBy("vec_id").limit(8).collect()]
+
+        def answer(i):
+            return i, [tuple(r) for r in idx.search(qs[i], k=5, nprobe=3).collect()]
+
+        oracle = dict(answer(i) for i in range(len(qs)))
+        assert idx.sealed.serve_stats == {"driver": len(qs)}
+        done = threading.Event()
+
+        def serve(t):
+            got, extra = [], 3
+            while extra:
+                got.append(answer((t + len(got)) % len(qs)))
+                extra -= done.is_set()
+            return got
+
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            futures = [pool.submit(serve, t) for t in range(4)]
+            gen = idx._gen
+            idx.compact()
+            done.set()
+            got = [a for f in futures for a in f.result()]
+        assert idx._gen == gen + 1
+        assert idx.sealed.serve_stats.get("driver", 0) >= 8
+        assert all(rows == oracle[i] for i, rows in got)

@@ -1008,7 +1008,7 @@ class TestPlanner:
                 "embeddings", emb, "embedding", Q64, 3, "l2", extra_queries=[other]
             )
 
-    def test_decision_goldens(self, spark, sf_dir, tmp_path):
+    def test_decision_goldens(self, spark, sf_dir, tmp_path, monkeypatch):
         """pushdown_plan.slt:24-134 decision-table goldens over
         last_decision + the physical plan: sphere on a different column
         becomes a recheck; the IVF index path's scan is partition-pruned
@@ -1042,6 +1042,10 @@ class TestPlanner:
         }
 
         # EXPLAIN golden: the probed scan is partition-pruned on list_id
+        # (a zero driver budget keeps the search on its Spark plan)
+        from pgvecto_rs_spark.indexes import batch as BT
+
+        monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", 0)
         plan = idx.search(Q64, k=3, nprobe=2)._jdf.queryExecution().executedPlan().toString()
         assert "list_id" in plan and ("PartitionFilters" in plan or "partition_filters" in plan)
 

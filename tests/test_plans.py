@@ -23,12 +23,15 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_ivf_probe_is_partition_pruned(spark, sf_dir):
+def test_ivf_probe_is_partition_pruned(spark, sf_dir, monkeypatch):
     """An nprobe=3 search must scan ONLY the probed list partitions:
     the parquet scan carries a PartitionFilters entry on list_id, so at
-    100 TB the I/O is nprobe/nlist of the corpus, not a full scan."""
+    100 TB the I/O is nprobe/nlist of the corpus, not a full scan.  A
+    zero driver budget keeps the search on its Spark plan."""
     from pgvecto_rs_spark.indexes import IVFIndex
+    from pgvecto_rs_spark.indexes import batch as BT
 
+    monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", 0)
     with tempfile.TemporaryDirectory() as d:
         idx = IVFIndex.create(spark, Q._emb(spark, sf_dir), d, metric="l2", nlist=8)
         plan = _plan(idx.search(Q64, k=5, nprobe=3))
