@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import json
-import math
 import os
 from typing import Sequence
 
@@ -173,6 +172,45 @@ def f16_words(col: str):
         )
 
     return to_f16(F.col(col))
+
+
+def prepare_rows(df: DataFrame, id_col, vector_col: str, normalize: bool,
+                 storage: str = "f32", where=None, keep: Sequence[str] = ()) -> DataFrame:
+    """(id, vec, *keep): the rows an index stores, before routing and
+    encoding.  NULL vectors are skipped (am.rs:199-211), ``where``
+    keeps a partial index's rows, cos vectors are normalized, values are
+    cast to f32, and f16 storage snaps them to the binary16 grid, so
+    training, routing, graphs and radii see the values the stored words
+    decode to.  ``id_col`` is a column name or a Column.  ``create``,
+    ``apply_updates`` and compaction prepare rows only here."""
+    src = df.where(F.col(vector_col).isNotNull())
+    if where is not None:
+        src = src.where(where)
+    vec = normalized_col(vector_col, normalize).cast("array<float>")
+    if storage == "f16":
+        from pgvecto_rs_spark.functions.dense import to_f16_grid
+
+        vec = to_f16_grid(vec)
+    ids = F.col(id_col) if isinstance(id_col, str) else id_col
+    return src.select(ids.alias("id"), vec.alias("vec"), *[F.col(c) for c in keep])
+
+
+def stored_vectors(df: DataFrame, storage: str) -> DataFrame:
+    """Stored index rows with their vectors in ``vec`` as array<float>:
+    f16 storage decodes the binary16 ``vec16`` words (every grid value
+    is exact in f32)."""
+    if storage != "f16":
+        return df
+
+    @F.pandas_udf("array<float>")
+    def f16_floats(vb: pd.Series) -> pd.Series:
+        return vb.map(
+            lambda b: None
+            if b is None
+            else np.frombuffer(b, dtype=np.float16).astype(np.float32).tolist()
+        )
+
+    return df.withColumn("vec", f16_floats("vec16")).drop("vec16")
 
 
 def normalize_rows(mat: np.ndarray) -> np.ndarray:

@@ -78,12 +78,21 @@ class FlatIndex:
         storage: str = "f32",  # "f32" | "f16" (vecf16: 2 bytes/dim)
     ) -> "FlatIndex":
         kernel, do_norm = base.resolve_metric(metric)
+        if storage == "f16" and quantization is not None:
+            raise ValueError("f16 storage does not compose with quantization")
+        if storage not in ("f32", "f16"):
+            raise ValueError(f"unknown storage {storage!r} (f32 | f16)")
         os.makedirs(path, exist_ok=True)
-        src = df.where(F.col(vector_col).isNotNull())
-        if where is not None:
-            src = src.where(where)  # partial index: only matching rows are indexed
-        vec = base.normalized_col(vector_col, do_norm).cast("array<float>")
-        prepared = src.select(F.col(id_col).alias("id"), vec.alias("vec"))
+        prepared = base.prepare_rows(df, id_col, vector_col, do_norm, storage, where)
+        meta: dict = {
+            "kind": "flat",
+            "metric": metric.lower(),
+            "kernel": kernel,
+            "normalize": do_norm,
+            "quantization": quantization,
+            "storage": storage,
+        }
+        rows_dir = os.path.join(path, "rows")
 
         if storage == "f16":
             # vecf16 storage model (crates/base/src/scalar/f16.rs): values
@@ -92,108 +101,52 @@ class FlatIndex:
             # (Parquet has no 16-bit physical type); compute decodes to
             # f32/f64 per Arrow batch, exactly like the reference computes
             # f16 via f32.
+            meta["dims"] = len(prepared.select("vec").first()["vec"])
+            prepared.select("id", base.f16_words("vec").alias("vec16")).write.mode(
+                "overwrite"
+            ).parquet(rows_dir)
+        else:
             if quantization is not None:
-                raise ValueError("f16 storage does not compose with quantization")
-            dims = len(prepared.select("vec").first()["vec"])
-            prepared = prepared.select("id", base.f16_words("vec").alias("vec16"))
-            prepared.write.mode("overwrite").parquet(os.path.join(path, "rows"))
-            n = spark.read.parquet(os.path.join(path, "rows")).count()
-            meta = {
-                "kind": "flat",
-                "metric": metric.lower(),
-                "kernel": kernel,
-                "normalize": do_norm,
-                "quantization": None,
-                "storage": "f16",
-                "dims": dims,
-                "n_rows": int(n),
-            }
-            base.write_meta(path, meta)
-            return cls(spark, path, meta)
-        if storage != "f32":
-            raise ValueError(f"unknown storage {storage!r} (f32 | f16)")
+                from pgvecto_rs_spark.indexes import quantization as Qz
 
-        meta: dict = {
-            "kind": "flat",
-            "metric": metric.lower(),
-            "kernel": kernel,
-            "normalize": do_norm,
-            "quantization": quantization,
-            "storage": "f32",
-        }
-
-        if quantization in ("pq", "rabitq"):
-            from pgvecto_rs_spark.indexes import quantization as Qz
-
-            dims = len(prepared.select("vec").first()["vec"])
-            meta["dims"] = dims
-            # uniform sample trimmed in hashed-id order: limit() takes the
-            # first partitions only, which trains codebooks on a biased,
-            # layout-dependent slice
-            n_total = prepared.count()
-            fraction = min(1.0, Qz.TRAIN_CAP / max(n_total, 1))
-            x = base.training_sample(
-                prepared, "vec", fraction, seed, Qz.TRAIN_CAP, by_id=True
+                dims = len(prepared.select("vec").first()["vec"])
+                if quantization in _SQ_KINDS:
+                    lo, width = Qz.sq_train(prepared, "vec")
+                    meta["sq_lo"] = lo.tolist()
+                    meta["sq_width"] = width.tolist()
+                    meta["sq_bits"] = _SQ_KINDS[quantization]
+                    meta["dims"] = dims
+                elif quantization in ("pq", "rabitq"):
+                    meta["dims"] = dims
+                    # uniform sample trimmed in hashed-id order: limit()
+                    # takes the first partitions only, which trains
+                    # codebooks on a biased, layout-dependent slice
+                    n_total = prepared.count()
+                    fraction = min(1.0, Qz.TRAIN_CAP / max(n_total, 1))
+                    x = base.training_sample(
+                        prepared, "vec", fraction, seed, Qz.TRAIN_CAP, by_id=True
+                    )
+                    if quantization == "pq":
+                        n_sub = dims // pq_ratio
+                        books = Qz.pq_train(x, n_sub, bits=pq_bits, seed=seed)
+                        np.save(os.path.join(path, "pq_codebooks.npy"), books, allow_pickle=False)
+                        meta["pq_subspaces"] = n_sub
+                        meta["pq_ratio"] = int(pq_ratio)
+                    else:
+                        proj = Qz.rabitq_projection(dims, seed)
+                        np.save(os.path.join(path, "rabitq_proj.npy"), proj, allow_pickle=False)
+                prepared = Qz.encode(prepared, "vec", quantization, meta, path, spark)
+            # range-partitioned + sorted by id: Parquet min/max stats then
+            # skip row groups for the rerank's `id IN (...)` fetch — the
+            # two-phase scan reads the codes column in pass 1 and only the
+            # touched row groups' vectors in pass 2
+            (
+                prepared.repartitionByRange(max(2, spark.sparkContext.defaultParallelism), "id")
+                .sortWithinPartitions("id")
+                .write.mode("overwrite")
+                .parquet(rows_dir)
             )
-            if quantization == "pq":
-                n_sub = dims // pq_ratio
-                books = Qz.pq_train(x, n_sub, bits=pq_bits, seed=seed)
-                np.save(os.path.join(path, "pq_codebooks.npy"), books, allow_pickle=False)
-                prepared = prepared.withColumn("codes", Qz.pq_encode_udf(books, spark)("vec"))
-                meta["pq_subspaces"] = n_sub
-                meta["pq_ratio"] = int(pq_ratio)
-            else:
-                proj = Qz.rabitq_projection(dims, seed)
-                np.save(os.path.join(path, "rabitq_proj.npy"), proj, allow_pickle=False)
-                enc = Qz.rabitq_encode_udf(proj, spark)("vec")
-                prepared = prepared.withColumn("rq", enc)
-
-        if quantization in _SQ_KINDS:
-            # per-dim min/max over the dataset (scalar.rs:32-60 trains
-            # the same bounds); one aggregation pass.
-            bits = _SQ_KINDS[quantization]
-            dims = len(prepared.select("vec").first()["vec"])
-            exploded = prepared.select(F.posexplode("vec").alias("pos", "x"))
-            mm = (
-                exploded.groupBy("pos")
-                .agg(F.min("x").alias("lo"), F.max("x").alias("hi"))
-                .orderBy("pos")
-                .collect()
-            )
-            lo = np.array([r["lo"] for r in mm], dtype=np.float64)
-            hi = np.array([r["hi"] for r in mm], dtype=np.float64)
-            width = np.where(hi > lo, hi - lo, 1.0)
-            lo_c = F.array(*[F.lit(float(v)) for v in lo])
-            w_c = F.array(*[F.lit(float(v)) for v in width])
-            levels = (1 << bits) - 1
-            codes = F.zip_with(
-                F.col("vec").cast("array<double>"),
-                F.zip_with(lo_c, w_c, lambda a, b: F.struct(a.alias("lo"), b.alias("w"))),
-                lambda x, p: F.least(
-                    F.lit(levels),
-                    F.greatest(
-                        F.lit(0), F.round((x - p["lo"]) / p["w"] * levels, 0).cast("int")
-                    ),
-                ).cast("smallint"),
-            )
-            prepared = prepared.withColumn("codes", codes)
-            meta["sq_lo"] = lo.tolist()
-            meta["sq_width"] = width.tolist()
-            meta["sq_bits"] = bits
-            meta["dims"] = dims
-
-        # range-partitioned + sorted by id: Parquet min/max stats then
-        # skip row groups for the rerank's `id IN (...)` fetch — the
-        # two-phase scan reads the codes column in pass 1 and only the
-        # touched row groups' vectors in pass 2
-        (
-            prepared.repartitionByRange(max(2, spark.sparkContext.defaultParallelism), "id")
-            .sortWithinPartitions("id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "rows"))
-        )
-        n = spark.read.parquet(os.path.join(path, "rows")).count()
-        meta["n_rows"] = int(n)
+        meta["n_rows"] = int(spark.read.parquet(rows_dir).count())
         base.write_meta(path, meta)
         return cls(spark, path, meta)
 

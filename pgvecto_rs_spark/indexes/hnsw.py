@@ -37,10 +37,8 @@ SIMD dispatch).
 
 from __future__ import annotations
 
-import glob
 import heapq
 import os
-from collections import OrderedDict
 from typing import Sequence
 
 import numpy as np
@@ -144,51 +142,26 @@ def _quant_columns(
         out["qlo"] = [lo.astype(np.float32).tolist()] * n
         out["qwidth"] = [width.astype(np.float32).tolist()] * n
     elif quant == "pq":
-        from pgvecto_rs_spark.indexes.quantization import TRAIN_CAP, pq_train
+        from pgvecto_rs_spark.indexes.quantization import TRAIN_CAP, pq_encode, pq_train
 
         dims = vecs.shape[1] if n else 0
         n_sub = max(1, dims // max(1, pq_ratio))
         if n:
             books = pq_train(vecs[:TRAIN_CAP], n_sub, bits=pq_bits, seed=seed)
-            sub = dims // n_sub
-            codes = np.empty((n, n_sub), dtype=np.int16)
-            for s in range(n_sub):
-                block = vecs[:, s * sub : (s + 1) * sub]
-                d = (
-                    np.einsum("ij,ij->i", block, block)[:, None]
-                    - 2.0 * block @ books[s].T
-                    + np.einsum("ij,ij->i", books[s], books[s])[None, :]
-                )
-                codes[:, s] = np.argmin(d, axis=1)
             flat = books.astype(np.float32).ravel().tolist()
-            out["codes"] = [row.tolist() for row in codes]
+            out["codes"] = [row.tolist() for row in pq_encode(vecs, books)]
             # codebook rides on the first row only (nulls compress away)
             out["codebook"] = [flat] + [None] * (n - 1)
         else:
             out["codes"] = []
             out["codebook"] = []
     elif quant == "rabitq":
-        from pgvecto_rs_spark.indexes.quantization import rabitq_projection
+        from pgvecto_rs_spark.indexes.quantization import rabitq_encode, rabitq_projection
 
-        dims = vecs.shape[1] if n else 0
         if n:
-            proj = rabitq_projection(dims, seed)
-            norms = np.linalg.norm(vecs, axis=1)
-            safe = np.where(norms > 0, norms, 1.0)
-            rotated = (vecs / safe[:, None]) @ proj.T
-            bits = (rotated > 0).astype(np.uint32)
-            n_words = (dims + 31) // 32
-            padded = np.zeros((n, n_words * 32), dtype=np.uint32)
-            padded[:, :dims] = bits
-            w = padded.reshape(n, n_words, 32)
-            packed = (w.astype(np.int64) << np.arange(32, dtype=np.int64)[None, None, :]).sum(
-                axis=2
-            )
-            out["rq_norm"] = norms.astype(np.float32)
-            out["rq_words"] = [
-                (row & 0xFFFFFFFF).astype(np.uint32).view(np.int32).tolist()
-                for row in packed
-            ]
+            norms, words = rabitq_encode(vecs, rabitq_projection(vecs.shape[1], seed))
+            out["rq_norm"] = norms
+            out["rq_words"] = [row.tolist() for row in words]
         else:
             out["rq_norm"] = np.zeros(0, dtype=np.float32)
             out["rq_words"] = []
@@ -242,6 +215,57 @@ def _per_segment_apply(df: DataFrame, n_segments: int, build, schema: str) -> Da
             yield build(pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0])
 
     return df.repartitionByRange(n_segments, "seg").mapInPandas(run, schema)
+
+
+def _write_segments(meta: dict, rows: DataFrame, n_tasks: int, graph_dir: str,
+                    dynamic: bool = False) -> None:
+    """The one segment builder: each ``seg`` of ``rows`` (id, vec, seg —
+    ``base.prepare_rows`` output) becomes one graph segment under
+    ``graph_dir``, built by ``_per_segment_apply`` over ``n_tasks``
+    tasks.  ``create`` writes every segment; ``apply_updates`` (and so
+    incremental compaction) overwrites only the segments in ``rows``
+    (``dynamic``).  A segment's graph is a function of its sorted member
+    rows and the index options in ``meta``, whichever of them builds
+    it."""
+    storage = meta.get("storage", "f32")
+    kernel, m, ef_c = meta["kernel"], meta["m"], meta["ef_construction"]
+    quant = meta.get("quantization")
+    pq_ratio, pq_bits = meta.get("pq_ratio", 4), meta.get("pq_bits", 8)
+    seed = meta.get("seed", 42)
+
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("id").reset_index(drop=True)
+        # f16 rows arrive on the binary16 grid (prepare_rows), so the
+        # graph is built on the values search decodes
+        vecs = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
+        neighbors, levels = _build_graph(vecs, kernel, m, ef_c)
+        entry = int(np.argmax(levels)) if levels else 0
+        out = {
+            "seg": pdf["seg"],
+            "idx": np.arange(len(pdf), dtype=np.int64),
+            "id": pdf["id"].astype("int64"),
+            "level": np.asarray(levels, dtype=np.int32),
+            "neighbors": [[lvl.tolist() for lvl in nb] for nb in neighbors],
+            "entry": np.full(len(pdf), entry, dtype=np.int64),
+        }
+        if storage == "f16":
+            out["vec16"] = [row.astype(np.float16).tobytes() for row in vecs]
+        else:
+            out["vec"] = pdf["vec"]
+        # per-segment quantizer training (scalar.rs trains per
+        # dataset; per segment is strictly tighter)
+        out.update(_quant_columns(vecs, quant, pq_ratio, pq_bits, seed))
+        return pd.DataFrame(out)
+
+    vec_field = "vec16 binary" if storage == "f16" else "vec array<float>"
+    schema = (
+        f"seg int, idx bigint, id bigint, {vec_field}, level int, "
+        "neighbors array<array<int>>, entry bigint"
+    ) + _quant_schema(quant)
+    w = _per_segment_apply(rows, n_tasks, build, schema).write.mode("overwrite")
+    if dynamic:
+        w = w.option("partitionOverwriteMode", "dynamic")
+    w.partitionBy("seg").parquet(graph_dir)
 
 
 def _level_of(vertex_no: int, m: int) -> int:
@@ -632,75 +656,9 @@ class HNSWIndex:
         if storage == "f16" and quantization is not None:
             raise ValueError("f16 storage does not compose with quantization")
         kernel, do_norm = base.resolve_metric(metric)
-        src = df.where(F.col(vector_col).isNotNull())
-        if where is not None:
-            src = src.where(where)  # partial index: only matching rows are indexed
-        vec = base.normalized_col(vector_col, do_norm).cast("array<float>")
-        n = src.count()
+        prepared = base.prepare_rows(df, id_col, vector_col, do_norm, storage, where)
+        n = prepared.count()
         n_segments = max(1, -(-n // segment_rows))
-        # pmod(xxhash64(id)) gives balanced, deterministic segments;
-        # monotonically_increasing_id() % n would stripe by partition offset
-        # and leave segments unevenly filled on skewed input layouts.
-        prepared = src.select(
-            F.col(id_col).alias("id"),
-            vec.alias("vec"),
-            # canonical bigint cast before hashing: xxhash64(int) !=
-            # xxhash64(bigint) for the same value, and ids are stored as
-            # bigint — without the cast an int id column would land
-            # updates in the wrong segment later
-            F.pmod(F.xxhash64(F.col(id_col).cast("long")), F.lit(n_segments))
-            .cast("int")
-            .alias("seg"),
-        )
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("id").reset_index(drop=True)
-            vecs = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
-            if storage == "f16":
-                # vecf16 semantics: values live on the binary16 grid;
-                # build the graph on the SAME grid values search decodes
-                vecs = vecs.astype(np.float16).astype(np.float64)
-            neighbors, levels = _build_graph(vecs, kernel, m, ef_construction)
-            entry = int(np.argmax(levels)) if levels else 0
-            out = {
-                "seg": pdf["seg"],
-                "idx": np.arange(len(pdf), dtype=np.int64),
-                "id": pdf["id"].astype("int64"),
-                "level": np.asarray(levels, dtype=np.int32),
-                "neighbors": [[lvl.tolist() for lvl in nb] for nb in neighbors],
-                "entry": np.full(len(pdf), entry, dtype=np.int64),
-            }
-            if storage == "f16":
-                out["vec16"] = [
-                    row.astype(np.float16).tobytes() for row in vecs
-                ]
-            else:
-                out["vec"] = pdf["vec"]
-            # per-segment quantizer training (scalar.rs trains per
-            # dataset; per segment is strictly tighter)
-            out.update(_quant_columns(vecs, quantization, pq_ratio, pq_bits, seed))
-            return pd.DataFrame(out)
-
-        vec_field = "vec16 binary" if storage == "f16" else "vec array<float>"
-        schema = (
-            f"seg int, idx bigint, id bigint, {vec_field}, level int, "
-            "neighbors array<array<int>>, entry bigint"
-        ) + _quant_schema(quantization)
-        (
-            _per_segment_apply(prepared, n_segments, build, schema)
-            .write.mode("overwrite")
-            .partitionBy("seg")
-            .parquet(os.path.join(path, "graph"))
-        )
-        # dims was historically recorded only for quantized graphs
-        # (rabitq qparams); _dims_ef_factor needs it for EVERY graph —
-        # an unquantized 1024-dim index with dims=0 silently kept the
-        # <=256-dim default ef (caught by the r13 calibration run:
-        # "default" cell read the ef=100 recall)
-        dims = 0
-        if n:
-            first = src.select(vector_col).first()
-            dims = len(first[0]) if first and first[0] is not None else 0
         meta = {
             "kind": "hnsw",
             "metric": metric.lower(),
@@ -716,10 +674,19 @@ class HNSWIndex:
             "pq_ratio": int(pq_ratio),
             "pq_bits": int(pq_bits),
             "seed": int(seed),
-            "dims": int(dims),
+            "dims": 0,
         }
+        idx = cls(spark, path, meta)
+        _write_segments(meta, idx._with_seg(prepared), n_segments, os.path.join(path, "graph"))
+        # dims was historically recorded only for quantized graphs
+        # (rabitq qparams); _dims_ef_factor needs it for EVERY graph —
+        # an unquantized 1024-dim index with dims=0 silently kept the
+        # <=256-dim default ef (caught by the r13 calibration run:
+        # "default" cell read the ef=100 recall)
+        if n:
+            meta["dims"] = len(prepared.select("vec").first()[0])
         base.write_meta(path, meta)
-        return cls(spark, path, meta)
+        return idx
 
     @classmethod
     def open(cls, spark: SparkSession, path: str) -> "HNSWIndex":
@@ -759,6 +726,17 @@ class HNSWIndex:
             * _dims_ef_factor(int(self.meta.get("dims", 0)))
         )
 
+    def _with_seg(self, rows: DataFrame) -> DataFrame:
+        """``rows`` plus each id's segment, pmod(xxhash64(id),
+        n_segments): balanced and deterministic, where
+        monotonically_increasing_id() % n would stripe by partition
+        offset and leave segments unevenly filled on skewed layouts.
+        The id is hashed as bigint — xxhash64(int) != xxhash64(bigint)
+        for the same value, and ids are stored as bigint, so an int id
+        column would otherwise land updates in the wrong segment."""
+        seg = F.pmod(F.xxhash64(F.col("id").cast("long")), F.lit(self.meta["n_segments"]))
+        return rows.withColumn("seg", seg.cast("int"))
+
     # ------------------------------------------------------------------
     def apply_updates(
         self,
@@ -778,104 +756,42 @@ class HNSWIndex:
         full rebuild would (the build is deterministic on the sorted
         member set).  Returns the rebuilt segment ids.
         """
-        n_seg = self.meta["n_segments"]
-        kernel, m, ef_c = self.meta["kernel"], self.meta["m"], self.meta["ef_construction"]
-        seg_of = lambda c: F.pmod(F.xxhash64(c.cast("long")), F.lit(n_seg)).cast("int")  # noqa: E731
-
         affected: set[int] = set()
         if delete_ids is not None:
-            affected |= {
-                r["seg"]
-                for r in delete_ids.select(seg_of(F.col(id_col)).alias("seg")).distinct().collect()
-            }
+            dels = delete_ids.select(F.col(id_col).alias("id"))
+            affected |= {r["seg"] for r in self._with_seg(dels).select("seg").distinct().collect()}
+        add = None
         if insert_rows is not None:
-            affected |= {
-                r["seg"]
-                for r in insert_rows.select(seg_of(F.col(id_col)).alias("seg")).distinct().collect()
-            }
+            add = self._with_seg(base.prepare_rows(
+                insert_rows, F.col(id_col).cast("long"), vector_col,
+                self.meta["normalize"], self.meta.get("storage", "f32"),
+            ))
+            affected |= {r["seg"] for r in add.select("seg").distinct().collect()}
         if not affected:
             return []
 
         graph_dir = os.path.join(self.path, "graph")
         segs = sorted(affected)
-        storage = self.meta.get("storage", "f32")
         old = self.spark.read.parquet(graph_dir).where(F.col("seg").isin(segs))
-        if storage == "f16":
-
-            @F.pandas_udf("array<float>")
-            def _f16_to_arr(vb: pd.Series) -> pd.Series:
-                return vb.map(
-                    lambda b: None
-                    if b is None
-                    else np.frombuffer(b, dtype=np.float16).astype(np.float32).tolist()
-                )
-
-            live = old.select("seg", "id", _f16_to_arr("vec16").alias("vec"))
-        else:
-            live = old.select("seg", "id", "vec")
+        live = base.stored_vectors(old, self.meta.get("storage", "f32")).select("seg", "id", "vec")
         if delete_ids is not None:
-            live = live.join(
-                F.broadcast(delete_ids.select(F.col(id_col).alias("id"))), "id", "left_anti"
-            )
-        if insert_rows is not None:
-            add = insert_rows.select(
-                F.col(id_col).cast("long").alias("id"),
-                F.col(vector_col).cast("array<float>").alias("vec"),
-            ).withColumn("seg", seg_of(F.col("id")))
+            live = live.join(F.broadcast(dels), "id", "left_anti")
+        if add is not None:
             # replace-on-id: a re-inserted id supersedes the stored row
             live = live.join(F.broadcast(add.select("id")), "id", "left_anti").unionByName(
                 add.select("seg", "id", "vec")
             )
-
-        quantization = self.meta.get("quantization")
-        pq_ratio = self.meta.get("pq_ratio", 4)
-        pq_bits = self.meta.get("pq_bits", 8)
-        seed = self.meta.get("seed", 42)
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("id").reset_index(drop=True)
-            vecs = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
-            if storage == "f16":
-                vecs = vecs.astype(np.float16).astype(np.float64)
-            neighbors, levels = _build_graph(vecs, kernel, m, ef_c)
-            entry = int(np.argmax(levels)) if levels else 0
-            out = {
-                "seg": pdf["seg"],
-                "idx": np.arange(len(pdf), dtype=np.int64),
-                "id": pdf["id"].astype("int64"),
-                "level": np.asarray(levels, dtype=np.int32),
-                "neighbors": [[lvl.tolist() for lvl in nb] for nb in neighbors],
-                "entry": np.full(len(pdf), entry, dtype=np.int64),
-            }
-            if storage == "f16":
-                out["vec16"] = [row.astype(np.float16).tobytes() for row in vecs]
-            else:
-                out["vec"] = pdf["vec"]
-            out.update(_quant_columns(vecs, quantization, pq_ratio, pq_bits, seed))
-            return pd.DataFrame(out)
-
-        vec_field = "vec16 binary" if storage == "f16" else "vec array<float>"
-        schema = (
-            f"seg int, idx bigint, id bigint, {vec_field}, level int, "
-            "neighbors array<array<int>>, entry bigint"
-        ) + _quant_schema(quantization)
         # checkpoint severs lineage from the graph files we are about to
         # overwrite (Spark refuses to overwrite a path it is reading)
         live = live.localCheckpoint(eager=True)
-        rebuilt = _per_segment_apply(live, len(segs), build, schema)
         # dynamic overwrite: only the affected seg=N directories are
         # replaced; the cache fingerprint (mtime/size) invalidates them
         # on next read while untouched segments stay resident
-        (
-            rebuilt.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("seg")
-            .parquet(graph_dir)
-        )
+        _write_segments(self.meta, live, len(segs), graph_dir, dynamic=True)
         # a segment can become empty: remove its stale directory so the
         # loader's fingerprint sees it as empty (computed from the
-        # checkpointed live rows — re-deriving it from `rebuilt` would
-        # re-run the graph builds)
+        # checkpointed live rows — re-deriving it from the written
+        # segments would re-run the graph builds)
         import shutil
 
         present = {r["seg"] for r in live.select("seg").distinct().collect()}

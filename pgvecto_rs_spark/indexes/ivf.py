@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from pgvecto_rs_spark.indexes import base
 from pgvecto_rs_spark.indexes import batch as BT
+from pgvecto_rs_spark.indexes import quantization as Qz
 from pgvecto_rs_spark.indexes import segment_worker as SW
 
 DEFAULT_NLIST = 1000  # crates/base/src/index.rs:368-370
@@ -260,19 +261,8 @@ class IVFIndex:
             raise ValueError(f"unknown storage {storage!r} (f32 | f16)")
         if storage == "f16" and (quantization is not None or residual_quantization):
             raise ValueError("f16 storage does not compose with quantization")
-        src = df.where(F.col(vector_col).isNotNull())
-        if where is not None:
-            src = src.where(where)  # partial index: only matching rows are indexed  # NULLs not indexed (am.rs:199-211)
-        vec = base.normalized_col(vector_col, do_norm).cast("array<float>")
-        if storage == "f16":
-            # vecf16 semantics: snap to the binary16 grid BEFORE training,
-            # assignment and radii so every derived artifact matches the
-            # values the stored words decode to
-            from pgvecto_rs_spark.functions.dense import to_f16_grid
-
-            vec = to_f16_grid(vec)
-        prepared = src.select(
-            F.col(id_col).alias("id"), vec.alias("vec"), *[F.col(c) for c in payload_cols]
+        prepared = base.prepare_rows(
+            df, id_col, vector_col, do_norm, storage, where, payload_cols
         )
 
         # --- train on a driver-side sample (cap mirrors the reference).
@@ -310,107 +300,57 @@ class IVFIndex:
         nlist_eff = min(nlist, len(x))
         centroids = _lloyd(x, nlist_eff, spherical=spherical, seed=seed)
 
-        # --- assign list ids with one broadcast matmul per Arrow batch.
-        # Assignment runs in float32 (the input dtype): the (rows x
-        # nlist) gemm is bandwidth-bound and list membership is a
-        # routing decision — a boundary flip lands the vector in its
-        # second-nearest list, which search handles identically (and
-        # f32 is deterministic, so builds stay reproducible).  Residual
-        # and quantization-bound math below stays f64.
-        sc = spark.sparkContext
-        bc = sc.broadcast(centroids.astype(np.float64))
-        bc32 = sc.broadcast(centroids.astype(np.float32))
-        c_sq32 = sc.broadcast(
-            np.einsum("ij,ij->i", centroids.astype(np.float32), centroids.astype(np.float32))
-        )
-
-        r = max(1, min(replicas, nlist_eff))
-
-        @F.pandas_udf("array<int>")
-        def assign_lists(v: pd.Series) -> pd.Series:
-            mat = np.asarray(v.tolist(), dtype=np.float32)
-            cent = bc32.value
-            d = np.float32(-2.0) * (mat @ cent.T) + c_sq32.value[None, :]
-            if r == 1:
-                top = np.argmin(d, axis=1)[:, None]
-            else:
-                top = np.argpartition(d, r - 1, axis=1)[:, :r]
-            return pd.Series([row.astype("int32").tolist() for row in top])
-
-        indexed = prepared.withColumn("list_id", F.explode(assign_lists("vec")))
-
         from pgvecto_rs_spark.indexes.flat import _SQ_KINDS
 
         if residual_quantization and quantization is None:
             quantization = "sq8"
-        lo = width = None
-        if quantization is not None:
-            # All quantizers code *residuals* (vec − centroid[list]): the
-            # residual range is much tighter than the raw range, so the
-            # codes lose less — the reference's residual_quantization
-            # option, applied to whichever quantizer is composed in.
-            @F.pandas_udf("array<float>")
-            def residual(v: pd.Series, lid: pd.Series) -> pd.Series:
-                cent = bc.value
-                mat = np.asarray(v.tolist(), dtype=np.float64)
-                res = mat - cent[lid.to_numpy()]
-                return pd.Series([row.astype("float32").tolist() for row in res])
+        if quantization not in (None, "pq", "rabitq", *_SQ_KINDS):
+            raise ValueError(f"unknown quantization {quantization!r}")
+        meta = {
+            "kind": "ivf",
+            "metric": metric.lower(),
+            "kernel": kernel,
+            "normalize": do_norm,
+            "nlist": int(nlist_eff),
+            "dims": int(centroids.shape[1]),
+            "n_rows": int(n_total),
+            "spherical": spherical,
+            "payload_cols": list(payload_cols),
+            "replicas": int(max(1, min(replicas, nlist_eff))),
+            "storage": storage,
+            "quantization": quantization,
+            "residual_quantization": quantization in _SQ_KINDS,  # back-compat
+        }
+        idx = cls(spark, path, meta, centroids)
+        indexed = idx._route(prepared)
 
-            indexed = indexed.withColumn("res", residual("vec", "list_id"))
-
+        # --- quantizer constants, trained once here on the residuals
+        # (vec − centroid[list]); apply_updates encodes with them as is
         if quantization in _SQ_KINDS:
-            levels = (1 << _SQ_KINDS[quantization]) - 1
-            mm = (
-                indexed.select(F.posexplode("res").alias("pos", "x"))
-                .groupBy("pos")
-                .agg(F.min("x").alias("lo"), F.max("x").alias("hi"))
-                .orderBy("pos")
-                .collect()
-            )
-            lo = np.array([m["lo"] for m in mm], dtype=np.float64)
-            hi = np.array([m["hi"] for m in mm], dtype=np.float64)
-            width = np.where(hi > lo, hi - lo, 1.0)
-            lo_c = F.array(*[F.lit(float(v)) for v in lo])
-            w_c = F.array(*[F.lit(float(v)) for v in width])
-            codes = F.zip_with(
-                F.col("res").cast("array<double>"),
-                F.zip_with(lo_c, w_c, lambda a, b: F.struct(a.alias("lo"), b.alias("w"))),
-                lambda x, p: F.least(
-                    F.lit(levels),
-                    F.greatest(F.lit(0), F.round((x - p["lo"]) / p["w"] * levels, 0).cast("int")),
-                ).cast("smallint"),
-            )
-            indexed = indexed.withColumn("codes", codes).drop("res")
-        elif quantization in ("pq", "rabitq"):
-            from pgvecto_rs_spark.indexes import quantization as Qz
-
-            os.makedirs(path, exist_ok=True)
-            dims = int(centroids.shape[1])
+            lo, width = Qz.sq_train(indexed, "res")
+            meta["sq_lo"] = lo.tolist()
+            meta["sq_width"] = width.tolist()
+            meta["sq_bits"] = _SQ_KINDS[quantization]
+        elif quantization is not None:
             # the centroid sample's rule: replicas > 1 holds an id once
             # per list, so the list id breaks the tie
             rx = base.training_sample(
                 indexed, "res", fraction, seed, SAMPLE_CAP, tie="list_id", by_id=True
             )
+            dims = int(centroids.shape[1])
+            os.makedirs(path, exist_ok=True)
             if quantization == "pq":
-                n_sub = dims // pq_ratio
-                books = Qz.pq_train(rx, n_sub, bits=pq_bits, seed=seed)
+                books = Qz.pq_train(rx, dims // pq_ratio, bits=pq_bits, seed=seed)
                 np.save(os.path.join(path, "pq_codebooks.npy"), books, allow_pickle=False)
-                indexed = indexed.withColumn(
-                    "codes", Qz.pq_encode_udf(books, spark)("res")
-                ).drop("res")
+                meta["pq_subspaces"] = dims // pq_ratio
+                meta["pq_ratio"] = int(pq_ratio)
             else:
                 proj = Qz.rabitq_projection(dims, seed)
                 np.save(os.path.join(path, "rabitq_proj.npy"), proj, allow_pickle=False)
-                indexed = indexed.withColumn(
-                    "rq", Qz.rabitq_encode_udf(proj, spark)("res")
-                ).drop("res")
-        elif quantization is not None:
-            raise ValueError(f"unknown quantization {quantization!r}")
 
-        if storage == "f16":
-            indexed = indexed.withColumn("vec16", base.f16_words("vec")).drop("vec")
         (
-            indexed.repartition("list_id")
+            idx._encode(indexed)
+            .repartition("list_id")
             .sortWithinPartitions("id")  # row-group min/max skipping for
             # the rerank's id IN (...) fetch (two-phase quantized scan)
             .write.mode("overwrite")
@@ -427,30 +367,8 @@ class IVFIndex:
             spark, _read_lists(spark, os.path.join(path, "lists")),
             centroids, int(nlist_eff), path, storage=storage,
         )
-        meta = {
-            "kind": "ivf",
-            "metric": metric.lower(),
-            "kernel": kernel,
-            "normalize": do_norm,
-            "nlist": int(nlist_eff),
-            "dims": int(centroids.shape[1]),
-            "n_rows": int(n_total),
-            "spherical": spherical,
-            "payload_cols": list(payload_cols),
-            "replicas": int(r),
-            "storage": storage,
-            "quantization": quantization,
-            "residual_quantization": quantization in _SQ_KINDS,  # back-compat
-        }
-        if quantization in _SQ_KINDS:
-            meta["sq_lo"] = lo.tolist()
-            meta["sq_width"] = width.tolist()
-            meta["sq_bits"] = _SQ_KINDS[quantization]
-        if quantization == "pq":
-            meta["pq_subspaces"] = int(centroids.shape[1]) // pq_ratio
-            meta["pq_ratio"] = int(pq_ratio)
         base.write_meta(path, meta)
-        return cls(spark, path, meta, centroids)
+        return idx
 
     @classmethod
     def open(cls, spark: SparkSession, path: str) -> "IVFIndex":
@@ -459,39 +377,39 @@ class IVFIndex:
         return cls(spark, path, meta, centroids)
 
     # ------------------------------------------------------------------
-    def _assign_udf(self):
-        """List assignment against the STORED centroids (no retrain).
-        Same f32 routing kernel as create() so delta rows assign exactly
-        as build-time rows would."""
+    def _route(self, prepared: DataFrame) -> DataFrame:
+        """Prepared rows (``base.prepare_rows``) with their ``list_id``:
+        one row per assigned list (``replicas`` nearest centroids), plus
+        the residual ``res`` = vec − centroid[list] when the index is
+        quantized.  Build and updates route here, against the stored
+        centroids (updates never retrain).
+
+        Assignment runs in float32 (the input dtype): the (rows x
+        nlist) gemm is bandwidth-bound and list membership is a routing
+        decision — a boundary flip lands the vector in its
+        second-nearest list, which search handles identically (and f32
+        is deterministic, so builds stay reproducible).  Residuals stay
+        f64."""
         sc = self.spark.sparkContext
         cent = self.centroids.astype(np.float32)
-        bc = sc.broadcast(cent)
+        bc32 = sc.broadcast(cent)
         c_sq = sc.broadcast(np.einsum("ij,ij->i", cent, cent))
         r = self.meta.get("replicas", 1)
 
         @F.pandas_udf("array<int>")
         def assign_lists(v: pd.Series) -> pd.Series:
             mat = np.asarray(v.tolist(), dtype=np.float32)
-            d = np.float32(-2.0) * (mat @ bc.value.T) + c_sq.value[None, :]
+            d = np.float32(-2.0) * (mat @ bc32.value.T) + c_sq.value[None, :]
             if r == 1:
                 top = np.argmin(d, axis=1)[:, None]
             else:
                 top = np.argpartition(d, r - 1, axis=1)[:, :r]
             return pd.Series([row.astype("int32").tolist() for row in top])
 
-        return assign_lists
-
-    def _encode_delta(self, indexed: DataFrame) -> DataFrame:
-        """Encode (vec, list_id) rows with the STORED quantizer constants
-        (meta SQ bounds / saved PQ codebooks / RaBitQ projection).  The
-        incremental path never retrains — mirroring the reference's merge
-        of affected segments only (optimizing/mod.rs:58-105)."""
-        from pgvecto_rs_spark.indexes.flat import _SQ_KINDS
-
-        quant = self.meta.get("quantization")
-        if quant is None:
+        indexed = prepared.withColumn("list_id", F.explode(assign_lists("vec")))
+        if self._quant() is None:
             return indexed
-        bc = self.spark.sparkContext.broadcast(self.centroids.astype(np.float64))
+        bc = sc.broadcast(self.centroids.astype(np.float64))
 
         @F.pandas_udf("array<float>")
         def residual(v: pd.Series, lid: pd.Series) -> pd.Series:
@@ -499,31 +417,23 @@ class IVFIndex:
             res = mat - bc.value[lid.to_numpy()]
             return pd.Series([row.astype("float32").tolist() for row in res])
 
-        indexed = indexed.withColumn("res", residual("vec", "list_id"))
-        if quant in _SQ_KINDS:
-            levels = (1 << _SQ_KINDS[quant]) - 1
-            lo_c = F.array(*[F.lit(float(v)) for v in self.meta["sq_lo"]])
-            w_c = F.array(*[F.lit(float(v)) for v in self.meta["sq_width"]])
-            codes = F.zip_with(
-                F.col("res").cast("array<double>"),
-                F.zip_with(lo_c, w_c, lambda a, b: F.struct(a.alias("lo"), b.alias("w"))),
-                lambda x, p: F.least(
-                    F.lit(levels),
-                    F.greatest(F.lit(0), F.round((x - p["lo"]) / p["w"] * levels, 0).cast("int")),
-                ).cast("smallint"),
-            )
-            return indexed.withColumn("codes", codes).drop("res")
-        from pgvecto_rs_spark.indexes import quantization as Qz
+        return indexed.withColumn("res", residual("vec", "list_id"))
 
-        if quant == "pq":
-            books = np.load(os.path.join(self.path, "pq_codebooks.npy"))
-            return indexed.withColumn(
-                "codes", Qz.pq_encode_udf(books, self.spark)("res")
-            ).drop("res")
-        proj = np.load(os.path.join(self.path, "rabitq_proj.npy"))
-        return indexed.withColumn(
-            "rq", Qz.rabitq_encode_udf(proj, self.spark)("res")
-        ).drop("res")
+    def _encode(self, indexed: DataFrame) -> DataFrame:
+        """Routed rows (``_route``) as stored: the quantizer codes of
+        ``res`` (``quantization.encode``, with the stored constants) in
+        place of it, and f16 storage's binary16 words in place of
+        ``vec``.  All quantizers code *residuals*: their range is much
+        tighter than the raw range, so the codes lose less (the
+        reference's residual_quantization option, applied to whichever
+        quantizer is composed in)."""
+        quant = self._quant()
+        if quant is not None:
+            indexed = Qz.encode(indexed, "res", quant, self.meta, self.path, self.spark)
+            indexed = indexed.drop("res")
+        if self.meta.get("storage") == "f16":
+            indexed = indexed.withColumn("vec16", base.f16_words("vec")).drop("vec")
+        return indexed
 
     def apply_updates(
         self,
@@ -570,24 +480,14 @@ class IVFIndex:
             removes.append(delete_ids.select(F.col(id_col).cast("long").alias("id")))
         add = None
         if insert_rows is not None:
-            vec = base.normalized_col(vector_col, self.meta["normalize"]).cast("array<float>")
-            if storage == "f16":
-                from pgvecto_rs_spark.functions.dense import to_f16_grid
-
-                vec = to_f16_grid(vec)
             payloads = [
                 c for c in self.meta.get("payload_cols", []) if c in insert_rows.columns
             ]
-            add = self._encode_delta(
-                insert_rows.select(
-                    F.col(id_col).cast("long").alias("id"),
-                    vec.alias("vec"),
-                    *[F.col(c) for c in payloads],
-                ).withColumn("list_id", F.explode(self._assign_udf()("vec")))
+            prepared = base.prepare_rows(
+                insert_rows, F.col(id_col).cast("long"), vector_col,
+                self.meta["normalize"], storage, keep=payloads,
             )
-            if storage == "f16":
-                add = add.withColumn("vec16", base.f16_words("vec")).drop("vec")
-            add = add.localCheckpoint(eager=True)
+            add = self._encode(self._route(prepared)).localCheckpoint(eager=True)
             removes.append(add.select("id"))
         if not removes:
             return []

@@ -13,8 +13,11 @@ Reference:
 Spark shapes:
 - PQ codes are an ``array<smallint>`` column (n_subspaces bytes of
   information per row); RaBitQ codes are sign bits packed into
-  ``array<int>`` words plus a stored norm (``rq`` struct).  Both are
-  encoded by Arrow-batched pandas UDFs at build time.
+  ``array<int>`` words plus a stored norm (``rq`` struct).  Each has
+  one numpy encoder (``pq_encode``, ``rabitq_encode``): flat and IVF
+  rows encode through ``encode`` (Arrow-batched pandas UDFs over it)
+  at build and update time alike, HNSW segment builds call it
+  directly.
 - Scoring has one implementation per quantizer, in
   ``segment_worker._approx_dists``: decode-on-access for flat codes,
   a batched per-list LUT for IVF-PQ residual codes, one unpack +
@@ -28,12 +31,65 @@ window -> exact distances (reranker/flat.rs, ``base.two_phase``).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
 PQ_BITS = 8  # crates/base/src/index.rs:475-496 default
 TRAIN_CAP = 65536  # common/src/sample.rs
+
+
+# ---------------------------------------------------------------------------
+# Scalar quantization and the one encoder every index writes codes with
+# ---------------------------------------------------------------------------
+
+def sq_train(df, col: str) -> tuple[np.ndarray, np.ndarray]:
+    """Per-dim (lo, width) of ``df[col]`` in one aggregation pass
+    (crates/quantization/src/scalar.rs:32-60 trains the same bounds); a
+    constant dim gets width 1."""
+    mm = (
+        df.select(F.posexplode(col).alias("pos", "x"))
+        .groupBy("pos")
+        .agg(F.min("x").alias("lo"), F.max("x").alias("hi"))
+        .orderBy("pos")
+        .collect()
+    )
+    lo = np.array([m["lo"] for m in mm], dtype=np.float64)
+    hi = np.array([m["hi"] for m in mm], dtype=np.float64)
+    return lo, np.where(hi > lo, hi - lo, 1.0)
+
+
+def encode(df, col: str, quant: str, meta: dict, path: str, spark):
+    """``df`` plus the quantizer codes of its vector column ``col``:
+    ``codes`` (SQ, PQ) or ``rq`` (RaBitQ), computed from the trained
+    constants (``meta``'s SQ bounds, the PQ codebooks or RaBitQ
+    projection saved under ``path``).  Build and incremental updates
+    both encode here, so a row's codes never depend on which of them
+    wrote it."""
+    from pgvecto_rs_spark.indexes.flat import _SQ_KINDS
+
+    if quant in _SQ_KINDS:
+        levels = (1 << int(meta.get("sq_bits", 8))) - 1
+        lo_c = F.array(*[F.lit(float(v)) for v in meta["sq_lo"]])
+        w_c = F.array(*[F.lit(float(v)) for v in meta["sq_width"]])
+        codes = F.zip_with(
+            F.col(col).cast("array<double>"),
+            F.zip_with(lo_c, w_c, lambda a, b: F.struct(a.alias("lo"), b.alias("w"))),
+            lambda x, p: F.least(
+                F.lit(levels),
+                F.greatest(F.lit(0), F.round((x - p["lo"]) / p["w"] * levels, 0).cast("int")),
+            ).cast("smallint"),
+        )
+        return df.withColumn("codes", codes)
+    if quant == "pq":
+        books = np.load(os.path.join(path, "pq_codebooks.npy"))
+        return df.withColumn("codes", pq_encode_udf(books, spark)(col))
+    if quant == "rabitq":
+        proj = np.load(os.path.join(path, "rabitq_proj.npy"))
+        return df.withColumn("rq", rabitq_encode_udf(proj, spark)(col))
+    raise ValueError(f"unknown quantization {quant!r}")
 
 
 # ---------------------------------------------------------------------------
@@ -83,24 +139,28 @@ def pq_train(sample: np.ndarray, n_subspaces: int, bits: int = PQ_BITS, seed: in
     return full
 
 
+def pq_encode(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, n_subspaces) int16 codes: each subvector's nearest codeword."""
+    n_sub, _, sub = books.shape
+    codes = np.empty((len(mat), n_sub), dtype=np.int16)
+    for s in range(n_sub):
+        block = mat[:, s * sub : (s + 1) * sub]
+        d = (
+            np.einsum("ij,ij->i", block, block)[:, None]
+            - 2.0 * block @ books[s].T
+            + np.einsum("ij,ij->i", books[s], books[s])[None, :]
+        )
+        codes[:, s] = np.argmin(d, axis=1)
+    return codes
+
+
 def pq_encode_udf(codebooks: np.ndarray, spark):
     """Pandas UDF: vector -> array<smallint> of per-subspace centroid ids."""
     bc = spark.sparkContext.broadcast(codebooks)
 
     @F.pandas_udf("array<smallint>")
     def encode(v: pd.Series) -> pd.Series:
-        books = bc.value
-        n_sub, k, sub = books.shape
-        mat = np.asarray(v.tolist(), dtype=np.float64)
-        codes = np.empty((len(mat), n_sub), dtype=np.int16)
-        for s in range(n_sub):
-            block = mat[:, s * sub : (s + 1) * sub]
-            d = (
-                np.einsum("ij,ij->i", block, block)[:, None]
-                - 2.0 * block @ books[s].T
-                + np.einsum("ij,ij->i", books[s], books[s])[None, :]
-            )
-            codes[:, s] = np.argmin(d, axis=1)
+        codes = pq_encode(np.asarray(v.tolist(), dtype=np.float64), bc.value)
         return pd.Series([row.tolist() for row in codes])
 
     return encode
@@ -120,6 +180,22 @@ def rabitq_projection(dims: int, seed: int = 42) -> np.ndarray:
     return qmat
 
 
+def rabitq_encode(mat: np.ndarray, proj: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(norms f32, (n, ceil(dims/32)) int32 sign words): bit i of a row
+    is sign(P·x̂)_i > 0, packed little-end first into 32-bit words."""
+    dims = proj.shape[0]
+    n_words = (dims + 31) // 32
+    norms = np.linalg.norm(mat, axis=1)
+    safe = np.where(norms > 0, norms, 1.0)
+    rotated = (mat / safe[:, None]) @ proj.T
+    padded = np.zeros((len(mat), n_words * 32), dtype=np.int64)
+    padded[:, :dims] = rotated > 0
+    packed = (
+        padded.reshape(len(mat), n_words, 32) << np.arange(32, dtype=np.int64)[None, None, :]
+    ).sum(axis=2)
+    return norms.astype(np.float32), packed.astype(np.uint32).view(np.int32)
+
+
 def rabitq_encode_udf(proj: np.ndarray, spark):
     """vector -> (norm float, sign bits packed into array<int> words).
 
@@ -128,24 +204,8 @@ def rabitq_encode_udf(proj: np.ndarray, spark):
 
     @F.pandas_udf("struct<norm: float, words: array<int>>")
     def encode(v: pd.Series) -> pd.DataFrame:
-        p = bc.value
-        dims = p.shape[0]
-        n_words = (dims + 31) // 32
-        mat = np.asarray(v.tolist(), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        safe = np.where(norms > 0, norms, 1.0)
-        rotated = (mat / safe[:, None]) @ p.T
-        bits = (rotated > 0).astype(np.uint32)
-        padded = np.zeros((len(mat), n_words * 32), dtype=np.uint32)
-        padded[:, :dims] = bits
-        words = padded.reshape(len(mat), n_words, 32)
-        packed = (words << np.arange(32, dtype=np.uint32)[None, None, :]).sum(axis=2).astype(np.int64)
-        return pd.DataFrame(
-            {
-                "norm": norms.astype(np.float32),
-                "words": [row.astype("int32").tolist() for row in packed.view(np.int64) & 0xFFFFFFFF],
-            }
-        )
+        norms, words = rabitq_encode(np.asarray(v.tolist(), dtype=np.float64), bc.value)
+        return pd.DataFrame({"norm": norms, "words": [row.tolist() for row in words]})
 
     return encode
 

@@ -111,8 +111,13 @@ def np_kernel_distance(kernel: str, mat: np.ndarray, q: np.ndarray) -> np.ndarra
     raise ValueError(kernel)
 
 
-def _segment_fingerprint(seg_dir: str):
-    files = sorted(glob.glob(os.path.join(seg_dir, "*.parquet")))
+def _segment_fingerprint(source: str):
+    """(path, mtime, size) of a storage unit's Parquet files: a segment
+    or list directory's, or one rows file's own."""
+    if os.path.isfile(source):
+        files = [source]
+    else:
+        files = sorted(glob.glob(os.path.join(source, "*.parquet")))
     return tuple((f, os.path.getmtime(f), os.path.getsize(f)) for f in files)
 
 
@@ -776,13 +781,12 @@ def _rerank_emit(kernel: str, source, windows: list):
 def flat_file_block_runner(kernel: str, k: int, vec_col: str = "vec",
                            quant=None, params=None, win: int = 0,
                            below: float | None = None):
-    """Runner over (block, parquet_file) pairs: one gemm per pair.  A
+    """Runner over (block, parquet_file) pairs: one gemm per pair, over
+    the file as decoded once per process (``_load_unit``).  A
     quantized index reads the file's codes instead, keeps each query's
     top ``win`` by approximate distance and reranks them exactly.
     ``below`` (unquantized) emits only rows under that kernel
     distance."""
-    import pyarrow.parquet as pq
-
     col = _unit_col(quant, vec_col)
 
     def run(pairs):
@@ -790,11 +794,9 @@ def flat_file_block_runner(kernel: str, k: int, vec_col: str = "vec",
             if blk is None:
                 continue
             qids, qmat = blk
-            tbl = pq.read_table(path, columns=["id", col])
-            ids = tbl.column("id").to_numpy()
+            ids, unit = _load_unit(path, col)
             if not len(ids):
                 continue
-            unit = _read_unit(tbl, col)
             if quant is None:
                 d = np.empty((len(unit), len(qmat)))
                 for qi in range(len(qmat)):
@@ -857,20 +859,21 @@ def hnsw_segment_block_runner(quant, qparams, kernel: str, ef: int):
 _LIST_CACHE = _FileLRU(64, _CACHE_BYTES)
 
 
-def _load_list(ldir: str, col: str):
-    """(ids, payload) for one IVF list partition (``_read_unit``), via a
-    worker-resident LRU keyed on the file fingerprint — consecutive
-    query blocks probe overlapping lists, and re-decoding a list per
-    block would dominate the distributed batch scan."""
+def _load_unit(source: str, col: str):
+    """(ids, payload) for one IVF list partition or one flat rows file
+    (``_read_unit``), via a worker-resident LRU keyed on the file
+    fingerprint — consecutive query blocks and driver-served queries
+    scan the same units, and re-decoding a unit per block or per query
+    would dominate the scan."""
 
     def load():
         import pyarrow.parquet as pq
 
-        tbl = pq.read_table(ldir, columns=["id", col])
+        tbl = pq.read_table(source, columns=["id", col])
         ids = tbl.column("id").to_numpy()
         return (ids, _read_unit(tbl, col) if len(ids) else None)
 
-    return _LIST_CACHE.get(ldir, (_segment_fingerprint(ldir), col), load)
+    return _LIST_CACHE.get(source, (_segment_fingerprint(source), col), load)
 
 
 _PARAMS_CACHE = _FileLRU(16, _CACHE_BYTES)
@@ -929,7 +932,7 @@ def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
                 ldir = _os.path.join(lists_dir, f"list_id={lid}")
                 if not _os.path.isdir(ldir):
                     continue
-                ids, unit = _load_list(ldir, col)
+                ids, unit = _load_unit(ldir, col)
                 if not len(ids):
                     continue
                 if quant is None:

@@ -18,6 +18,8 @@ from __future__ import annotations
 import functools
 import math
 import os
+import threading
+from collections import OrderedDict
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -339,22 +341,52 @@ def _tmp_index_dir(name: str, sf_dir: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"pgvrs_{name}_{tag}")
 
 
+class _Memo:
+    """A bounded LRU of values derived from one input file in one Spark
+    application: shared pipeline stages (checkpointed DataFrames,
+    trained vocabularies and centroids) and open index handles.  The key
+    is ``sparkContext.applicationId`` plus the file's (path, mtime,
+    size) and the caller's ``extra`` options, so a rewritten input
+    rebuilds, and so does a new session: ``id(spark)`` can be reused
+    once a stopped session's object is freed, and its checkpoints and
+    JVM handles are dead.  Holds at most ``maxsize`` entries, least
+    recently used out first; ``build`` runs outside the lock."""
+
+    def __init__(self, maxsize: int):
+        self.maxsize = maxsize
+        self._data: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    @staticmethod
+    def key(spark: SparkSession, path: str, *extra) -> tuple:
+        st = os.stat(path)
+        return (spark.sparkContext.applicationId, path, st.st_mtime, st.st_size, *extra)
+
+    def get(self, spark: SparkSession, path: str, build: Callable, *extra):
+        key = self.key(spark, path, *extra)
+        with self._lock:
+            if key in self._data:
+                self._data.move_to_end(key)
+                return self._data[key]
+        val = build()
+        with self._lock:
+            self._data[key] = val
+            while len(self._data) > self.maxsize:
+                self._data.popitem(last=False)
+        return val
+
+
 # Open-index handle cache: re-opening per query invocation re-runs the
 # parallel partition-directory listing (one task per list/segment dir —
 # the dominant warm-query cost, BENCHNOTES §1); the reference keeps
 # indexes open between queries (crates/index/src/lib.rs:128-211) and so
-# do we.  Keyed on the Spark session too: a stale session's handle
-# holds dead JVM references.
-_OPEN_INDEXES: dict = {}
+# do we.  A stale session's handle holds dead JVM references, and a
+# rebuilt index directory is a new directory (new mtime).
+_OPEN_INDEXES = _Memo(64)
 
 
 def _open_cached(cls, spark: SparkSession, path: str):
-    key = (cls.__name__, path, id(spark))
-    idx = _OPEN_INDEXES.get(key)
-    if idx is None:
-        idx = cls.open(spark, path)
-        _OPEN_INDEXES[key] = idx
-    return idx
+    return _OPEN_INDEXES.get(spark, path, lambda: cls.open(spark, path), cls.__name__)
 
 
 def entry(spark: SparkSession) -> DataFrame:

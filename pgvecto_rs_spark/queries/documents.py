@@ -4,7 +4,6 @@ MinHash/SimHash/SRP/embedding near-dedup family."""
 from __future__ import annotations
 
 import math
-import os
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -45,6 +44,7 @@ from pgvecto_rs_spark.queries._core import (  # noqa: F401
     _Q_NORM,
     _tmp_index_dir,
     _open_cached,
+    _Memo,
 )
 
 
@@ -417,17 +417,14 @@ def doc_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 # centroids: the model is index-like state, the scoring pass over the
 # corpus (explode + broadcast-join + per-doc aggregate) stays paid by
 # every invocation
-_LM_FREQ_CACHE: dict = {}
+_LM_FREQ_CACHE = _Memo(4)
 
 
 def _lm_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = f"{sf_dir}/documents.parquet"
-    key = (src, os.path.getmtime(src), id(spark))
-    if key not in _LM_FREQ_CACHE:
-        _LM_FREQ_CACHE[key] = CU.unigram_term_freq(
-            _docs(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-    return _LM_FREQ_CACHE[key]
+    return _LM_FREQ_CACHE.get(
+        spark, f"{sf_dir}/documents.parquet",
+        lambda: CU.unigram_term_freq(_docs(spark, sf_dir)).localCheckpoint(eager=True),
+    )
 
 
 @register(
@@ -832,13 +829,11 @@ _NEARDUP_TRUTH_SQL = (
 # verified near-dup pairs over the full corpus are shared by
 # doc_minhash_pairs and doc_neardup_groups — materialize once per
 # (file, session), same pattern as the other shared stages
-_NEARDUP_PAIRS_CACHE: dict = {}
+_NEARDUP_PAIRS_CACHE = _Memo(4)
 
 
 def _verified_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = f"{sf_dir}/documents.parquet"
-    key = (src, os.path.getmtime(src), id(spark))
-    if key not in _NEARDUP_PAIRS_CACHE:
+    def build():
         docs = _docs(spark, sf_dir)
         # materialize the (small) candidate set so the verify joins
         # probe a local table instead of replanning the whole LSH DAG
@@ -847,10 +842,11 @@ def _verified_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand = DD.lsh_candidate_pairs(
             docs, num_perm=32, bands=8, est_threshold=0.6
         ).localCheckpoint(eager=True)
-        _NEARDUP_PAIRS_CACHE[key] = DD.verify_pairs_jaccard(
+        return DD.verify_pairs_jaccard(
             docs, cand, k=5, threshold=0.9
         ).localCheckpoint(eager=True)
-    return _NEARDUP_PAIRS_CACHE[key]
+
+    return _NEARDUP_PAIRS_CACHE.get(spark, f"{sf_dir}/documents.parquet", build)
 
 
 @register("doc_minhash_pairs", _NEARDUP_TRUTH_SQL)

@@ -48,6 +48,7 @@ from pgvecto_rs_spark.queries._core import (  # noqa: F401
     _Q_NORM,
     _tmp_index_dir,
     _open_cached,
+    _Memo,
 )
 
 
@@ -115,21 +116,18 @@ _SQL_DOC_NORMSQ = (
 
 # whole-doc hash embeddings are shared by doc_embed_hash_topk and the
 # hybrid retriever — materialize once per (file, session)
-_DOC_EMBEDDED_CACHE: dict = {}
+_DOC_EMBEDDED_CACHE = _Memo(4)
 
 
 def _doc_hash_embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pgvecto_rs_spark.sources.embedding import text2vec_hash
 
-    src = f"{sf_dir}/documents.parquet"
-    key = (src, os.path.getmtime(src), id(spark))
-    if key not in _DOC_EMBEDDED_CACHE:
-        _DOC_EMBEDDED_CACHE[key] = (
-            _docs(spark, sf_dir)
-            .select("doc_id", text2vec_hash("text", 64).alias("emb"))
-            .localCheckpoint(eager=True)
-        )
-    return _DOC_EMBEDDED_CACHE[key]
+    return _DOC_EMBEDDED_CACHE.get(
+        spark, f"{sf_dir}/documents.parquet",
+        lambda: _docs(spark, sf_dir)
+        .select("doc_id", text2vec_hash("text", 64).alias("emb"))
+        .localCheckpoint(eager=True),
+    )
 
 
 
@@ -252,7 +250,7 @@ def chunk_embed_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMBEDDED_CHUNKS_CACHE: dict = {}
+_EMBEDDED_CHUNKS_CACHE = _Memo(4)
 
 
 def _embedded_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -265,16 +263,15 @@ def _embedded_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelize (chunk_documents itself stays shuffle-free)."""
     from pgvecto_rs_spark.sources.embedding import text2vec_hash
 
-    src = f"{sf_dir}/documents.parquet"
-    key = (src, os.path.getmtime(src), id(spark))
-    if key not in _EMBEDDED_CHUNKS_CACHE:
+    def build():
         chunks = CU.chunk_documents(
             DD._spread(_docs(spark, sf_dir)), chunk_tokens=32, overlap=8
         )
-        _EMBEDDED_CHUNKS_CACHE[key] = chunks.select(
+        return chunks.select(
             "doc_id", "chunk_no", text2vec_hash("chunk_text", 64).alias("emb")
         ).localCheckpoint(eager=True)
-    return _EMBEDDED_CHUNKS_CACHE[key]
+
+    return _EMBEDDED_CHUNKS_CACHE.get(spark, f"{sf_dir}/documents.parquet", build)
 
 
 
@@ -489,17 +486,16 @@ def _bpe_encode_oracle_sql(rounds: int) -> str:
 
 
 # bpe_train's argmax rounds are deterministic on the input file, so
-# memoize per (file, mtime, rounds) — doc_bpe_merges and doc_bpe_tokens
+# memoize per (file, session, rounds) — doc_bpe_merges and doc_bpe_tokens
 # share a session without retraining
-_BPE_CACHE: dict[tuple, list[tuple[int, str, str, int]]] = {}
+_BPE_CACHE = _Memo(4)
 
 
 def _bpe_merges_cached(spark, sf_dir: str, rounds: int):
-    src = f"{sf_dir}/documents.parquet"
-    key = (src, os.path.getmtime(src), rounds)
-    if key not in _BPE_CACHE:
-        _BPE_CACHE[key] = CU.bpe_train(_docs(spark, sf_dir), rounds=rounds)
-    return _BPE_CACHE[key]
+    return _BPE_CACHE.get(
+        spark, f"{sf_dir}/documents.parquet",
+        lambda: CU.bpe_train(_docs(spark, sf_dir), rounds=rounds), rounds,
+    )
 
 
 @register("doc_bpe_merges", _bpe_oracle_sql(3))
@@ -785,7 +781,7 @@ def _semdedup_sql(k: int = 8, iters: int = 2, dims: int = DIMS, tau: float = 0.9
 # emb_semdedup queries share one fit, like index builds share a cached
 # index.  The result is deterministic (fixed-point protocol), so caching
 # cannot change any answer.
-_KMEANS_CACHE: dict[tuple, list[list[int]]] = {}
+_KMEANS_CACHE = _Memo(4)
 
 
 def _parquet_rows(path: str) -> int:
@@ -808,10 +804,10 @@ def _parquet_rows(path: str) -> int:
 
 
 def _kmeans_cents(spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 2):
-    key = (sf_dir, os.path.getmtime(f"{sf_dir}/embeddings.parquet"), k, iters)
-    if key not in _KMEANS_CACHE:
-        _KMEANS_CACHE[key] = CL.kmeans_fit(_emb(spark, sf_dir), k=k, iters=iters)
-    return _KMEANS_CACHE[key]
+    return _KMEANS_CACHE.get(
+        spark, f"{sf_dir}/embeddings.parquet",
+        lambda: CL.kmeans_fit(_emb(spark, sf_dir), k=k, iters=iters), k, iters,
+    )
 
 
 @register("emb_kmeans", _kmeans_full_sql())
@@ -1005,17 +1001,14 @@ _BM25_CTES = rf"""toks AS (
 # bm25 scores against _BM25_TERMS are shared by doc_bm25_topk and the
 # hybrid retriever — materialize once per (file, session), same pattern
 # as _embedded_chunks
-_BM25_SCORED_CACHE: dict = {}
+_BM25_SCORED_CACHE = _Memo(4)
 
 
 def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = f"{sf_dir}/documents.parquet"
-    key = (src, os.path.getmtime(src), id(spark))
-    if key not in _BM25_SCORED_CACHE:
-        _BM25_SCORED_CACHE[key] = RT.bm25_score(
-            _docs(spark, sf_dir), _BM25_TERMS
-        ).localCheckpoint(eager=True)
-    return _BM25_SCORED_CACHE[key]
+    return _BM25_SCORED_CACHE.get(
+        spark, f"{sf_dir}/documents.parquet",
+        lambda: RT.bm25_score(_docs(spark, sf_dir), _BM25_TERMS).localCheckpoint(eager=True),
+    )
 
 
 @register(

@@ -106,6 +106,26 @@ def _link_or_copy_tree(src: str, dst: str) -> None:
                 os.link(s, d)
 
 
+def _visible(delta: DataFrame, tomb_agg: DataFrame | None) -> DataFrame:
+    """Growing rows a tombstone does not shadow: an insert is visible
+    iff its version beats its id's newest tombstone (delete.rs:10-74)."""
+    if tomb_agg is None:
+        return delta
+    return (
+        delta.join(F.broadcast(tomb_agg), "id", "left")
+        .where(F.col("tv").isNull() | (F.col("version") > F.col("tv")))
+        .drop("tv")
+    )
+
+
+def _newest(rows: DataFrame) -> DataFrame:
+    """(id, vec): the highest-version row per id."""
+    from pyspark.sql import Window
+
+    rn = F.row_number().over(Window.partitionBy("id").orderBy(F.col("version").desc()))
+    return rows.withColumn("_rn", rn).where(F.col("_rn") == 1).select("id", "vec")
+
+
 class FreshVectorIndex:
     """A vector index that stays searchable while rows arrive/leave."""
 
@@ -235,18 +255,18 @@ class FreshVectorIndex:
         with self._write_lock:
             self._refresh()
             v = self._bump()
-            kernel, do_norm = base.resolve_metric(self.meta["metric"])
-            vec = base.normalized_col(self.meta["vector_col"], do_norm).cast("array<float>")
-            (
-                df.where(F.col(self.meta["vector_col"]).isNotNull())
-                .select(
-                    F.col(self.meta["id_col"]).cast("long").alias("id"),
-                    vec.alias("vec"),
-                    F.lit(v).alias("version"),
-                )
-                .write.mode("append")
-                .parquet(os.path.join(self._gen_dir(), "delta", "rows"))
+            self._delta_rows(df, v).write.mode("append").parquet(
+                os.path.join(self._gen_dir(), "delta", "rows")
             )
+
+    def _delta_rows(self, df: DataFrame, version: int) -> DataFrame:
+        """(id, vec, version): ``df`` as growing-segment rows, prepared
+        like the sealed index's own (``base.prepare_rows``) but kept in
+        f32 until compaction encodes them."""
+        _, do_norm = base.resolve_metric(self.meta["metric"])
+        return base.prepare_rows(
+            df, F.col(self.meta["id_col"]).cast("long"), self.meta["vector_col"], do_norm
+        ).withColumn("version", F.lit(version))
 
     def delete(self, ids: Sequence[int]) -> None:
         """Tombstone ids at the current version (delete.rs:52-65 —
@@ -407,6 +427,19 @@ class FreshVectorIndex:
             return 0
         return self._memo("dead_ids", fp, lambda: self._tomb_agg(files).count())
 
+    def _growing(self, query: Sequence[float], tomb_agg: DataFrame | None) -> DataFrame | None:
+        """(id, distance) of the visible growing rows: brute-force exact
+        over the (small) delta, in SQL units; None without a delta."""
+        delta = self._delta()
+        if delta is None:
+            return None
+        kernel, do_norm = base.resolve_metric(self.meta["metric"])
+        q = base.prep_query(query, do_norm)
+        d = dist_expr(F.col("vec"), [float(x) for x in q], kernel)
+        return _visible(delta, tomb_agg).select(
+            "id", base.post_map(self.meta["metric"], d).alias("distance")
+        )
+
     def search(self, query: Sequence[float], k: int = 10, **search_opts) -> DataFrame:
         """Top-k over sealed ∪ growing, minus tombstoned rows — the
         vbase union + delete filter (crates/index/src/lib.rs:387-423)."""
@@ -417,24 +450,9 @@ class FreshVectorIndex:
         # (broadcast anti-join inside the index's widening loop)
         sealed = self.sealed.search(query, k=k, exclude=tomb_agg, **search_opts)
 
-        delta = self._delta()
-        if delta is None:
+        growing = self._growing(query, tomb_agg)
+        if growing is None:
             return sealed
-        # growing side: brute-force exact over the (small) delta, with
-        # version visibility: insert version must beat the tombstone's
-        kernel, do_norm = base.resolve_metric(self.meta["metric"])
-        q = base.prep_query(query, do_norm)
-        d = dist_expr(F.col("vec"), [float(x) for x in q], kernel)
-        live = delta
-        if tomb_agg is not None:
-            live = (
-                delta.join(F.broadcast(tomb_agg), "id", "left")
-                .where(F.col("tv").isNull() | (F.col("version") > F.col("tv")))
-                .drop("tv")
-            )
-        growing = live.select(
-            "id", base.post_map(self.meta["metric"], d).alias("distance")
-        )
         merged = sealed.select("id", "distance").unionByName(growing)
         # the same id can be visible on both sides (re-insert without
         # delete); keep its best distance, dedup BEFORE the limit so the
@@ -456,22 +474,10 @@ class FreshVectorIndex:
         sealed = self.sealed.range_search(
             query, radius, exclude=tomb_agg, **search_opts
         )
-        delta = self._delta()
-        if delta is None:
+        growing = self._growing(query, tomb_agg)
+        if growing is None:
             return sealed
-        kernel, do_norm = base.resolve_metric(self.meta["metric"])
-        q = base.prep_query(query, do_norm)
-        d = dist_expr(F.col("vec"), [float(x) for x in q], kernel)
-        live = delta
-        if tomb_agg is not None:
-            live = (
-                delta.join(F.broadcast(tomb_agg), "id", "left")
-                .where(F.col("tv").isNull() | (F.col("version") > F.col("tv")))
-                .drop("tv")
-            )
-        growing = live.select(
-            "id", base.post_map(self.meta["metric"], d).alias("distance")
-        ).where(F.col("distance") < F.lit(float(radius)))
+        growing = growing.where(F.col("distance") < F.lit(float(radius)))
         merged = sealed.select("id", "distance").unionByName(growing)
         return merged.groupBy("id").agg(F.min("distance").alias("distance"))
 
@@ -541,15 +547,10 @@ class FreshVectorIndex:
                     return
 
             sealed_path = os.path.join(self._gen_dir(old_gen), "sealed")
-            if self.meta["sealed_kind"] == "flat":
-                sealed_rows = self.spark.read.parquet(
-                    os.path.join(sealed_path, "rows")
-                ).select("id", "vec")
-            else:
-                sub = {"ivf": "lists", "hnsw": "graph"}[self.meta["sealed_kind"]]
-                sealed_rows = self.spark.read.parquet(
-                    os.path.join(sealed_path, sub)
-                ).select("id", "vec")
+            sealed_rows = base.stored_vectors(
+                self.spark.read.parquet(os.path.join(sealed_path, self.sealed.STORAGE_DIR)),
+                self.sealed.meta.get("storage", "f32"),
+            ).select("id", "vec")
             # IVF multi-assignment (replicas>1) stores each id in several
             # lists; dedup before rebuilding or every compaction multiplies
             # rows and storage by the replica factor.
@@ -562,29 +563,13 @@ class FreshVectorIndex:
                 )
             live = sealed_rows
             if delta is not None:
-                d_live = delta
-                if tomb_agg is not None:
-                    d_live = (
-                        delta.join(F.broadcast(tomb_agg), "id", "left")
-                        .where(F.col("tv").isNull() | (F.col("version") > F.col("tv")))
-                        .drop("tv")
-                    )
                 # an id can live on both sides (re-insert) or twice in the
                 # delta; keep the newest version per id (sealed rows rank as
                 # version 0 — they predate every delta append)
-                from pyspark.sql import Window
-
-                live = (
-                    sealed_rows.withColumn("version", F.lit(0))
-                    .unionByName(d_live.select("id", "vec", "version"))
-                    .withColumn(
-                        "_rn",
-                        F.row_number().over(
-                            Window.partitionBy("id").orderBy(F.col("version").desc())
-                        ),
+                live = _newest(
+                    sealed_rows.withColumn("version", F.lit(0)).unionByName(
+                        _visible(delta, tomb_agg).select("id", "vec", "version")
                     )
-                    .where(F.col("_rn") == 1)
-                    .select("id", "vec")
                 )
 
             idx_cls = _KINDS[self.meta["sealed_kind"]]
@@ -616,28 +601,8 @@ class FreshVectorIndex:
         generation's files are never touched (apply_updates' dynamic
         partition overwrite unlinks and writes fresh inodes; the old
         generation keeps its links)."""
-        from pyspark.sql import Window
-
-        d_live = None
-        if delta is not None:
-            d_live = delta
-            if tomb_agg is not None:
-                d_live = (
-                    delta.join(F.broadcast(tomb_agg), "id", "left")
-                    .where(F.col("tv").isNull() | (F.col("version") > F.col("tv")))
-                    .drop("tv")
-                )
-            # newest version per id wins within the delta
-            d_live = (
-                d_live.withColumn(
-                    "_rn",
-                    F.row_number().over(
-                        Window.partitionBy("id").orderBy(F.col("version").desc())
-                    ),
-                )
-                .where(F.col("_rn") == 1)
-                .select("id", "vec")
-            )
+        # newest version per id wins within the delta
+        d_live = None if delta is None else _newest(_visible(delta, tomb_agg))
         old_sealed = os.path.join(self._gen_dir(old_gen), "sealed")
         new_sealed = os.path.join(self._gen_dir(old_gen + 1), "sealed")
         shutil.rmtree(self._gen_dir(old_gen + 1), ignore_errors=True)
@@ -794,19 +759,7 @@ class IndexTransaction:
     def insert(self, df: DataFrame) -> None:
         """Stage (id, vector) rows — the transactional ``aminsert``."""
         self._check_open()
-        idx = self._idx
-        v = self._next_version()
-        kernel, do_norm = base.resolve_metric(idx.meta["metric"])
-        vec = base.normalized_col(idx.meta["vector_col"], do_norm).cast("array<float>")
-        w = (
-            df.where(F.col(idx.meta["vector_col"]).isNotNull())
-            .select(
-                F.col(idx.meta["id_col"]).cast("long").alias("id"),
-                vec.alias("vec"),
-                F.lit(v).alias("version"),
-            )
-            .write.mode("append")
-        )
+        w = self._idx._delta_rows(df, self._next_version()).write.mode("append")
         self._staged_write(w, os.path.join(self._dir, "delta", "rows"))
         self._staged += 1
         self._touch()

@@ -837,3 +837,40 @@ def test_ivf_compaction_job_budget(spark, emb):
             idx.compact()
         assert jobs.n <= 16, f"compact() launched {jobs.n} Spark jobs"
         assert idx.stat()["idx_sealed"][0] == 400 - 2 + 3
+
+
+@pytest.mark.parametrize("sealed_kind", ["flat", "ivf", "hnsw"])
+def test_f16_compaction_rebuilds_from_stored_words(spark, tmp_path, sealed_kind):
+    """A full compaction reads an f16 index's stored binary16 words back
+    as vectors (flat always rebuilds; IVF and HNSW rebuild on a large
+    delta or ``incremental=False``).  Values on the f16 grid keep
+    search results exactly equal across the compaction."""
+    import numpy as np
+
+    from pgvecto_rs_spark.indexes.base import local_frame
+
+    x = np.random.default_rng(5).integers(-16, 16, size=(160, 16)) / 8.0
+    rows = [(i, x[i].tolist()) for i in range(len(x))]
+    schema = "vec_id long, embedding array<float>"
+    opts = {"ivf": {"nlist": 4}, "hnsw": {"segment_rows": 200}}.get(sealed_kind, {})
+    idx = FreshVectorIndex.create(
+        spark, local_frame(spark, rows[:140], schema), str(tmp_path / "f"),
+        sealed_kind=sealed_kind, storage="f16", **opts,
+    )
+    idx.delete([0, 1, 2, 3])
+    idx.insert(local_frame(spark, rows[140:], schema))
+    search = {"ivf": {"nprobe": 4}, "hnsw": {"ef_search": 400}}.get(sealed_kind, {})
+    queries = [x[i].tolist() for i in (0, 10, 150)]
+
+    def answers():
+        return [
+            [(r["id"], r["distance"]) for r in idx.search(q, k=8, **search).collect()]
+            for q in queries
+        ]
+
+    before = answers()
+    idx.compact(incremental=None if sealed_kind == "flat" else False)
+    st = idx.stat()
+    assert not st["idx_growing"] and st["idx_sealed"][0] == 156
+    assert idx.sealed.meta["storage"] == "f16"
+    assert answers() == before

@@ -1868,3 +1868,167 @@ class TestDriverServing:
         assert idx._gen == gen + 1
         assert idx.sealed.serve_stats.get("driver", 0) >= 8
         assert all(rows == oracle[i] for i, rows in got)
+
+
+class TestWritePath:
+    """One write path per index: ``create``, ``apply_updates`` and full
+    compaction prepare rows (``base.prepare_rows``), route and encode
+    them the same way, so an update writes exactly what a build of the
+    same rows writes."""
+
+    N, DIMS = 120, 8
+
+    @classmethod
+    def _frame(cls, spark, ids, scale=1.0, null_ids=()):
+        import numpy as np
+
+        from pgvecto_rs_spark.indexes.base import local_frame
+
+        x = np.random.default_rng(11).normal(size=(cls.N + 50, cls.DIMS)).astype(np.float32)
+        rows = [
+            (int(i), None if i in null_ids else (x[i] * scale).tolist(), int(i) % 3)
+            for i in ids
+        ]
+        return local_frame(spark, rows, "id long, vec array<float>, label int")
+
+    @staticmethod
+    def _stored(path, sub):
+        import pyarrow.dataset as pads
+
+        tbl = pads.dataset(f"{path}/{sub}", format="parquet", partitioning="hive").to_table()
+        return sorted(
+            tuple(sorted((k, repr(v)) for k, v in r.items())) for r in tbl.to_pylist()
+        )
+
+    @staticmethod
+    def _create(spark, kind, df, path, metric, quant, replicas=1):
+        from pgvecto_rs_spark.indexes.hnsw import HNSWIndex
+
+        opts = {"storage": "f16"} if quant == "f16" else {"quantization": quant}
+        if kind == "ivf":
+            return IVFIndex.create(
+                spark, df, path, vector_col="vec", id_col="id", metric=metric, nlist=4,
+                replicas=replicas, payload_cols=["label"], pq_ratio=2, **opts,
+            )
+        return HNSWIndex.create(
+            spark, df, path, vector_col="vec", id_col="id", metric=metric,
+            segment_rows=40, pq_ratio=2, **opts,
+        )
+
+    @pytest.mark.parametrize("metric", ["l2", "cos"])
+    @pytest.mark.parametrize(
+        "kind,quant,replicas",
+        [("ivf", q, r) for q in (None, "sq8", "pq", "rabitq", "f16") for r in (1, 2)]
+        + [("hnsw", q, 1) for q in (None, "sq8", "pq", "rabitq", "f16")],
+    )
+    def test_delete_and_reinsert_round_trips(self, spark, tmp_path, kind, quant, replicas, metric):
+        """Deleting ids and re-inserting the same rows through
+        ``apply_updates`` leaves every list or segment holding exactly
+        the rows ``create`` wrote: same routing, codes, f16 words and
+        graphs.  (HNSW cos inserts were stored unnormalized.)"""
+        from pgvecto_rs_spark.indexes.base import local_frame
+
+        path = str(tmp_path / "idx")
+        idx = self._create(spark, kind, self._frame(spark, range(self.N)), path, metric, quant, replicas)
+        sub = "lists" if kind == "ivf" else "graph"
+        built = self._stored(path, sub)
+        back = [3, 4, 50, 51, 52, 97, 119]
+        assert idx.apply_updates(delete_ids=local_frame(spark, [(i,) for i in back], "id long"))
+        assert idx.meta["n_rows"] == self.N - len(back)
+        assert idx.apply_updates(insert_rows=self._frame(spark, back))
+        assert idx.meta["n_rows"] == self.N
+        assert self._stored(path, sub) == built
+
+    @pytest.mark.parametrize("kind", ["ivf", "hnsw"])
+    def test_cos_update_matches_build_scale(self, spark, tmp_path, kind):
+        """A cos index normalizes inserted vectors as ``create`` does: a
+        row inserted at 10x its length is found at distance 0 from
+        itself (cos distances lie in [0, 2])."""
+        idx = self._create(spark, kind, self._frame(spark, range(self.N)), str(tmp_path / "i"), "cos", None)
+        new = self._frame(spark, [self.N + 7], scale=10.0)
+        assert idx.apply_updates(insert_rows=new)
+        q = new.first()["vec"]
+        top = idx.search(q, k=1).collect() if kind == "hnsw" else idx.search(q, k=1, nprobe=4).collect()
+        assert top[0]["id"] == self.N + 7
+        assert abs(top[0]["distance"]) < 1e-6
+
+    @pytest.mark.parametrize("kind", ["ivf", "hnsw"])
+    def test_null_vector_insert_is_skipped(self, spark, tmp_path, kind):
+        """``apply_updates`` skips a NULL-vector insert like ``create``
+        does (am.rs:199-211); ``n_rows`` counts only the other rows."""
+        idx = self._create(spark, kind, self._frame(spark, range(100)), str(tmp_path / "i"), "l2", None)
+        ins = self._frame(spark, [100, 101, 102], null_ids={101})
+        assert idx.apply_updates(insert_rows=ins)
+        assert idx.meta["n_rows"] == 102
+        ids = {r["id"] for r in idx.search(ins.first()["vec"], k=200).collect()} if kind == "hnsw" \
+            else {r["id"] for r in idx.search(ins.first()["vec"], k=200, nprobe=4).collect()}
+        assert {100, 102} <= ids and 101 not in ids
+
+
+class TestQueryMemo:
+    """``queries._core._Memo``: one bounded cache keyed on the Spark
+    application id and the input file's (path, mtime, size)."""
+
+    class _Spark:
+        def __init__(self, app):
+            self.sparkContext = type("SC", (), {"applicationId": app})()
+
+    def test_key_follows_application_and_file(self, tmp_path):
+        import os
+
+        from pgvecto_rs_spark.queries._core import _Memo
+
+        f = tmp_path / "docs.parquet"
+        f.write_bytes(b"abc")
+        a, b = self._Spark("app-1"), self._Spark("app-2")
+        k = _Memo.key(a, str(f))
+        assert _Memo.key(a, str(f)) == k
+        assert _Memo.key(b, str(f)) != k
+        st = os.stat(f)
+        os.utime(f, (st.st_atime, st.st_mtime + 5))
+        k_mtime = _Memo.key(a, str(f))
+        assert k_mtime != k
+        f.write_bytes(b"abcd")
+        os.utime(f, (st.st_atime, st.st_mtime + 5))
+        assert _Memo.key(a, str(f)) not in (k, k_mtime)
+        assert _Memo.key(a, str(f), 3) != _Memo.key(a, str(f), 4)
+
+    def test_hits_within_a_session_and_bounded(self, tmp_path):
+        from pgvecto_rs_spark.queries._core import _Memo
+
+        memo, built = _Memo(2), []
+        files = []
+        for i in range(3):
+            f = tmp_path / f"f{i}"
+            f.write_text(str(i))
+            files.append(str(f))
+        s = self._Spark("app-1")
+
+        def get(path, spark=s):
+            return memo.get(spark, path, lambda: built.append(path) or len(built))
+
+        assert get(files[0]) == get(files[0]) == 1
+        assert get(files[1]) == 2 and get(files[0]) == 1
+        get(files[2])  # evicts files[1], the least recently used
+        assert len(memo._data) == 2
+        assert get(files[0]) == 1 and get(files[1]) == 4
+        assert get(files[1], self._Spark("app-2")) == 5
+        assert len(memo._data) == 2
+
+
+def test_flat_rows_files_load_through_unit_cache(spark, emb, tmp_path):
+    """Driver-served flat search decodes each rows file once: the
+    files sit in the fingerprint-keyed unit cache, and a second search
+    reads the cached entries."""
+    import glob
+
+    from pgvecto_rs_spark.indexes import segment_worker as SW
+
+    path = str(tmp_path / "flat")
+    idx = FlatIndex.create(spark, emb, path, metric="l2")
+    files = sorted(glob.glob(f"{path}/rows/*.parquet"))
+    first = [tuple(r) for r in idx.search(Q64, k=5).collect()]
+    cached = {f: SW._LIST_CACHE._data[f][1] for f in files if f in SW._LIST_CACHE._data}
+    assert set(cached) == set(files)
+    assert [tuple(r) for r in idx.search(Q64, k=5).collect()] == first
+    assert all(SW._LIST_CACHE._data[f][1] is cached[f] for f in files)
