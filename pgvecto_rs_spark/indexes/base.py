@@ -233,11 +233,16 @@ def apply_residual(df: DataFrame, filter=None, exclude: DataFrame | None = None)
     DataFrame that has an ``id`` column.
 
     ``exclude`` is a DataFrame with an ``id`` column (e.g. tombstones) and
-    is applied as a broadcast LEFT ANTI join — never collected to the
-    driver, never turned into an IN-list.  At 100 TB the tombstone set can
-    be millions of ids; an anti-join shuffles nothing on the big side and
-    ships only the id set to executors (compaction bounds its size via the
-    delete threshold)."""
+    is applied as a broadcast LEFT ANTI join, never turned into an
+    IN-list: at 100 TB the tombstone set can be millions of ids; an
+    anti-join shuffles nothing on the big side and ships only the id set
+    to executors (compaction bounds its size via the delete threshold).
+    These are the Spark plans.  A call the driver serves
+    (``batch.route``: an index under ``batch.DRIVER_SERVE_BYTES``) takes
+    both as id masks inside the block runners instead: the filter
+    resolved over the scanned units' stored columns
+    (``batch.allowed``), and an ``exclude`` held in the driver, whose
+    collect runs no job (``batch.denied``)."""
     if filter is not None:
         df = df.where(filter)
     if exclude is not None:

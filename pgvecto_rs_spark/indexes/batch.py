@@ -47,12 +47,19 @@ am_scan.rs).  ``segment_worker``'s fingerprint-keyed caches keep the
 units warm in the driver as they do in executors.  Above the budget,
 or for a query set assembled on executors, Spark runs the pairs.  Each
 index handle counts the decision in ``serve_stats``.
+
+Residual calls take the same path.  The runners drop masked rows
+before each query's window: a ``filter`` becomes the ids passing it
+(``allowed``), a driver-held ``exclude`` frame the ids to drop
+(``denied``), and a fresh index hands its tombstones over as a deny
+array directly.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import threading
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -147,16 +154,68 @@ def serve_cost(index, n_queries: int, scans: float = 1) -> int:
     return int(max(scan, rows * min(n_queries, BLOCK_ROWS) * 8))
 
 
+#: guards the per-handle counters: driver threads serving one handle
+#: update them together
+_TALLY_LOCK = threading.Lock()
+
+
+def tally(stats: dict, key: str) -> None:
+    """Add one to ``stats[key]``, a per-handle counter (``serve_stats``,
+    ``IVFIndex.widen_stats``)."""
+    with _TALLY_LOCK:
+        stats[key] = stats.get(key, 0) + 1
+
+
+def decide(handle, driver: bool) -> bool:
+    """Count a serving decision in ``handle.serve_stats`` and return
+    it."""
+    tally(handle.serve_stats, "driver" if driver else "spark")
+    return driver
+
+
 def route(index, eligible: bool = True, n_queries: int = 1, scans: float = 1) -> bool:
     """True to serve in the driver: an ``eligible`` call (collected
-    queries, no filter or exclusion, a runner-backed scan) whose
-    ``serve_cost`` fits ``DRIVER_SERVE_BYTES`` (read at call time).
-    Counts the decision in ``index.serve_stats``."""
+    queries, a runner-backed scan, an exclusion set held in the driver)
+    whose ``serve_cost`` fits ``DRIVER_SERVE_BYTES`` (read at call
+    time).  Counts the decision in ``index.serve_stats``."""
     cost = serve_cost(index, max(1, n_queries), scans)
-    driver = eligible and cost <= DRIVER_SERVE_BYTES
-    side = "driver" if driver else "spark"
-    index.serve_stats[side] = index.serve_stats.get(side, 0) + 1
-    return driver
+    return decide(index, eligible and cost <= DRIVER_SERVE_BYTES)
+
+
+def local_exclude(exclude: DataFrame | None) -> bool:
+    """Whether an ``exclude`` frame can become a deny mask: none, or
+    driver-held, so that collecting it runs no Spark job."""
+    return exclude is None or exclude.isLocal()
+
+
+def denied(exclude: DataFrame | None):
+    """The ids of a driver-held ``exclude`` frame as an int64 array,
+    None without one."""
+    if exclude is None:
+        return None
+    return np.asarray([r[0] for r in exclude.select("id").collect()], dtype=np.int64)
+
+
+def allowed(index, filter, files: list, schema, base_dir: str | None = None,
+            keys: tuple = ("id",)) -> np.ndarray:
+    """The ``keys`` of the stored rows in ``files`` that pass
+    ``filter``, an (n, len(keys)) int64 array.  The rows' non-vector
+    columns, named by the Spark ``schema`` (Hive partition columns come
+    from the paths under ``base_dir``), are read with pyarrow into a
+    driver-held frame; Catalyst folds the ``where`` into the local
+    relation, so the collect runs no Spark job (a Python UDF in the
+    filter runs one)."""
+    import pyarrow.dataset as pads
+
+    if not files:
+        return np.empty((0, len(keys)), dtype=np.int64)
+    tbl = pads.dataset(
+        list(files), format="parquet", partitioning="hive" if base_dir else None,
+        partition_base_dir=base_dir,
+    ).to_table(columns=schema.names)
+    frame = index.spark.createDataFrame(tbl, schema)
+    rows = frame.where(filter).select(*keys).collect()
+    return np.asarray(rows, dtype=np.int64).reshape(len(rows), len(keys))
 
 
 def kernel_below(index, radius: float) -> float:

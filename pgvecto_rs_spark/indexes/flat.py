@@ -163,18 +163,46 @@ class FlatIndex:
     def _files(self) -> list[str]:
         return sorted(glob.glob(os.path.join(self.path, "rows", "*.parquet")))
 
-    def _serve(self, query, k: int | None = None, radius: float | None = None) -> DataFrame:
-        """Exact top-k or sphere in the driver: ``flat_file_block_runner``
-        over every rows file as a batch of one (``batch.serve``)."""
+    def _id_type(self) -> str:
         files = self._files()
+        return base.stored_schema(files[0])["id"].dataType.simpleString() if files else "bigint"
+
+    def _driver_scans(self, op: str, opts: dict) -> float:
+        """The scans a driver-served ``op`` ("search" or "range_search")
+        weighs in ``batch.route``, 0 when it has no driver path: the
+        exact scans (an SQ sphere runs the two-phase plan)."""
+        quant = self.meta.get("quantization")
+        return float(quant is None if op == "search" else quant not in _SQ_KINDS)
+
+    def _serve(self, query, k: int | None = None, radius: float | None = None,
+               filter=None, deny=None):
+        """Exact top-k or sphere in the driver: ``flat_file_block_runner``
+        over every rows file as a batch of one (``batch.serve``), the
+        ``filter`` resolved to the ids passing it (``batch.allowed``) and
+        ``deny`` dropped: (ids, distances)."""
+        from pyspark.sql.types import StructType
+
+        files = self._files()
+        allow = None
+        if filter is not None and files:
+            schema = StructType([base.stored_schema(files[0])["id"]])
+            allow = BT.allowed(self, filter, files, schema)[:, 0]
         vec_col = "vec16" if self.meta.get("storage") == "f16" else "vec"
         run = SW.flat_file_block_runner(
             self.meta["kernel"], BT.EVERY_ROW if k is None else int(k), vec_col,
             below=None if radius is None else BT.kernel_below(self, radius),
+            allow=allow, deny=deny,
         )
-        ids, dist = BT.serve(self, query, files, run, k, radius=radius)
-        id_type = base.stored_schema(files[0])["id"].dataType.simpleString() if files else "bigint"
-        return BT.frame(self, ids, dist, id_type)
+        return BT.serve(self, query, files, run, k, radius=radius)
+
+    def _serve_search(self, query, k: int, deny=None, filter=None, rerank_size: int = 0):
+        """``search`` in the driver, with ``search``'s keywords: (ids,
+        distances)."""
+        return self._serve(query, k=k, filter=filter, deny=deny)
+
+    def _serve_range(self, query, radius: float, deny=None, filter=None):
+        """``range_search`` in the driver: (ids, distances)."""
+        return self._serve(query, radius=radius, filter=filter, deny=deny)
 
     def search(
         self,
@@ -189,16 +217,18 @@ class FlatIndex:
         ``rerank_size`` > 0 selects the fixed window instead (GUC
         sq_rerank_size semantics, src/gucs/executing.rs:4-14).  pq and
         rabitq estimators carry no sound error bound and always use the
-        window.  ``exclude`` is an id-set DataFrame removed via broadcast
-        anti-join (tombstones) before ranking.
+        window.  ``exclude`` is an id-set DataFrame removed before
+        ranking (tombstones).
 
-        Unquantized, unfiltered search on an index under
-        ``batch.DRIVER_SERVE_BYTES`` runs in the driver and returns an
-        eager, driver-held result; every other call returns a lazy
-        Spark plan."""
+        Unquantized search on an index under ``batch.DRIVER_SERVE_BYTES``
+        runs in the driver and returns an eager, driver-held result: the
+        ``filter`` becomes the ids passing it, a driver-held ``exclude``
+        the ids to drop.  Every other call returns a lazy Spark plan,
+        ``exclude`` a broadcast anti-join."""
+        if BT.route(self, self._driver_scans("search", {}) > 0 and BT.local_exclude(exclude)):
+            ids, dist = self._serve_search(query, k, BT.denied(exclude), filter)
+            return BT.frame(self, ids, dist, self._id_type())
         quant = self.meta.get("quantization")
-        if BT.route(self, filter is None and exclude is None and quant is None):
-            return self._serve(query, k=k)
         q = base.prep_query(query, self.meta["normalize"])
         if not rerank_size:
             # alter(default_rerank_size) persists the reference's
@@ -247,12 +277,14 @@ class FlatIndex:
         estimators carry no sound bound, so those cells fall back to
         the exact vector scan (same answer, no I/O skip).
 
-        The exact scans of an unfiltered call on an index under
-        ``batch.DRIVER_SERVE_BYTES`` run in the driver and return an
-        eager, driver-held result."""
+        The exact scans on an index under ``batch.DRIVER_SERVE_BYTES``
+        run in the driver, with ``filter`` and a driver-held ``exclude``
+        as id masks, and return an eager, driver-held result."""
+        if BT.route(self, self._driver_scans("range_search", {}) > 0
+                    and BT.local_exclude(exclude)):
+            ids, dist = self._serve_range(query, radius, BT.denied(exclude), filter)
+            return BT.frame(self, ids, dist, self._id_type())
         quant = self.meta.get("quantization")
-        if BT.route(self, filter is None and exclude is None and quant not in _SQ_KINDS):
-            return self._serve(query, radius=radius)
         q = base.prep_query(query, self.meta["normalize"])
         df = base.apply_residual(self._rows(), filter, exclude)
         if quant in _SQ_KINDS:

@@ -37,6 +37,7 @@ SIMD dispatch).
 
 from __future__ import annotations
 
+import glob
 import heapq
 import os
 from typing import Sequence
@@ -755,25 +756,44 @@ class HNSWIndex:
         Rebuilding a segment from its live rows yields the same graph a
         full rebuild would (the build is deterministic on the sorted
         member set).  Returns the rebuilt segment ids.
+
+        The touched segments come from one aggregate over the hashed
+        deletes and inserts.  The segments' surviving rows plus the new
+        rows are checkpointed once and written, and one aggregate over
+        that checkpoint gives each rebuilt segment's row count: a missing
+        segment ended up empty, and ``n_rows`` is those counts plus the
+        untouched segments' Parquet footers, with no count over the
+        graph.
         """
-        affected: set[int] = set()
+        import pyarrow.parquet as pq
+
+        storage = self.meta.get("storage", "f32")
+        moved = []
         if delete_ids is not None:
-            dels = delete_ids.select(F.col(id_col).alias("id"))
-            affected |= {r["seg"] for r in self._with_seg(dels).select("seg").distinct().collect()}
+            dels = delete_ids.select(F.col(id_col).cast("long").alias("id"))
+            moved.append(self._with_seg(dels).select("seg"))
         add = None
         if insert_rows is not None:
             add = self._with_seg(base.prepare_rows(
                 insert_rows, F.col(id_col).cast("long"), vector_col,
-                self.meta["normalize"], self.meta.get("storage", "f32"),
+                self.meta["normalize"], storage,
             ))
-            affected |= {r["seg"] for r in add.select("seg").distinct().collect()}
-        if not affected:
+            moved.append(add.select("seg"))
+        if not moved:
+            return []
+        moved = moved[0] if len(moved) == 1 else moved[0].unionByName(moved[1])
+        segs = sorted(r["seg"] for r in moved.distinct().collect())
+        if not segs:
             return []
 
         graph_dir = os.path.join(self.path, "graph")
-        segs = sorted(affected)
-        old = self.spark.read.parquet(graph_dir).where(F.col("seg").isin(segs))
-        live = base.stored_vectors(old, self.meta.get("storage", "f32")).select("seg", "id", "vec")
+        first = next(glob.iglob(os.path.join(graph_dir, "seg=*", "*.parquet")), None)
+        reader = self.spark.read
+        if first is not None:
+            # the stored schema spares Spark's footer-inference job
+            reader = reader.schema(base.stored_schema(first).add("seg", "integer"))
+        old = reader.parquet(graph_dir).where(F.col("seg").isin(segs))
+        live = base.stored_vectors(old, storage).select("seg", "id", "vec")
         if delete_ids is not None:
             live = live.join(F.broadcast(dels), "id", "left_anti")
         if add is not None:
@@ -789,19 +809,22 @@ class HNSWIndex:
         # on next read while untouched segments stay resident
         _write_segments(self.meta, live, len(segs), graph_dir, dynamic=True)
         # a segment can become empty: remove its stale directory so the
-        # loader's fingerprint sees it as empty (computed from the
+        # loader's fingerprint sees it as empty (counted from the
         # checkpointed live rows — re-deriving it from the written
         # segments would re-run the graph builds)
         import shutil
 
-        present = {r["seg"] for r in live.select("seg").distinct().collect()}
+        counts = {r["seg"]: r["count"] for r in live.groupBy("seg").count().collect()}
         for s in segs:
-            if s not in present:
+            if s not in counts:
                 shutil.rmtree(os.path.join(graph_dir, f"seg={s}"), ignore_errors=True)
-
-        total = self.spark.read.parquet(graph_dir).count()
+        untouched = sum(
+            pq.ParquetFile(f).metadata.num_rows
+            for s in range(self.meta["n_segments"]) if s not in segs
+            for f in glob.glob(os.path.join(graph_dir, f"seg={s}", "*.parquet"))
+        )
         self._storage_bytes = None
-        self.meta["n_rows"] = int(total)
+        self.meta["n_rows"] = int(untouched + sum(counts.values()))
         base.write_meta(self.path, self.meta)
         return segs
 
@@ -826,6 +849,69 @@ class HNSWIndex:
         cand = self.spark.createDataFrame(rdd, schema="id bigint, distance double")
         return cand.withColumn("distance", base.post_map(metric, F.col("distance")))
 
+    def _driver_scans(self, op: str, opts: dict) -> float:
+        """The scans a driver-served ``op`` ("search" or "range_search")
+        weighs in ``batch.route``, 0 when it has no driver path: graph
+        search (not ``exact``) and the sphere scan (``_RANGE_SCANS``)."""
+        if op == "search":
+            return 0.0 if opts.get("exact") else 1.0
+        return float(_RANGE_SCANS)
+
+    def _allowed(self, filter):
+        """The ids passing ``filter`` over the stored (id, seg) columns
+        (``batch.allowed``), None without a filter."""
+        from pyspark.sql.types import StructType
+
+        if filter is None:
+            return None
+        graph_dir = os.path.join(self.path, "graph")
+        files = sorted(glob.glob(os.path.join(graph_dir, "seg=*", "*.parquet")))
+        schema = StructType.fromDDL("id bigint, seg int")
+        return BT.allowed(self, filter, files, schema, graph_dir)[:, 0]
+
+    def _serve_search(self, query, k: int, deny=None, filter=None,
+                      ef_search: int | None = None, max_widen: int = 3, exact: bool = False):
+        """``search``'s graph ladder in the driver: each round runs
+        ``hnsw_segment_block_runner`` over the segments as a batch of
+        one with the id masks; a residual call short of k rows widens ef
+        4x up to ``max_widen`` times, then ranks every resident vector
+        exactly (``topk_runner``), as the Spark plan does.  Takes
+        ``search``'s keywords (``exact`` has no driver path, see
+        ``_driver_scans``); returns (ids, distances)."""
+        kernel = self.meta["kernel"]
+        quant, qparams = self._quant()
+        seg_dirs = self._segment_dirs()
+        ef = max(self._resolve_ef(ef_search), k)
+        allow = self._allowed(filter)
+        residual = allow is not None or deny is not None
+        n_rows = self.meta["n_rows"]
+        for _ in range(max_widen + 1):
+            run = SW.hnsw_segment_block_runner(quant, qparams, kernel, ef, allow, deny)
+            ids, dist = BT.serve(self, query, seg_dirs, run, k)
+            if not residual or len(ids) >= min(k, n_rows) or ef >= n_rows:
+                return ids, dist
+            ef *= 4
+        q = base.prep_query(query, self.meta["normalize"])
+        run = SW.topk_runner(quant, qparams, kernel, q, k, exact=True, keep_all=True)
+        rows = [(0, i, d) for i, d in run(iter(seg_dirs))]
+        keep = SW._kept(np.asarray([r[1] for r in rows], dtype=np.int64), allow, deny)
+        _, ids, dist = BT.merge(self, [r for r, kept in zip(rows, keep) if kept], k)
+        return ids, dist
+
+    def _serve_range(self, query, radius: float, deny=None, filter=None,
+                     ef_search: int | None = None):
+        """``range_search`` in the driver: ``range_runner`` over the
+        segments with the id masks, (ids, distances)."""
+        metric = self.meta["metric"]
+        kradius = float(radius) - 1.0 if metric == "cos" else float(radius)
+        quant, qparams = self._quant()
+        run = SW.range_runner(
+            quant, qparams, self.meta["kernel"], base.prep_query(query, self.meta["normalize"]),
+            kradius, self._resolve_ef(ef_search), self._allowed(filter), deny,
+        )
+        _, ids, dist = BT.merge(self, [(0, i, d) for i, d in run(iter(self._segment_dirs()))])
+        return ids, dist
+
     def search(
         self,
         query: Sequence[float],
@@ -846,17 +932,19 @@ class HNSWIndex:
         brute-scans the resident vectors — the full-rerank mode used for
         oracle checks of the storage/merge path.
 
-        Unfiltered graph search on an index under
-        ``batch.DRIVER_SERVE_BYTES`` runs ``hnsw_segment_block_runner``
-        in the driver as a batch of one and returns an eager,
-        driver-held result; every other call returns a Spark plan."""
+        Graph search on an index under ``batch.DRIVER_SERVE_BYTES`` runs
+        the same ladder in the driver (``_serve_search``), with
+        ``filter`` and a driver-held ``exclude`` as id masks, and returns
+        an eager, driver-held result; every other call returns a Spark
+        plan."""
+        if BT.route(self, self._driver_scans("search", {"exact": exact}) > 0
+                    and BT.local_exclude(exclude)):
+            return BT.frame(self, *self._serve_search(
+                query, k, BT.denied(exclude), filter, ef_search, max_widen
+            ))
         q = base.prep_query(query, self.meta["normalize"])
         ef = max(self._resolve_ef(ef_search), k)
         residual = filter is not None or exclude is not None
-        if BT.route(self, not residual and not exact):
-            quant, qparams = self._quant()
-            run = SW.hnsw_segment_block_runner(quant, qparams, self.meta["kernel"], ef)
-            return BT.frame(self, *BT.serve(self, query, self._segment_dirs(), run, k))
         if exact:
             out = self._candidates(q, ef=max(ef, k), exact=True, keep_all=residual)
             out = base.apply_residual(out, filter, exclude)
@@ -909,10 +997,15 @@ class HNSWIndex:
         exact at ef = segment size, which the widening reaches for any
         radius whose sphere contains ≥ ef candidates).
 
-        An unfiltered call on an index under a tenth of
-        ``batch.DRIVER_SERVE_BYTES`` (``_RANGE_SCANS``) runs the same
-        per-segment scan in the driver and returns an eager,
-        driver-held result."""
+        A call on an index under a tenth of ``batch.DRIVER_SERVE_BYTES``
+        (``_RANGE_SCANS``) runs the same per-segment scan in the driver,
+        with ``filter`` and a driver-held ``exclude`` as id masks, and
+        returns an eager, driver-held result."""
+        if BT.route(self, BT.local_exclude(exclude),
+                    scans=self._driver_scans("range_search", {})):
+            return BT.frame(self, *self._serve_range(
+                query, radius, BT.denied(exclude), filter, ef_search
+            ))
         kernel, metric = self.meta["kernel"], self.meta["metric"]
         kradius = float(radius) - 1.0 if metric == "cos" else float(radius)
         quant, qparams = self._quant()
@@ -922,10 +1015,6 @@ class HNSWIndex:
         run = SW.range_runner(
             quant, qparams, kernel, q, kradius, self._resolve_ef(ef_search)
         )
-        if BT.route(self, filter is None and exclude is None, scans=_RANGE_SCANS):
-            _, ids, dist = BT.merge(self, [(0, i, d) for i, d in run(iter(seg_dirs))])
-            return BT.frame(self, ids, dist)
-
         rdd = sc.parallelize(seg_dirs, len(seg_dirs)).mapPartitions(run)
         out = self.spark.createDataFrame(rdd, schema="id bigint, distance double")
         out = out.withColumn("distance", base.post_map(metric, F.col("distance")))

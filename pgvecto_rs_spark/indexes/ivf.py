@@ -599,49 +599,22 @@ class IVFIndex:
         Scan fraction approaches nprobe-like selectivity for small
         radii and degrades gracefully to a full scan for huge ones.
 
-        An unfiltered call on an index under ``batch.DRIVER_SERVE_BYTES``
-        scans the surviving lists in the driver (``ivf_block_runner``
-        over the worker list cache) and returns an eager, driver-held
-        result.
+        A call on an index under ``batch.DRIVER_SERVE_BYTES`` scans the
+        surviving lists in the driver (``ivf_block_runner`` over the
+        worker list cache), with ``filter`` and a driver-held ``exclude``
+        as id masks, and returns an eager, driver-held result.
         """
-        kernel = self.meta["kernel"]
-        if self.meta["nlist"] == 0:  # empty index (issue_427 build path)
-            return base.local_frame(self.spark, [], "id long, distance double")
-        q = base.prep_query(query, self.meta["normalize"])
-        rad = self.list_radii()
-        n = len(rad)
-        kradius = (
-            float(radius) - 1.0 if self.meta["metric"] == "cos" else float(radius)
-        )
-        d_c = base.np_kernel_distance(kernel, self.centroids.astype(np.float64), q)[:n]
-        if kernel == "l2":
-            lb = np.maximum(0.0, np.sqrt(np.maximum(d_c, 0.0)) - rad) ** 2
-        else:
-            lb = d_c - float(np.linalg.norm(q)) * rad
-        # relative epsilon margin: the bound holds for real arithmetic;
-        # a last-ulp overestimate of lb must never prune a borderline
-        # list on an exactness-guaranteed path.  FP error in lb scales
-        # with |d_c| and |q|·R (for dot/cos these can dwarf |kradius|),
-        # so the margin tracks the bound's own magnitude elementwise.
-        margin = 1e-9 * np.maximum.reduce(
-            [np.full_like(lb, max(1.0, abs(kradius))), np.abs(lb), np.abs(d_c)]
-        )
-        lists = np.nonzero(lb < kradius + margin)[0].tolist()
         schema = "id long, distance double"
-        driver = BT.route(self, filter is None and exclude is None)
+        if self.meta["nlist"] == 0:  # empty index (issue_427 build path)
+            return base.local_frame(self.spark, [], schema)
+        if BT.route(self, BT.local_exclude(exclude)):
+            ids, dist = self._serve_range(query, radius, BT.denied(exclude), filter)
+            return BT.frame(self, ids, dist, self._id_type())
+        q = base.prep_query(query, self.meta["normalize"])
+        lists = self._sphere_lists(q, radius)
         if not lists:
             return base.local_frame(self.spark, [], schema)
-        if driver:
-            # probing every list restricts the runner to the chunk: the
-            # surviving lists
-            run = SW.ivf_block_runner(
-                self.centroids.astype(np.float64), kernel, n, BT.EVERY_ROW,
-                os.path.join(self.path, "lists"), self._vec_col(),
-                below=BT.kernel_below(self, radius),
-            )
-            ids, dist = BT.serve(self, query, [lists], run, radius=radius)
-            id_type = _lists_schema(os.path.join(self.path, "lists"))["id"].dataType
-            return BT.frame(self, ids, dist, id_type.simpleString())
+        n = len(self.list_radii())
         if len(lists) > 0.5 * n:
             # a radius spanning most of the space can't prune usefully;
             # skip the per-partition enumeration (a 1000-term isin only
@@ -661,6 +634,72 @@ class IVFIndex:
         if self.meta.get("replicas", 1) > 1:
             out = out.dropDuplicates(["id"])
         return out
+
+    def _sphere_lists(self, q: np.ndarray, radius: float) -> list[int]:
+        """The lists whose triangle-inequality bound (``range_search``)
+        lets them hold a row under ``radius``."""
+        kernel = self.meta["kernel"]
+        rad = self.list_radii()
+        kradius = (
+            float(radius) - 1.0 if self.meta["metric"] == "cos" else float(radius)
+        )
+        d_c = base.np_kernel_distance(kernel, self.centroids.astype(np.float64), q)[: len(rad)]
+        if kernel == "l2":
+            lb = np.maximum(0.0, np.sqrt(np.maximum(d_c, 0.0)) - rad) ** 2
+        else:
+            lb = d_c - float(np.linalg.norm(q)) * rad
+        # relative epsilon margin: the bound holds for real arithmetic;
+        # a last-ulp overestimate of lb must never prune a borderline
+        # list on an exactness-guaranteed path.  FP error in lb scales
+        # with |d_c| and |q|·R (for dot/cos these can dwarf |kradius|),
+        # so the margin tracks the bound's own magnitude elementwise.
+        margin = 1e-9 * np.maximum.reduce(
+            [np.full_like(lb, max(1.0, abs(kradius))), np.abs(lb), np.abs(d_c)]
+        )
+        return np.nonzero(lb < kradius + margin)[0].tolist()
+
+    def _serve_range(self, query, radius: float, deny=None, filter=None):
+        """``range_search`` in the driver: the surviving lists scanned by
+        ``ivf_block_runner`` (probing every list restricts the runner to
+        its chunk, the surviving lists), with the id masks: (ids,
+        distances)."""
+        if self.meta["nlist"] == 0:
+            return np.empty(0, np.int64), np.empty(0)
+        lists = self._sphere_lists(base.prep_query(query, self.meta["normalize"]), radius)
+        if not lists:
+            return np.empty(0, np.int64), np.empty(0)
+        keys = None if filter is None else self._allowed(filter, lists)
+        run = SW.ivf_block_runner(
+            self.centroids.astype(np.float64), self.meta["kernel"], len(self.centroids),
+            BT.EVERY_ROW, os.path.join(self.path, "lists"), self._vec_col(),
+            below=BT.kernel_below(self, radius),
+            allow=None if keys is None else keys[:, 0], deny=deny,
+        )
+        return BT.serve(self, query, [lists], run, radius=radius)
+
+    def _allowed(self, filter, lists: list[int]) -> np.ndarray:
+        """(id, list_id) of the rows in ``lists`` passing ``filter``
+        (``batch.allowed`` over id, the payload columns and list_id)."""
+        from pyspark.sql.types import StructType
+
+        lists_dir = os.path.join(self.path, "lists")
+        files = self._list_files(lists)
+        if not files:
+            return np.empty((0, 2), dtype=np.int64)
+        names = {"id", "list_id", *self.meta.get("payload_cols", [])}
+        schema = StructType([f for f in _lists_schema(lists_dir).fields if f.name in names])
+        return BT.allowed(self, filter, files, schema, lists_dir, ("id", "list_id"))
+
+    def _list_files(self, lists: list[int]) -> list[str]:
+        lists_dir = os.path.join(self.path, "lists")
+        return [
+            f for lid in lists
+            for f in glob.glob(os.path.join(lists_dir, f"list_id={lid}", "*.parquet"))
+        ]
+
+    def _id_type(self) -> str:
+        schema = _lists_schema(os.path.join(self.path, "lists"))
+        return "bigint" if schema is None else schema["id"].dataType.simpleString()
 
     def _widen_certified(self, q: np.ndarray, np_eff: int, rows) -> bool:
         """Exactness certificate for the filtered-widening early stop
@@ -747,47 +786,99 @@ class IVFIndex:
         the first pass scores decoded ``centroid + residual̂`` codes and
         a rerank window gets exact distances (two-phase).
 
-        Unquantized (f32 or f16), unfiltered search on an index under
-        ``batch.DRIVER_SERVE_BYTES`` runs in the driver and returns an
-        eager, driver-held result with the same columns; every other
-        call returns a Spark plan.
+        Unquantized (f32 or f16) search on an index under
+        ``batch.DRIVER_SERVE_BYTES`` runs in the driver, ladder included
+        (``_serve_search``), and returns an eager, driver-held result
+        with the same columns; every other call returns a Spark plan.
         """
-        if nprobe is None:
-            nprobe = int(self.meta.get("default_nprobe")
-                         or default_nprobe(self.meta["nlist"]))
+        nprobe = self._nprobe(nprobe)
         if self.meta["nlist"] == 0:  # empty index (issue_427 build path)
             return base.local_frame(self.spark, [], "id long, distance double")
-        residual = filter is not None or exclude is not None
-        if BT.route(self, not residual and self._quant() is None):
-            return self._serve(query, k, nprobe)
-        if residual and max_widen > 0:
-            # Escalation ladder (cost-bounded, r11 advice): per round,
-            # stop on the first of
-            #   full      — probed every list: exact by construction;
-            #   certified — _widen_certified's ball/Cauchy-Schwarz
-            #               bound proves the kept top-k is the global
-            #               filtered top-k: exact.
-            # Otherwise probe 4x more lists, up to max_widen rounds.
-            # self.widen_stats counts stop reasons per handle so the
-            # certification rate is measurable (ADVICE r11).
-            q_ = base.prep_query(query, self.meta["normalize"])
-            np_eff = nprobe
-            stats = self.widen_stats
-            for _ in range(max_widen + 1):
+        if BT.route(self, self._driver_scans("search", {}) > 0 and BT.local_exclude(exclude)):
+            return self._stored(*self._ladder(query, k, nprobe, filter, max_widen, BT.denied(exclude)))
+        if (filter is not None or exclude is not None) and max_widen > 0:
+
+            def scan(np_eff):
                 out = self._scan(query, k, np_eff, filter, rerank_size, exclude)
                 rows = out.limit(k).collect()
-                stats["rounds"] = stats.get("rounds", 0) + 1
-                enough = len(rows) >= min(k, self.meta["n_rows"])
-                if np_eff >= self.meta["nlist"]:
-                    stats["full"] = stats.get("full", 0) + 1
-                    return base.local_frame(self.spark, rows, out.schema)
-                if enough and self._widen_certified(q_, np_eff, rows):
-                    stats["certified"] = stats.get("certified", 0) + 1
-                    return base.local_frame(self.spark, rows, out.schema)
-                np_eff = min(self.meta["nlist"], np_eff * 4)
-            stats["exhausted"] = stats.get("exhausted", 0) + 1
-            return base.local_frame(self.spark, rows, out.schema)
+                return rows, (rows, out.schema)
+
+            rows, schema = self._widen(query, k, nprobe, max_widen, scan)
+            return base.local_frame(self.spark, rows, schema)
         return self._scan(query, k, nprobe, filter, rerank_size, exclude)
+
+    def _nprobe(self, nprobe: int | None) -> int:
+        if nprobe is not None:
+            return nprobe
+        return int(self.meta.get("default_nprobe") or default_nprobe(self.meta["nlist"]))
+
+    def _widen(self, query, k: int, nprobe: int, max_widen: int, scan):
+        """The escalation ladder of a residual search (cost-bounded, r11
+        advice): ``scan(np_eff)`` returns (the kept rows, an answer),
+        and each round stops on the first of
+
+        - full: probed every list, exact by construction;
+        - certified: ``_widen_certified``'s ball/Cauchy-Schwarz bound
+          proves the kept top-k is the global filtered top-k, exact.
+
+        Otherwise it probes 4x more lists, up to ``max_widen`` rounds,
+        and returns the last answer.  ``widen_stats`` counts rounds and
+        stop reasons per handle, on the driver and the Spark side alike,
+        so the certification rate is measurable (ADVICE r11)."""
+        q = base.prep_query(query, self.meta["normalize"])
+        nlist, n_rows = self.meta["nlist"], self.meta["n_rows"]
+        np_eff = nprobe
+        for _ in range(max_widen + 1):
+            rows, answer = scan(np_eff)
+            BT.tally(self.widen_stats, "rounds")
+            if np_eff >= nlist:
+                BT.tally(self.widen_stats, "full")
+                return answer
+            if len(rows) >= min(k, n_rows) and self._widen_certified(q, np_eff, rows):
+                BT.tally(self.widen_stats, "certified")
+                return answer
+            np_eff = min(nlist, np_eff * 4)
+        BT.tally(self.widen_stats, "exhausted")
+        return answer
+
+    def _ladder(self, query, k: int, nprobe: int, filter, max_widen: int, deny):
+        """``search`` in the driver: ``ivf_block_runner`` over the batch
+        chunks as a batch of one at ``nprobe``, with the id masks; a
+        ``filter`` or ``deny`` mask climbs the same ladder (``_widen``),
+        each round resolving the filter over its probed lists.  Returns
+        (ids, distances, the probed lists, the (id, list_id) rows passing
+        the filter)."""
+        q = base.prep_query(query, self.meta["normalize"])
+
+        def scan(np_eff):
+            probed = self.probe_lists(q, np_eff)
+            keys = None if filter is None else self._allowed(filter, probed)
+            run = SW.ivf_block_runner(
+                self.centroids.astype(np.float64), self.meta["kernel"], int(np_eff),
+                int(k), os.path.join(self.path, "lists"), self._vec_col(),
+                allow=None if keys is None else keys[:, 0], deny=deny,
+            )
+            ids, dist = BT.serve(self, query, self._chunks(), run, k)
+            return [{"distance": d} for d in dist.tolist()], (ids, dist, probed, keys)
+
+        if (filter is None and deny is None) or max_widen <= 0:
+            return scan(nprobe)[1]
+        return self._widen(query, k, nprobe, max_widen, scan)
+
+    def _driver_scans(self, op: str, opts: dict) -> float:
+        """The scans a driver-served ``op`` ("search" or "range_search")
+        weighs in ``batch.route``, 0 when it has no driver path: every
+        range scan, and unquantized top-k (quantized top-k runs the
+        two-phase plan)."""
+        return float(op != "search" or self._quant() is None)
+
+    def _serve_search(self, query, k: int, deny=None, filter=None, nprobe=None,
+                      rerank_size: int = 0, max_widen: int = 3):
+        """``search`` in the driver, with ``search``'s keywords:
+        (ids, distances)."""
+        if self.meta["nlist"] == 0:
+            return np.empty(0, np.int64), np.empty(0)
+        return self._ladder(query, k, self._nprobe(nprobe), filter, max_widen, deny)[:2]
 
     def _quant(self) -> str | None:
         return self.meta.get("quantization") or (
@@ -803,36 +894,28 @@ class IVFIndex:
         n_chunks = min(nlist, self.spark.sparkContext.defaultParallelism)
         return [list(range(c, nlist, n_chunks)) for c in range(n_chunks)]
 
-    def _serve(self, query, k: int, nprobe: int) -> DataFrame:
-        """Unquantized top-k in the driver: ``ivf_block_runner`` over the
-        batch chunks as a batch of one (``batch.serve``), then the
-        winners' stored columns — those the Spark plan returns — read
-        from the probed lists (a replicated row from its smallest list
-        id)."""
+    def _stored(self, ids: np.ndarray, dist: np.ndarray, probed: list[int],
+                keys: np.ndarray | None) -> DataFrame:
+        """The driver result with the columns the Spark plan returns: the
+        winners' stored columns, read from the ``probed`` lists (a
+        replicated row from its smallest list id among the rows passing
+        the filter, whose (id, list_id) are ``keys``)."""
         import pyarrow.dataset as pads
         from pyspark.sql.types import StructType
 
         lists_dir = os.path.join(self.path, "lists")
-        run = SW.ivf_block_runner(
-            self.centroids.astype(np.float64), self.meta["kernel"], int(nprobe),
-            int(k), lists_dir, self._vec_col(),
-        )
-        ids, dist = BT.serve(self, query, self._chunks(), run, k)
         schema = StructType(
             [f for f in _lists_schema(lists_dir).fields if f.name not in ("vec", "codes", "rq")]
         ).add("distance", "double")
         rec: dict[int, dict] = {}
         if len(ids):
-            q = base.prep_query(query, self.meta["normalize"])
-            files = [
-                f for lid in self.probe_lists(q, nprobe)
-                for f in glob.glob(os.path.join(lists_dir, f"list_id={lid}", "*.parquet"))
-            ]
             held = pads.dataset(
-                files, format="parquet", partitioning="hive", partition_base_dir=lists_dir
+                self._list_files(probed), format="parquet", partitioning="hive", partition_base_dir=lists_dir
             ).to_table(columns=schema.names[:-1], filter=pads.field("id").isin(ids.tolist()))
+            passing = None if keys is None else set(map(tuple, keys.tolist()))
             for r in held.sort_by("list_id").to_pylist():
-                rec.setdefault(int(r["id"]), r)
+                if passing is None or (r["id"], r["list_id"]) in passing:
+                    rec.setdefault(int(r["id"]), r)
         rows = [
             tuple({**rec[i], "distance": d}[c] for c in schema.names)
             for i, d in zip(ids.tolist(), dist.tolist())
@@ -922,8 +1005,7 @@ class IVFIndex:
         from pgvecto_rs_spark.indexes.flat import _SQ_KINDS
 
         meta = self.meta
-        if nprobe is None:
-            nprobe = int(meta.get("default_nprobe") or default_nprobe(meta["nlist"]))
+        nprobe = self._nprobe(nprobe)
         nlist = meta["nlist"]
         if nlist == 0:  # empty index (issue_427 build path)
             return base.local_frame(

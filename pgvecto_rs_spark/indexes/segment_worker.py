@@ -501,10 +501,11 @@ def topk_runner(quant, qparams, kernel: str, q: np.ndarray, ef: int,
 
 
 def range_runner(quant, qparams, kernel: str, q: np.ndarray, kradius: float,
-                 ef0: int):
+                 ef0: int, allow=None, deny=None):
     """mapPartitions runner for the VBASE sphere scan: per-segment
     in-task ef widening until the ordered stream crosses the radius
-    (see HNSWIndex.range_search for the stop-rule rationale)."""
+    (see HNSWIndex.range_search for the stop-rule rationale).  The id
+    mask (``_kept``) drops rows from the emitted sphere."""
     q = np.asarray(q, dtype=np.float64)
 
     def run(it):
@@ -539,8 +540,12 @@ def range_runner(quant, qparams, kernel: str, q: np.ndarray, kradius: float,
                 ):
                     break
                 ef = min(ef * 4, n)
+            out_i = np.asarray(out_i, dtype=np.int64)
             mask = out_d < kradius
-            for i, d in zip(np.asarray(out_i)[mask], out_d[mask]):
+            kept = _kept(ids[out_i], allow, deny)
+            if kept is not None:
+                mask &= kept
+            for i, d in zip(out_i[mask], out_d[mask]):
                 yield (int(ids[int(i)]), float(d))
 
     return run
@@ -578,6 +583,30 @@ def assemble_block(rows, normalize: bool):
     if not qids:
         return None
     return (qids, np.vstack(vecs))
+
+
+def _kept(ids: np.ndarray, allow=None, deny=None):
+    """Which of ``ids`` an id mask keeps: those in ``allow`` (when
+    given) and not in ``deny`` — a residual filter resolved to the ids
+    passing it, and an exclusion set such as a fresh index's
+    tombstones.  None when there is no mask."""
+    if allow is None and deny is None:
+        return None
+    keep = np.ones(len(ids), dtype=bool) if allow is None else np.isin(ids, allow)
+    if deny is not None:
+        keep &= ~np.isin(ids, deny)
+    return keep
+
+
+def _masked(ids: np.ndarray, unit, allow=None, deny=None):
+    """(ids, payload) of one loaded unit without the masked rows; the
+    unit as loaded when unmasked."""
+    keep = _kept(ids, allow, deny)
+    if keep is None or unit is None:
+        return ids, unit
+    if isinstance(unit, tuple):
+        return ids[keep], tuple(u[keep] for u in unit)
+    return ids[keep], unit[keep]
 
 
 def _block_topk_emit(qids, d, ids, k, below=None):
@@ -780,13 +809,14 @@ def _rerank_emit(kernel: str, source, windows: list):
 
 def flat_file_block_runner(kernel: str, k: int, vec_col: str = "vec",
                            quant=None, params=None, win: int = 0,
-                           below: float | None = None):
+                           below: float | None = None, allow=None, deny=None):
     """Runner over (block, parquet_file) pairs: one gemm per pair, over
     the file as decoded once per process (``_load_unit``).  A
     quantized index reads the file's codes instead, keeps each query's
     top ``win`` by approximate distance and reranks them exactly.
     ``below`` (unquantized) emits only rows under that kernel
-    distance."""
+    distance.  The id mask (``_kept``) drops rows before any query's
+    window, so the window holds the residual top-k."""
     col = _unit_col(quant, vec_col)
 
     def run(pairs):
@@ -794,7 +824,7 @@ def flat_file_block_runner(kernel: str, k: int, vec_col: str = "vec",
             if blk is None:
                 continue
             qids, qmat = blk
-            ids, unit = _load_unit(path, col)
+            ids, unit = _masked(*_load_unit(path, col), allow, deny)
             if not len(ids):
                 continue
             if quant is None:
@@ -814,9 +844,13 @@ def flat_file_block_runner(kernel: str, k: int, vec_col: str = "vec",
     return run
 
 
-def hnsw_segment_block_runner(quant, qparams, kernel: str, ef: int):
+def hnsw_segment_block_runner(quant, qparams, kernel: str, ef: int,
+                              allow=None, deny=None):
     """Runner over (block, seg_dir) pairs: the segment graph loads once
-    per task (worker LRU cache) and answers every query in the block."""
+    per task (worker LRU cache) and answers every query in the block.
+    The id mask (``_kept``) drops a query's masked candidates before its
+    rerank and its ``ef`` window: the graph search itself is the
+    unfiltered one."""
 
     def run(pairs):
         for blk, seg_dir in pairs:
@@ -830,6 +864,9 @@ def hnsw_segment_block_runner(quant, qparams, kernel: str, ef: int):
             union: set[int] = set()
             for qid, q in zip(qids, qmat):
                 ds, idxs = _search_graph(vecs, neighbors, levels, entry, q, kernel, ef)
+                keep = _kept(ids[idxs.astype(np.int64)], allow, deny)
+                if keep is not None:
+                    ds, idxs = ds[keep], idxs[keep]
                 per_q.append((qid, q, idxs, ds))
                 if quant in _RERANK_QUANTS:
                     union.update(int(i) for i in idxs)
@@ -891,7 +928,8 @@ def _load_params(path: str) -> np.ndarray:
 
 def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
                      lists_dir: str, vec_col: str = "vec", quant=None,
-                     params=None, win: int = 0, below: float | None = None):
+                     params=None, win: int = 0, below: float | None = None,
+                     allow=None, deny=None):
     """Runner over (block, list-id chunk) pairs: each task probes its
     block's nearest lists and scans, with pyarrow, ONLY the probed lists
     inside its chunk (the static partition-pruning of the DataFrame
@@ -900,7 +938,8 @@ def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
     codes, keeps each query's top ``win`` over the chunk (best adist per
     id: a replicated row sits in several lists) and reranks them with
     one exact fetch over the chunk's probed lists.  ``below``
-    (unquantized) emits only rows under that kernel distance."""
+    (unquantized) emits only rows under that kernel distance.  The id
+    mask (``_kept``) drops rows before any query's window."""
     import os as _os
 
     col = _unit_col(quant, vec_col)
@@ -932,7 +971,7 @@ def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
                 ldir = _os.path.join(lists_dir, f"list_id={lid}")
                 if not _os.path.isdir(ldir):
                     continue
-                ids, unit = _load_unit(ldir, col)
+                ids, unit = _masked(*_load_unit(ldir, col), allow, deny)
                 if not len(ids):
                     continue
                 if quant is None:

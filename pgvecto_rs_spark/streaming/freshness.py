@@ -50,10 +50,13 @@ import shutil
 import threading
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pgvecto_rs_spark.indexes import base
+from pgvecto_rs_spark.indexes import batch as BT
+from pgvecto_rs_spark.indexes import segment_worker as SW
 from pgvecto_rs_spark.indexes.flat import FlatIndex
 from pgvecto_rs_spark.indexes.hnsw import HNSWIndex
 from pgvecto_rs_spark.indexes.ivf import IVFIndex
@@ -118,6 +121,17 @@ def _visible(delta: DataFrame, tomb_agg: DataFrame | None) -> DataFrame:
     )
 
 
+def _visible_mask(gids: np.ndarray, gver: np.ndarray, tids: np.ndarray,
+                  tver: np.ndarray) -> np.ndarray:
+    """``_visible`` over driver-held arrays: which growing rows (ids
+    ``gids`` at versions ``gver``) beat their id's newest tombstone
+    (``tids`` sorted, ``tver`` each one's newest version)."""
+    if not len(tids):
+        return np.ones(len(gids), dtype=bool)
+    pos = np.minimum(np.searchsorted(tids, gids), len(tids) - 1)
+    return (tids[pos] != gids) | (gver > tver[pos])
+
+
 def _newest(rows: DataFrame) -> DataFrame:
     """(id, vec): the highest-version row per id."""
     from pyspark.sql import Window
@@ -136,7 +150,12 @@ class FreshVectorIndex:
         # writers + manifest commits serialize on this; readers don't
         self._write_lock = threading.RLock()
         self._compact_lock = threading.Lock()
+        # memo of per-fingerprint reads (``_memo``): serving threads read
+        # it while commits clear it
+        self._cache_lock = threading.Lock()
         self._df_cache: dict = {}
+        #: searches served in the driver vs by Spark (``batch.decide``)
+        self.serve_stats: dict[str, int] = {}
         self._migrate_legacy_layout()
         self._gen = self._read_manifest()
         cls = _KINDS[self.meta["sealed_kind"]]
@@ -179,7 +198,7 @@ class FreshVectorIndex:
                 return
             cls = _KINDS[self.meta["sealed_kind"]]
             self.sealed = cls.open(self.spark, os.path.join(self._gen_dir(gen), "sealed"))
-            self._df_cache.clear()
+            self._clear_cache()
             self._gen = gen
             self.meta = base.read_meta(self.path)
 
@@ -324,10 +343,10 @@ class FreshVectorIndex:
         anti-join worth a fifth of the index).  Returns True if a
         compaction ran.
 
-        Both counts are cached per file fingerprint: the growing row
-        count comes from the Parquet footers (no Spark job), the dead
-        id count from the materialized ``_tomb_agg`` that the next
-        search and ``compact`` reuse.  The sealed side's ``n_rows`` is
+        Neither count runs a Spark job: the growing row count comes from
+        the Parquet footers, the dead id count from the driver-held
+        tombstone map (``_tomb_map``), each cached per file fingerprint.
+        The sealed side's ``n_rows`` is
         the index's own bookkeeping: an incremental IVF fold sets it to
         old − leaving + arriving and re-derives the touched lists'
         radii from the checkpoint it writes (``IVFIndex.apply_updates``),
@@ -355,13 +374,22 @@ class FreshVectorIndex:
     def _memo(self, key: str, fp: tuple, build):
         """``build()``, cached under ``key`` until the file fingerprint
         ``fp`` changes.  Inserts/deletes change the fingerprint; writers
-        and commits clear ``_df_cache`` outright."""
-        hit = self._df_cache.get(key)
+        and commits clear ``_df_cache`` outright.  A lock guards the
+        lookups and inserts, as in ``segment_worker._FileLRU``; builds
+        run outside it, and two threads missing the same key both build
+        it."""
+        with self._cache_lock:
+            hit = self._df_cache.get(key)
         if hit is not None and hit[0] == fp:
             return hit[1]
         val = build()
-        self._df_cache[key] = (fp, val)
+        with self._cache_lock:
+            self._df_cache[key] = (fp, val)
         return val
+
+    def _clear_cache(self) -> None:
+        with self._cache_lock:
+            self._df_cache.clear()
 
     def _read_cached(self, sub: str, files: tuple[str, ...] | None = None) -> DataFrame | None:
         """DataFrame handle for the growing/tombstone rows, cached per
@@ -395,18 +423,19 @@ class FreshVectorIndex:
         return self._read_cached("delta")
 
     def _tomb_agg(self, files: tuple[str, ...] | None = None) -> DataFrame | None:
-        """Per-id max tombstone version, as a DataFrame — never collected
-        to the driver (at scale the tombstone set is millions of ids; it
-        flows into searches as a broadcast anti-/left-join only).
+        """Per-id max tombstone version, as a DataFrame: what the Spark
+        plans join against — searches over the driver budget
+        (``batch.DRIVER_SERVE_BYTES``), as a broadcast anti-/left-join,
+        and ``compact``.  Under the budget, searches take the same map
+        from the driver-held ``_tomb_map`` instead.
 
         The aggregate is MATERIALIZED once per tombstone-file
         fingerprint (eager localCheckpoint, cached like the raw handles
-        in ``_read_cached``): every search consumes it in TWO broadcast
-        builds (sealed-side anti-join + growing-side visibility join),
-        so without this each search re-ran the tombstone parquet scan +
-        groupBy twice — the in-memory delete map the reference keeps
-        (crates/index/src/delete.rs) is the design analogue.  ``files``
-        pins the snapshot as in ``_read_cached``."""
+        in ``_read_cached``): every Spark-side search consumes it in TWO
+        broadcast builds (sealed-side anti-join + growing-side
+        visibility join), so without this each search re-ran the
+        tombstone parquet scan + groupBy twice.  ``files`` pins the
+        snapshot as in ``_read_cached``."""
         fp = self._fingerprint("tombstones", files)
         if not fp:
             return None
@@ -418,14 +447,96 @@ class FreshVectorIndex:
             .localCheckpoint(eager=True),
         )
 
+    def _growing_rows(self, fp: tuple):
+        """(ids, vectors, versions) of the growing segment's files in the
+        fingerprint ``fp``, read with pyarrow once per fingerprint."""
+
+        def load():
+            import pyarrow.dataset as pads
+
+            if not fp:
+                return np.empty(0, np.int64), np.empty((0, 0)), np.empty(0, np.int64)
+            tbl = pads.dataset([f for f, _, _ in fp], format="parquet").to_table(
+                columns=["id", "vec", "version"]
+            )
+            return (
+                tbl.column("id").to_numpy().astype(np.int64),
+                SW._read_vec_matrix_from(tbl.column("vec"), np.float64),
+                tbl.column("version").to_numpy().astype(np.int64),
+            )
+
+        return self._memo("growing", fp, load)
+
+    def _tomb_map(self, fp: tuple):
+        """The tombstone map held in the driver: (ids sorted, each id's
+        newest tombstone version) over the tombstone files in ``fp``,
+        read with pyarrow once per fingerprint — the in-memory delete
+        map of crates/index/src/delete.rs."""
+
+        def load():
+            import pyarrow.dataset as pads
+
+            if not fp:
+                return np.empty(0, np.int64), np.empty(0, np.int64)
+            tbl = pads.dataset([f for f, _, _ in fp], format="parquet").to_table(
+                columns=["id", "version"]
+            )
+            ids = tbl.column("id").to_numpy().astype(np.int64)
+            ver = tbl.column("version").to_numpy().astype(np.int64)
+            o = np.lexsort((ver, ids))
+            ids, ver = ids[o], ver[o]
+            last = np.r_[ids[1:] != ids[:-1], True] if len(ids) else np.zeros(0, bool)
+            return ids[last], ver[last]
+
+        return self._memo("tomb_map", fp, load)
+
     def _dead_ids(self) -> int:
-        """Distinct tombstoned ids, counted once per tombstone snapshot
-        from the materialized ``_tomb_agg``."""
-        files = self._list_files("tombstones")
-        fp = self._fingerprint("tombstones", files)
-        if not fp:
-            return 0
-        return self._memo("dead_ids", fp, lambda: self._tomb_agg(files).count())
+        """Distinct tombstoned ids, from the driver-held tombstone map."""
+        return len(self._tomb_map(self._fingerprint("tombstones"))[0])
+
+    def _serve(self, op: str, query: Sequence[float], arg, opts: dict) -> DataFrame | None:
+        """``op`` ("search" with k, or "range_search" with a radius) over
+        sealed ∪ growing − tombstones in the driver, or None for the
+        Spark plans.  The growing and tombstone file bytes add to the
+        sealed index's ``batch.serve_cost`` against
+        ``batch.DRIVER_SERVE_BYTES``.  Under it, the sealed index serves
+        the call with the tombstoned ids as a deny mask (sealed rows
+        predate every tombstone), the visible growing rows are scored
+        exactly in numpy, and each id keeps its best distance."""
+        gen = self._gen  # before the sealed handle: see ``_commit``
+        sealed = self.sealed
+        fps = [self._fingerprint(sub, self._list_files(sub, gen)) for sub in ("delta", "tombstones")]
+        held = sum(size for fp in fps for _, _, size in fp)
+        scans = sealed._driver_scans(op, opts)
+        if not BT.decide(self, scans > 0 and BT.serve_cost(sealed, 1, scans) + held
+                         <= BT.DRIVER_SERVE_BYTES):
+            return None
+        gids, gvec, gver = self._growing_rows(fps[0])
+        tids, tver = self._tomb_map(fps[1])
+        deny = tids if fps[1] else None
+        serve = sealed._serve_search if op == "search" else sealed._serve_range
+        ids, dist = serve(query, arg, deny, **opts)
+        vis = _visible_mask(gids, gver, tids, tver)
+        gi, gd = gids[vis], np.empty(0)
+        if len(gi):
+            kernel, do_norm = base.resolve_metric(self.meta["metric"])
+            # the growing plan's query literal is array<float>
+            # (``_growing``), so its rows score against the f32 query
+            q32 = base.prep_query(query, do_norm).astype(np.float32).astype(np.float64)
+            gd = SW.np_kernel_distance(kernel, gvec[vis], q32)
+            if self.meta["metric"] == "cos":
+                gd = gd + 1.0
+        if op == "range_search":
+            inside = gd < float(arg)
+            gi, gd = gi[inside], gd[inside]
+        ids, dist = np.concatenate([ids, gi]), np.concatenate([dist, gd])
+        # the same id can be visible on both sides (re-insert without
+        # delete): keep its best distance, then the (distance, id) order
+        o = np.lexsort((dist, ids))
+        first = np.r_[True, ids[o][1:] != ids[o][:-1]] if len(o) else np.zeros(0, bool)
+        ids, dist = ids[o][first], dist[o][first]
+        o = np.lexsort((ids, dist))[: arg if op == "search" else None]
+        return BT.frame(self, ids[o], dist[o])
 
     def _growing(self, query: Sequence[float], tomb_agg: DataFrame | None) -> DataFrame | None:
         """(id, distance) of the visible growing rows: brute-force exact
@@ -442,18 +553,24 @@ class FreshVectorIndex:
 
     def search(self, query: Sequence[float], k: int = 10, **search_opts) -> DataFrame:
         """Top-k over sealed ∪ growing, minus tombstoned rows — the
-        vbase union + delete filter (crates/index/src/lib.rs:387-423)."""
+        vbase union + delete filter (crates/index/src/lib.rs:387-423).
+        Returns (id, distance): eager and driver-held when ``_serve``
+        serves it in the driver, else a Spark plan."""
         self._refresh()
+        served = self._serve("search", query, k, search_opts)
+        if served is not None:
+            return served
         tomb_agg = self._tomb_agg()
 
         # sealed side: rows predate all tombstones -> any tombstone kills
         # (broadcast anti-join inside the index's widening loop)
         sealed = self.sealed.search(query, k=k, exclude=tomb_agg, **search_opts)
+        sealed = sealed.select(F.col("id").cast("long"), "distance")
 
         growing = self._growing(query, tomb_agg)
         if growing is None:
             return sealed
-        merged = sealed.select("id", "distance").unionByName(growing)
+        merged = sealed.unionByName(growing)
         # the same id can be visible on both sides (re-insert without
         # delete); keep its best distance, dedup BEFORE the limit so the
         # result never falls short of k
@@ -468,17 +585,22 @@ class FreshVectorIndex:
         ``range_search`` (pruned: IVF triangle-inequality lists, HNSW
         stream widening, flat SQ code-bound prefilter) unions a
         brute-forced exact range over the small delta with version
-        visibility, deduped to each id's best distance."""
+        visibility, deduped to each id's best distance.  Returns (id,
+        distance), in the driver under the budget as ``search`` is."""
         self._refresh()
+        served = self._serve("range_search", query, radius, search_opts)
+        if served is not None:
+            return served
         tomb_agg = self._tomb_agg()
         sealed = self.sealed.range_search(
             query, radius, exclude=tomb_agg, **search_opts
         )
+        sealed = sealed.select(F.col("id").cast("long"), "distance")
         growing = self._growing(query, tomb_agg)
         if growing is None:
             return sealed
         growing = growing.where(F.col("distance") < F.lit(float(radius)))
-        merged = sealed.select("id", "distance").unionByName(growing)
+        merged = sealed.unionByName(growing)
         return merged.groupBy("id").agg(F.min("distance").alias("distance"))
 
     # ------------------------------------------------------------------
@@ -500,11 +622,15 @@ class FreshVectorIndex:
                     os.link(f, os.path.join(dst, os.path.basename(f)))
                 os.makedirs(os.path.join(self._gen_dir(new_gen), sub), exist_ok=True)
             self._write_manifest(new_gen)
-            self._gen = new_gen
-            self._df_cache.clear()
+            # the sealed handle before the generation: a reader that takes
+            # the generation, then the handle (``_serve``) pairs the new
+            # sealed index with the old generation's growing rows and
+            # tombstones at worst, whose folded rows it already holds
             self.sealed = _KINDS[self.meta["sealed_kind"]].open(
-                self.spark, os.path.join(self._gen_dir(), "sealed")
+                self.spark, os.path.join(self._gen_dir(new_gen), "sealed")
             )
+            self._gen = new_gen
+            self._clear_cache()
             self._bump()
         self._gc(keep_from=old_gen)
 
@@ -838,12 +964,12 @@ class IndexTransaction:
                     except OSError:
                         pass
                 self._open = False
-                idx._df_cache.clear()
+                idx._clear_cache()
                 raise RuntimeError(
                     f"transaction staging files under {self._dir} vanished "
                     f"during commit ({e}) — staged writes lost"
                 ) from e
-            idx._df_cache.clear()
+            idx._clear_cache()
         if self._staged and published == 0:
             self._open = False
             raise RuntimeError(

@@ -93,12 +93,15 @@ def test_structured_streaming_sink(spark, emb, tmp_path):
         assert idx.stat()["idx_growing"][0] == late.count()
 
 
-def test_bulk_tombstones_100k_no_driver_collect(spark):
+def test_bulk_tombstones_100k_no_driver_collect(spark, monkeypatch):
     """Scale guard: 100k+ tombstones flow through searches and compaction
-    as broadcast anti-joins (the delete.rs bulkdelete path) — never as a
-    driver-side dict or IN-list.  Search and compaction stay correct with
-    a tombstone set far larger than k."""
+    (the delete.rs bulkdelete path) — never as an IN-list: as broadcast
+    anti-joins in the Spark plans, and as a deny mask read from the
+    tombstone files when the driver serves the search.  Search and
+    compaction stay correct with a tombstone set far larger than k."""
     import numpy as np
+
+    from pgvecto_rs_spark.indexes import batch as BT
 
     n = 120_000
     with tempfile.TemporaryDirectory() as d:
@@ -121,6 +124,9 @@ def test_bulk_tombstones_100k_no_driver_collect(spark):
         order = np.lexsort((ids, d2))[:5]
         expect = [(int(ids[i]), float(d2[i])) for i in order]
         assert got == expect
+        with monkeypatch.context() as m:
+            m.setattr(BT, "DRIVER_SERVE_BYTES", 0)
+            assert [tuple(r) for r in idx.search([0.0, 0.0], k=5).collect()] == expect
 
         idx.compact()
         st = idx.stat()
@@ -874,3 +880,83 @@ def test_f16_compaction_rebuilds_from_stored_words(spark, tmp_path, sealed_kind)
     assert not st["idx_growing"] and st["idx_sealed"][0] == 156
     assert idx.sealed.meta["storage"] == "f16"
     assert answers() == before
+
+
+@pytest.mark.parametrize("sealed_kind", ["flat", "ivf", "hnsw"])
+def test_driver_serving_matches_spark(spark, emb, monkeypatch, sealed_kind):
+    """Under the driver budget ``search`` and ``range_search`` serve
+    sealed ∪ growing − tombstones in the driver (the sealed index with
+    the tombstoned ids as a deny mask, the visible growing rows scored in
+    numpy) and launch no Spark job, nor does a ``maybe_compact`` that
+    does not compact.  With inserts, deletes of sealed and growing rows,
+    a re-insert after a delete (visible) and a delete after a re-insert
+    (hidden) pending, the answers equal the Spark plans' at a zero
+    budget: same ids, distances within 1e-9 relative.  Every result is
+    (id, distance), before the writes, with them pending and after the
+    compaction; each call counts one decision per side."""
+    from pgvecto_rs_spark.indexes import batch as BT
+    from tests.conftest import count_jobs
+
+    kw = {"flat": {}, "ivf": {"nlist": 8}, "hnsw": {"segment_rows": 250}}[sealed_kind]
+
+    def both(call, collect=True, ordered=True):
+        with count_jobs(spark) as jobs:
+            got = call()
+            rows = [tuple(r) for r in got.collect()]
+        with monkeypatch.context() as m:
+            m.setattr(BT, "DRIVER_SERVE_BYTES", 0)
+            ref = call()
+            ref_rows = [tuple(r) for r in ref.collect()] if collect else rows
+        assert got.columns == ref.columns == ["id", "distance"] and jobs.n == 0
+        if not ordered:
+            rows, ref_rows = sorted(rows), sorted(ref_rows)
+        assert [r[0] for r in rows] == [r[0] for r in ref_rows]
+        assert all(r[1] == pytest.approx(e[1], rel=1e-9, abs=0) for r, e in zip(rows, ref_rows))
+        return [r[0] for r in rows]
+
+    with tempfile.TemporaryDirectory() as d:
+        idx = FreshVectorIndex.create(
+            spark, emb.where(F.col("vec_id") < 400), d, sealed_kind=sealed_kind, **kw
+        )
+        top = both(lambda: idx.search(Q64, k=10), collect=False)
+        idx.insert(emb.where(F.col("vec_id") >= 400))
+        grown = both(lambda: idx.search(Q64, k=10), collect=False)
+        back, gone = top[0], top[1]
+        young = next(i for i in grown if i >= 400)
+        idx.delete([back, gone, young, top[2]])
+        idx.insert(emb.where(F.col("vec_id").isin(back, gone)))
+        idx.delete([gone])
+        got = both(lambda: idx.search(Q64, k=10))
+        assert back in got and not {gone, young, top[2]} & set(got)
+        sphere = both(lambda: idx.range_search(Q64, 60.0), ordered=False)
+        assert back in sphere and not {gone, young, top[2]} & set(sphere)
+        with count_jobs(spark) as jobs:
+            assert not idx.maybe_compact(max_growing_rows=10**9, delete_threshold=0.99)
+        assert jobs.n == 0
+        assert idx.serve_stats == {"driver": 4, "spark": 4}
+        if sealed_kind == "ivf":
+            idx.compact()
+            both(lambda: idx.search(Q64, k=10), collect=False)
+
+
+def test_hnsw_compaction_job_budget(spark, emb):
+    """compact() on the test_hnsw_incremental_compact shape runs one
+    aggregate for the touched segments, one checkpoint of their
+    surviving and new rows, the segment builds, and one aggregate over
+    that checkpoint for the rebuilt segments' row counts; the untouched
+    segments' counts come from their Parquet footers: at most 18 Spark
+    jobs (recounting the whole graph with separate distinct-segment
+    collects launches 23)."""
+    from tests.conftest import count_jobs
+
+    with tempfile.TemporaryDirectory() as d:
+        idx = FreshVectorIndex.create(
+            spark, emb.where(F.col("vec_id") < 400), d, sealed_kind="hnsw", segment_rows=50
+        )
+        top = [r["id"] for r in idx.search(Q64, k=5).collect()]
+        idx.delete([top[0], top[1]])
+        idx.insert(emb.where((F.col("vec_id") >= 400) & (F.col("vec_id") < 403)))
+        with count_jobs(spark) as jobs:
+            idx.compact()
+        assert jobs.n <= 18, f"compact() launched {jobs.n} Spark jobs"
+        assert idx.stat()["idx_sealed"][0] == 400 - 2 + 3

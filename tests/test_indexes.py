@@ -1743,16 +1743,20 @@ class TestDriverServing:
         )
         idx.search(Q64, k=5).collect()
         assert idx.serve_stats == {"driver": 1}
-        # a filter stays on Spark: one decision for the whole ladder
+        # a filter becomes an id mask: one decision for the whole ladder
         idx.search(Q64, k=5, filter=F.col("tag") == 1).collect()
-        assert idx.serve_stats == {"driver": 1, "spark": 1}
+        assert idx.serve_stats == {"driver": 2}
         monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", 0)
         with count_jobs(spark) as jobs:
             idx.search(Q64, k=5).collect()
-        assert idx.serve_stats == {"driver": 1, "spark": 2} and jobs.n >= 1
+            idx.search(Q64, k=5, filter=F.col("tag") == 1).collect()
+        assert idx.serve_stats == {"driver": 2, "spark": 2} and jobs.n >= 2
         monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", BT.storage_bytes(idx))
         idx.range_search(Q64, 60.0).collect()
-        assert idx.serve_stats == {"driver": 2, "spark": 2}
+        assert idx.serve_stats == {"driver": 3, "spark": 2}
+        # an exclude frame Spark must compute stays on the Spark plan
+        idx.search(Q64, k=5, exclude=emb.select(F.col("vec_id").alias("id")).limit(3)).collect()
+        assert idx.serve_stats == {"driver": 3, "spark": 3}
 
     def test_large_collected_batch_stays_on_spark(self, spark, emb, qdf, monkeypatch, tmp_path):
         """The budget weighs a batch's queries, not only the index bytes:
@@ -1780,6 +1784,66 @@ class TestDriverServing:
         idx.search(Q64, k=5).collect()
         idx.search_batch(qdf, "qid", "qv", k=5).collect()
         assert idx.serve_stats == {"spark": 2, "driver": 1}
+
+    RESIDUAL_CELLS = {
+        "flat": (FlatIndex, {}),
+        "flat_f16": (FlatIndex, {"storage": "f16"}),
+        "ivf": (IVFIndex, {"nlist": 8}),
+        "ivf_f16": (IVFIndex, {"nlist": 8, "storage": "f16"}),
+        "ivf_r2": (IVFIndex, {"nlist": 8, "replicas": 2}),
+        "ivf_r2_f16": (IVFIndex, {"nlist": 8, "replicas": 2, "storage": "f16"}),
+        "hnsw": ("hnsw", {"segment_rows": 250}),
+        "hnsw_f16": ("hnsw", {"segment_rows": 250, "storage": "f16"}),
+    }
+
+    @staticmethod
+    def _same_answers(rows, ref, ordered=True):
+        """Same ids (in order for top-k) and distances within 1e-9
+        relative."""
+        if not ordered:
+            rows, ref = sorted(rows), sorted(ref)
+        assert [r[0] for r in rows] == [r[0] for r in ref]
+        for r, e in zip(rows, ref):
+            assert r[-1] == pytest.approx(e[-1], rel=1e-9, abs=0)
+
+    @pytest.mark.parametrize("cell", list(RESIDUAL_CELLS))
+    def test_residual_matches_spark_path(self, spark, emb, monkeypatch, tmp_path, cell):
+        """Filtered and excluded ``search`` and ``range_search`` run in the
+        driver with id masks and launch no Spark job: same ids and
+        distances as the Spark plans at a zero budget, the IVF widening
+        ladder stopping for the same reasons, and one decision per call
+        on each side."""
+        from pgvecto_rs_spark.indexes import base
+        from pgvecto_rs_spark.indexes import batch as BT
+
+        cls, kw = self.RESIDUAL_CELLS[cell]
+        if cls is IVFIndex:
+            kw = {**kw, "payload_cols": ["label"]}
+        idx = self._create(spark, emb, str(tmp_path / cell), cls, "l2", **kw)
+        exclude = base.local_frame(spark, [(i,) for i in range(0, 500, 3)], "id bigint")
+        label = F.col("label") == 2 if cls is IVFIndex else F.col("id") % 5 == 2
+        calls = [
+            (True, lambda: idx.search(Q64, k=10, filter=label, exclude=exclude)),
+            (False, lambda: idx.range_search(Q64, 60.0, filter=label, exclude=exclude)),
+        ]
+        if cls is IVFIndex:
+            calls.append((True, lambda: idx.search(Q64, k=10, nprobe=2, filter=F.col("list_id") < 4)))
+        stats = getattr(idx, "widen_stats", {})
+        for ordered, call in calls:
+            before = dict(stats)
+            with count_jobs(spark) as jobs:
+                got = call()
+                rows = [tuple(r) for r in got.collect()]
+            mid = dict(stats)
+            with monkeypatch.context() as m:
+                m.setattr(BT, "DRIVER_SERVE_BYTES", 0)
+                ref = call()
+                ref_rows = [tuple(r) for r in ref.collect()]
+            rounds = [{key: b[key] - a.get(key, 0) for key in b} for a, b in ((before, mid), (mid, stats))]
+            assert got.columns == ref.columns and rounds[0] == rounds[1]
+            assert rows and jobs.n == 0
+            self._same_answers(rows, ref_rows, ordered)
+        assert idx.serve_stats == {"driver": len(calls), "spark": len(calls)}
 
     def test_caches_bounded_by_decoded_bytes(self):
         """The worker caches evict by decoded bytes as well as entries;
@@ -1831,10 +1895,13 @@ class TestDriverServing:
             assert jobs.n <= 2, jobs.n
 
     def test_threads_share_driver_caches_during_compaction(self, spark, emb, monkeypatch, tmp_path):
-        """Four threads serve FreshVectorIndex searches in the driver
-        while the main thread compacts, and on after the new generation
-        is published: every answer equals the single-threaded one, with
-        a list cache small enough to evict under the load."""
+        """Four threads serve FreshVectorIndex searches in the driver,
+        with inserts, deletes and a re-insert pending, while the main
+        thread compacts them, and on after the new generation is
+        published: every answer equals the single-threaded one, with a
+        list cache small enough to evict under the load.  A full probe
+        keeps the answers exact on both sides of the compaction."""
+        import sys
         import threading
         from concurrent.futures import ThreadPoolExecutor
 
@@ -1842,14 +1909,21 @@ class TestDriverServing:
         from pgvecto_rs_spark.streaming.freshness import FreshVectorIndex
 
         monkeypatch.setattr(SW._LIST_CACHE, "maxsize", 3)
-        idx = FreshVectorIndex.create(spark, emb, str(tmp_path / "fresh"), sealed_kind="ivf", nlist=8)
+        idx = FreshVectorIndex.create(
+            spark, emb.where(F.col("vec_id") < 400), str(tmp_path / "fresh"),
+            sealed_kind="ivf", nlist=8,
+        )
+        idx.insert(emb.where(F.col("vec_id") >= 400))
+        idx.delete([1, 3, 450])
+        idx.insert(emb.where(F.col("vec_id") == 1))
         qs = [list(r["embedding"]) for r in emb.orderBy("vec_id").limit(8).collect()]
 
         def answer(i):
-            return i, [tuple(r) for r in idx.search(qs[i], k=5, nprobe=3).collect()]
+            return i, [tuple(r) for r in idx.search(qs[i], k=5, nprobe=8).collect()]
 
         oracle = dict(answer(i) for i in range(len(qs)))
-        assert idx.sealed.serve_stats == {"driver": len(qs)}
+        assert oracle[1][0][0] == 1 and all(r[0] != 3 for r in oracle[3])
+        assert idx.serve_stats == {"driver": len(qs)}
         done = threading.Event()
 
         def serve(t):
@@ -1859,14 +1933,19 @@ class TestDriverServing:
                 extra -= done.is_set()
             return got
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futures = [pool.submit(serve, t) for t in range(4)]
-            gen = idx._gen
-            idx.compact()
-            done.set()
-            got = [a for f in futures for a in f.result()]
-        assert idx._gen == gen + 1
-        assert idx.sealed.serve_stats.get("driver", 0) >= 8
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with ThreadPoolExecutor(max_workers=4) as pool:
+                futures = [pool.submit(serve, t) for t in range(4)]
+                gen = idx._gen
+                idx.compact()
+                done.set()
+                got = [a for f in futures for a in f.result(timeout=600)]
+        finally:
+            sys.setswitchinterval(interval)
+        assert idx._gen == gen + 1 and not idx.stat()["idx_growing"]
+        assert idx.serve_stats == {"driver": len(qs) + len(got)}
         assert all(rows == oracle[i] for i, rows in got)
 
 
