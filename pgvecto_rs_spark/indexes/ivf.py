@@ -17,6 +17,9 @@ Spark-first design (SURVEY.md §7 Phase 3):
   reads only nprobe/nlist of the data, the exact analogue of probing
   nprobe inverted lists.  At 100 TB with nlist=1000, nprobe=10 this
   scans ~1% of the corpus, embarrassingly parallel across executors.
+  One writer, ``segment_worker.ivf_list_writer``, writes every list
+  file: build, updates and compaction run it per list inside one
+  grouped Arrow job.
 - **search**: centroid top-nprobe on the driver (numpy over the small
   centroid table), pruned scan, exact kernel distance, TakeOrdered k.
 
@@ -27,14 +30,17 @@ build, queries normalized at search, kernel is Dot, SQL distance is
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
+import shutil
 from typing import Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pgvecto_rs_spark.indexes import base
 from pgvecto_rs_spark.indexes import batch as BT
@@ -116,45 +122,6 @@ def _lloyd(
     return centroids.astype(np.float32)
 
 
-def _compute_list_radii(
-    spark: SparkSession, lists: DataFrame, centroids: np.ndarray, storage: str = "f32"
-) -> dict[int, float]:
-    """max residual L2 norm per list over ``lists`` rows (f64 over the
-    stored values — the same values the exact scan reads; f16 storage
-    decodes the stored binary16 words).  Each Arrow batch reduces to
-    one row per list and the driver takes the max over batches: one
-    job, no shuffle."""
-    bc = spark.sparkContext.broadcast(centroids.astype(np.float64))
-    f16 = storage == "f16"
-    vcol = "vec16" if f16 else "vec"
-
-    def batch_radii(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if f16:
-                mat = np.asarray(
-                    [np.frombuffer(b, dtype=np.float16) for b in pdf[vcol]], dtype=np.float64
-                )
-            else:
-                mat = np.asarray(pdf[vcol].tolist(), dtype=np.float64)
-            lid = pdf["list_id"].to_numpy()
-            res = mat - bc.value[lid]
-            r = np.sqrt(np.einsum("ij,ij->i", res, res))
-            yield pd.DataFrame({"list_id": lid, "r": r}).groupby("list_id", as_index=False).max()
-
-    radii: dict[int, float] = {}
-    rows = (
-        lists.select(F.col("list_id").cast("int"), vcol)
-        .mapInPandas(batch_radii, "list_id int, r double")
-        .collect()
-    )
-    for row in rows:
-        lid = int(row["list_id"])
-        radii[lid] = max(radii.get(lid, 0.0), float(row["r"]))
-    return radii
-
-
 def _lists_schema(lists_dir: str):
     """The lists' Spark schema, ``list_id`` last, read from one list
     file's footer (``base.stored_schema``); None without list files."""
@@ -171,18 +138,19 @@ def _read_lists(spark: SparkSession, lists_dir: str) -> DataFrame:
     return spark.read.schema(schema).parquet(lists_dir)
 
 
-def _save_list_radii(
-    spark: SparkSession,
-    lists: DataFrame,
-    centroids: np.ndarray,
-    nlist: int,
-    path: str,
-    storage: str = "f32",
-) -> None:
-    radii = np.zeros(nlist, dtype=np.float64)
-    for lid, mr in _compute_list_radii(spark, lists, centroids, storage).items():
-        radii[lid] = mr
-    np.save(os.path.join(path, "list_radii.npy"), radii, allow_pickle=False)
+def _snapshot(lists_dir: str) -> dict[int, list[str]]:
+    """Each list's Parquet files, by list id, as the driver sees them
+    now: what ``segment_worker.ivf_list_writer`` reads and the commit
+    unlinks."""
+    snap: dict[int, list[str]] = {}
+    for f in sorted(glob.glob(os.path.join(lists_dir, "list_id=*", "*.parquet"))):
+        snap.setdefault(int(os.path.basename(os.path.dirname(f))[8:]), []).append(f)
+    return snap
+
+
+#: what ``segment_worker.ivf_list_writer`` reports for each list it
+#: rewrote: the ids that left it, the rows added and written, its radius
+_REWRITE_SCHEMA = "list_id int, removed array<bigint>, added bigint, rows bigint, radius double"
 
 
 class IVFIndex:
@@ -313,7 +281,7 @@ class IVFIndex:
             "normalize": do_norm,
             "nlist": int(nlist_eff),
             "dims": int(centroids.shape[1]),
-            "n_rows": int(n_total),
+            "n_rows": 0,  # ``_rewrite`` counts the rows it writes
             "spherical": spherical,
             "payload_cols": list(payload_cols),
             "replicas": int(max(1, min(replicas, nlist_eff))),
@@ -323,6 +291,7 @@ class IVFIndex:
         }
         idx = cls(spark, path, meta, centroids)
         indexed = idx._route(prepared)
+        os.makedirs(path, exist_ok=True)
 
         # --- quantizer constants, trained once here on the residuals
         # (vec − centroid[list]); apply_updates encodes with them as is
@@ -338,7 +307,6 @@ class IVFIndex:
                 indexed, "res", fraction, seed, SAMPLE_CAP, tie="list_id", by_id=True
             )
             dims = int(centroids.shape[1])
-            os.makedirs(path, exist_ok=True)
             if quantization == "pq":
                 books = Qz.pq_train(rx, dims // pq_ratio, bits=pq_bits, seed=seed)
                 np.save(os.path.join(path, "pq_codebooks.npy"), books, allow_pickle=False)
@@ -348,26 +316,10 @@ class IVFIndex:
                 proj = Qz.rabitq_projection(dims, seed)
                 np.save(os.path.join(path, "rabitq_proj.npy"), proj, allow_pickle=False)
 
-        (
-            idx._encode(indexed)
-            .repartition("list_id")
-            .sortWithinPartitions("id")  # row-group min/max skipping for
-            # the rerank's id IN (...) fetch (two-phase quantized scan)
-            .write.mode("overwrite")
-            .partitionBy("list_id")
-            .parquet(os.path.join(path, "lists"))
-        )
-
         np.save(os.path.join(path, "centroids.npy"), centroids, allow_pickle=False)
-        # per-list max residual norm — the triangle-inequality pruning
-        # bound for index-accelerated range search (list_radii docstring);
-        # computed from the WRITTEN lists so stored-f32 rounding is
-        # exactly what the exact range scan will see
-        _save_list_radii(
-            spark, _read_lists(spark, os.path.join(path, "lists")),
-            centroids, int(nlist_eff), path, storage=storage,
-        )
-        base.write_meta(path, meta)
+        np.save(os.path.join(path, "list_radii.npy"), np.zeros(nlist_eff), allow_pickle=False)
+        shutil.rmtree(os.path.join(path, "lists"), ignore_errors=True)
+        idx._rewrite(np.empty(0, np.int64), prepared)
         return idx
 
     @classmethod
@@ -445,114 +397,147 @@ class IVFIndex:
         """Incremental maintenance (the reference merges only affected
         segments, crates/index/src/optimizing/mod.rs:58-105): assign new
         rows to the EXISTING centroids and rewrite ONLY the touched
-        list_id partitions.  Deletes and re-inserts touch the lists that
-        hold their old rows; inserts touch their assigned lists.
-        Untouched list partitions keep their files byte-for-byte;
-        centroids and quantizer constants are never retrained, and the
-        ids to remove reach every scan as a broadcast join, never as a
-        driver list.  Each step runs once:
+        lists.  Deletes and re-inserts touch the lists that hold their
+        old rows; inserts touch their assigned lists.  Untouched lists
+        keep their files byte-for-byte; centroids and quantizer
+        constants are never retrained.
 
-        1. the inserted rows are assigned and encoded into one
-           checkpoint;
-        2. one aggregate returns the touched list ids and the distinct
-           ids leaving (deleted or re-inserted ids the index holds) and
-           arriving (inserted ids);
-        3. the touched lists' surviving rows plus the new rows are
-           checkpointed once, partitioned by ``list_id`` and sorted by
-           id, so the dynamic partition overwrite writes them without a
-           shuffle;
-        4. the touched lists' radii come from that checkpoint, which
-           holds the same f32/f16 values that are written;
-        5. ``n_rows`` becomes old − leaving + arriving, with no count
-           over the lists.
-
+        The ids leaving (deleted ids and the inserted rows' ids) are
+        collected to the driver once and reach every list task as one
+        sorted int64 array in the broadcast write plan, never as an
+        IN-list: 8 bytes per id, so the driver must hold them all.
+        ``insert_rows`` that Spark computes (not ``isLocal()``) are
+        checkpointed once after preparation, so the ids leaving and the
+        rows written come from one evaluation of the input.  Then
+        ``_rewrite`` writes every touched list in one grouped job.
         Returns the rewritten list ids."""
-        import shutil
+        prepared = None
+        leaving = []
+        if delete_ids is not None:
+            leaving.append(delete_ids.select(F.col(id_col).cast("long").alias("id")))
+        if insert_rows is not None:
+            payloads = [c for c in self.meta.get("payload_cols", []) if c in insert_rows.columns]
+            prepared = base.prepare_rows(
+                insert_rows, F.col(id_col).cast("long"), vector_col, self.meta["normalize"],
+                self.meta.get("storage", "f32"), keep=payloads,
+            )
+            if not insert_rows.isLocal():
+                prepared = prepared.localCheckpoint(eager=True)
+            leaving.append(prepared.select("id"))
+        if not leaving:
+            return []
+        ids = functools.reduce(DataFrame.unionByName, leaving).toArrow().column("id")
+        return self._rewrite(np.unique(ids.drop_null().to_numpy()), prepared)
+
+    def _rewrite(self, removes: np.ndarray, prepared: DataFrame | None) -> list[int]:
+        """Write the lists through ``segment_worker.ivf_list_writer``:
+        the ``prepared`` rows (``base.prepare_rows``) routed and encoded,
+        plus one marker row per list, grouped by ``list_id`` in ONE Arrow
+        job; ``removes`` (sorted int64 ids) reach the tasks in the
+        broadcast plan, never as an IN-list.  Each list is one task that
+        holds the whole list in memory (``ivf_list_writer``).  Then
+        ``_commit_lists`` publishes the rewritten lists.  Returns the
+        rewritten list ids."""
+        if prepared is None and not len(removes):
+            return []
+        lists_dir = os.path.join(self.path, "lists")
+        rows = base.local_frame(
+            self.spark, [(i, None) for i in range(len(self.centroids))], "list_id int, _row boolean"
+        )
+        schema = _lists_schema(lists_dir)
+        if prepared is not None:
+            enc = self._encode(self._route(prepared))
+            rows = enc.withColumn("_row", F.lit(True)).unionByName(rows, allowMissingColumns=True)
+            schema = schema or enc.schema
+        if schema is None:  # no list files and nothing to insert
+            return []
+        plan = self._write_plan(removes, schema)
+        bc = self.spark.sparkContext.broadcast(plan)
+        try:
+            done = (
+                rows.groupBy("list_id")
+                .applyInArrow(lambda key, tbl: SW.ivf_list_writer(bc.value, key[0].as_py(), tbl),
+                              _REWRITE_SCHEMA)
+                .toArrow()
+            )
+            return self._commit_lists(plan, done)
+        finally:
+            bc.destroy()
+            for f in glob.glob(os.path.join(lists_dir, "list_id=*", f".{plan['token']}*")):
+                os.unlink(f)
+
+    def _write_plan(self, removes: np.ndarray, schema) -> dict:
+        """What every ``ivf_list_writer`` task reads: the lists' snapshot,
+        the sorted ids leaving, the centroids, the stored columns (the
+        Spark ``schema`` without ``list_id``) and this write's token."""
+        import uuid
+
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import DataType
 
         lists_dir = os.path.join(self.path, "lists")
-        spark = self.spark
-        storage = self.meta.get("storage", "f32")
+        stored = StructType([f for f in schema.fields if f.name != "list_id"])
+        return {
+            "dir": lists_dir, "snapshot": _snapshot(lists_dir), "token": uuid.uuid4().hex,
+            "removes": np.asarray(removes, dtype=np.int64),
+            "centroids": self.centroids.astype(np.float64), "vec_col": self._vec_col(),
+            "schema": to_arrow_schema(stored),
+            "result": to_arrow_schema(DataType.fromDDL(_REWRITE_SCHEMA)),
+            "dictionary": [
+                f"{f.name}.list.element" if f.dataType.typeName() == "array" else f.name
+                for f in stored.fields if f.name not in ("id", "vec", "vec16", "rq")
+            ],
+        }
 
-        # ids whose OLD rows must go: deletes plus re-inserted ids.  They
-        # only feed semi/anti joins, so duplicates need no distinct.
-        removes = []
-        if delete_ids is not None:
-            removes.append(delete_ids.select(F.col(id_col).cast("long").alias("id")))
-        add = None
-        if insert_rows is not None:
-            payloads = [
-                c for c in self.meta.get("payload_cols", []) if c in insert_rows.columns
-            ]
-            prepared = base.prepare_rows(
-                insert_rows, F.col(id_col).cast("long"), vector_col,
-                self.meta["normalize"], storage, keep=payloads,
+    def _commit_lists(self, plan: dict, done) -> list[int]:
+        """Publish the lists ``ivf_list_writer`` rewrote (``done``, its
+        result rows): unlink each one's snapshot files, rename its pending
+        file in, drop a directory that ended empty (0 rows written) — a
+        generation cloned by hardlinks keeps its inodes.  A list that
+        wrote rows but whose pending file the driver cannot see raises
+        before any file is touched.  The touched lists' radii are
+        patched into ``list_radii.npy`` (inserts can extend a radius,
+        which would silently break range_search completeness on a stale
+        bound) and ``n_rows`` becomes old − ids leaving + rows arriving /
+        replicas, with no pass over the lists.  Returns the rewritten
+        list ids."""
+        done = done.to_pydict()
+        ldirs = [os.path.join(plan["dir"], f"list_id={lid}") for lid in done["list_id"]]
+        pending = [os.path.join(d, f".{plan['token']}.pending") for d in ldirs]
+        lost = [lid for lid, n, p in zip(done["list_id"], done["rows"], pending)
+                if n and not os.path.exists(p)]
+        if lost:
+            raise RuntimeError(
+                f"IVF lists {lost} were written but their files are not visible "
+                "to the driver; no list was changed"
             )
-            add = self._encode(self._route(prepared)).localCheckpoint(eager=True)
-            removes.append(add.select("id"))
-        if not removes:
+        for lid, n, ldir, p in zip(done["list_id"], done["rows"], ldirs, pending):
+            for f in plan["snapshot"].get(lid, ()):
+                os.unlink(f)
+            if n:
+                os.replace(p, os.path.join(ldir, f"part-{plan['token']}.parquet"))
+            else:
+                shutil.rmtree(ldir, ignore_errors=True)
+        if not done["list_id"]:
             return []
-        remove = removes[0] if len(removes) == 1 else removes[0].unionByName(removes[1])
-
-        lists = self._lists()
-        moves = lists.select("id", "list_id", F.lit(True).alias("leaving")).join(
-            F.broadcast(remove), "id", "left_semi"
-        )
-        if add is not None:
-            moves = moves.unionByName(
-                add.select("id", "list_id", F.lit(False).alias("leaving"))
-            )
-        leaving = F.col("leaving")
-        summary = moves.agg(
-            F.collect_set("list_id").alias("lists"),
-            F.count_distinct(F.when(leaving, F.col("id"))).alias("leaving"),
-            F.count_distinct(F.when(~leaving, F.col("id"))).alias("arriving"),
-        ).collect()[0]
-        segs = sorted(int(s) for s in summary["lists"])
-        if not segs:
-            return []
-
-        live = lists.where(F.col("list_id").isin(segs)).join(
-            F.broadcast(remove), "id", "left_anti"
-        )
-        if add is not None:
-            live = live.unionByName(add, allowMissingColumns=True)
-        # the checkpoint severs lineage from the list files we overwrite;
-        # the id order keeps the row-group id skipping the rerank's
-        # id IN (...) fetch relies on
-        live = (
-            live.repartition("list_id")
-            .sortWithinPartitions("list_id", "id")
-            .localCheckpoint(eager=True)
-        )
-        (
-            live.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("list_id")
-            .parquet(lists_dir)
-        )
-        # inserted rows can extend a list's residual radius, which would
-        # silently break range_search completeness on a stale bound, so
-        # the touched lists' radii are re-derived (deletes only shrink
-        # them).  A touched list missing here ended up empty: dynamic
-        # overwrite never writes its directory, so drop the stale one.
-        patch = _compute_list_radii(spark, live, self.centroids, storage=storage)
-        for s in segs:
-            if s not in patch:
-                shutil.rmtree(os.path.join(lists_dir, f"list_id={s}"), ignore_errors=True)
         radii_path = os.path.join(self.path, "list_radii.npy")
         if os.path.exists(radii_path):
             radii = np.load(radii_path)
-            for lid in segs:
-                radii[lid] = patch.get(lid, 0.0)
-            np.save(radii_path, radii, allow_pickle=False)
-            self._radii = None
+            radii[done["list_id"]] = done["radius"]
+            # a fresh inode: a generation cloned by hardlinks keeps its radii
+            tmp = os.path.join(self.path, ".list_radii.npy")
+            np.save(tmp, radii, allow_pickle=False)
+            os.replace(tmp, radii_path)
+        self._radii = None
         self._lists_df = None  # invalidate the cached file index
         self._storage_bytes = None
+        removed = np.unique(np.concatenate([np.empty(0, np.int64), *map(np.asarray, done["removed"])]))
         self.meta["n_rows"] = (
-            int(self.meta["n_rows"]) - int(summary["leaving"]) + int(summary["arriving"])
+            int(self.meta["n_rows"]) - len(removed)
+            + sum(done["added"]) // int(self.meta.get("replicas", 1))
         )
         base.write_meta(self.path, self.meta)
-        return segs
+        return sorted(done["list_id"])
 
     def probe_lists(self, q: np.ndarray, nprobe: int) -> list[int]:
         d = base.np_kernel_distance(self.meta["kernel"], self.centroids.astype(np.float64), q)
@@ -561,16 +546,23 @@ class IVFIndex:
     def list_radii(self) -> np.ndarray:
         """Per-list max residual L2 norm max_{x∈list} |x − centroid| —
         the pruning bound for index-accelerated range search.  Loaded
-        from the build artifact; derived once (and persisted) for
-        indexes built before the artifact existed."""
+        from the build artifact; for indexes built before the artifact
+        existed, derived once in the driver from the stored lists with
+        the list writer's ``segment_worker.ivf_list_radius`` (and
+        persisted)."""
         if self._radii is None:
             p = os.path.join(self.path, "list_radii.npy")
             if not os.path.exists(p):
-                _save_list_radii(
-                    self.spark, self._lists(), self.centroids,
-                    int(self.meta["nlist"]), self.path,
-                    storage=self.meta.get("storage", "f32"),
-                )
+                import pyarrow as pa
+                import pyarrow.parquet as pq
+
+                radii = np.zeros(int(self.meta["nlist"]))
+                for lid, files in _snapshot(os.path.join(self.path, "lists")).items():
+                    tbl = pa.concat_tables([pq.read_table(f, columns=[self._vec_col()]) for f in files])
+                    radii[lid] = SW.ivf_list_radius(
+                        tbl, self.centroids[lid].astype(np.float64), self._vec_col()
+                    )
+                np.save(p, radii, allow_pickle=False)
             self._radii = np.load(p)
         return self._radii
 
@@ -680,8 +672,6 @@ class IVFIndex:
     def _allowed(self, filter, lists: list[int]) -> np.ndarray:
         """(id, list_id) of the rows in ``lists`` passing ``filter``
         (``batch.allowed`` over id, the payload columns and list_id)."""
-        from pyspark.sql.types import StructType
-
         lists_dir = os.path.join(self.path, "lists")
         files = self._list_files(lists)
         if not files:
@@ -901,7 +891,6 @@ class IVFIndex:
         replicated row from its smallest list id among the rows passing
         the filter, whose (id, list_id) are ``keys``)."""
         import pyarrow.dataset as pads
-        from pyspark.sql.types import StructType
 
         lists_dir = os.path.join(self.path, "lists")
         schema = StructType(

@@ -1001,3 +1001,86 @@ def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
             yield from _rerank_emit(kernel, files, wins)
 
     return run
+
+
+def ivf_list_radius(tbl, centroid: np.ndarray, vec_col: str) -> float:
+    """One IVF list's max residual L2 norm max |x − centroid| over its
+    stored rows ``tbl`` (f64 over the stored f32 values or decoded f16
+    words, the values the exact scan reads), 0 for an empty list: the
+    triangle-inequality pruning bound ``IVFIndex.list_radii`` holds."""
+    if not tbl.num_rows:
+        return 0.0
+    res = _read_vec_matrix(tbl, vec_col).astype(np.float64) - centroid[None, :]
+    return float(np.sqrt(np.einsum("ij,ij->i", res, res)).max())
+
+
+def _conform(tbl, schema):
+    """``tbl``'s columns cast to the stored Arrow ``schema``, a column
+    it lacks (an insert without a payload column) as nulls."""
+    import pyarrow as pa
+
+    cols = [
+        tbl.column(f.name).cast(f.type) if f.name in tbl.column_names
+        else pa.nulls(tbl.num_rows, f.type)
+        for f in schema
+    ]
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
+def ivf_list_writer(plan: dict, lid: int, rows):
+    """The one IVF list writer (``IVFIndex._rewrite`` runs it per list
+    in a grouped Arrow job).  ``rows`` is list ``lid``'s group: its
+    routed and encoded new rows plus one marker row (``_row`` null) that
+    makes every list a group.  The list becomes its files in the
+    driver's snapshot (``plan["snapshot"]``) minus the rows whose ids
+    are in the sorted ``plan["removes"]``, plus the new rows, sorted by
+    id (row-group id skipping for the rerank's ``id IN`` fetch), written
+    with pyarrow as ONE hidden pending file ``.<token>.pending`` in the
+    list's directory that ``IVFIndex._commit_lists`` renames in.  Ids
+    and vectors are stored plain, codes and payload columns with
+    dictionary pages, as Spark's writer ends up storing them: dictionary
+    pages over vectors grow a list by a third.
+
+    A list no id leaves and no row joins is untouched: no file, no row.
+    Otherwise returns one row (list_id, removed ids, rows added, rows
+    written, radius), with no pending file when the list ended empty.
+    The task reads only the snapshot and writes the pending name through
+    a temp file and an atomic rename, so a retried task rewrites the
+    same file.
+
+    Limit: the task holds the whole list at once (the group, the old
+    files and the sorted output, about three times the list's bytes),
+    so one list must fit a Python worker's memory; nothing spills."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema, removes = plan["schema"], plan["removes"]
+    new = rows.filter(rows.column("_row").is_valid())
+    new = _conform(new, schema) if new.num_rows else schema.empty_table()
+    files = plan["snapshot"].get(lid, [])
+    ids = np.concatenate(
+        [pq.read_table(f, columns=["id"]).column("id").to_numpy() for f in files]
+        or [np.empty(0, np.int64)]
+    )
+    pos = np.minimum(np.searchsorted(removes, ids), max(len(removes) - 1, 0))
+    gone = removes[pos] == ids if len(removes) else np.zeros(len(ids), bool)
+    if not new.num_rows and not gone.any():
+        return pa.Table.from_pylist([], schema=plan["result"])
+    old = [_conform(pq.read_table(f), schema) for f in files]
+    kept = pa.concat_tables(old or [schema.empty_table()]).filter(pa.array(~gone))
+    out = pa.concat_tables([kept, new]).sort_by("id")
+    ldir = os.path.join(plan["dir"], f"list_id={lid}")
+    if out.num_rows:
+        os.makedirs(ldir, exist_ok=True)
+        tmp = os.path.join(ldir, f".{plan['token']}-{uuid.uuid4().hex}.tmp")
+        pq.write_table(out, tmp, compression="snappy", use_dictionary=plan["dictionary"])
+        os.replace(tmp, os.path.join(ldir, f".{plan['token']}.pending"))
+    removed = np.unique(ids[gone]).astype(np.int64)
+    return pa.Table.from_pylist(
+        [{"list_id": lid, "removed": removed.tolist(), "added": new.num_rows,
+          "rows": out.num_rows,
+          "radius": ivf_list_radius(out, plan["centroids"][lid], plan["vec_col"])}],
+        schema=plan["result"],
+    )

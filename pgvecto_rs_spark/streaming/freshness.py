@@ -132,6 +132,39 @@ def _visible_mask(gids: np.ndarray, gver: np.ndarray, tids: np.ndarray,
     return (tids[pos] != gids) | (gver > tver[pos])
 
 
+def _newest_visible(gids: np.ndarray, gvec: np.ndarray, gver: np.ndarray,
+                    tids: np.ndarray, tver: np.ndarray):
+    """``_newest(_visible(...))`` over driver-held arrays (as
+    ``_visible_mask``): the ids and vectors of the highest-version
+    visible growing row per id."""
+    vis = _visible_mask(gids, gver, tids, tver)
+    ids, vec, ver = gids[vis], gvec[vis], gver[vis]
+    o = np.lexsort((-ver, ids))
+    o = o[np.r_[True, ids[o][1:] != ids[o][:-1]]] if len(o) else o
+    return ids[o], vec[o]
+
+
+def _write_tombstones(ids: Sequence[int], version: int, rows_dir: str) -> None:
+    """The (id, version) rows of driver-held ``ids`` as one Parquet file
+    in ``rows_dir``, in ``_TOMB_SCHEMA``'s types, written with pyarrow
+    under a hidden temp name and renamed in, so no reader sees a partial
+    file: no Spark job.  A missing ``rows_dir`` raises."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    ids = [int(i) for i in ids]
+    schema = to_arrow_schema(DataType.fromDDL(_TOMB_SCHEMA))
+    tbl = pa.table([pa.array(ids, schema[0].type),
+                    pa.array([version] * len(ids), schema[1].type)], schema=schema)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    pq.write_table(tbl, os.path.join(rows_dir, "." + name))
+    os.replace(os.path.join(rows_dir, "." + name), os.path.join(rows_dir, name))
+
+
 def _newest(rows: DataFrame) -> DataFrame:
     """(id, vec): the highest-version row per id."""
     from pyspark.sql import Window
@@ -293,12 +326,9 @@ class FreshVectorIndex:
         the same id is visible again)."""
         with self._write_lock:
             self._refresh()
-            v = self._bump()
-            base.local_frame(
-                self.spark, [(int(i), v) for i in ids], _TOMB_SCHEMA
-            ).write.mode("append").parquet(
-                os.path.join(self._gen_dir(), "tombstones", "rows")
-            )
+            rows_dir = os.path.join(self._gen_dir(), "tombstones", "rows")
+            os.makedirs(rows_dir, exist_ok=True)
+            _write_tombstones(ids, self._bump(), rows_dir)
 
     def delete_df(self, ids_df: DataFrame, id_col: str = "id") -> None:
         """Distributed bulk delete: tombstone every id in ``ids_df``
@@ -348,9 +378,9 @@ class FreshVectorIndex:
         tombstone map (``_tomb_map``), each cached per file fingerprint.
         The sealed side's ``n_rows`` is
         the index's own bookkeeping: an incremental IVF fold sets it to
-        old − leaving + arriving and re-derives the touched lists'
-        radii from the checkpoint it writes (``IVFIndex.apply_updates``),
-        so neither needs a pass over the lists."""
+        old − leaving + arriving and takes the touched lists' radii from
+        the tasks that write them (``IVFIndex.apply_updates``), so neither
+        needs a pass over the lists."""
         self._refresh()
         if self._row_count("delta") >= max_growing_rows:
             self.compact()
@@ -520,10 +550,7 @@ class FreshVectorIndex:
         gi, gd = gids[vis], np.empty(0)
         if len(gi):
             kernel, do_norm = base.resolve_metric(self.meta["metric"])
-            # the growing plan's query literal is array<float>
-            # (``_growing``), so its rows score against the f32 query
-            q32 = base.prep_query(query, do_norm).astype(np.float32).astype(np.float64)
-            gd = SW.np_kernel_distance(kernel, gvec[vis], q32)
+            gd = SW.np_kernel_distance(kernel, gvec[vis], base.prep_query(query, do_norm))
             if self.meta["metric"] == "cos":
                 gd = gd + 1.0
         if op == "range_search":
@@ -545,8 +572,10 @@ class FreshVectorIndex:
         if delta is None:
             return None
         kernel, do_norm = base.resolve_metric(self.meta["metric"])
-        q = base.prep_query(query, do_norm)
-        d = dist_expr(F.col("vec"), [float(x) for x in q], kernel)
+        # the f64 query as an array<double> literal, as the sealed
+        # indexes score it (a plain list becomes array<float>)
+        q = F.array(*[F.lit(float(x)) for x in base.prep_query(query, do_norm)])
+        d = dist_expr(F.col("vec"), q, kernel)
         return _visible(delta, tomb_agg).select(
             "id", base.post_map(self.meta["metric"], d).alias("distance")
         )
@@ -653,8 +682,6 @@ class FreshVectorIndex:
             old_gen = self._gen
             snap_delta = self._list_files("delta", old_gen)
             snap_tomb = self._list_files("tombstones", old_gen)
-            delta = self._read_cached("delta", snap_delta)
-            tomb_agg = self._tomb_agg(snap_tomb)
             n_delta = self._row_count("delta", snap_delta)
 
             if incremental is None:
@@ -669,9 +696,11 @@ class FreshVectorIndex:
                     n_sealed = self.sealed.meta.get("n_rows", 0)
                     small = n_delta <= max(10_000, n_sealed // 2)
                 if small:
-                    self._compact_incremental(old_gen, delta, tomb_agg, snap_delta, snap_tomb)
+                    self._compact_incremental(old_gen, snap_delta, snap_tomb)
                     return
 
+            delta = self._read_cached("delta", snap_delta)
+            tomb_agg = self._tomb_agg(snap_tomb)
             sealed_path = os.path.join(self._gen_dir(old_gen), "sealed")
             sealed_rows = base.stored_vectors(
                 self.spark.read.parquet(os.path.join(sealed_path, self.sealed.STORAGE_DIR)),
@@ -712,29 +741,35 @@ class FreshVectorIndex:
             )
             self._commit(old_gen, snap_delta, snap_tomb)
 
-    def _compact_incremental(
-        self,
-        old_gen: int,
-        delta: DataFrame | None,
-        tomb_agg: DataFrame | None,
-        snap_delta: tuple,
-        snap_tomb: tuple,
-    ) -> None:
+    def _compact_incremental(self, old_gen: int, snap_delta: tuple, snap_tomb: tuple) -> None:
         """Fold delta + tombstones into the sealed index by rebuilding
-        only the affected segments (HNSW) / list partitions (IVF) via
-        the index's apply_updates — run against a hardlink CLONE of the
+        only the affected segments (HNSW) / lists (IVF) through the
+        index's ``apply_updates`` — run against a hardlink CLONE of the
         sealed directory in the next generation, so the current
-        generation's files are never touched (apply_updates' dynamic
-        partition overwrite unlinks and writes fresh inodes; the old
-        generation keeps its links)."""
-        # newest version per id wins within the delta
-        d_live = None if delta is None else _newest(_visible(delta, tomb_agg))
+        generation's files are never touched (the rewrites unlink the
+        clone's links and write fresh inodes; the old generation keeps
+        its links).
+
+        The deletes (every tombstoned id: sealed rows predate all
+        tombstones) and the inserts (the newest visible growing row per
+        id) come from the driver-held tombstone map and growing rows
+        (``_tomb_map``, ``_growing_rows``) as driver-held frames, so the
+        fold scans no growing or tombstone file through Spark."""
         old_sealed = os.path.join(self._gen_dir(old_gen), "sealed")
         new_sealed = os.path.join(self._gen_dir(old_gen + 1), "sealed")
         shutil.rmtree(self._gen_dir(old_gen + 1), ignore_errors=True)
         _link_or_copy_tree(old_sealed, new_sealed)
         clone = _KINDS[self.meta["sealed_kind"]].open(self.spark, new_sealed)
-        clone.apply_updates(delete_ids=tomb_agg, insert_rows=d_live)
+        gids, gvec, gver = self._growing_rows(self._fingerprint("delta", snap_delta))
+        tids, tver = self._tomb_map(self._fingerprint("tombstones", snap_tomb))
+        ids, vec = _newest_visible(gids, gvec, gver, tids, tver)
+        clone.apply_updates(
+            delete_ids=base.local_frame(self.spark, [(i,) for i in tids.tolist()], "id long")
+            if len(tids) else None,
+            insert_rows=base.local_frame(
+                self.spark, zip(ids.tolist(), vec.tolist()), "id long, vec array<float>"
+            ) if len(ids) else None,
+        )
         self._commit(old_gen, snap_delta, snap_tomb)
 
     def stat(self) -> dict:
@@ -847,13 +882,14 @@ class IndexTransaction:
                 "max_age_seconds?"
             )
 
-    def _staged_write(self, writer, path: str) -> None:
-        """Run a staging parquet append; if it blows up BECAUSE the
-        staging dir was swept mid-write (GC raced the write itself, not
-        just the gaps between writes), surface the documented loud
-        RuntimeError instead of a raw Spark task failure."""
+    def _staged_write(self, write, path: str) -> None:
+        """Run a staging parquet append ``write(path)``; if it blows up
+        BECAUSE the staging dir was swept mid-write (GC raced the write
+        itself, not just the gaps between writes), surface the
+        documented loud RuntimeError instead of a raw Spark task failure
+        or a missing-directory error."""
         try:
-            writer.parquet(path)
+            write(path)
         except Exception as e:  # noqa: BLE001 - re-raised unless swept
             if os.path.isfile(os.path.join(self._dir, "OPEN")):
                 raise
@@ -886,7 +922,7 @@ class IndexTransaction:
         """Stage (id, vector) rows — the transactional ``aminsert``."""
         self._check_open()
         w = self._idx._delta_rows(df, self._next_version()).write.mode("append")
-        self._staged_write(w, os.path.join(self._dir, "delta", "rows"))
+        self._staged_write(w.parquet, os.path.join(self._dir, "delta", "rows"))
         self._staged += 1
         self._touch()
         self._check_marker()
@@ -894,10 +930,10 @@ class IndexTransaction:
     def delete(self, ids: Sequence[int]) -> None:
         self._check_open()
         v = self._next_version()
-        w = base.local_frame(
-            self._idx.spark, [(int(i), v) for i in ids], _TOMB_SCHEMA
-        ).write.mode("append")
-        self._staged_write(w, os.path.join(self._dir, "tombstones", "rows"))
+        self._staged_write(
+            lambda path: _write_tombstones(ids, v, path),
+            os.path.join(self._dir, "tombstones", "rows"),
+        )
         self._staged += 1
         self._touch()
         self._check_marker()
@@ -911,7 +947,7 @@ class IndexTransaction:
             )
             .write.mode("append")
         )
-        self._staged_write(w, os.path.join(self._dir, "tombstones", "rows"))
+        self._staged_write(w.parquet, os.path.join(self._dir, "tombstones", "rows"))
         self._staged += 1
         self._touch()
         self._check_marker()

@@ -226,8 +226,15 @@ def test_ivf_incremental_compact(spark, emb):
         idx.insert(emb.where((F.col("vec_id") >= 400) & (F.col("vec_id") < 403)))
 
         before = content_hashes(os.path.join(idx.sealed.path, "lists"))
+        old_radii = os.path.join(idx.sealed.path, "list_radii.npy")
+        with open(old_radii, "rb") as fh:
+            radii_bytes = fh.read()
         idx.compact()
         after = content_hashes(os.path.join(idx.sealed.path, "lists"))
+        # the retired generation (kept for in-flight readers) keeps its
+        # radii: the fold writes the clone's radii to a new inode
+        with open(old_radii, "rb") as fh:
+            assert fh.read() == radii_bytes
         untouched = [f for f in before if f in after and before[f] == after[f]]
         assert untouched, "some list partitions must survive compaction untouched"
         assert any(f not in after or before[f] != after[f] for f in before), (
@@ -776,6 +783,22 @@ class TestTransactions:
                 txn.commit()
             assert idx.stat()["idx_growing"] == []  # nothing leaked
 
+    def test_delete_into_swept_staging_dir_raises(self, spark, emb):
+        """A transaction's ``delete`` writes its tombstone file with
+        pyarrow, which never recreates a swept staging dir: the write
+        fails, and the missing marker turns that into the loud
+        RuntimeError; nothing is published."""
+        with tempfile.TemporaryDirectory() as d:
+            idx = make(spark, emb, d)
+            txn = idx.begin()
+            past = time.time() - 100_000
+            os.utime(txn._dir, (past, past))
+            assert idx.cleanup_stale_transactions(max_age_seconds=86_400) == 1
+            with pytest.raises(RuntimeError, match="mid-write"):
+                txn.delete([1, 2])
+            assert not os.path.exists(txn._dir)
+            assert idx.stat()["idx_tombstones"] == 0
+
     def test_cleanup_counts_only_removed_dirs(self, spark, emb):
         """cleanup_stale_transactions must not count a directory that
         rmtree failed to remove (r7 advice): make one stale dir
@@ -824,12 +847,13 @@ def test_tomb_agg_materialized_once_per_generation(spark, emb):
 
 
 def test_ivf_compaction_job_budget(spark, emb):
-    """compact() on the test_ivf_incremental_compact shape runs each step
-    of the incremental fold once — the tombstone aggregate, one encoded
-    checkpoint of the inserts, one touched-lists aggregate, one
-    checkpoint of the rewritten lists, the write and the radii — and
-    reads the growing row count from the Parquet footers: at most 16
-    Spark jobs (a fold that recounts and re-collects launches 32)."""
+    """compact() on the test_ivf_incremental_compact shape takes the ids
+    leaving and the newest visible growing rows from the driver-held
+    tombstone map and growing rows, then writes the touched lists in ONE
+    grouped Arrow job (``IVFIndex._rewrite``): at most 4 Spark jobs (14
+    when the fold ran its own tombstone aggregate, insert checkpoint,
+    touched-lists aggregate, list checkpoint, partitioned write and
+    radii job)."""
     from tests.conftest import count_jobs
 
     with tempfile.TemporaryDirectory() as d:
@@ -841,8 +865,93 @@ def test_ivf_compaction_job_budget(spark, emb):
         idx.insert(emb.where((F.col("vec_id") >= 400) & (F.col("vec_id") < 403)))
         with count_jobs(spark) as jobs:
             idx.compact()
-        assert jobs.n <= 16, f"compact() launched {jobs.n} Spark jobs"
+        assert jobs.n <= 4, f"compact() launched {jobs.n} Spark jobs"
         assert idx.stat()["idx_sealed"][0] == 400 - 2 + 3
+
+
+def test_ivf_apply_updates_job_budget(spark, emb):
+    """IVFIndex.apply_updates with DataFrame deletes and inserts collects
+    the ids leaving once and writes every touched list in one grouped
+    Arrow job: at most 5 Spark jobs (11 with the touched-lists
+    aggregate, two checkpoints, the partitioned write and the radii
+    job)."""
+    from pgvecto_rs_spark.indexes import IVFIndex
+    from pgvecto_rs_spark.indexes.base import local_frame
+    from tests.conftest import count_jobs
+
+    with tempfile.TemporaryDirectory() as d:
+        idx = IVFIndex.create(spark, emb.where(F.col("vec_id") < 400), d, nlist=8)
+        dels = local_frame(spark, [(i,) for i in range(0, 400, 40)], "id long")
+        ins = emb.where(F.col("vec_id") >= 400).select(
+            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+        )
+        with count_jobs(spark) as jobs:
+            assert idx.apply_updates(delete_ids=dels, insert_rows=ins)
+        assert jobs.n <= 5, f"apply_updates launched {jobs.n} Spark jobs"
+        assert idx.meta["n_rows"] == 400 - 10 + 100
+
+
+def test_ivf_create_job_budget(spark, emb):
+    """An f32 IVFIndex.create at nlist=128 runs the row count, the
+    training sample and one grouped Arrow job that writes every list
+    with its radius: at most 5 Spark jobs (7 with the partitioned
+    write, the list re-read and the radii job)."""
+    from pgvecto_rs_spark.indexes import IVFIndex
+    from tests.conftest import count_jobs
+
+    with tempfile.TemporaryDirectory() as d:
+        with count_jobs(spark) as jobs:
+            idx = IVFIndex.create(spark, emb, d, nlist=128)
+        assert jobs.n <= 5, f"create launched {jobs.n} Spark jobs"
+        assert idx.meta["nlist"] == 128 and idx.meta["n_rows"] == 500
+
+
+def test_delete_writes_tombstones_without_a_job(spark, emb):
+    """``delete`` and a transaction's ``delete`` write their tombstone
+    rows with pyarrow, in ``_TOMB_SCHEMA``'s types: no Spark job, and
+    the deleted ids stay hidden."""
+    from pyspark.sql.types import DataType
+
+    from pgvecto_rs_spark.streaming.freshness import _TOMB_SCHEMA
+    from tests.conftest import count_jobs
+
+    with tempfile.TemporaryDirectory() as d:
+        idx = make(spark, emb, d)
+        with count_jobs(spark) as jobs:
+            idx.delete([1, 2])
+            with idx.begin() as txn:
+                txn.delete([3])
+        assert jobs.n == 0
+        files = idx._list_files("tombstones")
+        assert len(files) == 2
+        assert spark.read.parquet(*files).schema == DataType.fromDDL(_TOMB_SCHEMA)
+        assert idx.stat()["idx_tombstones"] == 3
+        assert not {r["id"] for r in idx.search(Q64, k=400).collect()} & {1, 2, 3}
+
+
+@pytest.mark.parametrize("sealed_kind", ["flat", "ivf"])
+def test_growing_distance_survives_compaction(spark, emb, sealed_kind):
+    """Growing rows score against the f64 query, as the sealed indexes
+    do, so a row keeps its distance when a compaction folds it in: on
+    the driver path, bit for bit before and after ``compact()``."""
+    kw = {"ivf": {"nlist": 8}}.get(sealed_kind, {})
+    search = {"ivf": {"nprobe": 8}}.get(sealed_kind, {})
+    with tempfile.TemporaryDirectory() as d:
+        idx = FreshVectorIndex.create(
+            spark, emb.where(F.col("vec_id") < 400), d, sealed_kind=sealed_kind, **kw
+        )
+        idx.insert(emb.where(F.col("vec_id") >= 400))
+
+        def distances():
+            return {r["id"]: r["distance"] for r in idx.search(Q64, k=500, **search).collect()}
+
+        before = distances()
+        idx.compact()
+        after = distances()
+        assert idx.serve_stats == {"driver": 2}
+        grown = [i for i in before if i >= 400]
+        assert len(grown) == 100
+        assert [after[i] for i in grown] == [before[i] for i in grown]
 
 
 @pytest.mark.parametrize("sealed_kind", ["flat", "ivf", "hnsw"])

@@ -924,6 +924,180 @@ class TestIVFRangeSearch:
             assert [r["id"] for r in hits] == [10_000_000]
 
 
+class TestListWriter:
+    """``segment_worker.ivf_list_writer``, the one IVF list writer, and
+    the driver's commit (``IVFIndex._commit_lists``): every list write of
+    ``create``, ``apply_updates`` and compaction goes through them."""
+
+    @staticmethod
+    def _lists(path):
+        import os
+
+        return os.path.join(path, "lists")
+
+    @staticmethod
+    def _ids(ldir):
+        import pyarrow.parquet as pq
+
+        return pq.read_table(ldir, columns=["id"]).column("id").to_pylist()
+
+    def test_retried_rewrite_is_idempotent(self, spark, emb, tmp_path):
+        """Running one list's rewrite twice on one snapshot (a retried
+        task) writes the same pending file and reports the same row; the
+        committed list holds each id once, sorted."""
+        import glob
+        import os
+
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from pgvecto_rs_spark.indexes import ivf as IV
+        from pgvecto_rs_spark.indexes import segment_worker as SW
+
+        path = str(tmp_path / "i")
+        idx = IVFIndex.create(spark, emb, path, nlist=8)
+        lists = self._lists(path)
+        lid = 3
+        held = self._ids(os.path.join(lists, f"list_id={lid}"))
+        removes = np.sort(np.asarray(held[:2], dtype=np.int64))
+        plan = idx._write_plan(removes, IV._lists_schema(lists))
+        donor = pq.read_table(os.path.join(lists, "list_id=4")).slice(0, 1)
+        new = donor.set_column(0, "id", pa.array([10**9], pa.int64())).append_column(
+            "list_id", pa.array([lid], pa.int32())
+        ).append_column("_row", pa.array([True]))
+        marker = pa.table({"list_id": pa.array([lid], pa.int32()), "_row": pa.array([None], pa.bool_())})
+        group = pa.concat_tables([new, marker], promote_options="default")
+        pending = os.path.join(lists, f"list_id={lid}", f".{plan['token']}.pending")
+
+        first = SW.ivf_list_writer(plan, lid, group)
+        written = pq.read_table(pending)
+        second = SW.ivf_list_writer(plan, lid, group)
+        assert first.equals(second) and pq.read_table(pending).equals(written)
+        assert first.column("removed").to_pylist() == [removes.tolist()]
+        assert first.column("added").to_pylist() == [1]
+        assert first.column("rows").to_pylist() == [len(held) - 2 + 1]
+
+        assert idx._commit_lists(plan, second) == [lid]
+        ldir = os.path.join(lists, f"list_id={lid}")
+        assert os.listdir(ldir) == [f"part-{plan['token']}.parquet"]
+        got = self._ids(ldir)
+        assert got == sorted(set(held) - set(removes.tolist()) | {10**9})
+        assert pq.read_table(ldir).equals(written)
+        assert idx.meta["n_rows"] == 500 - 2 + 1
+        assert not glob.glob(os.path.join(lists, "list_id=*", ".*"))
+
+    def test_missing_pending_file_fails_commit(self, spark, emb, tmp_path):
+        """A list that wrote rows but whose pending file the driver
+        cannot see (say, an executor writing where the driver does not
+        look) fails the commit before any file changes: the list keeps
+        its files and rows, and ``n_rows`` its count."""
+        import os
+
+        import numpy as np
+        import pyarrow as pa
+
+        from pgvecto_rs_spark.indexes import ivf as IV
+        from pgvecto_rs_spark.indexes import segment_worker as SW
+
+        path = str(tmp_path / "i")
+        idx = IVFIndex.create(spark, emb, path, nlist=8)
+        lists = self._lists(path)
+        lid = 3
+        ldir = os.path.join(lists, f"list_id={lid}")
+        held, files = self._ids(ldir), sorted(os.listdir(ldir))
+        plan = idx._write_plan(np.asarray(held[:1], np.int64), IV._lists_schema(lists))
+        marker = pa.table({"list_id": pa.array([lid], pa.int32()), "_row": pa.array([None], pa.bool_())})
+        done = SW.ivf_list_writer(plan, lid, marker)
+        assert done.column("rows").to_pylist() == [len(held) - 1]
+        os.remove(os.path.join(ldir, f".{plan['token']}.pending"))
+        with pytest.raises(RuntimeError, match="not visible"):
+            idx._commit_lists(plan, done)
+        assert sorted(os.listdir(ldir)) == files and self._ids(ldir) == held
+        assert IVFIndex.open(spark, path).meta["n_rows"] == 500
+
+    def test_emptied_list_loses_directory(self, spark, emb, tmp_path):
+        """Deleting every row of a list drops its directory and sets its
+        radius to 0; search and the row count carry on without it."""
+        import os
+
+        import numpy as np
+
+        from pgvecto_rs_spark.indexes.base import local_frame
+
+        path = str(tmp_path / "i")
+        idx = IVFIndex.create(spark, emb, path, nlist=8)
+        ldir = os.path.join(self._lists(path), "list_id=2")
+        gone = self._ids(ldir)
+        assert idx.list_radii()[2] > 0
+        assert idx.apply_updates(delete_ids=local_frame(spark, [(i,) for i in gone], "id long")) == [2]
+        assert not os.path.exists(ldir)
+        assert idx.list_radii()[2] == 0.0 and np.load(os.path.join(path, "list_radii.npy"))[2] == 0.0
+        assert idx.meta["n_rows"] == 500 - len(gone)
+        hits = {r["id"] for r in idx.search(Q64, k=500, nprobe=8).collect()}
+        assert len(hits) == 500 - len(gone) and not hits & set(gone)
+
+    @pytest.mark.parametrize("opts", [{}, {"storage": "f16"}, {"quantization": "sq8"}])
+    def test_radii_equal_stored_rows(self, spark, emb, tmp_path, opts):
+        """``list_radii.npy`` equals, bit for bit, the max residual norm
+        recomputed in numpy from each list's stored rows, after a build
+        and after an update that inserts and deletes."""
+        import os
+
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        from pgvecto_rs_spark.indexes.base import local_frame
+
+        path = str(tmp_path / "i")
+        idx = IVFIndex.create(spark, emb.where(F.col("vec_id") < 450), path, nlist=8, **opts)
+
+        def check():
+            radii = np.load(os.path.join(path, "list_radii.npy"))
+            for lid in range(8):
+                ldir = os.path.join(self._lists(path), f"list_id={lid}")
+                if not os.path.exists(ldir):
+                    assert radii[lid] == 0.0
+                    continue
+                tbl = pq.read_table(ldir)
+                if "vec16" in tbl.column_names:
+                    mat = np.asarray(
+                        [np.frombuffer(b, dtype=np.float16) for b in tbl.column("vec16").to_pylist()],
+                        dtype=np.float64,
+                    )
+                else:
+                    mat = np.asarray(tbl.column("vec").to_pylist(), dtype=np.float64)
+                res = mat - idx.centroids[lid].astype(np.float64)
+                want = np.sqrt(np.einsum("ij,ij->i", res, res)).max()
+                assert radii[lid].tobytes() == want.tobytes(), lid
+
+        check()
+        ins = emb.where(F.col("vec_id") >= 450).select(
+            F.col("vec_id").alias("id"), (F.col("embedding")).alias("vec")
+        )
+        dels = local_frame(spark, [(i,) for i in range(0, 450, 9)], "id long")
+        assert idx.apply_updates(delete_ids=dels, insert_rows=ins)
+        check()
+
+    def test_missing_radii_file_is_derived(self, spark, emb, tmp_path):
+        """An index without ``list_radii.npy`` (built before the artifact
+        existed) derives it from the stored lists with the writer's
+        radius function, in the driver: the same bytes, no Spark job."""
+        import os
+
+        import numpy as np
+
+        path = str(tmp_path / "i")
+        IVFIndex.create(spark, emb, path, nlist=8, storage="f16")
+        radii_path = os.path.join(path, "list_radii.npy")
+        want = np.load(radii_path)
+        os.remove(radii_path)
+        with count_jobs(spark) as jobs:
+            got = IVFIndex.open(spark, path).list_radii()
+        assert jobs.n == 0
+        assert got.tobytes() == want.tobytes() and os.path.exists(radii_path)
+
+
 class TestIncrementalRowCount:
     """apply_updates derives n_rows arithmetically (old − distinct ids
     leaving + distinct ids arriving); after every update it must equal
