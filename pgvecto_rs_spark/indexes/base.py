@@ -11,18 +11,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pgvecto_rs_spark.indexes import segment_worker as SW
-
 # the import-light executor copy, shared by driver-side code (centroid
 # selection, probes)
 from pgvecto_rs_spark.indexes.segment_worker import np_kernel_distance
 
 META_FILE = "_vindex_meta.json"
-_ISIN_LITERAL_CAP = 512  # max ids to inline as IN-list literals (planning cost)
-
-#: candidate sets larger than this rerank through a join instead of a
-#: driver-collected id list
-RERANK_FETCH_CAP = 8192
 
 # DistanceKind (crates/base/src/distance.rs:5-10).  `cos` is not a
 # kernel kind: the opclass normalizes + runs Dot, post-maps d+1
@@ -130,35 +123,6 @@ def post_map(metric: str, dist_col):
     return dist_col
 
 
-def f16_distance(kernel: str, q: Sequence[float], col: str = "vec16"):
-    """Exact kernel distance Column over packed IEEE binary16 words
-    (vecf16 storage): a decode-and-score pandas UDF.  Grid values decode
-    exactly, so these ARE the vecf16 type's distances (the reference
-    also computes f16 via wider floats)."""
-    qv = np.asarray(q, dtype=np.float64)
-
-    @F.pandas_udf("double")
-    def f16_score(vb: pd.Series) -> pd.Series:
-        mat = np.asarray(
-            [np.frombuffer(b, dtype=np.float16) for b in vb], dtype=np.float64
-        )
-        return pd.Series(np_kernel_distance(kernel, mat, qv))
-
-    return f16_score(F.col(col))
-
-
-def exact_distance(meta: dict, q: Sequence[float]):
-    """Exact kernel distance Column over the stored vectors: the Arrow
-    kernel (``arrow_distance``) on f32 ``vec``, or the decode-and-score
-    UDF on f16 ``vec16`` words."""
-    qlist = [float(v) for v in q]
-    if meta.get("storage") == "f16":
-        return f16_distance(meta["kernel"], qlist)
-    from pgvecto_rs_spark.operators.search import arrow_distance
-
-    return arrow_distance(qlist, meta["kernel"])(F.col("vec"))
-
-
 def f16_words(col: str):
     """array<float> Column -> packed IEEE binary16 words (vecf16
     storage: 2 bytes per dim on disk)."""
@@ -228,28 +192,6 @@ def prep_query(q: Sequence[float], normalize: bool) -> np.ndarray:
     return arr
 
 
-def apply_residual(df: DataFrame, filter=None, exclude: DataFrame | None = None) -> DataFrame:
-    """Apply the residual predicate and/or the exclusion set to a candidate
-    DataFrame that has an ``id`` column.
-
-    ``exclude`` is a DataFrame with an ``id`` column (e.g. tombstones) and
-    is applied as a broadcast LEFT ANTI join, never turned into an
-    IN-list: at 100 TB the tombstone set can be millions of ids; an
-    anti-join shuffles nothing on the big side and ships only the id set
-    to executors (compaction bounds its size via the delete threshold).
-    These are the Spark plans.  A call the driver serves
-    (``batch.route``: an index under ``batch.DRIVER_SERVE_BYTES``) takes
-    both as id masks inside the block runners instead: the filter
-    resolved over the scanned units' stored columns
-    (``batch.allowed``), and an ``exclude`` held in the driver, whose
-    collect runs no job (``batch.denied``)."""
-    if filter is not None:
-        df = df.where(filter)
-    if exclude is not None:
-        df = df.join(F.broadcast(exclude.select("id")), "id", "left_anti")
-    return df
-
-
 def normalized_col(col, do_normalize: bool):
     """Optionally L2-normalize an array<float> column (cos preprocessing,
     am_options.rs:231-243), as a native expression."""
@@ -258,176 +200,3 @@ def normalized_col(col, do_normalize: bool):
     from pgvecto_rs_spark.functions.dense import vector_normalize
 
     return vector_normalize(col)
-
-
-# ---------------------------------------------------------------------------
-# Per-query quantized two-phase search (flat and IVF)
-# ---------------------------------------------------------------------------
-
-
-def code_scores(index, df: DataFrame, quant: str, q: np.ndarray,
-                cents: dict | None = None, keep=None) -> DataFrame:
-    """(id, adist): every row's approximate kernel distance to ``q``
-    from its codes alone, in one ``mapInArrow`` pass that reads only
-    (id[, list_id], codes|rq).  Each Arrow batch scores with the batch
-    runners' kernel (``segment_worker._approx_dists``), so a row's
-    adist is the one ``search_batch`` computes for the same query.
-    ``cents`` maps the probed IVF list ids to their centroids (codes
-    are residuals); flat passes None.  The closure carries the SQ
-    constants or the path of the saved PQ/RaBitQ constants, which
-    executors load once through a cache: nothing is broadcast per
-    query.
-
-    With ``keep`` (SQ codes only) each partition instead emits
-    (id, lb, ub) — the ``sq_error`` bounds on the exact distance — for
-    the rows ``keep(ids, lb, ub)`` selects among all of its rows."""
-    from pgvecto_rs_spark.indexes import batch as BT
-
-    params = BT.quant_params(index, quant)
-    kernel = index.meta["kernel"]
-    col = SW._unit_col(quant, "vec")
-    qs = np.asarray(q, dtype=np.float64)[None, :]
-    err = sq_error(index.meta, qs[0]) if keep is not None else None
-
-    def adists(b):
-        import pyarrow as pa
-
-        tbl = pa.Table.from_batches([b])
-        unit = SW._read_unit(tbl, col)
-        if cents is None:
-            ad = SW._approx_dists(quant, params, kernel, unit, qs)[:, 0]
-        else:
-            lids = tbl.column("list_id").to_numpy()
-            ad = np.empty(len(lids))
-            for lid in np.unique(lids).tolist():
-                m = lids == lid
-                part = tuple(u[m] for u in unit) if isinstance(unit, tuple) else unit[m]
-                ad[m] = SW._approx_dists(quant, params, kernel, part, qs, cents[lid])[:, 0]
-        return tbl.column("id").to_numpy().astype(np.int64), ad
-
-    def score(batches):
-        import pyarrow as pa
-
-        parts = (adists(b) for b in batches if b.num_rows)
-        if keep is None:
-            for ids, ad in parts:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids), pa.array(ad)], names=["id", "adist"]
-                )
-            return
-        got = list(parts)
-        if not got:
-            return
-        ids = np.concatenate([g[0] for g in got])
-        lb, ub = SW.sq_bounds(kernel, err, np.concatenate([g[1] for g in got]))
-        m = keep(ids, lb, ub)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids[m]), pa.array(lb[m]), pa.array(ub[m])], names=["id", "lb", "ub"]
-        )
-
-    cols = ["id"] + (["list_id"] if cents is not None else []) + [col]
-    schema = "id bigint, adist double" if keep is None else "id bigint, lb double, ub double"
-    return df.select(*cols).mapInArrow(score, schema)
-
-
-def sq_error(meta: dict, q: np.ndarray) -> float:
-    """The SQ decode-error term of ``segment_worker.sq_bounds``
-    (reranker/error.rs): decode error per dim is at most
-    eps_j = width_j / (2·levels), so ||eps||₂ for l2 and Σ |q_j|·eps_j
-    for dot."""
-    levels = (1 << meta.get("sq_bits", 8)) - 1
-    eps = np.asarray(meta["sq_width"], dtype=np.float64) / (2.0 * levels)
-    if meta["kernel"] == "l2":
-        return float(np.sqrt((eps**2).sum()))
-    return float(np.abs(q) @ eps)
-
-
-def two_phase(index, df: DataFrame, quant: str, q: np.ndarray, k: int = 10,
-              window: int = 0, radius: float | None = None,
-              cents: dict | None = None) -> DataFrame:
-    """Quantized two-phase search over ``df`` (rows with id, codes and
-    vec, already filtered): ``code_scores`` scores the codes, a cut
-    keeps the rerank candidates, their exact vectors are fetched by id
-    and rescored with ``exact_distance`` (the unquantized scorer), and
-    the result is the top ``k`` by (distance, id), or every row under
-    ``radius`` (SQL units).  The candidate cut is
-
-    - ``window`` > 0: the best ``window`` by (adist, id), per distinct
-      id (with replicas > 1 an id is scored once per probed list, and
-      duplicates would waste window slots);
-    - otherwise the SQ error bound (``segment_worker.sq_bounds``): for
-      top-k, every row whose lower bound beats the k-th smallest per-id
-      upper bound t (provably holds the exact top-k); for a range,
-      every row whose lower bound is inside the radius.
-
-    The top-k bound cut scores once: each partition emits its rows with
-    lower bound ≤ its own k-th smallest per-id upper bound (all rows
-    when it holds fewer than k ids).  A partition's threshold is at
-    least t and every top-k id's best row is emitted.  The driver
-    collects the emitted rows' first ``RERANK_FETCH_CAP`` + 1 by lower
-    bound, as Arrow.  Every row with lower bound ≤ t, so every top-k
-    row, is in that head whenever t from the head is below its last
-    lower bound; otherwise the head's t (≥ the global t) cuts the
-    emitted rows as a Spark plan.
-
-    Candidate ids reach the driver and come back as a pushed ``id IN``
-    filter (row-group skipping on the id-sorted layout), a broadcast id
-    join above ``_ISIN_LITERAL_CAP`` ids, and a plain join against the
-    candidates above ``RERANK_FETCH_CAP`` — a large-radius ring can be
-    corpus-scale, too big to force a broadcast."""
-    meta = index.meta
-    dedup = meta.get("replicas", 1) > 1
-    cand = None
-    if window:
-        scored = code_scores(index, df, quant, q, cents)
-        if dedup:
-            scored = scored.groupBy("id").agg(F.min("adist").alias("adist"))
-        cand = scored.orderBy(F.col("adist").asc(), F.col("id").asc()).limit(int(window))
-    elif radius is not None:
-        kradius = float(radius) - 1.0 if meta["metric"] == "cos" else float(radius)
-
-        def in_ring(ids, lb, ub):
-            # relative margin: FP error in the bound scales with its own
-            # magnitude (dot/cos bounds can dwarf |kradius|)
-            return lb < kradius + 1e-9 * np.maximum(max(1.0, abs(kradius)), np.abs(lb))
-
-        cand = code_scores(index, df, quant, q, cents, keep=in_ring)
-    else:
-        kk = int(k)
-
-        def under_kth(ids, lb, ub):
-            return lb <= SW.kth_upper(ids, ub, kk)
-
-        emitted = code_scores(index, df, quant, q, cents, keep=under_kth)
-        # the driver takes the first RERANK_FETCH_CAP + 1 emitted rows
-        # by lower bound, as Arrow
-        head = emitted.orderBy("lb", "id").limit(RERANK_FETCH_CAP + 1).toArrow()
-        hid, lb, ub = (head.column(c).to_numpy() for c in ("id", "lb", "ub"))
-        t = SW.kth_upper(hid, ub, kk)
-        if len(hid) <= RERANK_FETCH_CAP or t < lb[-1]:
-            # the head holds every row with lb <= t, top-k ones included
-            ids = np.unique(hid[lb <= t]).tolist()
-        else:
-            # t from the head bounds the global one from above
-            cand = emitted.where(F.col("lb") <= float(t))
-    if cand is not None:
-        ids = [r["id"] for r in cand.select("id").limit(RERANK_FETCH_CAP + 1).collect()]
-    if len(ids) <= _ISIN_LITERAL_CAP:
-        fetched = df.where(F.col("id").isin(ids))
-    elif len(ids) <= RERANK_FETCH_CAP:
-        # a giant IN-list costs more to plan than its row-group skipping
-        # saves
-        iddf = local_frame(index.spark, [(int(i),) for i in ids], "id bigint")
-        fetched = df.join(F.broadcast(iddf), "id")
-    else:
-        fetched = df.join(cand.select("id"), "id")
-    out = fetched.withColumn("distance", post_map(meta["metric"], exact_distance(meta, q)))
-    if dedup:
-        # a replicated id is fetched once per list holding it; the rows
-        # carry the same vector, so any one per id is exact
-        out = out.dropDuplicates(["id"])
-    if radius is not None:
-        out = out.where(F.col("distance") < F.lit(float(radius)))
-    else:
-        out = out.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(int(k))
-    return out.drop("vec", "codes", "rq")

@@ -5,7 +5,7 @@
 units, and runs one index-specific block runner per pair
 (``segment_worker``):
 
-- flat: (block x parquet file) gemm tasks over the rows dir
+- flat: (block x parquet file) scan tasks over the rows dir
 - hnsw: (block x graph segment) resident-graph passes
 - ivf:  (block x list-id chunk) tasks: in-task centroid probing, then a
   pyarrow scan of ONLY the probed lists that fall in the chunk (the
@@ -13,13 +13,19 @@ units, and runs one index-specific block runner per pair
   chunks round-robin the list ids, one per core, so even a single
   block scans its probed lists in parallel
 
+A scan scores one query at a time with per-row einsums
+(``segment_worker.np_kernel_distance``), so a row's distance does not
+depend on its position in a file, a list or a block; certified gemm
+scoring is ROADMAP item 3.
+
 Quantized flat and IVF indexes (SQ, residual SQ, PQ, RaBitQ) run the
 two-phase scan inside the same tasks: the unit's codes score the
-block, each query keeps its top ``win`` by approximate distance, and
-one pushed ``id IN`` read per (block, unit) rescores those windows
-exactly.  ``_finish`` then cuts the global window by approximate
-distance and the top k by exact distance — partition-local top-k with
-a global merge (REPOSE, ICDE 2021).
+block, each query keeps its top ``win`` by approximate distance (or,
+per-query SQ without a window, the rows its error bound cannot rule
+out), and one pushed ``id IN`` read per (block, unit) rescores those
+candidates exactly.  ``_finish`` then cuts the global window by
+approximate distance and the top k by exact distance — partition-local
+top-k with a global merge (REPOSE, ICDE 2021).
 
 Only where the blocks are built depends on the query count.  A query
 set under ``BATCH_COLLECT_CAP`` is collected once and the driver slices
@@ -40,19 +46,23 @@ itself.  When the query set was collected and the call's cost
 (``serve_cost``) fits ``DRIVER_SERVE_BYTES``, the driver runs the same
 runners over the same pairs in-process and ``merge`` — the numpy twin
 of ``_finish`` — cuts the rows; the result is a driver-held
-``base.local_frame``, so the call launches no Spark job.  Per-query
-``search`` and ``range_search`` use this path as a batch of one
-(``serve``), the in-process ordered scan of the reference (VBASE,
-am_scan.rs).  ``segment_worker``'s fingerprint-keyed caches keep the
-units warm in the driver as they do in executors.  Above the budget,
-or for a query set assembled on executors, Spark runs the pairs.  Each
-index handle counts the decision in ``serve_stats``.
+``base.local_frame``, so the call launches no Spark job.
+``segment_worker``'s fingerprint-keyed caches keep the units warm in
+the driver as they do in executors.  Above the budget, or for a query
+set assembled on executors, Spark runs the pairs.  Each index handle
+counts the decision in ``serve_stats``.
 
-Residual calls take the same path.  The runners drop masked rows
-before each query's window: a ``filter`` becomes the ids passing it
-(``allowed``), a driver-held ``exclude`` frame the ids to drop
-(``denied``), and a fresh index hands its tombstones over as a deny
-array directly.
+Per-query ``search`` and ``range_search`` on flat, IVF and HNSW are
+a batch of one (``serve``), the ordered scan of the reference (VBASE,
+am_scan.rs), and have no other engine: ``route`` picks only where the
+pairs run.  In the driver, or over the budget as one Spark job over
+the pairs whose top-k rows the driver collects and merges; an
+over-budget sphere stays a Spark DataFrame (``_finish``), since it can
+be corpus-sized.  The runners drop masked rows before each query's
+window: a ``filter`` becomes the ids passing it (``allowed``), an
+``exclude`` frame the ids to drop (``denied``), and a fresh index hands
+its tombstones over as a deny array directly.  Both id sets are held in
+the driver, 8 bytes per id.
 """
 
 from __future__ import annotations
@@ -174,46 +184,49 @@ def decide(handle, driver: bool) -> bool:
 
 
 def route(index, eligible: bool = True, n_queries: int = 1, scans: float = 1) -> bool:
-    """True to serve in the driver: an ``eligible`` call (collected
-    queries, a runner-backed scan, an exclusion set held in the driver)
-    whose ``serve_cost`` fits ``DRIVER_SERVE_BYTES`` (read at call
-    time).  Counts the decision in ``index.serve_stats``."""
+    """True to run a call's (block, unit) pairs in the driver, False to
+    run them as Spark tasks: the driver takes an ``eligible`` call (a
+    batch's collected queries; every per-query call) whose
+    ``serve_cost`` fits ``DRIVER_SERVE_BYTES`` (read at call time).
+    Counts the decision in ``index.serve_stats``."""
     cost = serve_cost(index, max(1, n_queries), scans)
     return decide(index, eligible and cost <= DRIVER_SERVE_BYTES)
 
 
-def local_exclude(exclude: DataFrame | None) -> bool:
-    """Whether an ``exclude`` frame can become a deny mask: none, or
-    driver-held, so that collecting it runs no Spark job."""
-    return exclude is None or exclude.isLocal()
-
-
 def denied(exclude: DataFrame | None):
-    """The ids of a driver-held ``exclude`` frame as an int64 array,
-    None without one."""
+    """The ids of an ``exclude`` frame as an int64 array, None without
+    one: one collect, which runs no Spark job for a driver-held
+    frame."""
     if exclude is None:
         return None
     return np.asarray([r[0] for r in exclude.select("id").collect()], dtype=np.int64)
 
 
 def allowed(index, filter, files: list, schema, base_dir: str | None = None,
-            keys: tuple = ("id",)) -> np.ndarray:
+            keys: tuple = ("id",), driver: bool = True) -> np.ndarray:
     """The ``keys`` of the stored rows in ``files`` that pass
     ``filter``, an (n, len(keys)) int64 array.  The rows' non-vector
     columns, named by the Spark ``schema`` (Hive partition columns come
-    from the paths under ``base_dir``), are read with pyarrow into a
-    driver-held frame; Catalyst folds the ``where`` into the local
-    relation, so the collect runs no Spark job (a Python UDF in the
-    filter runs one)."""
+    from the paths under ``base_dir``), are read: for a ``driver`` call
+    with pyarrow into a driver-held frame, where Catalyst folds the
+    ``where`` into the local relation and the collect runs no Spark job
+    (a Python UDF in the filter runs one); else by one Spark scan of the
+    files (Spark lists more than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths in
+    a job of its own)."""
     import pyarrow.dataset as pads
 
     if not files:
         return np.empty((0, len(keys)), dtype=np.int64)
-    tbl = pads.dataset(
-        list(files), format="parquet", partitioning="hive" if base_dir else None,
-        partition_base_dir=base_dir,
-    ).to_table(columns=schema.names)
-    frame = index.spark.createDataFrame(tbl, schema)
+    if driver:
+        tbl = pads.dataset(
+            list(files), format="parquet", partitioning="hive" if base_dir else None,
+            partition_base_dir=base_dir,
+        ).to_table(columns=schema.names)
+        frame = index.spark.createDataFrame(tbl, schema)
+    else:
+        reader = index.spark.read.schema(schema)
+        frame = (reader.option("basePath", base_dir) if base_dir else reader).parquet(*files)
     rows = frame.where(filter).select(*keys).collect()
     return np.asarray(rows, dtype=np.int64).reshape(len(rows), len(keys))
 
@@ -236,12 +249,14 @@ def _cut(df: DataFrame, col: str, n: int) -> DataFrame:
     ).drop("_rn")
 
 
-def _finish(index, rdd, k: int, win: int | None = None) -> DataFrame:
-    """Merge the runners' rows to k per query.  Quantized runners emit
-    (query_id, id, adist, distance): the global rerank window keeps the
-    ``win`` best by approximate distance, then the exact distances
-    rank; unit windows are a superset of it, so this is the global
-    two-phase cut."""
+def _finish(index, rdd, k: int | None, win: int | None = None,
+            radius: float | None = None) -> DataFrame:
+    """Merge the runners' rows to k per query (every row when ``k`` is
+    None), as a Spark plan.  Quantized runners emit (query_id, id,
+    adist, distance): the global rerank window keeps the ``win`` best
+    by approximate distance, then the exact distances rank; unit
+    windows are a superset of it, so this is the global two-phase cut.
+    With ``radius``, only the rows under it."""
     vals = ["distance"] if win is None else ["adist", "distance"]
     cand = index.spark.createDataFrame(
         rdd, schema=", ".join(["query_id bigint", "id bigint"]
@@ -254,8 +269,13 @@ def _finish(index, rdd, k: int, win: int | None = None) -> DataFrame:
         cand = cand.groupBy("query_id", "id").agg(*[F.min(c).alias(c) for c in vals])
     if win is not None:
         cand = _cut(cand, "adist", win)
-    cand = cand.withColumn("distance", base.post_map(index.meta["metric"], F.col("distance")))
-    return _cut(cand, "distance", k).select("query_id", "id", "distance")
+    dist = base.post_map(index.meta["metric"], F.col("distance")).alias("distance")
+    if k is None:
+        out = cand.select("query_id", "id", dist)
+    else:
+        out = _cut(cand.withColumn("distance", dist), "distance", k)
+        out = out.select("query_id", "id", "distance")
+    return out if radius is None else out.where(F.col("distance") < float(radius))
 
 
 def _order(qid: np.ndarray, ids: np.ndarray, key: np.ndarray, n: int | None):
@@ -316,17 +336,35 @@ def run_local(qrows, normalize: bool, units: list, run) -> list:
 
 
 def serve(index, query, units: list, run, k: int | None = None,
-          win: int | None = None, radius: float | None = None):
-    """One query as a batch of one, in the driver: (ids, distances)
-    ordered by (distance, id).  ``query`` is the raw vector —
-    ``assemble_block`` normalizes it as ``base.prep_query`` does."""
-    rows = run_local([(0, query)], index.meta["normalize"], units, run)
+          win: int | None = None, radius: float | None = None, driver: bool = True):
+    """One query as a batch of one over ``units``: (ids, distances)
+    ordered by (distance, id).  ``driver`` (``route``'s decision) runs
+    the (block, unit) pairs in this process, else as one Spark job,
+    one task per unit, whose top-k rows the driver collects; a range
+    (``k`` None) over Spark returns the lazy (id, distance) DataFrame
+    instead.  ``query`` is the raw vector — ``assemble_block``
+    normalizes it as ``base.prep_query`` does."""
+    if driver:
+        rows = run_local([(0, query)], index.meta["normalize"], units, run)
+    else:
+        block = SW.assemble_block([(0, query)], index.meta["normalize"])
+        rdd = index.spark.sparkContext.parallelize(
+            [(block, u) for u in units], max(1, len(units))
+        ).mapPartitions(run)
+        if k is None:
+            return _finish(index, rdd, None, win, radius)
+        rows = rdd.collect()
     _, ids, dist = merge(index, rows, k, win, radius)
     return ids, dist
 
 
-def frame(index, ids: np.ndarray, dist: np.ndarray, id_type: str = "bigint") -> DataFrame:
-    """A driver-held (id, distance) result."""
+def frame(index, got, id_type: str = "bigint") -> DataFrame:
+    """A served call's (id, distance) result: ``serve``'s (ids,
+    distances) as a driver-held frame, or the (id, distance) columns of
+    its Spark range frame, the ids cast to ``id_type``."""
+    if isinstance(got, DataFrame):
+        return got.select(F.col("id").cast(id_type), "distance")
+    ids, dist = got
     return base.local_frame(
         index.spark, zip(ids.tolist(), dist.tolist()), f"id {id_type}, distance double"
     )

@@ -9,20 +9,22 @@ reranker crates/quantization/src/reranker/error.rs.
 
 Spark design:
 
-- exact path: the scan IS the index — Parquet columnar + TakeOrdered.
+- exact path: the scan IS the index — each rows file scored by the
+  block runner, per-file top-k merged (``indexes/batch.py``).
 - SQ path: store ``codes array<smallint>`` next to the exact vectors
   (``sq{1,2,4,8}``; Parquet dictionary/RLE encoding compresses the
   low-cardinality codes, so 1/2/4-bit cells shrink on disk without an
   explicit bit-packing pass).  First pass scans only the code column
-  and scores decoded codes (min + code·Δ) with the batch runners'
-  kernel (``base.two_phase``), then reranks by exact distance.  Two
-  rerank policies:
+  and scores decoded codes (min + code·Δ) inside the block runners
+  (``segment_worker.flat_file_block_runner``), then reranks by exact
+  distance.  Two rerank policies:
 
   * **error-bound** (default, reranker/error.rs analogue): the per-dim
     rounding error ε_j = width_j / (2·levels) gives sound bounds on the
     true distance per candidate; the rerank set = every candidate whose
-    lower bound beats the k-th smallest upper bound.  Adaptive — no
-    fixed window guess — and provably exact.
+    lower bound beats the k-th smallest upper bound of its rows file
+    (at least the global one).  Adaptive — no fixed window guess — and
+    provably exact.
   * **window** (reranker/flat.rs): fixed ``max(k, rerank_size)`` window
     when the caller passes ``rerank_size``.
 """
@@ -35,11 +37,11 @@ from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from pgvecto_rs_spark.indexes import base
 from pgvecto_rs_spark.indexes import batch as BT
 from pgvecto_rs_spark.indexes import segment_worker as SW
+from pgvecto_rs_spark.indexes.quantization import scaled_rerank_window
 
 SQ_BITS = 8  # default (crates/base/src/index.rs:447-462)
 _SQ_KINDS = {"sq1": 1, "sq2": 2, "sq4": 4, "sq8": 8}
@@ -154,12 +156,6 @@ class FlatIndex:
     def open(cls, spark: SparkSession, path: str) -> "FlatIndex":
         return cls(spark, path, base.read_meta(path))
 
-    def _rows(self):
-        # cached handle: avoids re-running the file-listing job per query
-        if getattr(self, "_rows_df", None) is None:
-            self._rows_df = self.spark.read.parquet(os.path.join(self.path, "rows"))
-        return self._rows_df
-
     def _files(self) -> list[str]:
         return sorted(glob.glob(os.path.join(self.path, "rows", "*.parquet")))
 
@@ -167,42 +163,65 @@ class FlatIndex:
         files = self._files()
         return base.stored_schema(files[0])["id"].dataType.simpleString() if files else "bigint"
 
-    def _driver_scans(self, op: str, opts: dict) -> float:
-        """The scans a driver-served ``op`` ("search" or "range_search")
-        weighs in ``batch.route``, 0 when it has no driver path: the
-        exact scans (an SQ sphere runs the two-phase plan)."""
-        quant = self.meta.get("quantization")
-        return float(quant is None if op == "search" else quant not in _SQ_KINDS)
+    def _driver_scans(self, op: str) -> float:
+        """The index scans ``op`` ("search" or "range_search") weighs in
+        ``batch.route``."""
+        return 1.0
 
     def _serve(self, query, k: int | None = None, radius: float | None = None,
-               filter=None, deny=None):
-        """Exact top-k or sphere in the driver: ``flat_file_block_runner``
-        over every rows file as a batch of one (``batch.serve``), the
-        ``filter`` resolved to the ids passing it (``batch.allowed``) and
-        ``deny`` dropped: (ids, distances)."""
+               filter=None, deny=None, rerank_size: int = 0, driver: bool = True):
+        """Top-k or sphere through ``flat_file_block_runner`` over every
+        rows file as a batch of one (``batch.serve``), in the driver or
+        as Spark tasks, with the ``filter`` resolved to the ids passing
+        it (``batch.allowed``) and ``deny`` dropped.  Quantized top-k
+        scores the codes and reranks its window, or, for SQ without
+        one, the rows the error bound keeps; an SQ sphere keeps the
+        rows whose lower bound is inside it.  PQ and RaBitQ carry no
+        sound bound, so their spheres scan the exact vectors."""
         from pyspark.sql.types import StructType
 
+        meta = self.meta
         files = self._files()
         allow = None
         if filter is not None and files:
             schema = StructType([base.stored_schema(files[0])["id"]])
-            allow = BT.allowed(self, filter, files, schema)[:, 0]
-        vec_col = "vec16" if self.meta.get("storage") == "f16" else "vec"
+            allow = BT.allowed(self, filter, files, schema, driver=driver)[:, 0]
+        quant = meta.get("quantization")
+        if radius is not None and quant not in _SQ_KINDS:
+            quant = None
+        params = win = None
+        if quant is not None:
+            params = BT.quant_params(self, quant)
+            # alter(default_rerank_size) persists the reference's
+            # sq_rerank_size GUC analogue into meta (maintenance.py)
+            rerank_size = rerank_size or int(meta.get("default_rerank_size", 0))
+            if radius is None and (quant not in _SQ_KINDS or rerank_size):
+                # flat's approximate pass scores the WHOLE corpus, so
+                # the scale-aware default window pools over n_rows
+                win = scaled_rerank_window(
+                    quant, k, meta["n_rows"], rerank_size,
+                    pq_ratio=int(meta.get("pq_ratio", 4)),
+                )
         run = SW.flat_file_block_runner(
-            self.meta["kernel"], BT.EVERY_ROW if k is None else int(k), vec_col,
+            meta["kernel"], BT.EVERY_ROW if k is None else int(k),
+            "vec16" if meta.get("storage") == "f16" else "vec", quant, params, win,
             below=None if radius is None else BT.kernel_below(self, radius),
             allow=allow, deny=deny,
         )
-        return BT.serve(self, query, files, run, k, radius=radius)
+        return BT.serve(self, query, files, run, k, win, radius, driver)
 
-    def _serve_search(self, query, k: int, deny=None, filter=None, rerank_size: int = 0):
-        """``search`` in the driver, with ``search``'s keywords: (ids,
+    def _serve_search(self, query, k: int, deny=None, filter=None, rerank_size: int = 0,
+                      driver: bool = True):
+        """``search``'s body, with its keywords and ``deny`` ids: (ids,
         distances)."""
-        return self._serve(query, k=k, filter=filter, deny=deny)
+        return self._serve(query, k=k, filter=filter, deny=deny,
+                           rerank_size=rerank_size, driver=driver)
 
-    def _serve_range(self, query, radius: float, deny=None, filter=None):
-        """``range_search`` in the driver: (ids, distances)."""
-        return self._serve(query, radius=radius, filter=filter, deny=deny)
+    def _serve_range(self, query, radius: float, deny=None, filter=None,
+                     driver: bool = True):
+        """``range_search``'s body: (ids, distances), or the Spark
+        frame over the budget."""
+        return self._serve(query, radius=radius, filter=filter, deny=deny, driver=driver)
 
     def search(
         self,
@@ -220,40 +239,14 @@ class FlatIndex:
         window.  ``exclude`` is an id-set DataFrame removed before
         ranking (tombstones).
 
-        Unquantized search on an index under ``batch.DRIVER_SERVE_BYTES``
-        runs in the driver and returns an eager, driver-held result: the
-        ``filter`` becomes the ids passing it, a driver-held ``exclude``
-        the ids to drop.  Every other call returns a lazy Spark plan,
-        ``exclude`` a broadcast anti-join."""
-        if BT.route(self, self._driver_scans("search", {}) > 0 and BT.local_exclude(exclude)):
-            ids, dist = self._serve_search(query, k, BT.denied(exclude), filter)
-            return BT.frame(self, ids, dist, self._id_type())
-        quant = self.meta.get("quantization")
-        q = base.prep_query(query, self.meta["normalize"])
-        if not rerank_size:
-            # alter(default_rerank_size) persists the reference's
-            # sq_rerank_size GUC analogue into meta (maintenance.py)
-            rerank_size = int(self.meta.get("default_rerank_size", 0))
-        df = base.apply_residual(self._rows(), filter, exclude)
-
-        if quant is not None:
-            from pgvecto_rs_spark.indexes.quantization import scaled_rerank_window
-
-            # sq with no explicit window takes the error-bound cut;
-            # flat's approximate pass scores the WHOLE corpus, so the
-            # scale-aware default window pools over n_rows
-            window = 0
-            if quant not in _SQ_KINDS or rerank_size:
-                window = scaled_rerank_window(
-                    quant, k, self.meta["n_rows"], rerank_size,
-                    pq_ratio=int(self.meta.get("pq_ratio", 4)),
-                )
-            return base.two_phase(self, df, quant, q, k, window=window)
-
-        out = df.withColumn(
-            "distance", base.post_map(self.meta["metric"], base.exact_distance(self.meta, q))
-        )
-        return out.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(k).select("id", "distance")
+        The block runners answer every call (``_serve``): in the driver
+        on an index under ``batch.DRIVER_SERVE_BYTES``, else as one
+        Spark job.  The ``filter`` becomes the ids passing it and
+        ``exclude`` the ids to drop.  The result is eager and
+        driver-held."""
+        driver = BT.route(self)
+        got = self._serve_search(query, k, BT.denied(exclude), filter, rerank_size, driver)
+        return BT.frame(self, got, self._id_type())
 
     def range_search(
         self,
@@ -277,23 +270,13 @@ class FlatIndex:
         estimators carry no sound bound, so those cells fall back to
         the exact vector scan (same answer, no I/O skip).
 
-        The exact scans on an index under ``batch.DRIVER_SERVE_BYTES``
-        run in the driver, with ``filter`` and a driver-held ``exclude``
-        as id masks, and return an eager, driver-held result."""
-        if BT.route(self, self._driver_scans("range_search", {}) > 0
-                    and BT.local_exclude(exclude)):
-            ids, dist = self._serve_range(query, radius, BT.denied(exclude), filter)
-            return BT.frame(self, ids, dist, self._id_type())
-        quant = self.meta.get("quantization")
-        q = base.prep_query(query, self.meta["normalize"])
-        df = base.apply_residual(self._rows(), filter, exclude)
-        if quant in _SQ_KINDS:
-            return base.two_phase(self, df, quant, q, radius=radius)
-        metric = self.meta["metric"]
-        out = df.withColumn("distance", base.post_map(metric, base.exact_distance(self.meta, q)))
-        return out.where(F.col("distance") < F.lit(float(radius))).select(
-            "id", "distance"
-        )
+        The scan runs in the driver on an index under
+        ``batch.DRIVER_SERVE_BYTES`` and returns an eager, driver-held
+        result; over it, Spark tasks run the same scan and the result
+        is a Spark plan."""
+        driver = BT.route(self)
+        got = self._serve_range(query, radius, BT.denied(exclude), filter, driver)
+        return BT.frame(self, got, self._id_type())
 
     def search_batch(
         self,
@@ -312,10 +295,9 @@ class FlatIndex:
         setup across the whole query set.  Quantized indexes run the
         two-phase shape per (block, file): the codes score the block,
         each query keeps its fixed rerank window (``scaled_rerank_window``
-        over n_rows; the per-query sq error-bound rerank needs a
-        threshold job per query and is not batched), and one pushed-id
-        read of the file reranks the windows exactly; the merge cuts the
-        global window, then k.  Returns (query_id, id, distance), k
+        over n_rows; the SQ error-bound cut is per-query ``search``'s
+        default only), and one pushed-id read of the file reranks the
+        windows exactly; the merge cuts the global window, then k.  Returns (query_id, id, distance), k
         rows per query; eager and driver-held when ``batch.route``
         serves it in the driver."""
         qrows = BT.collect_queries_or_none(queries, query_id_col, query_vec_col)
@@ -323,8 +305,6 @@ class FlatIndex:
         quant = meta.get("quantization")
         params = win = None
         if quant is not None:
-            from pgvecto_rs_spark.indexes.quantization import scaled_rerank_window
-
             win = scaled_rerank_window(
                 quant, k, meta["n_rows"], int(meta.get("default_rerank_size", 0)),
                 pq_ratio=int(meta.get("pq_ratio", 4)),

@@ -12,15 +12,16 @@ LoserTree (crates/index/src/lib.rs:401-422).
 Spark mapping (SURVEY.md §7 Phase 5): graph traversal is pointer-chasing
 and does not fit DataFrame algebra, so each *segment* (a bounded slice
 of rows, like the reference's sealed segments) is built inside one
-``applyInPandas`` task with numpy adjacency arrays.  Search dispatches
-one task per segment over an RDD of segment ids; each task loads its
-segment's graph from Parquet into a **process-global executor cache**
+``applyInPandas`` task with numpy adjacency arrays.  Search runs one
+block runner per segment (``indexes/batch.py``), in the driver or as one
+task per segment over an RDD of segment ids; each loads its segment's
+graph from Parquet into a **process-global cache**
 (the Spark analogue of the reference's mmap-opened index,
 crates/index/src/lib.rs:128-211) and traverses it in memory.  Python
 workers are reused across queries (``spark.python.worker.reuse``, on by
 default), so repeated queries never re-read — let alone re-shuffle —
 the graph: only the ef candidate (id, distance) pairs per segment cross
-the wire.  Spark's TakeOrdered is the LoserTree merge analogue.  The
+the wire.  ``batch.merge`` is the LoserTree merge analogue.  The
 deterministic level function keeps builds reproducible (same property
 the reference relies on for rebuild tests).
 
@@ -622,6 +623,9 @@ class HNSWIndex:
         self._storage_bytes: int | None = None
         #: calls served in the driver vs by Spark (``batch.route``)
         self.serve_stats: dict[str, int] = {}
+        #: residual-search ef-widening rounds and stop reasons per handle
+        #: ({"rounds", "filled", "full", "exact"}, ``_serve_search``)
+        self.widen_stats: dict[str, int] = {}
 
     @classmethod
     def create(
@@ -835,29 +839,12 @@ class HNSWIndex:
             os.path.join(graph_dir, f"seg={s}") for s in range(self.meta["n_segments"])
         ]
 
-    def _candidates(self, q: np.ndarray, ef: int, exact: bool, keep_all: bool) -> DataFrame:
-        """One task per segment over an RDD of segment dirs; each task
-        traverses its executor-resident graph (or brute-scans the resident
-        vectors when ``exact``) and yields (id, distance) candidates."""
-        kernel, metric = self.meta["kernel"], self.meta["metric"]
-        quant, qparams = self._quant()
-        sc = self.spark.sparkContext
-        seg_dirs = self._segment_dirs()
-        run = SW.topk_runner(quant, qparams, kernel, q, ef, exact, keep_all)
+    def _driver_scans(self, op: str) -> float:
+        """The index scans ``op`` ("search" or "range_search") weighs in
+        ``batch.route``: one for top-k, ``_RANGE_SCANS`` for a sphere."""
+        return float(_RANGE_SCANS if op == "range_search" else 1)
 
-        rdd = sc.parallelize(seg_dirs, len(seg_dirs)).mapPartitions(run)
-        cand = self.spark.createDataFrame(rdd, schema="id bigint, distance double")
-        return cand.withColumn("distance", base.post_map(metric, F.col("distance")))
-
-    def _driver_scans(self, op: str, opts: dict) -> float:
-        """The scans a driver-served ``op`` ("search" or "range_search")
-        weighs in ``batch.route``, 0 when it has no driver path: graph
-        search (not ``exact``) and the sphere scan (``_RANGE_SCANS``)."""
-        if op == "search":
-            return 0.0 if opts.get("exact") else 1.0
-        return float(_RANGE_SCANS)
-
-    def _allowed(self, filter):
+    def _allowed(self, filter, driver: bool = True):
         """The ids passing ``filter`` over the stored (id, seg) columns
         (``batch.allowed``), None without a filter."""
         from pyspark.sql.types import StructType
@@ -867,50 +854,56 @@ class HNSWIndex:
         graph_dir = os.path.join(self.path, "graph")
         files = sorted(glob.glob(os.path.join(graph_dir, "seg=*", "*.parquet")))
         schema = StructType.fromDDL("id bigint, seg int")
-        return BT.allowed(self, filter, files, schema, graph_dir)[:, 0]
+        return BT.allowed(self, filter, files, schema, graph_dir, driver=driver)[:, 0]
 
     def _serve_search(self, query, k: int, deny=None, filter=None,
-                      ef_search: int | None = None, max_widen: int = 3, exact: bool = False):
-        """``search``'s graph ladder in the driver: each round runs
-        ``hnsw_segment_block_runner`` over the segments as a batch of
-        one with the id masks; a residual call short of k rows widens ef
-        4x up to ``max_widen`` times, then ranks every resident vector
-        exactly (``topk_runner``), as the Spark plan does.  Takes
-        ``search``'s keywords (``exact`` has no driver path, see
-        ``_driver_scans``); returns (ids, distances)."""
+                      ef_search: int | None = None, max_widen: int = 3, exact: bool = False,
+                      driver: bool = True):
+        """``search``'s body, with its keywords and ``deny`` ids: each
+        round runs ``hnsw_segment_block_runner`` over the segments as a
+        batch of one (``batch.serve``, in the driver or as Spark tasks)
+        with the id masks; a residual call short of k rows widens ef 4x
+        up to ``max_widen`` times, then ranks every vector exactly
+        (``topk_runner``), which ``exact`` does at once.  ``widen_stats``
+        counts a residual call's rounds and why it stopped: ``filled``
+        (k rows), ``full`` (ef reached the row count) or ``exact`` (the
+        exact fallback).  Returns (ids, distances)."""
         kernel = self.meta["kernel"]
         quant, qparams = self._quant()
         seg_dirs = self._segment_dirs()
-        ef = max(self._resolve_ef(ef_search), k)
-        allow = self._allowed(filter)
-        residual = allow is not None or deny is not None
-        n_rows = self.meta["n_rows"]
-        for _ in range(max_widen + 1):
-            run = SW.hnsw_segment_block_runner(quant, qparams, kernel, ef, allow, deny)
-            ids, dist = BT.serve(self, query, seg_dirs, run, k)
-            if not residual or len(ids) >= min(k, n_rows) or ef >= n_rows:
-                return ids, dist
-            ef *= 4
-        q = base.prep_query(query, self.meta["normalize"])
-        run = SW.topk_runner(quant, qparams, kernel, q, k, exact=True, keep_all=True)
-        rows = [(0, i, d) for i, d in run(iter(seg_dirs))]
-        keep = SW._kept(np.asarray([r[1] for r in rows], dtype=np.int64), allow, deny)
-        _, ids, dist = BT.merge(self, [r for r, kept in zip(rows, keep) if kept], k)
-        return ids, dist
+        allow = self._allowed(filter, driver)
+        if not exact:
+            residual = allow is not None or deny is not None
+            n_rows = self.meta["n_rows"]
+            ef = max(self._resolve_ef(ef_search), k)
+            for _ in range(max_widen + 1):
+                run = SW.hnsw_segment_block_runner(quant, qparams, kernel, ef, allow, deny)
+                ids, dist = BT.serve(self, query, seg_dirs, run, k, driver=driver)
+                if not residual:
+                    return ids, dist
+                BT.tally(self.widen_stats, "rounds")
+                stop = "filled" if len(ids) >= min(k, n_rows) else "full" if ef >= n_rows else None
+                if stop:
+                    BT.tally(self.widen_stats, stop)
+                    return ids, dist
+                ef *= 4
+            BT.tally(self.widen_stats, "exact")
+        run = SW.topk_runner(quant, qparams, kernel, k, allow, deny)
+        return BT.serve(self, query, seg_dirs, run, k, driver=driver)
 
     def _serve_range(self, query, radius: float, deny=None, filter=None,
-                     ef_search: int | None = None):
-        """``range_search`` in the driver: ``range_runner`` over the
-        segments with the id masks, (ids, distances)."""
+                     ef_search: int | None = None, driver: bool = True):
+        """``range_search``'s body: ``range_runner`` over the segments
+        with the id masks, (ids, distances), or the Spark frame over the
+        budget."""
         metric = self.meta["metric"]
         kradius = float(radius) - 1.0 if metric == "cos" else float(radius)
         quant, qparams = self._quant()
         run = SW.range_runner(
-            quant, qparams, self.meta["kernel"], base.prep_query(query, self.meta["normalize"]),
-            kradius, self._resolve_ef(ef_search), self._allowed(filter), deny,
+            quant, qparams, self.meta["kernel"], kradius, self._resolve_ef(ef_search),
+            self._allowed(filter, driver), deny,
         )
-        _, ids, dist = BT.merge(self, [(0, i, d) for i, d in run(iter(self._segment_dirs()))])
-        return ids, dist
+        return BT.serve(self, query, self._segment_dirs(), run, driver=driver)
 
     def search(
         self,
@@ -923,50 +916,23 @@ class HNSWIndex:
         exclude: DataFrame | None = None,
     ) -> DataFrame:
         """Top-k: per-segment resident-graph search (ef_search candidates
-        each), global TakeOrdered merge.  With a residual ``filter`` or an
-        ``exclude`` id-set (tombstones, broadcast anti-join), mirrors
-        VBASE's unbounded stream by iterative ef-widening: if fewer than k
-        survivors, re-search with ef*4 up to ``max_widen`` times, then fall
-        back to an exact scan of the resident segment vectors (guaranteed k
-        survivors when they exist).  ``exact=True`` skips the graph and
-        brute-scans the resident vectors — the full-rerank mode used for
-        oracle checks of the storage/merge path.
+        each), global merge.  With a residual ``filter`` or an
+        ``exclude`` id-set (tombstones), mirrors VBASE's unbounded
+        stream by iterative ef-widening: if fewer than k survivors,
+        re-search with ef*4 up to ``max_widen`` times, then fall back to
+        an exact scan of the segment vectors (guaranteed k survivors
+        when they exist).  ``exact=True`` skips the graph and
+        brute-scans the vectors — the full-rerank mode used for oracle
+        checks of the storage/merge path.
 
-        Graph search on an index under ``batch.DRIVER_SERVE_BYTES`` runs
-        the same ladder in the driver (``_serve_search``), with
-        ``filter`` and a driver-held ``exclude`` as id masks, and returns
-        an eager, driver-held result; every other call returns a Spark
-        plan."""
-        if BT.route(self, self._driver_scans("search", {"exact": exact}) > 0
-                    and BT.local_exclude(exclude)):
-            return BT.frame(self, *self._serve_search(
-                query, k, BT.denied(exclude), filter, ef_search, max_widen
-            ))
-        q = base.prep_query(query, self.meta["normalize"])
-        ef = max(self._resolve_ef(ef_search), k)
-        residual = filter is not None or exclude is not None
-        if exact:
-            out = self._candidates(q, ef=max(ef, k), exact=True, keep_all=residual)
-            out = base.apply_residual(out, filter, exclude)
-            return out.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(k)
-        for _ in range(max_widen + 1):
-            out = self._candidates(q, ef, exact=False, keep_all=False)
-            if not residual:
-                return out.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(k)
-            out = base.apply_residual(out, filter, exclude).orderBy(
-                F.col("distance").asc(), F.col("id").asc()
-            )
-            rows = out.limit(k).collect()
-            if len(rows) >= min(k, self.meta["n_rows"]) or ef >= self.meta["n_rows"]:
-                return base.local_frame(self.spark, rows, out.schema)
-            ef *= 4
-        # exact-scan fallback: rank everything, apply residuals, take k
-        out = self._candidates(q, ef=k, exact=True, keep_all=True)
-        return (
-            base.apply_residual(out, filter, exclude)
-            .orderBy(F.col("distance").asc(), F.col("id").asc())
-            .limit(k)
-        )
+        The block runners answer every call (``_serve_search``): in the
+        driver on an index under ``batch.DRIVER_SERVE_BYTES``, else as
+        one Spark job per round, with ``filter`` and ``exclude`` as id
+        masks.  The result is eager and driver-held."""
+        driver = BT.route(self)
+        return BT.frame(self, self._serve_search(
+            query, k, BT.denied(exclude), filter, ef_search, max_widen, exact, driver
+        ))
 
     def range_search(
         self,
@@ -998,27 +964,14 @@ class HNSWIndex:
         radius whose sphere contains ≥ ef candidates).
 
         A call on an index under a tenth of ``batch.DRIVER_SERVE_BYTES``
-        (``_RANGE_SCANS``) runs the same per-segment scan in the driver,
-        with ``filter`` and a driver-held ``exclude`` as id masks, and
-        returns an eager, driver-held result."""
-        if BT.route(self, BT.local_exclude(exclude),
-                    scans=self._driver_scans("range_search", {})):
-            return BT.frame(self, *self._serve_range(
-                query, radius, BT.denied(exclude), filter, ef_search
-            ))
-        kernel, metric = self.meta["kernel"], self.meta["metric"]
-        kradius = float(radius) - 1.0 if metric == "cos" else float(radius)
-        quant, qparams = self._quant()
-        sc = self.spark.sparkContext
-        q = base.prep_query(query, self.meta["normalize"])
-        seg_dirs = self._segment_dirs()
-        run = SW.range_runner(
-            quant, qparams, kernel, q, kradius, self._resolve_ef(ef_search)
-        )
-        rdd = sc.parallelize(seg_dirs, len(seg_dirs)).mapPartitions(run)
-        out = self.spark.createDataFrame(rdd, schema="id bigint, distance double")
-        out = out.withColumn("distance", base.post_map(metric, F.col("distance")))
-        return base.apply_residual(out, filter, exclude)
+        (``_RANGE_SCANS``) runs the per-segment scan in the driver and
+        returns an eager, driver-held result; over it, Spark tasks run
+        the same scan behind a Spark plan.  ``filter`` and ``exclude``
+        are id masks."""
+        driver = BT.route(self, scans=self._driver_scans("range_search"))
+        return BT.frame(self, self._serve_range(
+            query, radius, BT.denied(exclude), filter, ef_search, driver
+        ))
 
     def search_batch(
         self,

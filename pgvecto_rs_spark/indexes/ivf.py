@@ -12,16 +12,18 @@ Spark-first design (SURVEY.md §7 Phase 3):
   nlist×dims floats, trivially driver-sized even at nlist=65536.
 - **assign**: broadcast centroids; one Arrow-batched pandas UDF computes
   argmin list_id per row (a single (batch × nlist) matmul).
-- **layout**: Parquet *partitioned by* ``list_id``.  At query time
-  ``WHERE list_id IN (<top-nprobe>)`` is partition pruning — Spark
-  reads only nprobe/nlist of the data, the exact analogue of probing
-  nprobe inverted lists.  At 100 TB with nlist=1000, nprobe=10 this
-  scans ~1% of the corpus, embarrassingly parallel across executors.
+- **layout**: Parquet *partitioned by* ``list_id``, one directory per
+  list.  A search opens only its nprobe probed list directories — the
+  exact analogue of probing nprobe inverted lists.  At 100 TB with
+  nlist=1000, nprobe=10 this scans ~1% of the corpus, spread over
+  round-robin list chunks, one task each.
   One writer, ``segment_worker.ivf_list_writer``, writes every list
   file: build, updates and compaction run it per list inside one
   grouped Arrow job.
-- **search**: centroid top-nprobe on the driver (numpy over the small
-  centroid table), pruned scan, exact kernel distance, TakeOrdered k.
+- **search**: ``segment_worker.ivf_block_runner`` per list chunk:
+  centroid top-nprobe (numpy over the small centroid table), a pyarrow
+  scan of the probed lists, exact kernel distance, per-list top-k
+  merged (``indexes/batch.py``), in the driver or as Spark tasks.
 
 Cos metric follows the reference opclass: vectors are normalized at
 build, queries normalized at search, kernel is Dot, SQL distance is
@@ -129,15 +131,6 @@ def _lists_schema(lists_dir: str):
     return None if first is None else base.stored_schema(first).add("list_id", "integer")
 
 
-def _read_lists(spark: SparkSession, lists_dir: str) -> DataFrame:
-    """The ``list_id``-partitioned lists table, read with
-    ``_lists_schema``: left to infer it, Spark runs a job per read."""
-    schema = _lists_schema(lists_dir)
-    if schema is None:
-        return spark.read.parquet(lists_dir)
-    return spark.read.schema(schema).parquet(lists_dir)
-
-
 def _snapshot(lists_dir: str) -> dict[int, list[str]]:
     """Each list's Parquet files, by list id, as the driver sees them
     now: what ``segment_worker.ivf_list_writer`` reads and the commit
@@ -165,7 +158,6 @@ class IVFIndex:
         self.path = path
         self.meta = meta
         self.centroids = centroids
-        self._lists_df: DataFrame | None = None
         self._radii: np.ndarray | None = None
         self._storage_bytes: int | None = None
         #: calls served in the driver vs by Spark (``batch.route``)
@@ -174,18 +166,6 @@ class IVFIndex:
         #: ({"rounds", "full", "certified", "exhausted"}) —
         #: makes the certificate's fire rate measurable (r11 advice)
         self.widen_stats: dict[str, int] = {}
-
-    def _lists(self) -> DataFrame:
-        """The lists DataFrame, created once per index handle.
-
-        Re-creating it per search would re-run Spark's parallel
-        file-listing job over all nlist partition directories (one task
-        per directory — measured as the dominant per-query cost at
-        nlist=1000); a cached DataFrame keeps the InMemoryFileIndex and
-        leaves only the pruned scan per query."""
-        if self._lists_df is None:
-            self._lists_df = _read_lists(self.spark, os.path.join(self.path, "lists"))
-        return self._lists_df
 
     # ------------------------------------------------------------------
     @classmethod
@@ -529,7 +509,6 @@ class IVFIndex:
             np.save(tmp, radii, allow_pickle=False)
             os.replace(tmp, radii_path)
         self._radii = None
-        self._lists_df = None  # invalidate the cached file index
         self._storage_bytes = None
         removed = np.unique(np.concatenate([np.empty(0, np.int64), *map(np.asarray, done["removed"])]))
         self.meta["n_rows"] = (
@@ -591,41 +570,16 @@ class IVFIndex:
         Scan fraction approaches nprobe-like selectivity for small
         radii and degrades gracefully to a full scan for huge ones.
 
-        A call on an index under ``batch.DRIVER_SERVE_BYTES`` scans the
-        surviving lists in the driver (``ivf_block_runner`` over the
-        worker list cache), with ``filter`` and a driver-held ``exclude``
-        as id masks, and returns an eager, driver-held result.
+        ``ivf_block_runner`` scans the surviving lists, with ``filter``
+        and ``exclude`` as id masks: in the driver on an index under
+        ``batch.DRIVER_SERVE_BYTES``, returning an eager, driver-held
+        result, else as Spark tasks behind a Spark plan (``_finish``).
         """
-        schema = "id long, distance double"
         if self.meta["nlist"] == 0:  # empty index (issue_427 build path)
-            return base.local_frame(self.spark, [], schema)
-        if BT.route(self, BT.local_exclude(exclude)):
-            ids, dist = self._serve_range(query, radius, BT.denied(exclude), filter)
-            return BT.frame(self, ids, dist, self._id_type())
-        q = base.prep_query(query, self.meta["normalize"])
-        lists = self._sphere_lists(q, radius)
-        if not lists:
-            return base.local_frame(self.spark, [], schema)
-        n = len(self.list_radii())
-        if len(lists) > 0.5 * n:
-            # a radius spanning most of the space can't prune usefully;
-            # skip the per-partition enumeration (a 1000-term isin only
-            # adds planning cost) and let the distance filter do the work
-            df = self._lists()
-        else:
-            df = self._lists().where(F.col("list_id").isin(lists))
-        df = base.apply_residual(df, filter, exclude)
-        out = (
-            df.withColumn(
-                "distance",
-                base.post_map(self.meta["metric"], base.exact_distance(self.meta, q)),
-            )
-            .where(F.col("distance") < F.lit(float(radius)))
-            .select("id", "distance")
-        )
-        if self.meta.get("replicas", 1) > 1:
-            out = out.dropDuplicates(["id"])
-        return out
+            return base.local_frame(self.spark, [], "id long, distance double")
+        driver = BT.route(self)
+        got = self._serve_range(query, radius, BT.denied(exclude), filter, driver)
+        return BT.frame(self, got, self._id_type())
 
     def _sphere_lists(self, q: np.ndarray, radius: float) -> list[int]:
         """The lists whose triangle-inequality bound (``range_search``)
@@ -650,26 +604,29 @@ class IVFIndex:
         )
         return np.nonzero(lb < kradius + margin)[0].tolist()
 
-    def _serve_range(self, query, radius: float, deny=None, filter=None):
-        """``range_search`` in the driver: the surviving lists scanned by
+    def _serve_range(self, query, radius: float, deny=None, filter=None,
+                     driver: bool = True):
+        """``range_search``'s body: the surviving lists scanned by
         ``ivf_block_runner`` (probing every list restricts the runner to
-        its chunk, the surviving lists), with the id masks: (ids,
-        distances)."""
+        its chunk), as one unit in the driver or in round-robin chunks
+        as Spark tasks, with the id masks: (ids, distances), or the
+        Spark frame over the budget."""
         if self.meta["nlist"] == 0:
             return np.empty(0, np.int64), np.empty(0)
         lists = self._sphere_lists(base.prep_query(query, self.meta["normalize"]), radius)
         if not lists:
             return np.empty(0, np.int64), np.empty(0)
-        keys = None if filter is None else self._allowed(filter, lists)
+        keys = None if filter is None else self._allowed(filter, lists, driver)
         run = SW.ivf_block_runner(
             self.centroids.astype(np.float64), self.meta["kernel"], len(self.centroids),
             BT.EVERY_ROW, os.path.join(self.path, "lists"), self._vec_col(),
             below=BT.kernel_below(self, radius),
             allow=None if keys is None else keys[:, 0], deny=deny,
         )
-        return BT.serve(self, query, [lists], run, radius=radius)
+        units = [lists] if driver else self._chunks(lists)
+        return BT.serve(self, query, units, run, radius=radius, driver=driver)
 
-    def _allowed(self, filter, lists: list[int]) -> np.ndarray:
+    def _allowed(self, filter, lists: list[int], driver: bool = True) -> np.ndarray:
         """(id, list_id) of the rows in ``lists`` passing ``filter``
         (``batch.allowed`` over id, the payload columns and list_id)."""
         lists_dir = os.path.join(self.path, "lists")
@@ -678,7 +635,7 @@ class IVFIndex:
             return np.empty((0, 2), dtype=np.int64)
         names = {"id", "list_id", *self.meta.get("payload_cols", [])}
         schema = StructType([f for f in _lists_schema(lists_dir).fields if f.name in names])
-        return BT.allowed(self, filter, files, schema, lists_dir, ("id", "list_id"))
+        return BT.allowed(self, filter, files, schema, lists_dir, ("id", "list_id"), driver)
 
     def _list_files(self, lists: list[int]) -> list[str]:
         lists_dir = os.path.join(self.path, "lists")
@@ -711,7 +668,7 @@ class IVFIndex:
 
         The comparison subtracts a relative-epsilon margin (the same
         scheme range_search applies to the identical bounds): t comes
-        from the Spark-side kernel and can differ from the driver
+        from the runner's per-row kernel and can differ from this
         numpy bound by ulps, so a borderline case must fail CLOSED —
         uncertified -> widen (r11 advice)."""
         if not rows:
@@ -767,35 +724,30 @@ class IVFIndex:
         grows (measured 0.86 at nlist=1000 on 2M rows), so the default
         scales with nlist.
 
-        The scan touches only the nprobe pruned partitions; residual
-        ``filter`` runs before the limit (VBASE exact-k under filters —
-        within the probed lists).  If a selective filter leaves fewer
-        than k survivors, the probe set widens (nprobe ×4, up to
-        ``max_widen`` rounds or nlist) — the bounded analogue of
-        VBASE's unbounded ordered stream.  With residual quantization,
-        the first pass scores decoded ``centroid + residual̂`` codes and
-        a rerank window gets exact distances (two-phase).
+        The scan reads only the nprobe probed lists; residual
+        ``filter`` and ``exclude`` drop rows before the limit (VBASE
+        exact-k under filters — within the probed lists).  If a
+        selective filter leaves fewer than k survivors, the probe set
+        widens (nprobe ×4, up to ``max_widen`` rounds or nlist) — the
+        bounded analogue of VBASE's unbounded ordered stream.  With
+        quantization, the first pass scores decoded ``centroid +
+        residual̂`` codes and a rerank window (for SQ without
+        ``rerank_size``, the error bound) gets exact distances
+        (two-phase).
 
-        Unquantized (f32 or f16) search on an index under
-        ``batch.DRIVER_SERVE_BYTES`` runs in the driver, ladder included
-        (``_serve_search``), and returns an eager, driver-held result
-        with the same columns; every other call returns a Spark plan.
+        ``ivf_block_runner`` answers every call, ladder included
+        (``_ladder``): in the driver on an index under
+        ``batch.DRIVER_SERVE_BYTES``, else as one Spark job per round.
+        The result is eager and driver-held, with the winners' stored
+        columns (``_stored``).
         """
-        nprobe = self._nprobe(nprobe)
         if self.meta["nlist"] == 0:  # empty index (issue_427 build path)
             return base.local_frame(self.spark, [], "id long, distance double")
-        if BT.route(self, self._driver_scans("search", {}) > 0 and BT.local_exclude(exclude)):
-            return self._stored(*self._ladder(query, k, nprobe, filter, max_widen, BT.denied(exclude)))
-        if (filter is not None or exclude is not None) and max_widen > 0:
-
-            def scan(np_eff):
-                out = self._scan(query, k, np_eff, filter, rerank_size, exclude)
-                rows = out.limit(k).collect()
-                return rows, (rows, out.schema)
-
-            rows, schema = self._widen(query, k, nprobe, max_widen, scan)
-            return base.local_frame(self.spark, rows, schema)
-        return self._scan(query, k, nprobe, filter, rerank_size, exclude)
+        driver = BT.route(self)
+        return self._stored(*self._ladder(
+            query, k, self._nprobe(nprobe), filter, max_widen, BT.denied(exclude),
+            rerank_size, driver,
+        ))
 
     def _nprobe(self, nprobe: int | None) -> int:
         if nprobe is not None:
@@ -813,8 +765,8 @@ class IVFIndex:
 
         Otherwise it probes 4x more lists, up to ``max_widen`` rounds,
         and returns the last answer.  ``widen_stats`` counts rounds and
-        stop reasons per handle, on the driver and the Spark side alike,
-        so the certification rate is measurable (ADVICE r11)."""
+        stop reasons per handle, whichever source ran the rounds, so the
+        certification rate is measurable (ADVICE r11)."""
         q = base.prep_query(query, self.meta["normalize"])
         nlist, n_rows = self.meta["nlist"], self.meta["n_rows"]
         np_eff = nprobe
@@ -831,44 +783,54 @@ class IVFIndex:
         BT.tally(self.widen_stats, "exhausted")
         return answer
 
-    def _ladder(self, query, k: int, nprobe: int, filter, max_widen: int, deny):
-        """``search`` in the driver: ``ivf_block_runner`` over the batch
-        chunks as a batch of one at ``nprobe``, with the id masks; a
-        ``filter`` or ``deny`` mask climbs the same ladder (``_widen``),
-        each round resolving the filter over its probed lists.  Returns
-        (ids, distances, the probed lists, the (id, list_id) rows passing
-        the filter)."""
+    def _ladder(self, query, k: int, nprobe: int, filter, max_widen: int, deny,
+                rerank_size: int = 0, driver: bool = True):
+        """``search``'s body: ``ivf_block_runner`` over the batch chunks
+        as a batch of one at ``nprobe`` (``batch.serve``, in the driver
+        or as Spark tasks), with the id masks; a ``filter`` or ``deny``
+        mask climbs the ladder (``_widen``), each round resolving the
+        filter over its probed lists.  Quantized indexes rerank the
+        window over the probed pool (``_fixed_rerank_window``), or SQ
+        without ``rerank_size`` the error bound's rows.  Returns (ids,
+        distances, the probed lists, the (id, list_id) rows passing the
+        filter)."""
+        from pgvecto_rs_spark.indexes.flat import _SQ_KINDS
+
         q = base.prep_query(query, self.meta["normalize"])
+        quant = self._quant()
+        params = None if quant is None else BT.quant_params(self, quant)
 
         def scan(np_eff):
             probed = self.probe_lists(q, np_eff)
-            keys = None if filter is None else self._allowed(filter, probed)
+            keys = None if filter is None else self._allowed(filter, probed, driver)
+            win = None
+            if quant is not None and (quant not in _SQ_KINDS or rerank_size):
+                win = self._fixed_rerank_window(quant, k, np_eff, rerank_size)
             run = SW.ivf_block_runner(
                 self.centroids.astype(np.float64), self.meta["kernel"], int(np_eff),
-                int(k), os.path.join(self.path, "lists"), self._vec_col(),
-                allow=None if keys is None else keys[:, 0], deny=deny,
+                int(k), os.path.join(self.path, "lists"), self._vec_col(), quant, params,
+                win, allow=None if keys is None else keys[:, 0], deny=deny,
             )
-            ids, dist = BT.serve(self, query, self._chunks(), run, k)
+            ids, dist = BT.serve(self, query, self._chunks(), run, k, win, driver=driver)
             return [{"distance": d} for d in dist.tolist()], (ids, dist, probed, keys)
 
         if (filter is None and deny is None) or max_widen <= 0:
             return scan(nprobe)[1]
         return self._widen(query, k, nprobe, max_widen, scan)
 
-    def _driver_scans(self, op: str, opts: dict) -> float:
-        """The scans a driver-served ``op`` ("search" or "range_search")
-        weighs in ``batch.route``, 0 when it has no driver path: every
-        range scan, and unquantized top-k (quantized top-k runs the
-        two-phase plan)."""
-        return float(op != "search" or self._quant() is None)
+    def _driver_scans(self, op: str) -> float:
+        """The index scans ``op`` ("search" or "range_search") weighs in
+        ``batch.route``."""
+        return 1.0
 
     def _serve_search(self, query, k: int, deny=None, filter=None, nprobe=None,
-                      rerank_size: int = 0, max_widen: int = 3):
-        """``search`` in the driver, with ``search``'s keywords:
-        (ids, distances)."""
+                      rerank_size: int = 0, max_widen: int = 3, driver: bool = True):
+        """``search``'s body, with its keywords and ``deny`` ids: (ids,
+        distances)."""
         if self.meta["nlist"] == 0:
             return np.empty(0, np.int64), np.empty(0)
-        return self._ladder(query, k, self._nprobe(nprobe), filter, max_widen, deny)[:2]
+        return self._ladder(query, k, self._nprobe(nprobe), filter, max_widen, deny,
+                            rerank_size, driver)[:2]
 
     def _quant(self) -> str | None:
         return self.meta.get("quantization") or (
@@ -878,16 +840,18 @@ class IVFIndex:
     def _vec_col(self) -> str:
         return "vec16" if self.meta.get("storage") == "f16" else "vec"
 
-    def _chunks(self) -> list[list[int]]:
-        """Round-robin list-id chunks, one per core: the batch units."""
-        nlist = self.meta["nlist"]
-        n_chunks = min(nlist, self.spark.sparkContext.defaultParallelism)
-        return [list(range(c, nlist, n_chunks)) for c in range(n_chunks)]
+    def _chunks(self, lists: list[int] | None = None) -> list[list[int]]:
+        """Round-robin chunks of ``lists`` (default: every list id), one
+        per core: the batch units."""
+        lists = list(range(self.meta["nlist"])) if lists is None else lists
+        n_chunks = min(len(lists), self.spark.sparkContext.defaultParallelism)
+        return [lists[c::n_chunks] for c in range(n_chunks)]
 
     def _stored(self, ids: np.ndarray, dist: np.ndarray, probed: list[int],
                 keys: np.ndarray | None) -> DataFrame:
-        """The driver result with the columns the Spark plan returns: the
-        winners' stored columns, read from the ``probed`` lists (a
+        """The search result: the winners' stored columns (every list
+        column but the vectors and codes) and their distance, read from
+        the ``probed`` lists with pyarrow in the driver (a
         replicated row from its smallest list id among the rows passing
         the filter, whose (id, list_id) are ``keys``)."""
         import pyarrow.dataset as pads
@@ -910,39 +874,6 @@ class IVFIndex:
             for i, d in zip(ids.tolist(), dist.tolist())
         ]
         return base.local_frame(self.spark, rows, schema)
-
-    def _scan(self, query, k: int, nprobe: int, filter, rerank_size: int,
-              exclude: DataFrame | None) -> DataFrame:
-        """One Spark probe scan at ``nprobe``: the pruned lists,
-        residual filters, then the exact or two-phase top-k."""
-        q = base.prep_query(query, self.meta["normalize"])
-        lists = self.probe_lists(q, nprobe)
-        df = self._lists().where(F.col("list_id").isin(lists))
-        df = base.apply_residual(df, filter, exclude)
-        from pgvecto_rs_spark.indexes.flat import _SQ_KINDS
-
-        quant = self._quant()
-        if quant is not None:
-            # sq with no explicit window takes the error-bound cut
-            # (reranker/error.rs, the flat SQ default): exact within the
-            # probed lists.  Codes are residuals around the probed
-            # lists' centroids.
-            window = 0
-            if quant not in _SQ_KINDS or rerank_size:
-                window = self._fixed_rerank_window(quant, k, nprobe, rerank_size)
-            cents = {int(l): self.centroids[l].astype(np.float64) for l in lists}
-            out = base.two_phase(self, df, quant, q, k, window=window, cents=cents)
-        else:
-            out = df.withColumn(
-                "distance",
-                base.post_map(self.meta["metric"], base.exact_distance(self.meta, q)),
-            )
-            if self.meta.get("replicas", 1) > 1:
-                # multi-assignment can surface the same id from two probed
-                # lists; rows are identical so any-one-per-id is exact
-                out = out.dropDuplicates(["id"])
-            out = out.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(k)
-        return out.drop("vec", "codes", "rq")
 
     def _fixed_rerank_window(self, quant: str | None, k: int,
                              nprobe: int, rerank_size: int) -> int:
@@ -983,9 +914,8 @@ class IVFIndex:
         its top window by approximate distance, and one pushed-id read
         over the chunk's probed lists reranks the windows exactly; the
         merge cuts the global window, then k.  The batch path always
-        uses the fixed rerank window (``_fixed_rerank_window``); the
-        per-query sq8 default (error-bound rerank) needs a per-query
-        threshold job and is not batched.
+        uses the fixed rerank window (``_fixed_rerank_window``); the SQ
+        error-bound cut is per-query ``search``'s default only.
 
         Returns (query_id, id, distance), k rows per query; unquantized
         results are bit-identical to per-query search at the same

@@ -21,12 +21,12 @@ Spark shapes:
 - Scoring has one implementation per quantizer, in
   ``segment_worker._approx_dists``: decode-on-access for flat codes,
   a batched per-list LUT for IVF-PQ residual codes, one unpack +
-  matmul per Arrow batch for RaBitQ.  ``search_batch`` runs it inside
-  the block runners; per-query ``search`` runs it in one
-  ``mapInArrow`` over the code column (``base.code_scores``).
+  matmul for RaBitQ.  Per-query ``search`` and ``search_batch`` both
+  run it inside the block runners.
 
-Both feed the same two-phase plan as SQ: approximate scan -> rerank
-window -> exact distances (reranker/flat.rs, ``base.two_phase``).
+Both feed the same two-phase scan as SQ: approximate scan -> rerank
+window -> exact distances (reranker/flat.rs,
+``segment_worker._rerank_emit``).
 """
 
 from __future__ import annotations

@@ -459,110 +459,105 @@ def _search_graph(
     return np.asarray([d for d, _ in out]), np.asarray([v for _, v in out])
 
 
-def topk_runner(quant, qparams, kernel: str, q: np.ndarray, ef: int,
-                exact: bool, keep_all: bool):
-    """mapPartitions runner for top-k candidate generation.  The query
-    vector rides IN the closure (a 64-float array is far cheaper than a
-    broadcast round-trip per query); cloudpickle serializes this closure
-    with references into THIS light module only."""
-    q = np.asarray(q, dtype=np.float64)
+def topk_runner(quant, qparams, kernel: str, k: int, allow=None, deny=None):
+    """Runner over (block, seg_dir) pairs that skips the graph: every
+    vector of the segment (a coded graph's exact vectors, fetched from
+    storage) scored against each query of the block, the id mask
+    (``_kept``) applied, and each query's top ``k`` by (distance, id)
+    emitted.  HNSW ``search(exact=True)`` and the widening ladder's
+    exact fallback run it."""
 
-    def run(it):
-        for seg_dir in it:
-            ids, vecs, neighbors, levels, entry = _load_segment(seg_dir, quant, qparams)
+    def run(pairs):
+        for blk, seg_dir in pairs:
+            if blk is None:
+                continue
+            qids, qmat = blk
+            ids, vecs, _nb, _lv, _en = _load_segment(seg_dir, quant, qparams)
             if len(ids) == 0:
                 continue
-            if exact:
-                mat = (
-                    _read_exact_vecs(seg_dir, np.arange(len(ids)))
-                    if quant in _RERANK_QUANTS
-                    else vecs
-                )
-                ds = np_kernel_distance(kernel, mat, q)
-                if keep_all:
-                    order = np.argsort(ds, kind="stable")
-                else:
-                    order = np.argsort(ds, kind="stable")[:ef]
-                out_d, out_i = ds[order], order
-            else:
-                out_d, out_i = _search_graph(
-                    vecs, neighbors, levels, entry, q, kernel, ef
-                )
-                if quant in _RERANK_QUANTS and len(out_i):
-                    # graph reranker: candidates were ranked on coded
-                    # distances; fetch their exact vectors from storage
-                    # and rescore before the global merge
-                    exact_mat = _read_exact_vecs(seg_dir, np.asarray(out_i))
-                    out_d = np_kernel_distance(kernel, exact_mat, q)
-            for i, d in zip(out_i, out_d):
-                yield (int(ids[int(i)]), float(d))
+            if quant in _RERANK_QUANTS:
+                vecs = _read_exact_vecs(seg_dir, np.arange(len(ids)))
+            keep = _kept(ids, allow, deny)
+            if keep is not None:
+                ids, vecs = ids[keep], vecs[keep]
+            d = np.empty((len(ids), len(qmat)))
+            for qi in range(len(qmat)):
+                d[:, qi] = np_kernel_distance(kernel, vecs, qmat[qi])
+            yield from _block_topk_emit(qids, d, ids, k)
 
     return run
 
 
-def range_runner(quant, qparams, kernel: str, q: np.ndarray, kradius: float,
-                 ef0: int, allow=None, deny=None):
-    """mapPartitions runner for the VBASE sphere scan: per-segment
-    in-task ef widening until the ordered stream crosses the radius
-    (see HNSWIndex.range_search for the stop-rule rationale).  The id
-    mask (``_kept``) drops rows from the emitted sphere."""
-    q = np.asarray(q, dtype=np.float64)
+def range_runner(quant, qparams, kernel: str, kradius: float, ef0: int,
+                 allow=None, deny=None):
+    """Runner over (block, seg_dir) pairs for the VBASE sphere scan: per
+    segment and query, ef widens in-task until the ordered stream
+    crosses the radius (see HNSWIndex.range_search for the stop-rule
+    rationale).  The id mask (``_kept``) drops rows from the emitted
+    sphere."""
 
-    def run(it):
-        for seg_dir in it:
+    def run(pairs):
+        for blk, seg_dir in pairs:
+            if blk is None:
+                continue
             ids, vecs, neighbors, levels, entry = _load_segment(seg_dir, quant, qparams)
             n = len(ids)
             if n == 0:
                 continue
-            ef = min(max(1, int(ef0)), n)
-            while True:
-                coded_d, out_i = _search_graph(
-                    vecs, neighbors, levels, entry, q, kernel, ef
-                )
-                if quant in _RERANK_QUANTS and len(out_i):
-                    exact_mat = _read_exact_vecs(seg_dir, np.asarray(out_i))
-                    out_d = np_kernel_distance(kernel, exact_mat, q)
-                else:
-                    out_d = coded_d
-                # the stream is ordered by CODED distance, so the
-                # drained-the-sphere test must run on the coded
-                # frontier; requiring the exact max to cross too keeps
-                # code-error from stopping while exact in-range rows
-                # are still surfacing (only ever widens further)
-                if (
-                    len(coded_d) < ef
-                    or ef >= n
-                    or (
-                        len(coded_d)
-                        and float(np.max(coded_d)) >= kradius
-                        and float(np.max(out_d)) >= kradius
+            for qid, q in zip(*blk):
+                ef = min(max(1, int(ef0)), n)
+                while True:
+                    coded_d, out_i = _search_graph(
+                        vecs, neighbors, levels, entry, q, kernel, ef
                     )
-                ):
-                    break
-                ef = min(ef * 4, n)
-            out_i = np.asarray(out_i, dtype=np.int64)
-            mask = out_d < kradius
-            kept = _kept(ids[out_i], allow, deny)
-            if kept is not None:
-                mask &= kept
-            for i, d in zip(out_i[mask], out_d[mask]):
-                yield (int(ids[int(i)]), float(d))
+                    if quant in _RERANK_QUANTS and len(out_i):
+                        exact_mat = _read_exact_vecs(seg_dir, np.asarray(out_i))
+                        out_d = np_kernel_distance(kernel, exact_mat, q)
+                    else:
+                        out_d = coded_d
+                    # the stream is ordered by CODED distance, so the
+                    # drained-the-sphere test must run on the coded
+                    # frontier; requiring the exact max to cross too keeps
+                    # code-error from stopping while exact in-range rows
+                    # are still surfacing (only ever widens further)
+                    if (
+                        len(coded_d) < ef
+                        or ef >= n
+                        or (
+                            len(coded_d)
+                            and float(np.max(coded_d)) >= kradius
+                            and float(np.max(out_d)) >= kradius
+                        )
+                    ):
+                        break
+                    ef = min(ef * 4, n)
+                out_i = np.asarray(out_i, dtype=np.int64)
+                mask = out_d < kradius
+                kept = _kept(ids[out_i], allow, deny)
+                if kept is not None:
+                    mask &= kept
+                for i, d in zip(out_i[mask], out_d[mask]):
+                    yield (qid, int(ids[int(i)]), float(d))
 
     return run
 
 
 # ---------------------------------------------------------------------------
-# Batch search (indexes/batch.py): query BLOCKS — sliced on the driver
-# from a collected query set, or assembled executor-side for query sets
-# over the collect cap — are cartesian-paired with storage units
-# (parquet files / graph segments / list-id chunks).  Each task runs one
-# (block x unit) gemm / graph pass and emits per-query local top-k; a
-# window merge finishes globally.  O(Q x N) work is inherent to exact
-# batch search; this shape spreads it over tasks with bounded memory per
-# task.  Quantized flat and IVF units run the two-phase scan in the
-# same task: codes score the block, each query keeps its approximate
-# window, and one exact fetch per (block, unit) rescores the windows
-# (the per-unit rerank of crates/quantization/src/reranker/*).
+# Block runners (indexes/batch.py): query BLOCKS — one query for
+# per-query search, sliced on the driver from a collected query set, or
+# assembled executor-side for query sets over the collect cap — are
+# paired with storage units (parquet files / graph segments / list-id
+# chunks).  Each pair runs one (block x unit) scan or graph pass, in the
+# driver or in a Spark task, and emits per-query local top-k; a window
+# merge finishes globally.  Scans score one query at a time with per-row
+# einsums (``np_kernel_distance``), so a row's distance does not depend
+# on its position; certified gemm scoring is ROADMAP item 3.  O(Q x N)
+# work is inherent to exact batch search; this shape spreads it over
+# tasks with bounded memory per task.  Quantized flat and IVF units run
+# the two-phase scan in the same task: codes score the block, each query
+# keeps its rerank candidates (an approximate window or the SQ error
+# bound), and one exact fetch per (block, unit) rescores them (the
+# per-unit rerank of crates/quantization/src/reranker/*).
 
 
 def assemble_block(rows, normalize: bool):
@@ -740,11 +735,11 @@ def _approx_dists(quant: str, params, kernel: str, codes, qs: np.ndarray,
                   cent=None) -> np.ndarray:
     """(rows x queries) approximate distances over one unit's codes:
     IVF-PQ scores with the batched LUT, every other cell decodes and
-    scores like the exact gemm.  The one quantized scorer: the block
-    runners call it per (block, unit), per-query search per Arrow
-    batch (``base.code_scores``).  ``params`` is the SQ (lo, width,
-    levels) tuple or the path of the saved PQ codebooks / RaBitQ
-    projection (``_load_params``)."""
+    scores like the exact scan.  The one quantized scorer: the block
+    runners call it per (block, unit), for per-query search and
+    ``search_batch`` alike.  ``params`` is the SQ (lo, width, levels)
+    tuple or the path of the saved PQ codebooks / RaBitQ projection
+    (``_load_params``)."""
     if isinstance(params, str):
         params = _load_params(params)
     if quant == "pq" and cent is not None:
@@ -756,10 +751,21 @@ def _approx_dists(quant: str, params, kernel: str, codes, qs: np.ndarray,
     return ad
 
 
+def sq_error(kernel: str, params, q: np.ndarray) -> float:
+    """The SQ decode-error term of ``sq_bounds`` (reranker/error.rs):
+    with SQ ``params`` (lo, width, levels) the decode error per dim is
+    at most eps_j = width_j / (2·levels), so ||eps||₂ for l2 and
+    Σ |q_j|·eps_j for dot."""
+    eps = params[1] / (2.0 * params[2])
+    if kernel == "l2":
+        return float(np.sqrt((eps**2).sum()))
+    return float(np.abs(q) @ eps)
+
+
 def sq_bounds(kernel: str, err: float, adist: np.ndarray):
     """Sound (lower, upper) bounds on the exact kernel distance of
     SQ-coded rows from their decoded-code distances ``adist``
-    (reranker/error.rs); ``err`` is ``base.sq_error``.  l2 (adist is
+    (reranker/error.rs); ``err`` is ``sq_error``.  l2 (adist is
     squared L2): |√d − √adist| ≤ err; dot: |Δ| ≤ err."""
     if kernel == "l2":
         rt = np.sqrt(np.maximum(adist, 0.0))
@@ -792,31 +798,60 @@ def _window(d: np.ndarray, ids: np.ndarray, top: int) -> np.ndarray:
     return np.concatenate([below, tied])
 
 
-def _rerank_emit(kernel: str, source, windows: list):
-    """Exact rerank of a (block, unit) pair's approximate windows
-    ``(qid, q, ids, adists)``: ONE pushed ``id IN`` read of ``source``
-    fetches the union, every query rescores its own window.  Emits
-    (query_id, id, adist, distance)."""
-    if not windows:
+def _rerank_cands(kernel: str, params, ad: np.ndarray, ids: np.ndarray,
+                  q: np.ndarray, k: int, win, below):
+    """One query's rerank candidates in a unit, as (ids, adists): its
+    top ``win`` by (adist, id), or, with no window, the SQ error bound
+    (``sq_bounds``) with None for adists, because the merge then ranks
+    by exact distance alone.  The bound keeps the rows whose lower
+    bound is at most the unit's k-th smallest upper bound, or, for a
+    range, under ``below``.  That is exact: a unit's k-th upper bound is
+    at least the global one, which is at least the global k-th exact
+    distance, so every row of the exact top-k stays."""
+    if win:
+        sel = _window(ad, ids, min(win, len(ids)))
+        return ids[sel], ad[sel]
+    lb, ub = sq_bounds(kernel, sq_error(kernel, params, q), ad)
+    if below is None:
+        return ids[lb <= kth_upper(ids, ub, k)], None
+    # relative margin: FP error in the bound scales with its own
+    # magnitude (dot/cos bounds can dwarf |below|)
+    return ids[lb < below + 1e-9 * np.abs(lb)], None
+
+
+def _rerank_emit(kernel: str, source, windows: list, below=None):
+    """Exact rerank of a (block, unit) pair's candidates ``(qid, q, ids,
+    adists)`` (``_rerank_cands``): ONE pushed ``id IN`` read of
+    ``source`` fetches the union, every query rescores its own.  Emits
+    (query_id, id, adist, distance), or (query_id, id, distance) for
+    candidates without adists; with ``below``, only rows under it."""
+    uni = np.unique(np.concatenate([w[2] for w in windows] or [np.empty(0, np.int64)]))
+    if not len(uni):
         return
-    uni = np.unique(np.concatenate([w[2] for w in windows]))
     mat = _read_exact_vecs(source, uni, key="id")
     for qid, q, wid, wad in windows:
         ds = np_kernel_distance(kernel, mat[np.searchsorted(uni, wid)], q)
-        for i, a, d in zip(wid.tolist(), wad.tolist(), ds.tolist()):
-            yield (qid, i, a, d)
+        keep = slice(None) if below is None else ds < below
+        wid, ds = wid[keep], ds[keep]
+        if wad is None:
+            for i, d in zip(wid.tolist(), ds.tolist()):
+                yield (qid, i, d)
+        else:
+            for i, a, d in zip(wid.tolist(), wad[keep].tolist(), ds.tolist()):
+                yield (qid, i, a, d)
 
 
 def flat_file_block_runner(kernel: str, k: int, vec_col: str = "vec",
                            quant=None, params=None, win: int = 0,
                            below: float | None = None, allow=None, deny=None):
-    """Runner over (block, parquet_file) pairs: one gemm per pair, over
-    the file as decoded once per process (``_load_unit``).  A
-    quantized index reads the file's codes instead, keeps each query's
-    top ``win`` by approximate distance and reranks them exactly.
-    ``below`` (unquantized) emits only rows under that kernel
-    distance.  The id mask (``_kept``) drops rows before any query's
-    window, so the window holds the residual top-k."""
+    """Runner over (block, parquet_file) pairs: the file, as decoded
+    once per process (``_load_unit``), scored one query at a time with
+    per-row einsums.  A quantized index reads the file's codes instead,
+    keeps each query's rerank candidates (``_rerank_cands``: the top
+    ``win`` by approximate distance, or the SQ error bound when ``win``
+    is 0) and reranks them exactly.  ``below`` emits only rows under
+    that kernel distance.  The id mask (``_kept``) drops rows before
+    any query's window, so the window holds the residual top-k."""
     col = _unit_col(quant, vec_col)
 
     def run(pairs):
@@ -834,12 +869,11 @@ def flat_file_block_runner(kernel: str, k: int, vec_col: str = "vec",
                 yield from _block_topk_emit(qids, d, ids, k, below)
                 continue
             ad = _approx_dists(quant, params, kernel, unit, qmat)
-            top = min(win, len(ids))
-            wins = []
-            for j, (qid, q) in enumerate(zip(qids, qmat)):
-                sel = _window(ad[:, j], ids, top)
-                wins.append((qid, q, ids[sel], ad[sel, j]))
-            yield from _rerank_emit(kernel, path, wins)
+            wins = [
+                (qid, q, *_rerank_cands(kernel, params, ad[:, j], ids, q, k, win, below))
+                for j, (qid, q) in enumerate(zip(qids, qmat))
+            ]
+            yield from _rerank_emit(kernel, path, wins, below)
 
     return run
 
@@ -935,11 +969,13 @@ def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
     inside its chunk (the static partition-pruning of the DataFrame
     path, done in-task).  Centroids ride in the closure (nlist x dims,
     bounded by build).  A quantized index scores the lists' residual
-    codes, keeps each query's top ``win`` over the chunk (best adist per
-    id: a replicated row sits in several lists) and reranks them with
-    one exact fetch over the chunk's probed lists.  ``below``
-    (unquantized) emits only rows under that kernel distance.  The id
-    mask (``_kept``) drops rows before any query's window."""
+    codes, keeps each query's rerank candidates over the chunk (best
+    adist per id: a replicated row sits in several lists; then
+    ``_rerank_cands``, the top ``win`` or the SQ error bound when
+    ``win`` is 0) and reranks them with one exact fetch over the
+    chunk's probed lists.  ``below`` emits only rows under that kernel
+    distance.  The id mask (``_kept``) drops rows before any query's
+    window."""
     import os as _os
 
     col = _unit_col(quant, vec_col)
@@ -982,23 +1018,23 @@ def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
                     continue
                 ad = _approx_dists(quant, params, kernel, unit, qmat[qis],
                                    centroids[lid])
-                top = min(win, len(ids))
                 for j, qi in enumerate(qis):
-                    sel = _window(ad[:, j], ids, top)
+                    # the bound cuts over the whole chunk below
+                    sel = _window(ad[:, j], ids, min(win, len(ids))) if win else slice(None)
                     per_q.setdefault(qi, []).append((ids[sel], ad[sel, j]))
                 files += sorted(glob.glob(_os.path.join(ldir, "*.parquet")))
             wins = []
             for qi, parts in per_q.items():
                 cid = np.concatenate([p[0] for p in parts])
                 cad = np.concatenate([p[1] for p in parts])
-                # best adist per id, then the chunk's (adist, id) window
+                # best adist per id, then the chunk's candidates
                 o = np.lexsort((cad, cid))
                 cid, cad = cid[o], cad[o]
                 first = np.r_[True, cid[1:] != cid[:-1]]
                 cid, cad = cid[first], cad[first]
-                sel = _window(cad, cid, min(win, len(cid)))
-                wins.append((qids[qi], qmat[qi], cid[sel], cad[sel]))
-            yield from _rerank_emit(kernel, files, wins)
+                wins.append((qids[qi], qmat[qi],
+                             *_rerank_cands(kernel, params, cad, cid, qmat[qi], k, win, below)))
+            yield from _rerank_emit(kernel, files, wins, below)
 
     return run
 

@@ -369,8 +369,8 @@ class FreshVectorIndex:
         (seal-on-size, optimizing/mod.rs:33-131) OR the tombstoned
         fraction of the sealed index exceeds ``delete_threshold`` (the
         reference's deleted-row GC trigger, crates/base/src/index.rs:
-        261-264 default 0.2: past that, every search drags a dead-row
-        anti-join worth a fifth of the index).  Returns True if a
+        261-264 default 0.2: past that, every search scans and masks dead
+        rows worth a fifth of the index).  Returns True if a
         compaction ran.
 
         Neither count runs a Spark job: the growing row count comes from
@@ -454,18 +454,17 @@ class FreshVectorIndex:
 
     def _tomb_agg(self, files: tuple[str, ...] | None = None) -> DataFrame | None:
         """Per-id max tombstone version, as a DataFrame: what the Spark
-        plans join against — searches over the driver budget
-        (``batch.DRIVER_SERVE_BYTES``), as a broadcast anti-/left-join,
-        and ``compact``.  Under the budget, searches take the same map
-        from the driver-held ``_tomb_map`` instead.
+        plans join against — the growing side of searches over the
+        driver budget (``batch.DRIVER_SERVE_BYTES``), as a broadcast
+        left join, and ``compact``.  The sealed side, and searches under
+        the budget, take the same map from the driver-held
+        ``_tomb_map`` instead.
 
         The aggregate is MATERIALIZED once per tombstone-file
         fingerprint (eager localCheckpoint, cached like the raw handles
-        in ``_read_cached``): every Spark-side search consumes it in TWO
-        broadcast builds (sealed-side anti-join + growing-side
-        visibility join), so without this each search re-ran the
-        tombstone parquet scan + groupBy twice.  ``files`` pins the
-        snapshot as in ``_read_cached``."""
+        in ``_read_cached``), so repeated searches do not re-run the
+        tombstone parquet scan + groupBy.  ``files`` pins the snapshot
+        as in ``_read_cached``."""
         fp = self._fingerprint("tombstones", files)
         if not fp:
             return None
@@ -524,28 +523,31 @@ class FreshVectorIndex:
         """Distinct tombstoned ids, from the driver-held tombstone map."""
         return len(self._tomb_map(self._fingerprint("tombstones"))[0])
 
-    def _serve(self, op: str, query: Sequence[float], arg, opts: dict) -> DataFrame | None:
+    def _serve(self, op: str, query: Sequence[float], arg, opts: dict) -> DataFrame:
         """``op`` ("search" with k, or "range_search" with a radius) over
-        sealed ∪ growing − tombstones in the driver, or None for the
-        Spark plans.  The growing and tombstone file bytes add to the
-        sealed index's ``batch.serve_cost`` against
-        ``batch.DRIVER_SERVE_BYTES``.  Under it, the sealed index serves
-        the call with the tombstoned ids as a deny mask (sealed rows
-        predate every tombstone), the visible growing rows are scored
-        exactly in numpy, and each id keeps its best distance."""
+        sealed ∪ growing − tombstones.  The sealed index answers through
+        its block runners with the tombstoned ids as a deny mask (sealed
+        rows predate every tombstone; the map is held in the driver, so
+        the mask costs no job).  The growing and tombstone file bytes
+        add to the sealed index's ``batch.serve_cost`` against
+        ``batch.DRIVER_SERVE_BYTES``.  Under it, the sealed pairs run in
+        the driver, the visible growing rows are scored exactly in
+        numpy, and each id keeps its best distance.  Over it, the
+        sealed pairs run as Spark tasks and the growing side, which has
+        no size bound, stays a Spark plan (``_growing``)."""
         gen = self._gen  # before the sealed handle: see ``_commit``
         sealed = self.sealed
         fps = [self._fingerprint(sub, self._list_files(sub, gen)) for sub in ("delta", "tombstones")]
         held = sum(size for fp in fps for _, _, size in fp)
-        scans = sealed._driver_scans(op, opts)
-        if not BT.decide(self, scans > 0 and BT.serve_cost(sealed, 1, scans) + held
-                         <= BT.DRIVER_SERVE_BYTES):
-            return None
-        gids, gvec, gver = self._growing_rows(fps[0])
+        cost = BT.serve_cost(sealed, 1, sealed._driver_scans(op)) + held
+        driver = BT.decide(self, cost <= BT.DRIVER_SERVE_BYTES)
         tids, tver = self._tomb_map(fps[1])
-        deny = tids if fps[1] else None
         serve = sealed._serve_search if op == "search" else sealed._serve_range
-        ids, dist = serve(query, arg, deny, **opts)
+        got = serve(query, arg, tids if fps[1] else None, driver=driver, **opts)
+        if not driver:
+            return self._union_growing(op, query, arg, BT.frame(self, got))
+        ids, dist = got
+        gids, gvec, gver = self._growing_rows(fps[0])
         vis = _visible_mask(gids, gver, tids, tver)
         gi, gd = gids[vis], np.empty(0)
         if len(gi):
@@ -563,7 +565,27 @@ class FreshVectorIndex:
         first = np.r_[True, ids[o][1:] != ids[o][:-1]] if len(o) else np.zeros(0, bool)
         ids, dist = ids[o][first], dist[o][first]
         o = np.lexsort((ids, dist))[: arg if op == "search" else None]
-        return BT.frame(self, ids[o], dist[o])
+        return BT.frame(self, (ids[o], dist[o]))
+
+    def _union_growing(self, op: str, query: Sequence[float], arg,
+                       sealed: DataFrame) -> DataFrame:
+        """The Spark plan of an over-budget ``_serve``: the ``sealed``
+        (id, distance) result with the visible growing rows, each id at
+        its best distance, cut to k or to the radius."""
+        growing = self._growing(query, self._tomb_agg())
+        if growing is None:
+            return sealed
+        if op == "range_search":
+            growing = growing.where(F.col("distance") < F.lit(float(arg)))
+        # the same id can be visible on both sides (re-insert without
+        # delete); keep its best distance, dedup BEFORE the limit so the
+        # result never falls short of k
+        merged = sealed.unionByName(growing).groupBy("id").agg(
+            F.min("distance").alias("distance")
+        )
+        if op == "range_search":
+            return merged
+        return merged.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(arg)
 
     def _growing(self, query: Sequence[float], tomb_agg: DataFrame | None) -> DataFrame | None:
         """(id, distance) of the visible growing rows: brute-force exact
@@ -586,51 +608,20 @@ class FreshVectorIndex:
         Returns (id, distance): eager and driver-held when ``_serve``
         serves it in the driver, else a Spark plan."""
         self._refresh()
-        served = self._serve("search", query, k, search_opts)
-        if served is not None:
-            return served
-        tomb_agg = self._tomb_agg()
-
-        # sealed side: rows predate all tombstones -> any tombstone kills
-        # (broadcast anti-join inside the index's widening loop)
-        sealed = self.sealed.search(query, k=k, exclude=tomb_agg, **search_opts)
-        sealed = sealed.select(F.col("id").cast("long"), "distance")
-
-        growing = self._growing(query, tomb_agg)
-        if growing is None:
-            return sealed
-        merged = sealed.unionByName(growing)
-        # the same id can be visible on both sides (re-insert without
-        # delete); keep its best distance, dedup BEFORE the limit so the
-        # result never falls short of k
-        merged = merged.groupBy("id").agg(F.min("distance").alias("distance"))
-        return merged.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(k)
+        return self._serve("search", query, k, search_opts)
 
     def range_search(
         self, query: Sequence[float], radius: float, **search_opts
     ) -> DataFrame:
         """Sphere search over sealed ∪ growing, minus tombstoned rows —
-        the freshness twin of ``search``: the sealed index's own
-        ``range_search`` (pruned: IVF triangle-inequality lists, HNSW
-        stream widening, flat SQ code-bound prefilter) unions a
-        brute-forced exact range over the small delta with version
-        visibility, deduped to each id's best distance.  Returns (id,
-        distance), in the driver under the budget as ``search`` is."""
+        the freshness twin of ``search``: the sealed index's own range
+        scan (pruned: IVF triangle-inequality lists, HNSW stream
+        widening, flat SQ code-bound prefilter) unions an exact range
+        over the small delta with version visibility, deduped to each
+        id's best distance.  Returns (id, distance), in the driver under
+        the budget as ``search`` is."""
         self._refresh()
-        served = self._serve("range_search", query, radius, search_opts)
-        if served is not None:
-            return served
-        tomb_agg = self._tomb_agg()
-        sealed = self.sealed.range_search(
-            query, radius, exclude=tomb_agg, **search_opts
-        )
-        sealed = sealed.select(F.col("id").cast("long"), "distance")
-        growing = self._growing(query, tomb_agg)
-        if growing is None:
-            return sealed
-        growing = growing.where(F.col("distance") < F.lit(float(radius)))
-        merged = sealed.unionByName(growing)
-        return merged.groupBy("id").agg(F.min("distance").alias("distance"))
+        return self._serve("range_search", query, radius, search_opts)
 
     # ------------------------------------------------------------------
     def _commit(self, old_gen: int, snap_delta: tuple, snap_tomb: tuple) -> None:

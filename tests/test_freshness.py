@@ -95,9 +95,10 @@ def test_structured_streaming_sink(spark, emb, tmp_path):
 
 def test_bulk_tombstones_100k_no_driver_collect(spark, monkeypatch):
     """Scale guard: 100k+ tombstones flow through searches and compaction
-    (the delete.rs bulkdelete path) — never as an IN-list: as broadcast
-    anti-joins in the Spark plans, and as a deny mask read from the
-    tombstone files when the driver serves the search.  Search and
+    (the delete.rs bulkdelete path) — never as an IN-list: the sealed
+    side takes them as a deny mask read from the tombstone files on
+    both block sources, and an over-budget growing side joins them as
+    a broadcast aggregate.  Search and
     compaction stay correct with a tombstone set far larger than k."""
     import numpy as np
 
@@ -999,7 +1000,7 @@ def test_driver_serving_matches_spark(spark, emb, monkeypatch, sealed_kind):
     numpy) and launch no Spark job, nor does a ``maybe_compact`` that
     does not compact.  With inserts, deletes of sealed and growing rows,
     a re-insert after a delete (visible) and a delete after a re-insert
-    (hidden) pending, the answers equal the Spark plans' at a zero
+    (hidden) pending, the answers equal the Spark side's at a zero
     budget: same ids, distances within 1e-9 relative.  Every result is
     (id, distance), before the writes, with them pending and after the
     compaction; each call counts one decision per side."""

@@ -245,6 +245,24 @@ class TestHNSW:
             assert len(out) == 5
             assert all(r["id"] % 7 == 0 for r in out)
 
+    def test_widen_stats_count_the_exact_fallback(self, spark, emb, monkeypatch, tmp_path):
+        """A filter the graph cannot fill within ``max_widen`` rounds
+        falls back to the exact scan: ``widen_stats`` counts the round
+        and the fallback, and the answer is the exact filtered top-k on
+        both block sources."""
+        from pgvecto_rs_spark.indexes import batch as BT
+        from pgvecto_rs_spark.indexes.hnsw import HNSWIndex
+
+        idx = HNSWIndex.create(spark, emb, str(tmp_path / "h"), metric="l2", segment_rows=300)
+        far = exact_ids(emb, "l2", k=emb.count())[-5:]  # the rows farthest from Q64
+        for n, budget in ((1, BT.DRIVER_SERVE_BYTES), (2, 0)):
+            monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", budget)
+            got = idx.search(Q64, k=3, ef_search=3, max_widen=0, filter=F.col("id").isin(far))
+            assert [r["id"] for r in got.collect()] == far[:3]
+            assert idx.widen_stats == {"rounds": n, "exact": n}
+        idx.search(Q64, k=3, ef_search=3, filter=F.col("id") % 7 == 0).collect()
+        assert idx.widen_stats["filled"] == 1
+
     def test_oversized_segment_errors_cleanly(self, spark, emb, monkeypatch):
         """r12 verdict #5: _per_segment_apply accumulates its whole
         partition before building; above _SEG_BUILD_ROW_CAP that must be
@@ -630,17 +648,24 @@ class TestAlgoQuantMatrix:
             after = [r["id"] for r in idx.search(Q64, k=5).collect()]
             assert victim not in after and len(after) == 5
 
-    def test_sq_rerank_fetch_is_pushed_filter(self, spark, emb):
-        """Two-phase I/O golden: pass 1 scans (id, codes) only; pass 2
-        fetches candidates by id — the plan must show a pushed id filter
-        against the id-sorted rows layout (row-group skipping)."""
-        with tempfile.TemporaryDirectory() as d:
-            idx = FlatIndex.create(spark, emb, d, metric="l2", quantization="sq8")
-            out = idx.search(Q64, k=5)
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            assert "PushedFilters" in plan and "In(id" in plan, plan[:2000]
-            got = [r["id"] for r in out.collect()]
+    def test_sq_rerank_fetch_is_pushed_filter(self, spark, emb, monkeypatch, tmp_path):
+        """Two-phase I/O golden: pass 1 scores the codes; pass 2 fetches
+        only the candidate ids' exact vectors (a pushed ``id IN`` read
+        of the id-sorted rows files), far fewer than the rows, on both
+        block sources, and the top-5 is the exact one."""
+        from pgvecto_rs_spark.indexes import batch as BT
+        from tests.conftest import spy_runner_io
+
+        idx = FlatIndex.create(spark, emb, str(tmp_path / "f"), metric="l2", quantization="sq8")
+        fetches = spy_runner_io(
+            monkeypatch, "flat_file_block_runner", "_read_exact_vecs", str(tmp_path / "log")
+        )
+        for budget in (BT.DRIVER_SERVE_BYTES, 0):
+            monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", budget)
+            got = [r["id"] for r in idx.search(Q64, k=5).collect()]
             assert got == exact_ids(emb, "l2")[:5]
+            fetched = sum(n for _, n in fetches())
+            assert 5 <= fetched < 0.2 * idx.meta["n_rows"], fetched
 
     def test_pq_bits_4(self, spark, emb):
         """PQ with 4-bit codebooks (16 centroids per subspace,
@@ -1368,21 +1393,23 @@ class TestFlatRangeSearch:
             got = {r["id"] for r in idx.range_search(Q64, radius).collect()}
             assert got == self._brute(emb, metric, radius)
 
-    def test_sq8_two_phase_exact_and_pruned(self, spark, emb):
-        with tempfile.TemporaryDirectory() as d:
-            idx = FlatIndex.create(spark, emb, d, metric="l2", quantization="sq8")
-            radius = self._gap_radius(emb, "l2", 30)
-            got = {r["id"] for r in idx.range_search(Q64, radius).collect()}
-            want = self._brute(emb, "l2", radius)
-            assert got == want
-            # the prefilter ring must be well under the corpus size
-            from pgvecto_rs_spark.indexes import base
+    def test_sq8_two_phase_exact_and_pruned(self, spark, emb, monkeypatch, tmp_path):
+        """The SQ sphere is exact, and the prefilter ring its rerank
+        fetches is well under the corpus size, on both block sources."""
+        from pgvecto_rs_spark.indexes import batch as BT
+        from tests.conftest import spy_runner_io
 
-            q = base.prep_query(Q64, False)
-            cand = base.code_scores(
-                idx, idx._rows(), "sq8", q, keep=lambda ids, lb, ub: lb < radius
-            )
-            n_cand = cand.count()
+        idx = FlatIndex.create(spark, emb, str(tmp_path / "f"), metric="l2", quantization="sq8")
+        radius = self._gap_radius(emb, "l2", 30)
+        want = self._brute(emb, "l2", radius)
+        fetches = spy_runner_io(
+            monkeypatch, "flat_file_block_runner", "_read_exact_vecs", str(tmp_path / "log")
+        )
+        for budget in (BT.DRIVER_SERVE_BYTES, 0):
+            monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", budget)
+            got = {r["id"] for r in idx.range_search(Q64, radius).collect()}
+            assert got == want
+            n_cand = sum(n for _, n in fetches())
             assert len(want) <= n_cand < emb.count() * 0.6, n_cand
 
     def test_f16_and_pq_cells(self, spark, emb):
@@ -1785,17 +1812,25 @@ class TestDriverServing:
     ``DRIVER_SERVE_BYTES`` per-query ``search`` and ``range_search`` and
     collected ``search_batch`` run the block runners in the driver and
     launch no Spark job (a batch launches only its query collect); at a
-    budget of 0 the same calls run their Spark plans.  Both sides must
+    budget of 0 the same runners run as Spark tasks.  Both sides must
     return the same ids, distances, columns and column order."""
 
+    #: cell: (index class, create keywords[, search keywords])
     CELLS = {
         "flat": (FlatIndex, {}),
         "flat_f16": (FlatIndex, {"storage": "f16"}),
+        "flat_sq8": (FlatIndex, {"quantization": "sq8"}),
+        "flat_sq8_window": (FlatIndex, {"quantization": "sq8"}, {"rerank_size": 40}),
+        "flat_pq": (FlatIndex, {"quantization": "pq", "pq_ratio": 4}),
+        "flat_rabitq": (FlatIndex, {"quantization": "rabitq"}),
         "ivf": (IVFIndex, {"nlist": 8}),
         "ivf_f16": (IVFIndex, {"nlist": 8, "storage": "f16"}),
+        "ivf_sq8": (IVFIndex, {"nlist": 8, "residual_quantization": True}),
+        "ivf_pq": (IVFIndex, {"nlist": 8, "quantization": "pq", "pq_ratio": 4}),
         "hnsw": ("hnsw", {"segment_rows": 200}),
         "hnsw_sq8": ("hnsw", {"segment_rows": 200, "quantization": "sq8"}),
         "hnsw_pq": ("hnsw", {"segment_rows": 200, "quantization": "pq"}),
+        "hnsw_exact": ("hnsw", {"segment_rows": 200}, {"exact": True}),
     }
     RADIUS = {"l2": 60.0, "dot": -0.3, "cos": 0.72}
 
@@ -1835,9 +1870,9 @@ class TestDriverServing:
     @pytest.mark.parametrize("metric", ["l2", "dot", "cos"])
     @pytest.mark.parametrize("cell", list(CELLS))
     def test_matches_spark_path(self, spark, emb, qdf, monkeypatch, tmp_path, cell, metric):
-        cls, kw = self.CELLS[cell]
+        cls, kw, skw = (*self.CELLS[cell], {})[:3]
         idx = self._create(spark, emb, str(tmp_path / cell), cls, metric, **kw)
-        rows, ref, jobs = self._both(spark, monkeypatch, lambda: idx.search(Q64, k=10))
+        rows, ref, jobs = self._both(spark, monkeypatch, lambda: idx.search(Q64, k=10, **skw))
         assert rows == ref and len(rows) == 10 and jobs == 0
         rows, ref, jobs = self._both(
             spark, monkeypatch, lambda: idx.range_search(Q64, self.RADIUS[metric])
@@ -1928,9 +1963,11 @@ class TestDriverServing:
         monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", BT.storage_bytes(idx))
         idx.range_search(Q64, 60.0).collect()
         assert idx.serve_stats == {"driver": 3, "spark": 2}
-        # an exclude frame Spark must compute stays on the Spark plan
-        idx.search(Q64, k=5, exclude=emb.select(F.col("vec_id").alias("id")).limit(3)).collect()
-        assert idx.serve_stats == {"driver": 3, "spark": 3}
+        # an exclude frame Spark must compute becomes a deny array in
+        # one collect; the scan itself is still served in the driver
+        with count_jobs(spark) as jobs:
+            idx.search(Q64, k=5, exclude=emb.select(F.col("vec_id").alias("id")).limit(3)).collect()
+        assert idx.serve_stats == {"driver": 4, "spark": 2} and jobs.n == 1
 
     def test_large_collected_batch_stays_on_spark(self, spark, emb, qdf, monkeypatch, tmp_path):
         """The budget weighs a batch's queries, not only the index bytes:
@@ -1962,12 +1999,19 @@ class TestDriverServing:
     RESIDUAL_CELLS = {
         "flat": (FlatIndex, {}),
         "flat_f16": (FlatIndex, {"storage": "f16"}),
+        "flat_sq8": (FlatIndex, {"quantization": "sq8"}),
+        "flat_sq8_window": (FlatIndex, {"quantization": "sq8"}, {"rerank_size": 40}),
+        "flat_pq": (FlatIndex, {"quantization": "pq", "pq_ratio": 4}),
+        "flat_rabitq": (FlatIndex, {"quantization": "rabitq"}),
         "ivf": (IVFIndex, {"nlist": 8}),
         "ivf_f16": (IVFIndex, {"nlist": 8, "storage": "f16"}),
         "ivf_r2": (IVFIndex, {"nlist": 8, "replicas": 2}),
         "ivf_r2_f16": (IVFIndex, {"nlist": 8, "replicas": 2, "storage": "f16"}),
+        "ivf_sq8": (IVFIndex, {"nlist": 8, "residual_quantization": True}),
+        "ivf_pq": (IVFIndex, {"nlist": 8, "quantization": "pq", "pq_ratio": 4}),
         "hnsw": ("hnsw", {"segment_rows": 250}),
         "hnsw_f16": ("hnsw", {"segment_rows": 250, "storage": "f16"}),
+        "hnsw_exact": ("hnsw", {"segment_rows": 250}, {"exact": True}),
     }
 
     @staticmethod
@@ -1984,20 +2028,20 @@ class TestDriverServing:
     def test_residual_matches_spark_path(self, spark, emb, monkeypatch, tmp_path, cell):
         """Filtered and excluded ``search`` and ``range_search`` run in the
         driver with id masks and launch no Spark job: same ids and
-        distances as the Spark plans at a zero budget, the IVF widening
-        ladder stopping for the same reasons, and one decision per call
-        on each side."""
+        distances as the Spark block source at a zero budget, the IVF
+        and HNSW widening ladders stopping for the same reasons, and one
+        decision per call on each side."""
         from pgvecto_rs_spark.indexes import base
         from pgvecto_rs_spark.indexes import batch as BT
 
-        cls, kw = self.RESIDUAL_CELLS[cell]
+        cls, kw, skw = (*self.RESIDUAL_CELLS[cell], {})[:3]
         if cls is IVFIndex:
             kw = {**kw, "payload_cols": ["label"]}
         idx = self._create(spark, emb, str(tmp_path / cell), cls, "l2", **kw)
         exclude = base.local_frame(spark, [(i,) for i in range(0, 500, 3)], "id bigint")
         label = F.col("label") == 2 if cls is IVFIndex else F.col("id") % 5 == 2
         calls = [
-            (True, lambda: idx.search(Q64, k=10, filter=label, exclude=exclude)),
+            (True, lambda: idx.search(Q64, k=10, filter=label, exclude=exclude, **skw)),
             (False, lambda: idx.range_search(Q64, 60.0, filter=label, exclude=exclude)),
         ]
         if cls is IVFIndex:
@@ -2053,9 +2097,9 @@ class TestDriverServing:
         assert got == set(exact_ids(emb, "l2"))
 
     def test_sq_error_bound_search_scores_once(self, spark, emb, tmp_path):
-        """The SQ error-bound top-k emits each partition's bound rows in
-        one scoring job and cuts on the driver: 2 jobs with the fetch,
-        and still the exact top-k."""
+        """The SQ error-bound top-k runs in the block runners: each unit
+        keeps its bound rows and reranks them, in the driver with no
+        Spark job, and still the exact top-k."""
         truth = exact_ids(emb, "l2")
         flat = FlatIndex.create(spark, emb, str(tmp_path / "f"), metric="l2", quantization="sq8")
         ivf = IVFIndex.create(
@@ -2066,7 +2110,87 @@ class TestDriverServing:
             with count_jobs(spark) as jobs:
                 got = [r["id"] for r in idx.search(Q64, k=10, **kw).collect()]
             assert got == truth
-            assert jobs.n <= 2, jobs.n
+            assert jobs.n == 0, jobs.n
+
+    def test_over_budget_calls_run_one_job(self, spark, emb, monkeypatch, tmp_path):
+        """Over the driver budget a per-query call runs its (block, unit)
+        pairs as ONE Spark job: unfiltered top-k and range search on
+        flat, IVF and HNSW, and quantized flat and IVF top-k (window or
+        SQ error bound).  A filter adds one job per ladder round, for
+        its allowed ids."""
+        from pgvecto_rs_spark.indexes import batch as BT
+        from pgvecto_rs_spark.indexes.hnsw import HNSWIndex
+
+        idxs = {
+            "flat": FlatIndex.create(spark, emb, str(tmp_path / "f"), metric="l2"),
+            "ivf": IVFIndex.create(spark, emb, str(tmp_path / "i"), metric="l2", nlist=8),
+            "hnsw": HNSWIndex.create(spark, emb, str(tmp_path / "h"), metric="l2", segment_rows=200),
+            "flat_sq8": FlatIndex.create(spark, emb, str(tmp_path / "fs"), metric="l2", quantization="sq8"),
+            "flat_pq": FlatIndex.create(
+                spark, emb, str(tmp_path / "fp"), metric="l2", quantization="pq", pq_ratio=4
+            ),
+            "ivf_sq8": IVFIndex.create(
+                spark, emb, str(tmp_path / "is"), metric="l2", nlist=8, residual_quantization=True
+            ),
+            "ivf_pq": IVFIndex.create(
+                spark, emb, str(tmp_path / "ip"), metric="l2", nlist=8, quantization="pq", pq_ratio=4
+            ),
+        }
+        monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", 0)
+        for name, idx in idxs.items():
+            calls = [lambda: idx.search(Q64, k=10)]
+            if "_" not in name:
+                calls.append(lambda: idx.range_search(Q64, 60.0))
+            for call in calls:
+                with count_jobs(spark) as jobs:
+                    assert call().collect()
+                assert jobs.n == 1, (name, jobs.n)
+        with count_jobs(spark) as jobs:
+            idxs["flat"].search(Q64, k=10, filter=F.col("id") % 5 == 2).collect()
+        assert jobs.n == 2
+
+    @pytest.mark.parametrize("metric", ["l2", "dot"])
+    def test_sq_bound_is_exact_on_small_units_and_ties(self, spark, monkeypatch, tmp_path, metric):
+        """Adversarial data for the unit-local SQ error bound: rows files
+        and IVF lists holding fewer than k rows each, exact duplicates
+        and rows a last-bits nudge apart.  Top-k and the flat sphere
+        equal brute force over the stored values, ids and distances, on
+        both block sources."""
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        from pgvecto_rs_spark.indexes import batch as BT
+        from pgvecto_rs_spark.indexes import segment_worker as SW
+
+        k = 10
+        n = 5 * max(2, spark.sparkContext.defaultParallelism)  # k/2 rows per rows file
+        rng = np.random.default_rng(7)
+        base_rows = rng.normal(size=(n // 3, 8)).astype(np.float32)
+        vecs = np.vstack([base_rows, base_rows, base_rows])[:n].copy()
+        vecs[n // 3 : 2 * (n // 3)] += np.float32(1e-6)  # near ties; the rest duplicate
+        vecs = np.vstack([vecs, rng.normal(size=(n - len(vecs), 8)).astype(np.float32)])
+        q = [float(x) for x in rng.normal(size=8)]
+        df = spark.createDataFrame(
+            [(i, v.tolist()) for i, v in enumerate(vecs)], "vec_id bigint, embedding array<float>"
+        )
+        d = SW.np_kernel_distance(metric, vecs.astype(np.float64), np.asarray(q))
+        order = np.lexsort((np.arange(n), d))
+        want = [(int(i), float(d[i])) for i in order[:k]]
+        gaps = np.diff(d[order])
+        j = int(np.argmin(np.where(gaps > 0, gaps, np.inf)))
+        radius = (d[order[j]] + d[order[j + 1]]) / 2
+        sphere = sorted((int(i), float(d[i])) for i in np.flatnonzero(d < radius))
+        flat = FlatIndex.create(spark, df, str(tmp_path / "f"), metric=metric, quantization="sq8")
+        assert all(pq.ParquetFile(f).metadata.num_rows < k for f in flat._files())
+        ivf = IVFIndex.create(
+            spark, df, str(tmp_path / "i"), metric=metric, nlist=n // 4, residual_quantization=True
+        )
+        for budget in (BT.DRIVER_SERVE_BYTES, 0):
+            monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", budget)
+            for got in (flat.search(q, k=k), ivf.search(q, k=k, nprobe=ivf.meta["nlist"])):
+                assert [(r["id"], r["distance"]) for r in got.collect()] == want
+            got = sorted((r["id"], r["distance"]) for r in flat.range_search(q, radius).collect())
+            assert got == sphere
 
     def test_threads_share_driver_caches_during_compaction(self, spark, emb, monkeypatch, tmp_path):
         """Four threads serve FreshVectorIndex searches in the driver,

@@ -1010,9 +1010,9 @@ class TestPlanner:
 
     def test_decision_goldens(self, spark, sf_dir, tmp_path, monkeypatch):
         """pushdown_plan.slt:24-134 decision-table goldens over
-        last_decision + the physical plan: sphere on a different column
-        becomes a recheck; the IVF index path's scan is partition-pruned
-        to the probed lists (the EXPLAIN-visible pushdown)."""
+        last_decision and the index I/O: sphere on a different column
+        becomes a recheck; the IVF index path opens only the probed
+        lists, on both block sources."""
         from pgvecto_rs_spark.indexes import IVFIndex
         from pgvecto_rs_spark.plans import IndexCatalog, Planner
         from pgvecto_rs_spark.plans.rewrite import Sphere
@@ -1041,13 +1041,18 @@ class TestPlanner:
             "path": "index", "index_kind": "ivf", "threshold": 123.0, "recheck": False,
         }
 
-        # EXPLAIN golden: the probed scan is partition-pruned on list_id
-        # (a zero driver budget keeps the search on its Spark plan)
+        # the probed scan opens only the 2 probed list_id partitions, in
+        # the driver and in Spark tasks (a zero driver budget)
+        from pgvecto_rs_spark.indexes import base
         from pgvecto_rs_spark.indexes import batch as BT
+        from tests.conftest import spy_runner_io
 
-        monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", 0)
-        plan = idx.search(Q64, k=3, nprobe=2)._jdf.queryExecution().executedPlan().toString()
-        assert "list_id" in plan and ("PartitionFilters" in plan or "partition_filters" in plan)
+        probed = {f"list_id={lid}" for lid in idx.probe_lists(base.prep_query(Q64, False), 2)}
+        loads = spy_runner_io(monkeypatch, "ivf_block_runner", "_load_unit", str(tmp_path / "log"))
+        for budget in (BT.DRIVER_SERVE_BYTES, 0):
+            monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", budget)
+            idx.search(Q64, k=3, nprobe=2).collect()
+            assert {os.path.basename(src) for src, _ in loads()} == probed
 
         # range search through the index
         p.range_search("embeddings", emb, Sphere("embedding", Q64, RANGE_RADIUS, "l2"), k=50)

@@ -6,12 +6,11 @@ though results stay correct.
 
 These mirror the reference's planner tests (pushdown_plan.slt): there
 the assertion is "index scan chosen"; here it is the Spark equivalents
-— partition pruning, filter/column pushdown into the parquet scan,
-TakeOrdered instead of Sort, partial (map-side) aggregation."""
+— filter/column pushdown into the parquet scan, TakeOrdered instead of
+Sort, partial (map-side) aggregation — and, for the index scans the
+block runners read without a Spark plan, the units they open."""
 
 from __future__ import annotations
-
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -23,23 +22,27 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_ivf_probe_is_partition_pruned(spark, sf_dir, monkeypatch):
-    """An nprobe=3 search must scan ONLY the probed list partitions:
-    the parquet scan carries a PartitionFilters entry on list_id, so at
-    100 TB the I/O is nprobe/nlist of the corpus, not a full scan.  A
-    zero driver budget keeps the search on its Spark plan."""
-    from pgvecto_rs_spark.indexes import IVFIndex
-    from pgvecto_rs_spark.indexes import batch as BT
+def test_ivf_probe_is_partition_pruned(spark, sf_dir, monkeypatch, tmp_path):
+    """An nprobe=3 search must open ONLY the probed list partitions, so
+    at 100 TB the I/O is nprobe/nlist of the corpus, not a full scan:
+    the block runner loads exactly the 3 probed ``list_id=N`` units,
+    in the driver and, at a zero driver budget, in Spark tasks."""
+    import os
 
+    from pgvecto_rs_spark.indexes import IVFIndex
+    from pgvecto_rs_spark.indexes import base
+    from pgvecto_rs_spark.indexes import batch as BT
+    from tests.conftest import spy_runner_io
+
+    idx = IVFIndex.create(spark, Q._emb(spark, sf_dir), str(tmp_path / "ivf"), metric="l2", nlist=8)
+    probed = {f"list_id={lid}" for lid in idx.probe_lists(base.prep_query(Q64, False), 3)}
+    loads = spy_runner_io(monkeypatch, "ivf_block_runner", "_load_unit", str(tmp_path / "log"))
+    want = [r["id"] for r in idx.search(Q64, k=5, nprobe=3).collect()]
+    assert {os.path.basename(src) for src, _ in loads()} == probed
     monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", 0)
-    with tempfile.TemporaryDirectory() as d:
-        idx = IVFIndex.create(spark, Q._emb(spark, sf_dir), d, metric="l2", nlist=8)
-        plan = _plan(idx.search(Q64, k=5, nprobe=3))
-        assert "PartitionFilters: [list_id" in plan.replace("#", " ").replace(
-            "list_id ", "list_id"
-        ) or "PartitionFilters: [list_id" in plan or (
-            "PartitionFilters" in plan and "list_id" in plan
-        ), plan[:2000]
+    got = [r["id"] for r in idx.search(Q64, k=5, nprobe=3).collect()]
+    assert {os.path.basename(src) for src, _ in loads()} == probed
+    assert got == want and idx.serve_stats == {"driver": 1, "spark": 1}
 
 
 def test_topk_uses_take_ordered_not_global_sort(spark, sf_dir):
@@ -85,23 +88,25 @@ def test_exact_dedup_is_single_shuffle_agg(spark, sf_dir):
     assert "partial_" in plan
 
 
-def test_flat_sq8_rerank_fetch_prunes_code_column(spark, sf_dir):
-    """SQ8 two-phase pass 2: the exact-rerank fetch must read only
-    (id, vec) with a pushed id filter — the code column stays on disk.
-    (Pass 1's codes-only scan runs in the threshold job inside search();
-    its projection is asserted by the I/O golden in test_indexes.)"""
+def test_flat_sq8_rerank_fetch_prunes_code_column(spark, sf_dir, monkeypatch, tmp_path):
+    """SQ8 two-phase I/O: pass 1 loads only the code column of each rows
+    file, on both block sources; the exact vectors stay on disk until
+    pass 2 fetches the candidates (counted by
+    ``TestAlgoQuantMatrix::test_sq_rerank_fetch_is_pushed_filter``)."""
     from pgvecto_rs_spark.indexes import FlatIndex
+    from pgvecto_rs_spark.indexes import batch as BT
+    from tests.conftest import spy_runner_io
 
-    with tempfile.TemporaryDirectory() as d:
-        idx = FlatIndex.create(
-            spark, Q._emb(spark, sf_dir), d, metric="l2", quantization="sq8"
-        )
-        plan = _plan(idx.search(Q64, k=5))
-        scan_lines = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
-        assert scan_lines, plan[:1000]
-        fetch = scan_lines[0]
-        assert "PushedFilters: [In(id" in fetch, fetch[:300]
-        assert "codes" not in fetch.split("Format:")[0], fetch[:300]
+    idx = FlatIndex.create(
+        spark, Q._emb(spark, sf_dir), str(tmp_path / "f"), metric="l2", quantization="sq8"
+    )
+    loads = spy_runner_io(monkeypatch, "flat_file_block_runner", "_load_unit", str(tmp_path / "l"))
+    for budget in (BT.DRIVER_SERVE_BYTES, 0):
+        monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", budget)
+        idx.search(Q64, k=5).collect()
+        got = loads()
+        assert sorted(src for src, _ in got) == idx._files()
+        assert {col for _, col in got} == {"codes"}
 
 
 def test_decontaminate_broadcasts_benchmark_no_cartesian(spark, sf_dir):
