@@ -2,12 +2,14 @@
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,24 +26,39 @@ KERNEL_METRICS = ("l2", "dot")
 SQL_METRICS = ("l2", "dot", "cos")
 
 
-def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
-    """A DataFrame over driver-held rows (tuples in ``schema`` column
-    order; ``schema`` a StructType or DDL string), shipped as one Arrow
-    table.  ``createDataFrame(list)`` pickles every row through a
-    Python RDD (~0.4 s for 100 rows in a warm session); an Arrow table
-    under the local-relation threshold becomes a LocalTableScan and
-    runs no job until it is used."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
+@functools.lru_cache(maxsize=None)
+def ddl_schema(ddl: str):
+    """The StructType of the DDL schema string ``ddl``, parsed once per
+    string: each ``DataType.fromDDL`` is a Py4J round trip to the JVM's
+    parser.  The parsed value holds no session state; callers share it
+    and must not mutate it."""
     from pyspark.sql.types import DataType
 
+    return DataType.fromDDL(ddl)
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-held rows (tuples in ``schema`` column
+    order, or an Arrow table of the ``schema`` columns; ``schema`` a
+    StructType or DDL string), shipped as one Arrow table.
+    ``createDataFrame(list)`` pickles every row through a Python RDD
+    (~0.4 s for 100 rows in a warm session); an Arrow table under the
+    local-relation threshold becomes a LocalTableScan and runs no job
+    until it is used."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     if isinstance(schema, str):
-        schema = DataType.fromDDL(schema)
+        schema = ddl_schema(schema)
     arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
+    if isinstance(rows, pa.Table):
+        table = pa.Table.from_arrays(
+            [rows.column(f.name).cast(f.type) for f in arrow], schema=arrow
+        )
+    else:
+        cols = list(zip(*rows)) or [()] * len(arrow)
+        table = pa.Table.from_arrays(
+            [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
     return spark.createDataFrame(table, schema)
 
 
@@ -124,16 +141,14 @@ def post_map(metric: str, dist_col):
 
 
 def f16_words(col: str):
-    """array<float> Column -> packed IEEE binary16 words (vecf16
-    storage: 2 bytes per dim on disk)."""
+    """array<float> Column of prepared (null-free) vectors -> packed
+    IEEE binary16 words (vecf16 storage: 2 bytes per dim on disk), by
+    ``segment_worker.f16_words``."""
+    from pgvecto_rs_spark.indexes import segment_worker as SW
 
-    @F.pandas_udf("binary")
-    def to_f16(v: pd.Series) -> pd.Series:
-        return v.map(
-            lambda x: None
-            if x is None
-            else np.asarray(x, dtype=np.float32).astype(np.float16).tobytes()
-        )
+    @F.arrow_udf("binary")
+    def to_f16(v: pa.Array) -> pa.Array:
+        return SW.f16_words(SW._read_vec_matrix_from(v))
 
     return to_f16(F.col(col))
 

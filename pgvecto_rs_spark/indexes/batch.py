@@ -90,7 +90,10 @@ BLOCK_ROWS = 4096
 #: on 4 vCPU, a one-query scan of a 62.5 MiB flat index takes 249 ms in
 #: the driver against 592 ms through Spark (IVF: 29 vs 373 ms), and a
 #: sphere holding 0.1 % to 50 % of the rows 321-1,393 vs 766-1,388 ms
-#: (IVF: 903-2,287 vs 2,414-3,449 ms)
+#: (IVF: 903-2,287 vs 2,414-3,449 ms).  Writes take the same budget: an
+#: IVF list write (``IVFIndex._rewrite``) runs in the driver when the
+#: rows arriving plus the stored lists fit it, and a fresh index writes
+#: a driver-held insert with pyarrow
 DRIVER_SERVE_BYTES = 64 << 20
 
 #: batch queries that cost as much as one scan of the index.  The driver
@@ -169,17 +172,18 @@ def serve_cost(index, n_queries: int, scans: float = 1) -> int:
 _TALLY_LOCK = threading.Lock()
 
 
-def tally(stats: dict, key: str) -> None:
-    """Add one to ``stats[key]``, a per-handle counter (``serve_stats``,
-    ``IVFIndex.widen_stats``)."""
+def tally(stats: dict, key: str, n: int = 1) -> None:
+    """Add ``n`` to ``stats[key]``, a per-handle counter
+    (``serve_stats``, ``write_stats``, ``IVFIndex.widen_stats``)."""
     with _TALLY_LOCK:
-        stats[key] = stats.get(key, 0) + 1
+        stats[key] = stats.get(key, 0) + n
 
 
-def decide(handle, driver: bool) -> bool:
-    """Count a serving decision in ``handle.serve_stats`` and return
-    it."""
-    tally(handle.serve_stats, "driver" if driver else "spark")
+def decide(handle, driver: bool, stats: str = "serve_stats") -> bool:
+    """Count a decision to run in the driver or by Spark in the
+    handle's ``stats`` counters (``serve_stats`` for calls served,
+    ``write_stats`` for writes) and return it."""
+    tally(getattr(handle, stats), "driver" if driver else "spark")
     return driver
 
 

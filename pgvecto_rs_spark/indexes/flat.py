@@ -137,7 +137,7 @@ class FlatIndex:
                     else:
                         proj = Qz.rabitq_projection(dims, seed)
                         np.save(os.path.join(path, "rabitq_proj.npy"), proj, allow_pickle=False)
-                prepared = Qz.encode(prepared, "vec", quantization, meta, path, spark)
+                prepared = Qz.encode(prepared, "vec", quantization, meta, path)
             # range-partitioned + sorted by id: Parquet min/max stats then
             # skip row groups for the rerank's `id IN (...)` fetch — the
             # two-phase scan reads the codes column in pass 1 and only the

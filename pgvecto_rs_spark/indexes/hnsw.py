@@ -847,13 +847,11 @@ class HNSWIndex:
     def _allowed(self, filter, driver: bool = True):
         """The ids passing ``filter`` over the stored (id, seg) columns
         (``batch.allowed``), None without a filter."""
-        from pyspark.sql.types import StructType
-
         if filter is None:
             return None
         graph_dir = os.path.join(self.path, "graph")
         files = sorted(glob.glob(os.path.join(graph_dir, "seg=*", "*.parquet")))
-        schema = StructType.fromDDL("id bigint, seg int")
+        schema = base.ddl_schema("id bigint, seg int")
         return BT.allowed(self, filter, files, schema, graph_dir, driver=driver)[:, 0]
 
     def _serve_search(self, query, k: int, deny=None, filter=None,

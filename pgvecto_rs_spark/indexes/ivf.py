@@ -18,7 +18,8 @@ Spark-first design (SURVEY.md §7 Phase 3):
   nlist=1000, nprobe=10 this scans ~1% of the corpus, spread over
   round-robin list chunks, one task each.
   One writer, ``segment_worker.ivf_list_writer``, writes every list
-  file: build, updates and compaction run it per list inside one
+  file: build, updates and compaction run it per list, in the driver
+  when the write fits ``batch.DRIVER_SERVE_BYTES``, else inside one
   grouped Arrow job.
 - **search**: ``segment_worker.ivf_block_runner`` per list chunk:
   centroid top-nprobe (numpy over the small centroid table), a pyarrow
@@ -32,14 +33,13 @@ build, queries normalized at search, kernel is Dot, SQL distance is
 
 from __future__ import annotations
 
-import functools
 import glob
 import os
 import shutil
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -162,6 +162,8 @@ class IVFIndex:
         self._storage_bytes: int | None = None
         #: calls served in the driver vs by Spark (``batch.route``)
         self.serve_stats: dict[str, int] = {}
+        #: list writes run in the driver vs by Spark (``_rewrite``)
+        self.write_stats: dict[str, int] = {}
         #: filtered-search widening stop reasons per handle
         #: ({"rounds", "full", "certified", "exhausted"}) —
         #: makes the certificate's fire rate measurable (r11 advice)
@@ -299,7 +301,7 @@ class IVFIndex:
         np.save(os.path.join(path, "centroids.npy"), centroids, allow_pickle=False)
         np.save(os.path.join(path, "list_radii.npy"), np.zeros(nlist_eff), allow_pickle=False)
         shutil.rmtree(os.path.join(path, "lists"), ignore_errors=True)
-        idx._rewrite(np.empty(0, np.int64), prepared)
+        idx._rewrite(np.empty(0, np.int64), prepared, idx._hold(prepared, n_rows=n_total))
         return idx
 
     @classmethod
@@ -311,43 +313,29 @@ class IVFIndex:
     # ------------------------------------------------------------------
     def _route(self, prepared: DataFrame) -> DataFrame:
         """Prepared rows (``base.prepare_rows``) with their ``list_id``:
-        one row per assigned list (``replicas`` nearest centroids), plus
-        the residual ``res`` = vec − centroid[list] when the index is
-        quantized.  Build and updates route here, against the stored
-        centroids (updates never retrain).
+        one row per assigned list (the ``replicas`` nearest centroids,
+        ``segment_worker.ivf_assign``), plus the f32 residual ``res`` =
+        vec − centroid[list] (``segment_worker.ivf_residual``) when the
+        index is quantized.  Build and updates route here, against the
+        stored centroids (updates never retrain), in Arrow UDFs over
+        the kernels the driver's write loop (``_encode_held``) calls."""
+        bc = self.spark.sparkContext.broadcast(self.centroids.astype(np.float64))
+        r = int(self.meta.get("replicas", 1))
+        dims = int(self.meta["dims"])
 
-        Assignment runs in float32 (the input dtype): the (rows x
-        nlist) gemm is bandwidth-bound and list membership is a routing
-        decision — a boundary flip lands the vector in its
-        second-nearest list, which search handles identically (and f32
-        is deterministic, so builds stay reproducible).  Residuals stay
-        f64."""
-        sc = self.spark.sparkContext
-        cent = self.centroids.astype(np.float32)
-        bc32 = sc.broadcast(cent)
-        c_sq = sc.broadcast(np.einsum("ij,ij->i", cent, cent))
-        r = self.meta.get("replicas", 1)
-
-        @F.pandas_udf("array<int>")
-        def assign_lists(v: pd.Series) -> pd.Series:
-            mat = np.asarray(v.tolist(), dtype=np.float32)
-            d = np.float32(-2.0) * (mat @ bc32.value.T) + c_sq.value[None, :]
-            if r == 1:
-                top = np.argmin(d, axis=1)[:, None]
-            else:
-                top = np.argpartition(d, r - 1, axis=1)[:, :r]
-            return pd.Series([row.astype("int32").tolist() for row in top])
+        @F.arrow_udf("array<int>")
+        def assign_lists(v: pa.Array) -> pa.Array:
+            mat = SW._read_vec_matrix_from(v, np.float32, dims)
+            return SW.list_array(SW.ivf_assign(mat, bc.value, r))
 
         indexed = prepared.withColumn("list_id", F.explode(assign_lists("vec")))
         if self._quant() is None:
             return indexed
-        bc = sc.broadcast(self.centroids.astype(np.float64))
 
-        @F.pandas_udf("array<float>")
-        def residual(v: pd.Series, lid: pd.Series) -> pd.Series:
-            mat = np.asarray(v.tolist(), dtype=np.float64)
-            res = mat - bc.value[lid.to_numpy()]
-            return pd.Series([row.astype("float32").tolist() for row in res])
+        @F.arrow_udf("array<float>")
+        def residual(v: pa.Array, lid: pa.Array) -> pa.Array:
+            mat = SW._read_vec_matrix_from(v, np.float32, dims)
+            return SW.list_array(SW.ivf_residual(mat, bc.value, lid.to_numpy()))
 
         return indexed.withColumn("res", residual("vec", "list_id"))
 
@@ -361,11 +349,52 @@ class IVFIndex:
         quantizer is composed in)."""
         quant = self._quant()
         if quant is not None:
-            indexed = Qz.encode(indexed, "res", quant, self.meta, self.path, self.spark)
-            indexed = indexed.drop("res")
+            indexed = Qz.encode(indexed, "res", quant, self.meta, self.path).drop("res")
         if self.meta.get("storage") == "f16":
             indexed = indexed.withColumn("vec16", base.f16_words("vec")).drop("vec")
         return indexed
+
+    def _encode_held(self, rows):
+        """``_encode(_route(...))`` of prepared rows held in the driver
+        (an Arrow table), by the same kernels: one row per assigned
+        list, with ``list_id``, the codes and f16 words."""
+        mat = SW._read_vec_matrix_from(rows.column("vec"), np.float32, int(self.meta["dims"]))
+        top = SW.ivf_assign(mat, self.centroids, int(self.meta.get("replicas", 1)))
+        src, lid = np.repeat(np.arange(len(mat)), top.shape[1]), top.ravel()
+        out = rows.take(pa.array(src)).append_column("list_id", pa.array(lid))
+        quant = self._quant()
+        if quant is not None:
+            name, codes = Qz.encoder(quant, self.meta, self.path)
+            res = SW.ivf_residual(mat[src], self.centroids.astype(np.float64), lid)
+            out = out.append_column(name, codes(res.astype(np.float64)))
+        if self.meta.get("storage") == "f16":
+            out = out.drop_columns(["vec"]).append_column("vec16", SW.f16_words(mat[src]))
+        return out
+
+    def _stored_schema(self, prepared: StructType) -> StructType:
+        """The lists' Spark schema, ``list_id`` included, for rows
+        prepared as ``prepared``: the columns ``_encode(_route(...))``
+        gives them (f16 words in place of ``vec``, the codes after
+        ``list_id``)."""
+        f16 = self.meta.get("storage") == "f16"
+        quant = self._quant()
+        tail = "list_id int"
+        if quant is not None:
+            tail += ", rq struct<norm: float, words: array<int>>" if quant == "rabitq" \
+                else ", codes array<smallint>"
+        if f16:
+            tail += ", vec16 binary"
+        kept = [f for f in prepared.fields if not (f16 and f.name == "vec")]
+        return StructType(kept + base.ddl_schema(tail).fields)
+
+    def _prepare(self, rows: DataFrame, id_col: str = "id", vector_col: str = "vec") -> DataFrame:
+        """``rows`` prepared for this index (``base.prepare_rows``): ids
+        cast to long, with the payload columns ``rows`` carries."""
+        payloads = [c for c in self.meta.get("payload_cols", []) if c in rows.columns]
+        return base.prepare_rows(
+            rows, F.col(id_col).cast("long"), vector_col, self.meta["normalize"],
+            self.meta.get("storage", "f32"), keep=payloads,
+        )
 
     def apply_updates(
         self,
@@ -383,77 +412,139 @@ class IVFIndex:
         constants are never retrained.
 
         The ids leaving (deleted ids and the inserted rows' ids) are
-        collected to the driver once and reach every list task as one
-        sorted int64 array in the broadcast write plan, never as an
-        IN-list: 8 bytes per id, so the driver must hold them all.
-        ``insert_rows`` that Spark computes (not ``isLocal()``) are
-        checkpointed once after preparation, so the ids leaving and the
-        rows written come from one evaluation of the input.  Then
-        ``_rewrite`` writes every touched list in one grouped job.
-        Returns the rewritten list ids."""
-        prepared = None
-        leaving = []
+        collected to the driver, with no Spark job from a driver-held
+        frame, and reach the writer as one sorted int64 array in the
+        write plan, never as an IN-list: 8 bytes per id, so the driver
+        must hold them all.  Then ``_update`` writes every touched
+        list.  Returns the rewritten list ids."""
+        removes = np.empty(0, np.int64)
         if delete_ids is not None:
-            leaving.append(delete_ids.select(F.col(id_col).cast("long").alias("id")))
-        if insert_rows is not None:
-            payloads = [c for c in self.meta.get("payload_cols", []) if c in insert_rows.columns]
-            prepared = base.prepare_rows(
-                insert_rows, F.col(id_col).cast("long"), vector_col, self.meta["normalize"],
-                self.meta.get("storage", "f32"), keep=payloads,
-            )
-            if not insert_rows.isLocal():
-                prepared = prepared.localCheckpoint(eager=True)
-            leaving.append(prepared.select("id"))
-        if not leaving:
-            return []
-        ids = functools.reduce(DataFrame.unionByName, leaving).toArrow().column("id")
-        return self._rewrite(np.unique(ids.drop_null().to_numpy()), prepared)
+            ids = delete_ids.select(F.col(id_col).cast("long").alias("id"))
+            removes = BT.denied(ids.where(F.col("id").isNotNull()))
+        prepared = None if insert_rows is None else self._prepare(insert_rows, id_col, vector_col)
+        return self._update(removes, prepared, insert_rows is not None and insert_rows.isLocal())
 
-    def _rewrite(self, removes: np.ndarray, prepared: DataFrame | None) -> list[int]:
+    def _update(self, removes: np.ndarray, prepared: DataFrame | None, local: bool) -> list[int]:
+        """``apply_updates``' body, and a fresh index's incremental fold:
+        the ids ``removes`` and the ids of the ``prepared`` rows
+        (``_prepare``; from a driver-held frame when ``local``) leave
+        their lists, and the ``prepared`` rows join theirs.  Rows that
+        fit the driver budget are collected once (``_hold``) and
+        written in the driver.  Otherwise a frame that Spark computes
+        is checkpointed once, so the ids leaving and the rows written
+        come from one evaluation of the input, and one grouped job
+        writes (``_rewrite``)."""
+        held = None
+        if prepared is not None:
+            held = self._hold(prepared, local=local)
+            if held is None and not local:
+                prepared = prepared.localCheckpoint(eager=True)
+            ids = (prepared.select("id").toArrow() if held is None else held).column("id")
+            removes = np.concatenate([removes, ids.drop_null().to_numpy()])
+        return self._rewrite(np.unique(removes), prepared, held)
+
+    def _hold(self, prepared: DataFrame, n_rows: int | None = None, local: bool = False):
+        """``prepared`` as one Arrow table in the driver when its rows
+        and the stored lists (``batch.storage_bytes``) fit
+        ``batch.DRIVER_SERVE_BYTES``, else None.  A frame of known size
+        (``n_rows`` rows, or a driver-held ``local`` frame) is collected
+        with one ``toArrow()``; one of unknown size with a ``limit`` to
+        one row more than could fit, so a frame over the budget costs
+        that bounded collect before the grouped job evaluates it
+        again."""
+        room = BT.DRIVER_SERVE_BYTES - BT.storage_bytes(self)
+        row_bytes = 12 + 4 * int(self.meta["dims"]) + 8 * (len(prepared.columns) - 2)
+        cap = max(room, 0) // row_bytes
+        if not cap or (n_rows is not None and n_rows > cap):
+            return None
+        whole = local or n_rows is not None
+        held = (prepared if whole else prepared.limit(cap + 1)).toArrow()
+        return held if held.num_rows <= cap and held.nbytes <= room else None
+
+    def _rewrite(self, removes: np.ndarray, prepared: DataFrame | None,
+                 held=None) -> list[int]:
         """Write the lists through ``segment_worker.ivf_list_writer``:
-        the ``prepared`` rows (``base.prepare_rows``) routed and encoded,
-        plus one marker row per list, grouped by ``list_id`` in ONE Arrow
-        job; ``removes`` (sorted int64 ids) reach the tasks in the
-        broadcast plan, never as an IN-list.  Each list is one task that
-        holds the whole list in memory (``ivf_list_writer``).  Then
-        ``_commit_lists`` publishes the rewritten lists.  Returns the
-        rewritten list ids."""
+        the ids ``removes`` (sorted int64) leave, and the ``prepared``
+        rows (``base.prepare_rows``), routed and encoded, join.  With
+        the rows ``held`` in the driver (``_hold``), or with only ids
+        leaving from lists that fit the budget, the driver routes and
+        encodes them with the kernels the UDFs call and runs the writer
+        list by list (``_write_lists``): no Spark job.  Otherwise ONE
+        grouped Arrow job runs it, a list per task, over the routed rows
+        plus one marker row per list, with ``removes`` in the broadcast
+        plan.  ``_commit_lists`` then publishes the rewritten lists.
+        Counts the route in ``write_stats``; returns the rewritten list
+        ids."""
         if prepared is None and not len(removes):
             return []
         lists_dir = os.path.join(self.path, "lists")
-        rows = base.local_frame(
-            self.spark, [(i, None) for i in range(len(self.centroids))], "list_id int, _row boolean"
-        )
         schema = _lists_schema(lists_dir)
-        if prepared is not None:
-            enc = self._encode(self._route(prepared))
-            rows = enc.withColumn("_row", F.lit(True)).unionByName(rows, allowMissingColumns=True)
-            schema = schema or enc.schema
+        if schema is None and prepared is not None:
+            schema = self._stored_schema(prepared.schema)
         if schema is None:  # no list files and nothing to insert
             return []
+        fits = held is not None if prepared is not None \
+            else BT.storage_bytes(self) <= BT.DRIVER_SERVE_BYTES
+        driver = BT.decide(self, fits, "write_stats")
         plan = self._write_plan(removes, schema)
-        bc = self.spark.sparkContext.broadcast(plan)
+        bc = None
         try:
-            done = (
-                rows.groupBy("list_id")
-                .applyInArrow(lambda key, tbl: SW.ivf_list_writer(bc.value, key[0].as_py(), tbl),
-                              _REWRITE_SCHEMA)
-                .toArrow()
-            )
+            if driver:
+                done = self._write_lists(plan, None if held is None else self._encode_held(held))
+            else:
+                rows = base.local_frame(
+                    self.spark, [(i, None) for i in range(len(self.centroids))],
+                    "list_id int, _row boolean",
+                )
+                if prepared is not None:
+                    enc = self._encode(self._route(prepared))
+                    rows = enc.withColumn("_row", F.lit(True)).unionByName(
+                        rows, allowMissingColumns=True
+                    )
+                bc = self.spark.sparkContext.broadcast(plan)
+                done = (
+                    rows.groupBy("list_id")
+                    .applyInArrow(
+                        lambda key, tbl: SW.ivf_list_writer(bc.value, key[0].as_py(), tbl),
+                        _REWRITE_SCHEMA,
+                    )
+                    .toArrow()
+                )
             return self._commit_lists(plan, done)
         finally:
-            bc.destroy()
+            if bc is not None:
+                bc.destroy()
             for f in glob.glob(os.path.join(lists_dir, "list_id=*", f".{plan['token']}*")):
                 os.unlink(f)
 
+    def _write_lists(self, plan: dict, enc):
+        """The grouped job's twin in the driver: ``ivf_list_writer`` on
+        each list's slice of the routed and encoded rows ``enc``
+        (``_encode_held``; None when only ids leave), tagged ``_row``.
+        A list no row joins is skipped when no id leaves.  Returns the
+        writers' result rows."""
+        none = pa.table({"_row": pa.array([], pa.bool_())})
+        lid = np.empty(0, np.int32) if enc is None else enc.column("list_id").to_numpy()
+        if enc is not None:
+            enc = enc.append_column("_row", pa.array(np.ones(len(lid), dtype=bool)))
+        order = np.argsort(lid, kind="stable")
+        cuts = np.searchsorted(lid[order], np.arange(len(self.centroids) + 1))
+        done = []
+        for l in range(len(self.centroids)):
+            sel = order[cuts[l] : cuts[l + 1]]
+            if len(sel) or len(plan["removes"]):
+                rows = enc.take(pa.array(sel)) if len(sel) else none
+                done.append(SW.ivf_list_writer(plan, l, rows))
+        return pa.concat_tables(done) if done else plan["result"].empty_table()
+
     def _write_plan(self, removes: np.ndarray, schema) -> dict:
-        """What every ``ivf_list_writer`` task reads: the lists' snapshot,
-        the sorted ids leaving, the centroids, the stored columns (the
-        Spark ``schema`` without ``list_id``) and this write's token."""
+        """What every ``ivf_list_writer`` call reads: the lists'
+        snapshot, the sorted ids leaving, the centroids, the stored
+        columns (the Spark ``schema`` without ``list_id``) and this
+        write's token."""
         import uuid
 
         from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import DataType
 
         lists_dir = os.path.join(self.path, "lists")
         stored = StructType([f for f in schema.fields if f.name != "list_id"])
@@ -462,7 +553,7 @@ class IVFIndex:
             "removes": np.asarray(removes, dtype=np.int64),
             "centroids": self.centroids.astype(np.float64), "vec_col": self._vec_col(),
             "schema": to_arrow_schema(stored),
-            "result": to_arrow_schema(DataType.fromDDL(_REWRITE_SCHEMA)),
+            "result": to_arrow_schema(base.ddl_schema(_REWRITE_SCHEMA)),
             "dictionary": [
                 f"{f.name}.list.element" if f.dataType.typeName() == "array" else f.name
                 for f in stored.fields if f.name not in ("id", "vec", "vec16", "rq")
@@ -532,7 +623,6 @@ class IVFIndex:
         if self._radii is None:
             p = os.path.join(self.path, "list_radii.npy")
             if not os.path.exists(p):
-                import pyarrow as pa
                 import pyarrow.parquet as pq
 
                 radii = np.zeros(int(self.meta["nlist"]))

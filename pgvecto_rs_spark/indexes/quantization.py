@@ -14,10 +14,11 @@ Spark shapes:
 - PQ codes are an ``array<smallint>`` column (n_subspaces bytes of
   information per row); RaBitQ codes are sign bits packed into
   ``array<int>`` words plus a stored norm (``rq`` struct).  Each has
-  one numpy encoder (``pq_encode``, ``rabitq_encode``): flat and IVF
-  rows encode through ``encode`` (Arrow-batched pandas UDFs over it)
-  at build and update time alike, HNSW segment builds call it
-  directly.
+  one numpy encoder (``pq_encode``, ``rabitq_encode``; SQ's is
+  ``segment_worker.sq_encode``): flat and IVF rows encode through
+  ``encoder``, in an Arrow UDF (``encode``) or in the driver's IVF
+  write loop, at build and update time alike; HNSW segment builds
+  call them directly.
 - Scoring has one implementation per quantizer, in
   ``segment_worker._approx_dists``: decode-on-access for flat codes,
   a batched per-list LUT for IVF-PQ residual codes, one unpack +
@@ -34,8 +35,10 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
+
+from pgvecto_rs_spark.indexes import segment_worker as SW
 
 PQ_BITS = 8  # crates/base/src/index.rs:475-496 default
 TRAIN_CAP = 65536  # common/src/sample.rs
@@ -61,35 +64,51 @@ def sq_train(df, col: str) -> tuple[np.ndarray, np.ndarray]:
     return lo, np.where(hi > lo, hi - lo, 1.0)
 
 
-def encode(df, col: str, quant: str, meta: dict, path: str, spark):
-    """``df`` plus the quantizer codes of its vector column ``col``:
-    ``codes`` (SQ, PQ) or ``rq`` (RaBitQ), computed from the trained
-    constants (``meta``'s SQ bounds, the PQ codebooks or RaBitQ
-    projection saved under ``path``).  Build and incremental updates
-    both encode here, so a row's codes never depend on which of them
-    wrote it."""
+def encoder(quant: str, meta: dict, path: str):
+    """(column, codes of f64 rows as an Arrow array) for the quantizer
+    ``quant`` with its trained constants (``meta``'s SQ bounds, the PQ
+    codebooks or RaBitQ projection saved under ``path``): ``codes``
+    (SQ ``segment_worker.sq_encode``, ``pq_encode``) or ``rq``
+    (``rabitq_encode``).  ``encode``'s UDF and the driver's IVF write
+    loop (``IVFIndex._write_lists``) both code through it."""
     from pgvecto_rs_spark.indexes.flat import _SQ_KINDS
 
     if quant in _SQ_KINDS:
+        lo = np.asarray(meta["sq_lo"], dtype=np.float64)
+        width = np.asarray(meta["sq_width"], dtype=np.float64)
         levels = (1 << int(meta.get("sq_bits", 8))) - 1
-        lo_c = F.array(*[F.lit(float(v)) for v in meta["sq_lo"]])
-        w_c = F.array(*[F.lit(float(v)) for v in meta["sq_width"]])
-        codes = F.zip_with(
-            F.col(col).cast("array<double>"),
-            F.zip_with(lo_c, w_c, lambda a, b: F.struct(a.alias("lo"), b.alias("w"))),
-            lambda x, p: F.least(
-                F.lit(levels),
-                F.greatest(F.lit(0), F.round((x - p["lo"]) / p["w"] * levels, 0).cast("int")),
-            ).cast("smallint"),
-        )
-        return df.withColumn("codes", codes)
+        return "codes", lambda mat: SW.list_array(SW.sq_encode(mat, lo, width, levels))
     if quant == "pq":
-        books = np.load(os.path.join(path, "pq_codebooks.npy"))
-        return df.withColumn("codes", pq_encode_udf(books, spark)(col))
+        books = os.path.join(path, "pq_codebooks.npy")
+        return "codes", lambda mat: SW.list_array(pq_encode(mat, SW._load_params(books)))
     if quant == "rabitq":
-        proj = np.load(os.path.join(path, "rabitq_proj.npy"))
-        return df.withColumn("rq", rabitq_encode_udf(proj, spark)(col))
+        proj = os.path.join(path, "rabitq_proj.npy")
+
+        def rq(mat):
+            norms, words = rabitq_encode(mat, SW._load_params(proj))
+            return pa.StructArray.from_arrays(
+                [pa.array(norms), SW.list_array(words)], names=["norm", "words"]
+            )
+
+        return "rq", rq
     raise ValueError(f"unknown quantization {quant!r}")
+
+
+def encode(df, col: str, quant: str, meta: dict, path: str):
+    """``df`` plus the quantizer codes of its vector column ``col``
+    (``encoder``), computed by an Arrow UDF.  Build and incremental
+    updates both encode here or in the driver through the same
+    ``encoder``, so a row's codes never depend on which of them wrote
+    it."""
+    name, codes = encoder(quant, meta, path)
+    rtype = "struct<norm: float, words: array<int>>" if name == "rq" else "array<smallint>"
+    dims = int(meta["dims"])
+
+    @F.arrow_udf(rtype)
+    def encode_rows(v: pa.Array) -> pa.Array:
+        return codes(SW._read_vec_matrix_from(v, np.float64, dims))
+
+    return df.withColumn(name, encode_rows(col))
 
 
 # ---------------------------------------------------------------------------
@@ -154,18 +173,6 @@ def pq_encode(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
     return codes
 
 
-def pq_encode_udf(codebooks: np.ndarray, spark):
-    """Pandas UDF: vector -> array<smallint> of per-subspace centroid ids."""
-    bc = spark.sparkContext.broadcast(codebooks)
-
-    @F.pandas_udf("array<smallint>")
-    def encode(v: pd.Series) -> pd.Series:
-        codes = pq_encode(np.asarray(v.tolist(), dtype=np.float64), bc.value)
-        return pd.Series([row.tolist() for row in codes])
-
-    return encode
-
-
 # ---------------------------------------------------------------------------
 # RaBitQ
 # ---------------------------------------------------------------------------
@@ -194,20 +201,6 @@ def rabitq_encode(mat: np.ndarray, proj: np.ndarray) -> tuple[np.ndarray, np.nda
         padded.reshape(len(mat), n_words, 32) << np.arange(32, dtype=np.int64)[None, None, :]
     ).sum(axis=2)
     return norms.astype(np.float32), packed.astype(np.uint32).view(np.int32)
-
-
-def rabitq_encode_udf(proj: np.ndarray, spark):
-    """vector -> (norm float, sign bits packed into array<int> words).
-
-    bit i = sign(P·x̂)_i > 0; decode estimator x̂ ≈ norm · Pᵀ·sgn/√d."""
-    bc = spark.sparkContext.broadcast(proj)
-
-    @F.pandas_udf("struct<norm: float, words: array<int>>")
-    def encode(v: pd.Series) -> pd.DataFrame:
-        norms, words = rabitq_encode(np.asarray(v.tolist(), dtype=np.float64), bc.value)
-        return pd.DataFrame({"norm": norms, "words": [row.tolist() for row in words]})
-
-    return encode
 
 
 # ---------------------------------------------------------------------------

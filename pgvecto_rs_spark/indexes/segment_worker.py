@@ -33,16 +33,16 @@ import numpy as np
 class _FileLRU:
     """Process-wide LRU of decoded storage, keyed by path and valid
     while the stored key (file fingerprint plus decode options) matches:
-    a rewritten unit reloads.  Bounded by entries and by decoded bytes
-    (``_nbytes``); the newest entry stays even when it alone is over
-    ``maxbytes``.  Executors and the driver (in-process serving,
-    ``indexes/batch.py``) share this code, and the driver serves from
-    several threads while ``streaming/optimizer.py`` compacts from
-    another, so one lock guards each cache.  Loads run outside the
-    lock; two threads missing the same unit both load it and the later
-    insert wins."""
+    a rewritten unit reloads.  Bounded by decoded bytes (``_nbytes``)
+    and, unless ``maxsize`` is None, by entries; the newest entry stays
+    even when it alone is over ``maxbytes``.  Executors and the driver
+    (in-process serving, ``indexes/batch.py``) share this code, and the
+    driver serves from several threads while ``streaming/optimizer.py``
+    compacts from another, so one lock guards each cache.  Loads run
+    outside the lock; two threads missing the same unit both load it
+    and the later insert wins."""
 
-    def __init__(self, maxsize: int, maxbytes: int):
+    def __init__(self, maxsize: int | None, maxbytes: int):
         self.maxsize = maxsize
         self.maxbytes = maxbytes
         self.nbytes = 0
@@ -64,7 +64,8 @@ class _FileLRU:
             self._data[path] = (key, val, size)
             self.nbytes += size
             while len(self._data) > 1 and (
-                len(self._data) > self.maxsize or self.nbytes > self.maxbytes
+                self.nbytes > self.maxbytes
+                or (self.maxsize is not None and len(self._data) > self.maxsize)
             ):
                 self.nbytes -= self._data.popitem(last=False)[1][2]
         return val
@@ -87,10 +88,12 @@ def _nbytes(v) -> int:
 #: decoded bytes each cache may hold per process: four times the
 #: driver serving budget (``batch.DRIVER_SERVE_BYTES``), so the driver
 #: keeps one served index's f64-decoded units warm and its resident
-#: total stays bounded however many indexes it serves
+#: total stays bounded however many indexes it serves.  The unit caches
+#: have no entry bound: an IVF index of more lists than such a bound
+#: would re-read most of its lists on every batch
 _CACHE_BYTES = 256 << 20
 
-_SEG_CACHE = _FileLRU(64, _CACHE_BYTES)
+_SEG_CACHE = _FileLRU(None, _CACHE_BYTES)
 
 # quant kinds whose graph distances are approximate and need the exact
 # rerank fetch; "f16" stores on the binary16 grid but its decoded
@@ -620,9 +623,10 @@ def _block_topk_emit(qids, d, ids, k, below=None):
             yield (qids[qi], int(i), float(dv))
 
 
-def _read_vec_matrix_from(col, dtype=np.float32) -> np.ndarray:
+def _read_vec_matrix_from(col, dtype=np.float32, dims: int = 0) -> np.ndarray:
     """list<number> column -> matrix via the Arrow values-buffer
-    reshape (equal-length null-free lists guaranteed by index layout).
+    reshape (equal-length null-free lists guaranteed by index layout);
+    an empty column is a (0, ``dims``) matrix.
 
     RESIDENT vector matrices stay f32 (r12 verdict item #2 / r11 #8):
     the stored values ARE f32, every distance call mixes them with an
@@ -638,7 +642,7 @@ def _read_vec_matrix_from(col, dtype=np.float32) -> np.ndarray:
         col = col.combine_chunks()
     n = len(col)
     if not n:
-        return np.empty((0, 0), dtype=dtype)
+        return np.empty((0, dims), dtype=dtype)
     flat = col.flatten().to_numpy(zero_copy_only=False)
     return np.ascontiguousarray(flat, dtype=dtype).reshape(n, len(flat) // n)
 
@@ -927,7 +931,7 @@ def hnsw_segment_block_runner(quant, qparams, kernel: str, ef: int,
     return run
 
 
-_LIST_CACHE = _FileLRU(64, _CACHE_BYTES)
+_LIST_CACHE = _FileLRU(None, _CACHE_BYTES)
 
 
 def _load_unit(source: str, col: str):
@@ -1039,6 +1043,74 @@ def ivf_block_runner(centroids: np.ndarray, kernel: str, nprobe: int, k: int,
     return run
 
 
+# ---------------------------------------------------------------------------
+# Write kernels: the Arrow UDFs of ``IVFIndex._route``,
+# ``quantization.encode`` and ``base.f16_words`` call them on Spark's
+# side, and ``IVFIndex._write_lists`` in the driver, so a row routes and
+# encodes to the same list and codes whichever side writes it.
+
+
+def list_array(mat: np.ndarray):
+    """An Arrow list array holding the rows of the matrix ``mat``."""
+    import pyarrow as pa
+
+    n, width = mat.shape
+    offsets = np.arange(n + 1, dtype=np.int32) * np.int32(width)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(np.ascontiguousarray(mat).ravel()))
+
+
+def ivf_assign(mat: np.ndarray, centroids: np.ndarray, replicas: int) -> np.ndarray:
+    """(rows, ``replicas``) int32 ids of each row's nearest lists, in
+    float32: a boundary flip only lands a row in its second-nearest
+    list, which search handles alike.  The (rows x nlist) product is a
+    per-row einsum, not a gemm: a gemm's result for a row depends on
+    how many rows share its batch, so the driver and a Spark task would
+    route a near-tie differently."""
+    if not len(mat):
+        return np.empty((0, replicas), np.int32)
+    cent = centroids.astype(np.float32)
+    c_sq = np.einsum("ij,ij->i", cent, cent)
+    d = np.float32(-2.0) * np.einsum("ij,kj->ik", mat.astype(np.float32, copy=False), cent)
+    d += c_sq[None, :]
+    if replicas == 1:
+        return np.argmin(d, axis=1)[:, None].astype(np.int32)
+    return np.argpartition(d, replicas - 1, axis=1)[:, :replicas].astype(np.int32)
+
+
+def ivf_residual(mat: np.ndarray, centroids: np.ndarray, lid: np.ndarray) -> np.ndarray:
+    """The float32 residuals vec − centroid[list] of routed rows, taken
+    in f64 (``centroids`` f64, ``lid`` each row's list): what IVF
+    quantizers code."""
+    return (mat.astype(np.float64) - centroids[lid]).astype(np.float32)
+
+
+def sq_encode(mat: np.ndarray, lo: np.ndarray, width: np.ndarray, levels: int) -> np.ndarray:
+    """(rows, dims) int16 scalar-quantizer codes of ``mat``:
+    (x − lo) / width · levels in f64, rounded half away from zero (the
+    HALF_UP of Spark's ``round``, which wrote the codes before this
+    kernel) and clamped to [0, levels].  ``x − floor(x)`` is exact, so
+    a value just under a half rounds down, where ``floor(x + 0.5)``
+    would round it up."""
+    v = (mat.astype(np.float64) - lo[None, :]) / width[None, :] * float(levels)
+    a = np.abs(v)
+    r = np.floor(a)
+    r += (a - r) >= 0.5
+    return np.clip(np.copysign(r, v), 0, levels).astype(np.int16)
+
+
+def f16_words(mat: np.ndarray):
+    """An Arrow binary array of each row's IEEE binary16 words (vecf16
+    storage: 2 bytes per dim)."""
+    import pyarrow as pa
+
+    half = np.ascontiguousarray(mat, dtype=np.float32).astype(np.float16)
+    n, dims = half.shape
+    offsets = np.arange(n + 1, dtype=np.int32) * np.int32(2 * dims)
+    return pa.Array.from_buffers(
+        pa.binary(), n, [None, pa.py_buffer(offsets), pa.py_buffer(half.tobytes())]
+    )
+
+
 def ivf_list_radius(tbl, centroid: np.ndarray, vec_col: str) -> float:
     """One IVF list's max residual L2 norm max |x − centroid| over its
     stored rows ``tbl`` (f64 over the stored f32 values or decoded f16
@@ -1064,10 +1136,11 @@ def _conform(tbl, schema):
 
 
 def ivf_list_writer(plan: dict, lid: int, rows):
-    """The one IVF list writer (``IVFIndex._rewrite`` runs it per list
-    in a grouped Arrow job).  ``rows`` is list ``lid``'s group: its
-    routed and encoded new rows plus one marker row (``_row`` null) that
-    makes every list a group.  The list becomes its files in the
+    """The one IVF list writer: ``IVFIndex._rewrite`` runs it per list,
+    in the driver for a write under ``batch.DRIVER_SERVE_BYTES``, else
+    in a grouped Arrow job.  ``rows`` holds list ``lid``'s routed and
+    encoded new rows (``_row`` true); in the grouped job one marker row
+    (``_row`` null) makes every list a group.  The list becomes its files in the
     driver's snapshot (``plan["snapshot"]``) minus the rows whose ids
     are in the sorted ``plan["removes"]``, plus the new rows, sorted by
     id (row-group id skipping for the rerank's ``id IN`` fetch), written
@@ -1084,9 +1157,10 @@ def ivf_list_writer(plan: dict, lid: int, rows):
     a temp file and an atomic rename, so a retried task rewrites the
     same file.
 
-    Limit: the task holds the whole list at once (the group, the old
-    files and the sorted output, about three times the list's bytes),
-    so one list must fit a Python worker's memory; nothing spills."""
+    Limit: the writer holds the whole list at once (the new rows, the
+    old files and the sorted output, about three times the list's
+    bytes), so one list must fit a Python worker's memory; nothing
+    spills."""
     import uuid
 
     import pyarrow as pa
@@ -1096,15 +1170,16 @@ def ivf_list_writer(plan: dict, lid: int, rows):
     new = rows.filter(rows.column("_row").is_valid())
     new = _conform(new, schema) if new.num_rows else schema.empty_table()
     files = plan["snapshot"].get(lid, [])
-    ids = np.concatenate(
-        [pq.read_table(f, columns=["id"]).column("id").to_numpy() for f in files]
-        or [np.empty(0, np.int64)]
-    )
+    # a list rows join is rewritten: read it whole once; otherwise its
+    # ids first, to find whether any leave
+    old = [pq.read_table(f) for f in files] if new.num_rows else None
+    heads = old if old is not None else [pq.read_table(f, columns=["id"]) for f in files]
+    ids = np.concatenate([t.column("id").to_numpy() for t in heads] or [np.empty(0, np.int64)])
     pos = np.minimum(np.searchsorted(removes, ids), max(len(removes) - 1, 0))
     gone = removes[pos] == ids if len(removes) else np.zeros(len(ids), bool)
     if not new.num_rows and not gone.any():
         return pa.Table.from_pylist([], schema=plan["result"])
-    old = [_conform(pq.read_table(f), schema) for f in files]
+    old = [_conform(t, schema) for t in (old if old is not None else map(pq.read_table, files))]
     kept = pa.concat_tables(old or [schema.empty_table()]).filter(pa.array(~gone))
     out = pa.concat_tables([kept, new]).sort_by("id")
     ldir = os.path.join(plan["dir"], f"list_id={lid}")

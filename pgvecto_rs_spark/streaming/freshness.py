@@ -66,9 +66,9 @@ _KINDS = {"flat": FlatIndex, "ivf": IVFIndex, "hnsw": HNSWIndex}
 
 _MANIFEST = "MANIFEST.json"
 
-# fixed file schemas of the growing segment and the tombstones: reads
-# pass them instead of inferring from a footer, which costs a Spark job
-# per new file set
+# fixed file schemas of the growing segment and the tombstones: pyarrow
+# writes them, and reads pass them instead of inferring from a footer,
+# which costs a Spark job per new file set
 _TOMB_SCHEMA = "id long, version int"
 _SCHEMAS = {"delta": "id long, vec array<float>, version int", "tombstones": _TOMB_SCHEMA}
 
@@ -144,25 +144,33 @@ def _newest_visible(gids: np.ndarray, gvec: np.ndarray, gver: np.ndarray,
     return ids[o], vec[o]
 
 
-def _write_tombstones(ids: Sequence[int], version: int, rows_dir: str) -> None:
-    """The (id, version) rows of driver-held ``ids`` as one Parquet file
-    in ``rows_dir``, in ``_TOMB_SCHEMA``'s types, written with pyarrow
-    under a hidden temp name and renamed in, so no reader sees a partial
-    file: no Spark job.  A missing ``rows_dir`` raises."""
+def _write_rows(tbl, sub: str, rows_dir: str) -> None:
+    """The driver-held Arrow table ``tbl`` of growing rows or tombstones
+    (``sub``) as one Parquet file in ``rows_dir``, in ``_SCHEMAS``'
+    types, written with pyarrow under a hidden temp name and renamed
+    in, so no reader sees a partial file: no Spark job.  A missing
+    ``rows_dir`` raises: a swept transaction staging directory is never
+    recreated."""
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DataType
 
-    ids = [int(i) for i in ids]
-    schema = to_arrow_schema(DataType.fromDDL(_TOMB_SCHEMA))
-    tbl = pa.table([pa.array(ids, schema[0].type),
-                    pa.array([version] * len(ids), schema[1].type)], schema=schema)
+    schema = to_arrow_schema(base.ddl_schema(_SCHEMAS[sub]))
+    tbl = pa.Table.from_arrays([tbl.column(f.name).cast(f.type) for f in schema], schema=schema)
     name = f"part-{uuid.uuid4().hex}.parquet"
     pq.write_table(tbl, os.path.join(rows_dir, "." + name))
     os.replace(os.path.join(rows_dir, "." + name), os.path.join(rows_dir, name))
+
+
+def _write_tombstones(ids: Sequence[int], version: int, rows_dir: str) -> None:
+    """The (id, version) rows of driver-held ``ids`` as one tombstone
+    file in ``rows_dir`` (``_write_rows``)."""
+    import pyarrow as pa
+
+    ids = [int(i) for i in ids]
+    _write_rows(pa.table({"id": ids, "version": [version] * len(ids)}), "tombstones", rows_dir)
 
 
 def _newest(rows: DataFrame) -> DataFrame:
@@ -189,6 +197,8 @@ class FreshVectorIndex:
         self._df_cache: dict = {}
         #: searches served in the driver vs by Spark (``batch.decide``)
         self.serve_stats: dict[str, int] = {}
+        #: inserts and IVF folds written in the driver vs by Spark
+        self.write_stats: dict[str, int] = {}
         self._migrate_legacy_layout()
         self._gen = self._read_manifest()
         cls = _KINDS[self.meta["sealed_kind"]]
@@ -298,7 +308,8 @@ class FreshVectorIndex:
 
     def insert(self, df: DataFrame) -> None:
         """Append (id, vector) rows to the growing segment
-        (``aminsert`` path; NULL vectors skipped like am.rs:266-278).
+        (``aminsert`` path; NULL vectors skipped like am.rs:266-278),
+        as one file (``_append``).
 
         Serialized with compaction commits (not with the rebuild) so an
         append lands either in the generation being folded — where the
@@ -306,19 +317,26 @@ class FreshVectorIndex:
         one; it can never vanish into a just-retired directory."""
         with self._write_lock:
             self._refresh()
-            v = self._bump()
-            self._delta_rows(df, v).write.mode("append").parquet(
-                os.path.join(self._gen_dir(), "delta", "rows")
-            )
+            rows_dir = os.path.join(self._gen_dir(), "delta", "rows")
+            os.makedirs(rows_dir, exist_ok=True)
+            self._append(df, self._bump(), rows_dir)
 
-    def _delta_rows(self, df: DataFrame, version: int) -> DataFrame:
-        """(id, vec, version): ``df`` as growing-segment rows, prepared
-        like the sealed index's own (``base.prepare_rows``) but kept in
-        f32 until compaction encodes them."""
+    def _append(self, df: DataFrame, version: int, rows_dir: str) -> None:
+        """Write ``df`` into ``rows_dir`` as growing-segment rows at
+        ``version``, prepared like the sealed index's own
+        (``base.prepare_rows``) but kept in f32 until compaction encodes
+        them: a driver-held frame (``isLocal()``) collected with one
+        ``toArrow()`` and written with pyarrow (``_write_rows``, no
+        write job), any other by a Spark append.  Counts the route in
+        ``write_stats``."""
         _, do_norm = base.resolve_metric(self.meta["metric"])
-        return base.prepare_rows(
+        rows = base.prepare_rows(
             df, F.col(self.meta["id_col"]).cast("long"), self.meta["vector_col"], do_norm
         ).withColumn("version", F.lit(version))
+        if BT.decide(self, df.isLocal(), "write_stats"):
+            _write_rows(rows.toArrow(), "delta", rows_dir)
+        else:
+            rows.write.mode("append").parquet(rows_dir)
 
     def delete(self, ids: Sequence[int]) -> None:
         """Tombstone ids at the current version (delete.rs:52-65 —
@@ -379,8 +397,8 @@ class FreshVectorIndex:
         The sealed side's ``n_rows`` is
         the index's own bookkeeping: an incremental IVF fold sets it to
         old − leaving + arriving and takes the touched lists' radii from
-        the tasks that write them (``IVFIndex.apply_updates``), so neither
-        needs a pass over the lists."""
+        the list writer (``IVFIndex._rewrite``), so neither needs a pass
+        over the lists."""
         self._refresh()
         if self._row_count("delta") >= max_growing_rows:
             self.compact()
@@ -744,8 +762,15 @@ class FreshVectorIndex:
         The deletes (every tombstoned id: sealed rows predate all
         tombstones) and the inserts (the newest visible growing row per
         id) come from the driver-held tombstone map and growing rows
-        (``_tomb_map``, ``_growing_rows``) as driver-held frames, so the
-        fold scans no growing or tombstone file through Spark."""
+        (``_tomb_map``, ``_growing_rows``), so the fold scans no growing
+        or tombstone file through Spark.  An IVF fold takes the
+        tombstoned ids as an array and the inserts as a driver-held frame
+        that only ``base.prepare_rows`` prepares (``IVFIndex._update``):
+        under the driver budget it runs one collect job and writes the
+        lists in the driver.  HNSW folds the same rows as driver-held
+        frames through ``apply_updates``."""
+        import pyarrow as pa
+
         old_sealed = os.path.join(self._gen_dir(old_gen), "sealed")
         new_sealed = os.path.join(self._gen_dir(old_gen + 1), "sealed")
         shutil.rmtree(self._gen_dir(old_gen + 1), ignore_errors=True)
@@ -754,13 +779,20 @@ class FreshVectorIndex:
         gids, gvec, gver = self._growing_rows(self._fingerprint("delta", snap_delta))
         tids, tver = self._tomb_map(self._fingerprint("tombstones", snap_tomb))
         ids, vec = _newest_visible(gids, gvec, gver, tids, tver)
-        clone.apply_updates(
-            delete_ids=base.local_frame(self.spark, [(i,) for i in tids.tolist()], "id long")
-            if len(tids) else None,
-            insert_rows=base.local_frame(
-                self.spark, zip(ids.tolist(), vec.tolist()), "id long, vec array<float>"
-            ) if len(ids) else None,
-        )
+        rows = base.local_frame(
+            self.spark, pa.table({"id": ids, "vec": SW.list_array(vec.astype(np.float32))}),
+            "id long, vec array<float>",
+        ) if len(ids) else None
+        if isinstance(clone, IVFIndex):
+            clone._update(tids, None if rows is None else clone._prepare(rows), local=True)
+            for route, n in clone.write_stats.items():
+                BT.tally(self.write_stats, route, n)
+        else:
+            clone.apply_updates(
+                delete_ids=base.local_frame(self.spark, [(i,) for i in tids.tolist()], "id long")
+                if len(tids) else None,
+                insert_rows=rows,
+            )
         self._commit(old_gen, snap_delta, snap_tomb)
 
     def stat(self) -> dict:
@@ -874,7 +906,7 @@ class IndexTransaction:
             )
 
     def _staged_write(self, write, path: str) -> None:
-        """Run a staging parquet append ``write(path)``; if it blows up
+        """Run a staging write ``write(path)``; if it blows up
         BECAUSE the staging dir was swept mid-write (GC raced the write
         itself, not just the gaps between writes), surface the
         documented loud RuntimeError instead of a raw Spark task failure
@@ -910,10 +942,14 @@ class IndexTransaction:
             return idx._bump()
 
     def insert(self, df: DataFrame) -> None:
-        """Stage (id, vector) rows — the transactional ``aminsert``."""
+        """Stage (id, vector) rows — the transactional ``aminsert``
+        (``FreshVectorIndex._append``)."""
         self._check_open()
-        w = self._idx._delta_rows(df, self._next_version()).write.mode("append")
-        self._staged_write(w.parquet, os.path.join(self._dir, "delta", "rows"))
+        v = self._next_version()
+        self._staged_write(
+            lambda path: self._idx._append(df, v, path),
+            os.path.join(self._dir, "delta", "rows"),
+        )
         self._staged += 1
         self._touch()
         self._check_marker()

@@ -800,6 +800,24 @@ class TestTransactions:
             assert not os.path.exists(txn._dir)
             assert idx.stat()["idx_tombstones"] == 0
 
+    def test_insert_into_swept_staging_dir_raises(self, spark, emb):
+        """A transaction's ``insert`` of a driver-held frame writes its
+        growing rows with pyarrow, which never recreates a swept
+        staging dir: the write fails, and the missing marker turns that
+        into the loud RuntimeError; nothing is published."""
+        from pgvecto_rs_spark.indexes.base import local_frame
+
+        with tempfile.TemporaryDirectory() as d:
+            idx = make(spark, emb, d)
+            txn = idx.begin()
+            past = time.time() - 100_000
+            os.utime(txn._dir, (past, past))
+            assert idx.cleanup_stale_transactions(max_age_seconds=86_400) == 1
+            with pytest.raises(RuntimeError, match="mid-write"):
+                txn.insert(local_frame(spark, [(900, list(Q64))], "vec_id long, embedding array<float>"))
+            assert not os.path.exists(txn._dir)
+            assert idx.stat()["idx_growing"] == []
+
     def test_cleanup_counts_only_removed_dirs(self, spark, emb):
         """cleanup_stale_transactions must not count a directory that
         rmtree failed to remove (r7 advice): make one stale dir
@@ -850,11 +868,11 @@ def test_tomb_agg_materialized_once_per_generation(spark, emb):
 def test_ivf_compaction_job_budget(spark, emb):
     """compact() on the test_ivf_incremental_compact shape takes the ids
     leaving and the newest visible growing rows from the driver-held
-    tombstone map and growing rows, then writes the touched lists in ONE
-    grouped Arrow job (``IVFIndex._rewrite``): at most 4 Spark jobs (14
-    when the fold ran its own tombstone aggregate, insert checkpoint,
-    touched-lists aggregate, list checkpoint, partitioned write and
-    radii job)."""
+    tombstone map and growing rows, collects the prepared rows once and
+    writes the touched lists in the driver (``IVFIndex._rewrite``): at
+    most 1 Spark job (3 with the grouped Arrow job, 14 when the fold ran
+    its own tombstone aggregate, insert checkpoint, touched-lists
+    aggregate, list checkpoint, partitioned write and radii job)."""
     from tests.conftest import count_jobs
 
     with tempfile.TemporaryDirectory() as d:
@@ -866,14 +884,18 @@ def test_ivf_compaction_job_budget(spark, emb):
         idx.insert(emb.where((F.col("vec_id") >= 400) & (F.col("vec_id") < 403)))
         with count_jobs(spark) as jobs:
             idx.compact()
-        assert jobs.n <= 4, f"compact() launched {jobs.n} Spark jobs"
+        assert jobs.n <= 1, f"compact() launched {jobs.n} Spark jobs"
+        # the insert of a frame Spark computes was a Spark append
+        assert idx.write_stats == {"spark": 1, "driver": 1}
         assert idx.stat()["idx_sealed"][0] == 400 - 2 + 3
 
 
 def test_ivf_apply_updates_job_budget(spark, emb):
-    """IVFIndex.apply_updates with DataFrame deletes and inserts collects
-    the ids leaving once and writes every touched list in one grouped
-    Arrow job: at most 5 Spark jobs (11 with the touched-lists
+    """IVFIndex.apply_updates with driver-held deletes and inserts that
+    Spark computes collects the deleted ids without a job and the
+    inserted rows with one bounded collect, then writes every touched
+    list in the driver: at most 2 Spark jobs (4 with a checkpoint, an id
+    collect and the grouped Arrow job; 11 with the touched-lists
     aggregate, two checkpoints, the partitioned write and the radii
     job)."""
     from pgvecto_rs_spark.indexes import IVFIndex
@@ -888,7 +910,8 @@ def test_ivf_apply_updates_job_budget(spark, emb):
         )
         with count_jobs(spark) as jobs:
             assert idx.apply_updates(delete_ids=dels, insert_rows=ins)
-        assert jobs.n <= 5, f"apply_updates launched {jobs.n} Spark jobs"
+        assert jobs.n <= 2, f"apply_updates launched {jobs.n} Spark jobs"
+        assert idx.write_stats == {"driver": 2}
         assert idx.meta["n_rows"] == 400 - 10 + 100
 
 
@@ -905,6 +928,40 @@ def test_ivf_create_job_budget(spark, emb):
             idx = IVFIndex.create(spark, emb, d, nlist=128)
         assert jobs.n <= 5, f"create launched {jobs.n} Spark jobs"
         assert idx.meta["nlist"] == 128 and idx.meta["n_rows"] == 500
+
+
+def test_local_insert_writes_without_a_write_job(spark, emb):
+    """``insert`` and a transaction's ``insert`` of a driver-held frame
+    collect the prepared rows once and write them with pyarrow, in
+    ``_SCHEMAS["delta"]``'s types: at most one Spark job each and no
+    write job (a Spark append leaves ``_SUCCESS``); the rows are
+    searchable and compact like any others."""
+    from pyspark.sql.types import DataType
+
+    from pgvecto_rs_spark.indexes.base import local_frame
+    from pgvecto_rs_spark.streaming.freshness import _SCHEMAS
+    from tests.conftest import count_jobs
+
+    rows = [(r["vec_id"], list(r["embedding"])) for r in emb.where(F.col("vec_id") >= 400).collect()]
+    schema = "vec_id long, embedding array<float>"
+    with tempfile.TemporaryDirectory() as d:
+        idx = make(spark, emb, d)
+        with count_jobs(spark) as jobs:
+            idx.insert(local_frame(spark, rows[:60], schema))
+        assert jobs.n <= 1, f"insert launched {jobs.n} Spark jobs"
+        with count_jobs(spark) as jobs:
+            with idx.begin() as txn:
+                txn.insert(local_frame(spark, rows[60:], schema))
+        assert jobs.n <= 1, f"a transaction's insert launched {jobs.n} Spark jobs"
+        rows_dir = os.path.join(idx._gen_dir(), "delta", "rows")
+        assert sorted(os.listdir(rows_dir)) == sorted(os.path.basename(f) for f in idx._list_files("delta"))
+        assert len(idx._list_files("delta")) == 2
+        assert spark.read.parquet(*idx._list_files("delta")).schema == DataType.fromDDL(_SCHEMAS["delta"])
+        assert idx.write_stats == {"driver": 2}
+        assert idx.stat()["idx_growing"] == [100]
+        assert idx.search(Q64, k=10**6).count() == 500
+        idx.compact()
+        assert idx.stat()["idx_sealed"] == [500]
 
 
 def test_delete_writes_tombstones_without_a_job(spark, emb):

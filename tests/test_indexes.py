@@ -2206,7 +2206,9 @@ class TestDriverServing:
         from pgvecto_rs_spark.indexes import segment_worker as SW
         from pgvecto_rs_spark.streaming.freshness import FreshVectorIndex
 
-        monkeypatch.setattr(SW._LIST_CACHE, "maxsize", 3)
+        # about three lists' decoded bytes: the unit cache has no entry
+        # bound, so eviction runs on bytes
+        monkeypatch.setattr(SW._LIST_CACHE, "maxbytes", 40_000)
         idx = FreshVectorIndex.create(
             spark, emb.where(F.col("vec_id") < 400), str(tmp_path / "fresh"),
             sealed_kind="ivf", nlist=8,
@@ -2245,6 +2247,7 @@ class TestDriverServing:
         assert idx._gen == gen + 1 and not idx.stat()["idx_growing"]
         assert idx.serve_stats == {"driver": len(qs) + len(got)}
         assert all(rows == oracle[i] for i, rows in got)
+        assert len(SW._LIST_CACHE._data) <= 3
 
 
 class TestWritePath:
@@ -2315,6 +2318,83 @@ class TestWritePath:
         assert idx.apply_updates(insert_rows=self._frame(spark, back))
         assert idx.meta["n_rows"] == self.N
         assert self._stored(path, sub) == built
+
+    @pytest.mark.parametrize("quant,replicas", [
+        (None, 1), ("f16", 1), ("sq8", 1), ("pq", 1), ("rabitq", 1), (None, 2),
+    ])
+    def test_driver_write_matches_spark(self, spark, tmp_path, monkeypatch, quant, replicas):
+        """An IVF ``create`` and ``apply_updates`` written in the driver
+        (under ``DRIVER_SERVE_BYTES``) and by the grouped Spark job (at
+        a zero budget) leave the same lists: the same (id, list_id)
+        rows with the same stored vectors, codes, f16 words and payload
+        column, the same file schema, ``list_radii.npy`` bit for bit and
+        the same ``n_rows``.  Each handle counts its two writes on its
+        side in ``write_stats``."""
+        import glob
+
+        import pyarrow.parquet as pq
+
+        from pgvecto_rs_spark.indexes import batch as BT
+        from pgvecto_rs_spark.indexes.base import local_frame
+
+        def state(path, idx):
+            first = sorted(glob.glob(f"{path}/lists/list_id=*/*.parquet"))[0]
+            with open(f"{path}/list_radii.npy", "rb") as f:
+                radii = f.read()
+            return self._stored(path, "lists"), pq.read_schema(first), radii, idx.meta["n_rows"]
+
+        got = {}
+        for budget in (BT.DRIVER_SERVE_BYTES, 0):
+            monkeypatch.setattr(BT, "DRIVER_SERVE_BYTES", budget)
+            path = str(tmp_path / f"b{budget}")
+            idx = self._create(spark, "ivf", self._frame(spark, range(self.N)), path, "l2", quant, replicas)
+            built = state(path, idx)
+            assert idx.apply_updates(
+                delete_ids=local_frame(spark, [(i,) for i in (3, 4, 50, 97)], "id long"),
+                insert_rows=self._frame(spark, [50, *range(self.N, self.N + 30)], scale=1.5),
+            )
+            got[budget] = built, state(path, idx), idx.write_stats
+        (b_drv, u_drv, s_drv), (b_spk, u_spk, s_spk) = got.values()
+        assert b_drv == b_spk and u_drv == u_spk
+        assert u_drv[3] == self.N - 3 + 30
+        assert s_drv == {"driver": 2} and s_spk == {"spark": 2}
+
+    def test_sq_kernel_rounds_like_catalyst(self, spark):
+        """``segment_worker.sq_encode`` codes exactly as the Catalyst
+        expression it replaced (``round`` is HALF_UP): at exact
+        half-way values, their float32 neighbours, values outside the
+        trained range and random values."""
+        import numpy as np
+
+        from pgvecto_rs_spark.indexes import segment_worker as SW
+        from pgvecto_rs_spark.indexes.base import local_frame
+
+        levels = 255
+        lo, width = np.array([0.0, -3.0]), np.array([255.0, 6.0])
+        half = (np.arange(-3, 258) + 0.5).astype(np.float32)
+        x0 = np.concatenate([
+            half, np.nextafter(half, np.float32(-1e9)), np.nextafter(half, np.float32(1e9)),
+        ])
+        x1 = np.random.default_rng(3).uniform(-4, 4, len(x0)).astype(np.float32)
+        mat = np.stack([x0, x1], axis=1)
+        assert (((x0[: len(half)] - lo[0]) / width[0] * levels) % 1 == 0.5).all()
+
+        lo_c = F.array(*[F.lit(float(v)) for v in lo])
+        w_c = F.array(*[F.lit(float(v)) for v in width])
+        codes = F.zip_with(
+            F.col("vec").cast("array<double>"),
+            F.zip_with(lo_c, w_c, lambda a, b: F.struct(a.alias("lo"), b.alias("w"))),
+            lambda x, p: F.least(
+                F.lit(levels),
+                F.greatest(F.lit(0), F.round((x - p["lo"]) / p["w"] * levels, 0).cast("int")),
+            ).cast("smallint"),
+        )
+        df = local_frame(spark, [(i, r.tolist()) for i, r in enumerate(mat)], "id long, vec array<float>")
+        want = [r["codes"] for r in df.orderBy("id").select(codes.alias("codes")).collect()]
+        got = SW.sq_encode(mat, lo, width, levels)
+        assert got.tolist() == want
+        # k + 0.5 codes as k + 1 for k = 0..253: half up, not half even
+        assert got[3:257, 0].tolist() == list(range(1, 255))
 
     @pytest.mark.parametrize("kind", ["ivf", "hnsw"])
     def test_cos_update_matches_build_scale(self, spark, tmp_path, kind):
