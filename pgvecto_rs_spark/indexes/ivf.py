@@ -10,8 +10,9 @@ Spark-first design (SURVEY.md §7 Phase 3):
 - **train**: sample ≤65536 vectors to the driver (same cap as the
   reference), vectorized numpy Lloyd iterations — centroids are
   nlist×dims floats, trivially driver-sized even at nlist=65536.
-- **assign**: broadcast centroids; one Arrow-batched pandas UDF computes
-  argmin list_id per row (a single (batch × nlist) matmul).
+- **assign**: ``segment_worker.ivf_assign`` gives each row its
+  list_id: one (batch × nlist) gemm, with near-ties routed again per
+  row, in an Arrow UDF over broadcast centroids or in the driver.
 - **layout**: Parquet *partitioned by* ``list_id``, one directory per
   list.  A search opens only its nprobe probed list directories — the
   exact analogue of probing nprobe inverted lists.  At 100 TB with
@@ -364,37 +365,12 @@ class IVFIndex:
         out = rows.take(pa.array(src)).append_column("list_id", pa.array(lid))
         quant = self._quant()
         if quant is not None:
-            name, codes = Qz.encoder(quant, self.meta, self.path)
+            name, _, codes = Qz.encoder(quant, self.meta, self.path)
             res = SW.ivf_residual(mat[src], self.centroids.astype(np.float64), lid)
             out = out.append_column(name, codes(res.astype(np.float64)))
         if self.meta.get("storage") == "f16":
             out = out.drop_columns(["vec"]).append_column("vec16", SW.f16_words(mat[src]))
         return out
-
-    def _stored_schema(self, prepared: StructType) -> StructType:
-        """The lists' Spark schema, ``list_id`` included, for rows
-        prepared as ``prepared``: the columns ``_encode(_route(...))``
-        gives them (f16 words in place of ``vec``, the codes after
-        ``list_id``)."""
-        f16 = self.meta.get("storage") == "f16"
-        quant = self._quant()
-        tail = "list_id int"
-        if quant is not None:
-            tail += ", rq struct<norm: float, words: array<int>>" if quant == "rabitq" \
-                else ", codes array<smallint>"
-        if f16:
-            tail += ", vec16 binary"
-        kept = [f for f in prepared.fields if not (f16 and f.name == "vec")]
-        return StructType(kept + base.ddl_schema(tail).fields)
-
-    def _prepare(self, rows: DataFrame, id_col: str = "id", vector_col: str = "vec") -> DataFrame:
-        """``rows`` prepared for this index (``base.prepare_rows``): ids
-        cast to long, with the payload columns ``rows`` carries."""
-        payloads = [c for c in self.meta.get("payload_cols", []) if c in rows.columns]
-        return base.prepare_rows(
-            rows, F.col(id_col).cast("long"), vector_col, self.meta["normalize"],
-            self.meta.get("storage", "f32"), keep=payloads,
-        )
 
     def apply_updates(
         self,
@@ -415,30 +391,27 @@ class IVFIndex:
         collected to the driver, with no Spark job from a driver-held
         frame, and reach the writer as one sorted int64 array in the
         write plan, never as an IN-list: 8 bytes per id, so the driver
-        must hold them all.  Then ``_update`` writes every touched
-        list.  Returns the rewritten list ids."""
+        must hold them all.  ``insert_rows`` that Spark computes (not
+        ``isLocal()``) are checkpointed once after preparation, so the
+        ids leaving and the rows written come from one evaluation of
+        the input.  Rows that fit the driver budget are then collected
+        once (``_hold``) and written in the driver, else one grouped job
+        writes (``_rewrite``).  Returns the rewritten list ids."""
         removes = np.empty(0, np.int64)
         if delete_ids is not None:
             ids = delete_ids.select(F.col(id_col).cast("long").alias("id"))
             removes = BT.denied(ids.where(F.col("id").isNotNull()))
-        prepared = None if insert_rows is None else self._prepare(insert_rows, id_col, vector_col)
-        return self._update(removes, prepared, insert_rows is not None and insert_rows.isLocal())
-
-    def _update(self, removes: np.ndarray, prepared: DataFrame | None, local: bool) -> list[int]:
-        """``apply_updates``' body, and a fresh index's incremental fold:
-        the ids ``removes`` and the ids of the ``prepared`` rows
-        (``_prepare``; from a driver-held frame when ``local``) leave
-        their lists, and the ``prepared`` rows join theirs.  Rows that
-        fit the driver budget are collected once (``_hold``) and
-        written in the driver.  Otherwise a frame that Spark computes
-        is checkpointed once, so the ids leaving and the rows written
-        come from one evaluation of the input, and one grouped job
-        writes (``_rewrite``)."""
-        held = None
-        if prepared is not None:
-            held = self._hold(prepared, local=local)
-            if held is None and not local:
+        prepared = held = None
+        if insert_rows is not None:
+            payloads = [c for c in self.meta.get("payload_cols", []) if c in insert_rows.columns]
+            prepared = base.prepare_rows(
+                insert_rows, F.col(id_col).cast("long"), vector_col, self.meta["normalize"],
+                self.meta.get("storage", "f32"), keep=payloads,
+            )
+            local = insert_rows.isLocal()
+            if not local:
                 prepared = prepared.localCheckpoint(eager=True)
+            held = self._hold(prepared, local=local)
             ids = (prepared.select("id").toArrow() if held is None else held).column("id")
             removes = np.concatenate([removes, ids.drop_null().to_numpy()])
         return self._rewrite(np.unique(removes), prepared, held)
@@ -448,10 +421,10 @@ class IVFIndex:
         and the stored lists (``batch.storage_bytes``) fit
         ``batch.DRIVER_SERVE_BYTES``, else None.  A frame of known size
         (``n_rows`` rows, or a driver-held ``local`` frame) is collected
-        with one ``toArrow()``; one of unknown size with a ``limit`` to
-        one row more than could fit, so a frame over the budget costs
-        that bounded collect before the grouped job evaluates it
-        again."""
+        with one ``toArrow()``; one of unknown size (``apply_updates``'
+        checkpoint) with a ``limit`` to one row more than could fit, so
+        a frame over the budget costs a bounded re-read of the
+        checkpoint before the grouped job reads it again."""
         room = BT.DRIVER_SERVE_BYTES - BT.storage_bytes(self)
         row_bytes = 12 + 4 * int(self.meta["dims"]) + 8 * (len(prepared.columns) - 2)
         cap = max(room, 0) // row_bytes
@@ -480,7 +453,7 @@ class IVFIndex:
         lists_dir = os.path.join(self.path, "lists")
         schema = _lists_schema(lists_dir)
         if schema is None and prepared is not None:
-            schema = self._stored_schema(prepared.schema)
+            schema = self._encode(self._route(prepared)).schema
         if schema is None:  # no list files and nothing to insert
             return []
         fits = held is not None if prepared is not None \

@@ -37,6 +37,7 @@ import os
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, ShortType
 
 from pgvecto_rs_spark.indexes import segment_worker as SW
 
@@ -65,22 +66,26 @@ def sq_train(df, col: str) -> tuple[np.ndarray, np.ndarray]:
 
 
 def encoder(quant: str, meta: dict, path: str):
-    """(column, codes of f64 rows as an Arrow array) for the quantizer
-    ``quant`` with its trained constants (``meta``'s SQ bounds, the PQ
-    codebooks or RaBitQ projection saved under ``path``): ``codes``
-    (SQ ``segment_worker.sq_encode``, ``pq_encode``) or ``rq``
-    (``rabitq_encode``).  ``encode``'s UDF and the driver's IVF write
-    loop (``IVFIndex._write_lists``) both code through it."""
+    """(column, its Spark type, codes of f64 rows as an Arrow array)
+    for the quantizer ``quant`` with its trained constants (``meta``'s
+    SQ bounds, the PQ codebooks or RaBitQ projection saved under
+    ``path``): ``codes`` (SQ ``segment_worker.sq_encode``,
+    ``pq_encode``) or ``rq`` (``rabitq_encode``).  ``encode``'s UDF and
+    the driver's IVF write loop (``IVFIndex._write_lists``) both code
+    through it."""
     from pgvecto_rs_spark.indexes.flat import _SQ_KINDS
 
     if quant in _SQ_KINDS:
         lo = np.asarray(meta["sq_lo"], dtype=np.float64)
         width = np.asarray(meta["sq_width"], dtype=np.float64)
         levels = (1 << int(meta.get("sq_bits", 8))) - 1
-        return "codes", lambda mat: SW.list_array(SW.sq_encode(mat, lo, width, levels))
+        # no null elements, the type Catalyst's zip_with stored SQ codes as
+        return "codes", ArrayType(ShortType(), False), \
+            lambda mat: SW.list_array(SW.sq_encode(mat, lo, width, levels))
     if quant == "pq":
         books = os.path.join(path, "pq_codebooks.npy")
-        return "codes", lambda mat: SW.list_array(pq_encode(mat, SW._load_params(books)))
+        return "codes", "array<smallint>", \
+            lambda mat: SW.list_array(pq_encode(mat, SW._load_params(books)))
     if quant == "rabitq":
         proj = os.path.join(path, "rabitq_proj.npy")
 
@@ -90,7 +95,7 @@ def encoder(quant: str, meta: dict, path: str):
                 [pa.array(norms), SW.list_array(words)], names=["norm", "words"]
             )
 
-        return "rq", rq
+        return "rq", "struct<norm: float, words: array<int>>", rq
     raise ValueError(f"unknown quantization {quant!r}")
 
 
@@ -100,8 +105,7 @@ def encode(df, col: str, quant: str, meta: dict, path: str):
     updates both encode here or in the driver through the same
     ``encoder``, so a row's codes never depend on which of them wrote
     it."""
-    name, codes = encoder(quant, meta, path)
-    rtype = "struct<norm: float, words: array<int>>" if name == "rq" else "array<smallint>"
+    name, rtype, codes = encoder(quant, meta, path)
     dims = int(meta["dims"])
 
     @F.arrow_udf(rtype)

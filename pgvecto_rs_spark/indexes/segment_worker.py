@@ -1062,19 +1062,43 @@ def list_array(mat: np.ndarray):
 def ivf_assign(mat: np.ndarray, centroids: np.ndarray, replicas: int) -> np.ndarray:
     """(rows, ``replicas``) int32 ids of each row's nearest lists, in
     float32: a boundary flip only lands a row in its second-nearest
-    list, which search handles alike.  The (rows x nlist) product is a
-    per-row einsum, not a gemm: a gemm's result for a row depends on
-    how many rows share its batch, so the driver and a Spark task would
-    route a near-tie differently."""
-    if not len(mat):
+    list, which search handles alike.
+
+    The set of lists is the one a per-row einsum gives, which depends on
+    the row alone, so the driver and a Spark task route a row alike
+    however many rows share its batch.  The distances come from one
+    BLAS gemm, whose f32 result for a row does depend on the batch; a
+    row whose ``replicas``-th and next nearest gemm distances are within
+    four times the f32 dot-product rounding bound (both results lie
+    within it of the exact value) is routed again by the einsum."""
+    n = len(mat)
+    if not n:
         return np.empty((0, replicas), np.int32)
+    mat = mat.astype(np.float32, copy=False)
     cent = centroids.astype(np.float32)
     c_sq = np.einsum("ij,ij->i", cent, cent)
-    d = np.float32(-2.0) * np.einsum("ij,kj->ik", mat.astype(np.float32, copy=False), cent)
-    d += c_sq[None, :]
-    if replicas == 1:
-        return np.argmin(d, axis=1)[:, None].astype(np.int32)
-    return np.argpartition(d, replicas - 1, axis=1)[:, :replicas].astype(np.int32)
+
+    def nearest(d):
+        d += c_sq[None, :]
+        if replicas == 1:
+            return np.argmin(d, axis=1)[:, None].astype(np.int32)
+        return np.argpartition(d, replicas - 1, axis=1)[:, :replicas].astype(np.int32)
+
+    d = np.float32(-2.0) * (mat @ cent.T)
+    top = nearest(d)
+    if replicas >= len(cent):
+        return top
+    rows = np.arange(n)[:, None]
+    kth = d[rows, top].max(axis=1)
+    d[rows, top] = np.inf
+    gap = d.min(axis=1) - kth
+    eps = (mat.shape[1] + 2) * float(np.finfo(np.float32).eps / 2)
+    bound = eps * (2.0 * np.sqrt(np.einsum("ij,ij->i", mat, mat, dtype=np.float64))
+                   * np.sqrt(c_sq.max()) + c_sq.max())
+    near = np.flatnonzero(~(gap > 4.0 * bound))
+    if len(near):
+        top[near] = nearest(np.float32(-2.0) * np.einsum("ij,kj->ik", mat[near], cent))
+    return top
 
 
 def ivf_residual(mat: np.ndarray, centroids: np.ndarray, lid: np.ndarray) -> np.ndarray:

@@ -762,13 +762,10 @@ class FreshVectorIndex:
         The deletes (every tombstoned id: sealed rows predate all
         tombstones) and the inserts (the newest visible growing row per
         id) come from the driver-held tombstone map and growing rows
-        (``_tomb_map``, ``_growing_rows``), so the fold scans no growing
-        or tombstone file through Spark.  An IVF fold takes the
-        tombstoned ids as an array and the inserts as a driver-held frame
-        that only ``base.prepare_rows`` prepares (``IVFIndex._update``):
-        under the driver budget it runs one collect job and writes the
-        lists in the driver.  HNSW folds the same rows as driver-held
-        frames through ``apply_updates``."""
+        (``_tomb_map``, ``_growing_rows``) as driver-held frames, so the
+        fold scans no growing or tombstone file through Spark; an IVF
+        fold under the driver budget then runs one collect job and
+        writes the touched lists in the driver."""
         import pyarrow as pa
 
         old_sealed = os.path.join(self._gen_dir(old_gen), "sealed")
@@ -783,16 +780,13 @@ class FreshVectorIndex:
             self.spark, pa.table({"id": ids, "vec": SW.list_array(vec.astype(np.float32))}),
             "id long, vec array<float>",
         ) if len(ids) else None
-        if isinstance(clone, IVFIndex):
-            clone._update(tids, None if rows is None else clone._prepare(rows), local=True)
-            for route, n in clone.write_stats.items():
-                BT.tally(self.write_stats, route, n)
-        else:
-            clone.apply_updates(
-                delete_ids=base.local_frame(self.spark, [(i,) for i in tids.tolist()], "id long")
-                if len(tids) else None,
-                insert_rows=rows,
-            )
+        clone.apply_updates(
+            delete_ids=base.local_frame(self.spark, pa.table({"id": tids}), "id long")
+            if len(tids) else None,
+            insert_rows=rows,
+        )
+        for route, n in getattr(clone, "write_stats", {}).items():
+            BT.tally(self.write_stats, route, n)
         self._commit(old_gen, snap_delta, snap_tomb)
 
     def stat(self) -> dict:

@@ -2363,9 +2363,12 @@ class TestWritePath:
         """``segment_worker.sq_encode`` codes exactly as the Catalyst
         expression it replaced (``round`` is HALF_UP): at exact
         half-way values, their float32 neighbours, values outside the
-        trained range and random values."""
+        trained range and random values.  ``quantization.encode``'s
+        Spark UDF over it gives the same codes in the same column type
+        (no null elements), so stored files keep their schema."""
         import numpy as np
 
+        from pgvecto_rs_spark.indexes import quantization as Qz
         from pgvecto_rs_spark.indexes import segment_worker as SW
         from pgvecto_rs_spark.indexes.base import local_frame
 
@@ -2395,6 +2398,36 @@ class TestWritePath:
         assert got.tolist() == want
         # k + 0.5 codes as k + 1 for k = 0..253: half up, not half even
         assert got[3:257, 0].tolist() == list(range(1, 255))
+        meta = {"dims": 2, "sq_lo": lo.tolist(), "sq_width": width.tolist(), "sq_bits": 8}
+        enc = Qz.encode(df, "vec", "sq8", meta, "")
+        assert enc.schema["codes"] == df.select(codes.alias("codes")).schema["codes"]
+        assert [r["codes"] for r in enc.orderBy("id").collect()] == want
+
+    def test_routing_ignores_batch_size(self):
+        """``segment_worker.ivf_assign`` gives each row the lists a
+        per-row einsum gives it, whatever number of rows share its batch
+        (a Spark Arrow batch or the driver's whole write): rows on the
+        bisector of two centroids included, where the gemm it starts
+        from rounds differently with the batch size."""
+        import numpy as np
+
+        from pgvecto_rs_spark.indexes import segment_worker as SW
+
+        rng = np.random.default_rng(5)
+        n, dims, nlist = 1500, 64, 24
+        cent = rng.standard_normal((nlist, dims))
+        a, b = rng.integers(0, nlist, n), rng.integers(0, nlist, n)
+        mat = ((cent[a] + cent[b]) / 2 + 1e-7 * rng.standard_normal((n, dims))).astype(np.float32)
+        mat[::3] = rng.standard_normal((len(mat[::3]), dims))
+        c32 = cent.astype(np.float32)
+        d = np.float32(-2.0) * np.einsum("ij,kj->ik", mat, c32) + np.einsum("ij,ij->i", c32, c32)
+        for replicas in (1, 2):
+            want = np.sort(np.argsort(d, axis=1, kind="stable")[:, :replicas], axis=1)
+            for chunk in (1, 5, 128, n):
+                got = np.concatenate(
+                    [SW.ivf_assign(mat[i : i + chunk], cent, replicas) for i in range(0, n, chunk)]
+                )
+                assert (np.sort(got, axis=1) == want).all(), (replicas, chunk)
 
     @pytest.mark.parametrize("kind", ["ivf", "hnsw"])
     def test_cos_update_matches_build_scale(self, spark, tmp_path, kind):
